@@ -17,15 +17,17 @@ Layout:
 - ``errors``     validation errors (reference admission control, index.js:12-15)
 - ``store``      TimeseriesStore: initialize/write/read_index/read_page/read_range
 - ``tiering``    purge_scan / purge_ack lifecycle (enqueue-purge.lua, ack-purge.lua)
+- ``fs``         StorageFilesystem seam for side-channel metadata ops
 - ``operators``  analytics + LLM-pipeline operators (DataFrame-in/DataFrame-out)
-- ``sources``    testdata loaders and the events->samples mapping
+- ``sources``    testdata loaders, wire formats, corpus I/O, the rlts_table connector
 - ``functions``  portable scalar helpers (cross-checkable against DuckDB)
 - ``plans``      the query catalog: name -> (spark fn, duckdb oracle SQL)
 - ``streaming``  Structured Streaming ingest into the same hot layout
 - ``commit``     TableCommit seam: lease/manifest backends, stats, app map
 - ``changefeed`` exactly-once incremental mirroring over the change feed
 - ``maintenance`` small-file compaction, optimize pass, table reports
-- ``rollup``     continuous rollups and hierarchical cascades
+- ``rollup``     continuous rollups
+- ``sql_dml``    MERGE / UPDATE / DELETE / DESCRIBE HISTORY SQL facade
 """
 
 from redis_lsm_timeseries_spark.config import EngineConfig

@@ -276,9 +276,8 @@ def _apply_keyed_changes(
     """Net a typed change set and apply it to the keyed mirror at
     ``dst_path``: idempotent merge/delete with the cursor CAS as an
     entry guard on every data-mutating commit, cursor advanced LAST —
-    shared by the pull-based ``mirror_changes`` (cursor = source
-    version) and the streaming mirror (cursor = micro-batch id).
-    Returns rows applied."""
+    used by the pull-based ``mirror_changes`` (cursor = source
+    version). Returns rows applied."""
     from redis_lsm_timeseries_spark.operators.merge import (
         delete_rows,
         merge_into,

@@ -5089,7 +5089,7 @@ class ManifestCommit(ParquetLeaseCommit):
 
         Sources per commit kind: plain appends read their added files
         as 'insert' rows; ``preserve`` rewrites contribute nothing;
-        ``cdf`` commits (merge_into / delete_rows / delete_range) read
+        ``cdf`` commits (merge_into / delete_rows / replace_range) read
         the change files their entry recorded — written ATOMICALLY
         with the rewrite, stored outside the table's member list and
         vacuum-retained exactly as long as their entry, so the feed

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 # Reference admission-control constants (index.js:12-15).
 MAX_SAMPLES_PER_WRITE = 2_000
@@ -24,6 +24,12 @@ DEFAULT_PARTITION_WIDTH = 120_000
 
 VERSION = 1
 
+# Physical Parquet layout of the hot and cold tiers: directory-level
+# pruning on both the tag and the time range — the metadata-only
+# partition selection the reference's per-tag index ZSET performs
+# (index.js:157-231).
+PARTITION_COLS = ("tag", "part_start")
+
 
 @dataclass(frozen=True)
 class EngineConfig:
@@ -33,27 +39,11 @@ class EngineConfig:
     ``{root}/{namespace}/``. ``partition_width`` is the fixed width of a
     time partition in sort-key units (ms in practice) — the Spark analog
     of the reference's page width (``index.js:121-122``).
-
-    ``partition_cols`` controls the physical Parquet layout. The default
-    ``("tag", "part_start")`` gives Catalyst directory-level pruning on
-    both the tag and the time range — the exact metadata-only partition
-    selection the reference's per-tag index ZSET performs
-    (``index.js:157-231``). At very high tag cardinality (millions of
-    series) this layout would explode into tiny directories; deployments
-    at that scale should use ``("part_start",)`` and rely on Parquet
-    min/max + sorted-by-tag files for tag pruning (set
-    ``sort_within_partitions=True``).
     """
 
     root: str
     partition_width: int = DEFAULT_PARTITION_WIDTH
     purge_queue_name: str = "Purge"
-    partition_cols: tuple = ("tag", "part_start")
-    sort_within_partitions: bool = False
-    max_samples_per_write: int = MAX_SAMPLES_PER_WRITE
-    max_tags_per_read: int = MAX_TAGS_PER_READ
-    max_tag_name_length: int = MAX_TAG_NAME_LENGTH
-    version: int = VERSION
     #: Transactional hot tier (r13, opt-in): route L1 appends through
     #: the store's ``TableCommit`` seam so a ``ManifestCommit`` backend
     #: manages the hot table under its versioned log — atomic commits,
@@ -111,7 +101,7 @@ class EngineConfig:
         """
         payload = json.dumps(
             {
-                "version": self.version,
+                "version": VERSION,
                 "partitionWidth": self.partition_width,
                 "purgeQueName": self.purge_queue_name,
             },

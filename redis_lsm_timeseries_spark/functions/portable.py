@@ -52,11 +52,6 @@ def nonempty_tokens(col: Column | str) -> Column:
     return F.filter(tokens(col), lambda t: t != F.lit(""))
 
 
-NONEMPTY_TOKENS_SQL = (
-    "list_filter(" + TOKENS_SQL + ", t -> t != '')"
-)
-
-
 # ------------------------------------------------------- hashed shingles
 # The dedup pipeline never needs shingle STRINGS — only their hashes.
 # Hashing each token once (one md5 per token) and combining k

@@ -643,55 +643,6 @@ def fast_count(
     return total
 
 
-def optimize_store(
-    store,
-    target_rows: int = 1_000_000,
-    max_groups: int | None = None,
-    vacuum_retain: int | None = None,
-    commit: ManifestCommit | None = None,
-) -> dict:
-    """One maintenance pass over EVERY manifest-managed table the
-    engine owns — the cold tier, the purge log, and each rollup's data
-    member — running ``optimize_table`` on each under the store's
-    maintenance lease (single cron job, one lock acquisition, crash
-    story inherited per table: completed tables stay optimized).
-
-    Content-preserving throughout (small-file folding + vacuum only;
-    no Z-order pass — the engine's tables are already range-clustered
-    by their write paths), so change-feed consumers skip every commit
-    this makes. Directory-mode stores are a no-op (nothing
-    manifest-managed to optimize). Returns {table_path: OptimizeStats}
-    for the tables that were optimized.
-
-    Reference parity note: the reference has no maintenance beyond the
-    purge recipe (``recipe:22-43``); this is the lakehouse-tier cron
-    that keeps the per-micro-batch commit pattern from accumulating a
-    million tiny files at 100 TB."""
-    commit = commit if commit is not None else getattr(
-        store, "commit", None
-    )
-    if not isinstance(commit, ManifestCommit):
-        return {}
-    candidates = [store.config.cold_path, store.config.purge_log_path]
-    rollup_base = f"{store.config.base_path}/rollups"
-    if store.fs.exists(rollup_base):
-        for name in sorted(store.fs.listdir(rollup_base)):
-            candidates.append(f"{rollup_base}/{name}/data")
-    out: dict = {}
-    with commit.maintenance_lock(store):
-        for path in candidates:
-            if commit._resolve(store, path) is None:
-                continue  # never written, or directory-mode
-            out[path] = optimize_table(
-                store, path,
-                target_rows=target_rows,
-                max_groups=max_groups,
-                vacuum_retain=vacuum_retain,
-                commit=commit,
-            )
-    return out
-
-
 def fast_min_max(
     host,
     path: str,

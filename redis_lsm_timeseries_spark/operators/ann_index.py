@@ -29,8 +29,7 @@ generation's centroids) — which is exactly what
 guarantees; the plain-directory fallback degrades to ordered
 overwrites with a documented mixed-generation crash window.
 
-Same posture as the streaming admission index (streaming/curation.py):
-a standalone manifest table driven through ``CommitHost``, no
+A standalone manifest table driven through ``CommitHost``, no
 ``TimeseriesStore`` required.
 """
 
@@ -72,8 +71,6 @@ def build_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     fs=None,
-    app_meta: dict | None = None,
-    expected_app: dict | None = None,
 ) -> dict:
     """Train the quantizer on ``corpus`` and commit centroids +
     normalized assignments as one atomic manifest entry. Rebuilding
@@ -124,8 +121,6 @@ def build_ivf_index(
         host,
         index_path,
         {CENTROIDS_MEMBER: cent_df, VECTORS_MEMBER: vectors},
-        app_meta=app_meta,
-        expected_app=expected_app,
     )
     version, tables = commit._current(host, index_path)
     # count from the COMMITTED files (parquet footer metadata), not the
@@ -135,33 +130,6 @@ def build_ivf_index(
         host, f"{index_path}/{VECTORS_MEMBER}"
     ).count()
     return {"n_list": n_list, "n_vectors": n_vectors, "version": version}
-
-
-def load_ivf_centroids(
-    spark: SparkSession, index_path: str, fs=None
-) -> list[list[float]]:
-    """The committed quantizer, ordered by list_id — a bounded
-    (n_list x dim) collect, same as the in-memory training path."""
-    host = _host(spark, fs)
-    rows = (
-        ManifestCommit()
-        .read_table(host, f"{index_path}/{CENTROIDS_MEMBER}")
-        .orderBy("list_id")
-        .collect()
-    )
-    return [list(r.centroid) for r in rows]
-
-
-def read_ivf_vectors(
-    spark: SparkSession, index_path: str, fs=None
-) -> DataFrame:
-    """The committed (id, list_id, nv) member — a snapshot: the
-    returned DataFrame pins its manifest file list, unaffected by a
-    concurrent rebuild."""
-    host = _host(spark, fs)
-    return ManifestCommit().read_table(
-        host, f"{index_path}/{VECTORS_MEMBER}"
-    )
 
 
 def ivf_index_topk(
@@ -230,137 +198,3 @@ def ivf_index_topk(
         .where(F.col("rnk") <= k)
         .select("query_id", "list_id", "neighbor_id", "cosine_sim", "rnk")
     )
-
-
-def extend_ivf_index(
-    new_vectors: DataFrame,
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    fs=None,
-    app_meta: dict | None = None,
-    expected_app: dict | None = None,
-) -> int:
-    """Index a batch of NEW vectors under the COMMITTED quantizer —
-    assign via the broadcast join, normalize once, append to the
-    vectors member: O(batch) work, no retrain, no member rewrite, and
-    every untouched file carried forward. The quantizer drifts as the
-    corpus grows (appended vectors do not move centroids) — the
-    standard IVF posture; rebuild when recall degrades. Append-only
-    ids by contract: re-adding an id duplicates it (use
-    ``build_ivf_index`` for corrections). ``app_meta`` commits
-    atomically with the rows (``sync_ivf_index``'s cursor). Returns
-    the number of vectors added."""
-    spark = new_vectors.sparkSession
-    host = _host(spark, fs)
-    commit = ManifestCommit()
-    if not commit.table_exists(host, f"{index_path}/{CENTROIDS_MEMBER}"):
-        raise ValidationError(
-            f"extend_ivf_index: no index at {index_path!r} — run "
-            "build_ivf_index first"
-        )
-    cent_df = commit.read_table(host, f"{index_path}/{CENTROIDS_MEMBER}")
-    unit = _unit_rows(new_vectors, id_col, vec_col)
-    assigned = assign_lists_join(unit, cent_df).select(
-        F.col("_id").alias(id_col),
-        F.col("list_id"),
-        F.col("_nv").alias("nv"),
-    ).localCheckpoint(eager=False)  # count + clustered write below
-    n = assigned.count()
-    # size the appended files to the batch (one tiny file for a
-    # micro-batch, several list-banded files for a bulk backfill)
-    n_files = max(1, min(64, n // 500_000 + 1))
-    assigned = assigned.repartitionByRange(
-        n_files, "list_id"
-    ).sortWithinPartitions("list_id")
-    if n == 0 and app_meta is None:
-        return 0
-    commit.append_table_with_meta(
-        host,
-        f"{index_path}/{VECTORS_MEMBER}",
-        assigned if n else None,
-        app_meta or {},
-        expected_app=expected_app,
-    )
-    return n
-
-
-#: app-map key recording the corpus manifest version the index covers
-IVF_CURSOR = "ivf:corpus_version"
-
-
-def sync_ivf_index(
-    spark: SparkSession,
-    index_path: str,
-    corpus_path: str,
-    n_list: int = 16,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    fs=None,
-) -> dict:
-    """Keep the persistent IVF index in lock-step with a manifest
-    corpus table, exactly-once: the corpus version the index covers
-    lives in the index root's ``app`` map, every sync reads ONLY the
-    rows appended since it (``read_changes``), and the new
-    assignments commit atomically with the advanced cursor — a crash
-    replays to the uninterrupted state, never double-indexing.
-
-    First sync (or a non-append corpus history — compaction,
-    overwrite) trains/rebuilds from the full corpus snapshot at the
-    pinned version, cursor riding the same atomic swap. Returns
-    {"mode": "build" | "incremental" | "noop", "n": vectors added
-    or indexed}."""
-    from redis_lsm_timeseries_spark.errors import (
-        NonAppendHistoryError,
-        VersionNotFoundError,
-    )
-
-    host = _host(spark, fs)
-    commit = ManifestCommit()
-    versions = commit.table_versions(host, corpus_path)
-    if not versions:
-        raise ValidationError(
-            f"sync_ivf_index: corpus {corpus_path!r} is not a "
-            "manifest-managed table"
-        )
-    latest = versions[-1]
-    cursor = commit.read_app_meta(host, index_path).get(IVF_CURSOR)
-
-    def rebuild():
-        snap = commit.read_table(
-            host, corpus_path, None, version=latest
-        )
-        r = build_ivf_index(
-            snap, index_path, n_list=n_list, iters=iters,
-            id_col=id_col, vec_col=vec_col, fs=fs,
-            app_meta={IVF_CURSOR: latest},
-            expected_app={IVF_CURSOR: cursor},
-        )
-        return {"mode": "build", "n": r["n_vectors"]}
-
-    if cursor is None:
-        return rebuild()
-    since = int(cursor)
-    if since == latest:
-        return {"mode": "noop", "n": 0}
-    if since > latest:
-        raise ValidationError(
-            f"sync_ivf_index: cursor {since} is ahead of corpus "
-            f"version {latest} — the corpus log was rebuilt; delete "
-            "the index to restart"
-        )
-    try:
-        delta = commit.read_changes(
-            host, corpus_path, since, to_version=latest
-        )
-    except (NonAppendHistoryError, VersionNotFoundError):
-        # non-append history OR a cursor so stale vacuum pruned its
-        # version from the corpus log: rebuild from the snapshot
-        return rebuild()
-    n = extend_ivf_index(
-        delta, index_path, id_col=id_col, vec_col=vec_col, fs=fs,
-        app_meta={IVF_CURSOR: latest},
-        expected_app={IVF_CURSOR: cursor},
-    )
-    return {"mode": "incremental", "n": n}

@@ -190,29 +190,6 @@ def connected_components(
     )
 
 
-def canonical_docs(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    src: str = "doc_id_a",
-    dst: str = "doc_id_b",
-) -> DataFrame:
-    """Drop duplicates transitively: keep, per duplicate cluster, only
-    the document with the MINIMUM id (the cluster's canonical label),
-    and every document that appears in no candidate pair.
-
-    This is the dedup pipeline's final 'keep one copy' step:
-    candidates (LSH) -> verified pairs (Jaccard/Hamming/cosine) ->
-    components -> canonical survivors. One broadcast-or-shuffle
-    left-anti join of docs against the (small) non-canonical node set;
-    the documents table itself never enters the iteration."""
-    comp = connected_components(pairs, src=src, dst=dst)
-    losers = comp.where(F.col("node") != F.col("component")).select(
-        F.col("node").alias(id_col)
-    )
-    return docs.join(losers, on=id_col, how="left_anti")
-
-
 def canonical_docs_by(
     docs: DataFrame,
     pairs: DataFrame,
@@ -223,8 +200,8 @@ def canonical_docs_by(
 ) -> DataFrame:
     """Quality-aware canonicalization: keep, per duplicate cluster,
     the member with the HIGHEST ``score_col`` (ties -> minimum id),
-    and every document in no candidate pair. ``canonical_docs`` keeps
-    the min id — fine when copies are interchangeable, but near-dup
+    and every document in no candidate pair. Keeping the min id is
+    fine when copies are interchangeable, but near-dup
     clusters usually aren't (a clean article vs its ad-littered
     scrape): production pipelines keep the best copy, which is this.
 

@@ -836,7 +836,7 @@ def substring_dedup(
        text_deduped)
     ``text_deduped`` is over the NORMALIZED token stream (lowercased,
     whitespace-collapsed) — the form a tokenizer-fed pipeline
-    consumes, the same convention as ``chunk_documents``.
+    consumes.
 
     Scale: one spans aggregate per doc (small), broadcast-friendly
     join back onto the corpus; the rewrite slices each document's own

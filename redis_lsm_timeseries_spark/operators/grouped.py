@@ -14,8 +14,6 @@ instead of a rows-only one.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -64,12 +62,18 @@ def per_group_linear_trend(
         # column to float64 and a float column would silently degrade
         # the arbitrary-precision sums to float (ADVICE r17). Non-int
         # input goes through int(v) per element — exact for the
-        # float-that-is-an-integer case, loud (ValueError on NaN) for
-        # anything broken — instead of silently accumulating floats.
+        # float-that-is-an-integer case, loud (ValueError) on NaN or a
+        # fractional value, which int() alone would truncate.
         def ints(col):
             vals = pdf[col].tolist()
             if pdf[col].dtype.kind not in ("i", "u"):
-                vals = [int(v) for v in vals]
+                exact = [int(v) for v in vals]
+                if exact != vals:
+                    raise ValueError(
+                        f"per_group_linear_trend: {col} holds a value "
+                        "that is not an integer"
+                    )
+                vals = exact
             return vals
 
         xs = ints(x_col)

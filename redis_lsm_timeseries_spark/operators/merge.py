@@ -36,8 +36,7 @@ correction to yesterday's corpus does not wait for a full compaction.
   physical names — rename never disables mutation, and a rename
   racing a merge is benign because physical names don't move.
 
-Deletes (``delete_rows`` by key set, ``delete_range`` by an inclusive
-column interval — the GDPR erasure / row-level retention primitives)
+Deletes (``delete_rows`` by key set — the GDPR erasure primitive)
 ride the same machinery: files whose stats PROVE no row matches are
 never touched, a file whose every row matches is dropped without a
 replacement write.
@@ -101,24 +100,19 @@ def _key_predicates(source: DataFrame, keys: list[str]) -> dict:
     return preds
 
 
-def _resolve_source(
+def _resolve_source_counted(
     source: DataFrame, keys: list[str], order_col: str | None
-) -> DataFrame:
+) -> tuple[DataFrame, int | None]:
     """One row per key: last-writer-wins within the source when
     ``order_col`` names the ordering (ties broken by the remaining
     columns, deterministically), else duplicate keys are an error —
     silently picking one would hide a bug in the caller's pipeline.
     NULL keys are rejected on every backend: NULL never equals a
     target key, so the row could neither match nor be looked up
-    again."""
-    return _resolve_source_counted(source, keys, order_col)[0]
+    again.
 
-
-def _resolve_source_counted(
-    source: DataFrame, keys: list[str], order_col: str | None
-) -> tuple[DataFrame, int | None]:
-    """``_resolve_source`` plus the resolved row count when it falls
-    out for free: without ``order_col`` the NULL-key check, the
+    Also returns the resolved row count when it falls out for free:
+    without ``order_col`` the NULL-key check, the
     duplicate-key check and the source count all derive from ONE
     groupBy(keys) aggregation — previously three separate source
     scans (isEmpty + dup collect + count), the dominant per-merge
@@ -220,7 +214,6 @@ def _envelope_guard(
             )
 
     return guard
-
 
 
 #: auto mode: positions-delete when the matched fraction of the
@@ -1415,124 +1408,6 @@ def delete_rows(
     return DeleteStats(len(affected), total)
 
 
-def delete_range(
-    host,
-    path: str,
-    column: str,
-    lo=None,
-    hi=None,
-    commit=None,
-    mode: str = "rewrite",
-) -> DeleteStats:
-    """Delete every row with ``lo <= column <= hi`` (either bound may
-    be None = unbounded) — row-level retention sharper than partition
-    granularity. The prune envelope IS the delete predicate, so a
-    skipped file provably holds no matching row. ``mode`` as in
-    ``delete_rows`` (``"dv"`` = merge-on-read positions delete)."""
-    from redis_lsm_timeseries_spark.commit import ManifestCommit
-
-    if lo is None and hi is None:
-        raise ValidationError("delete_range: at least one bound required")
-    if mode not in ("rewrite", "dv", "auto"):
-        raise ValidationError(
-            f"delete_range: mode must be 'rewrite', 'dv' or 'auto', "
-            f"got {mode!r}"
-        )
-    commit = commit if commit is not None else ManifestCommit()
-    cond = F.lit(True)
-    if lo is not None:
-        cond = cond & (F.col(column) >= F.lit(lo))
-    if hi is not None:
-        cond = cond & (F.col(column) <= F.lit(hi))
-
-    managed = (
-        commit.member_files(host, path)
-        if isinstance(commit, ManifestCommit)
-        else None
-    )
-    if managed is None:
-        if mode == "dv":
-            raise ValidationError(
-                "delete_range: mode='dv' needs a manifest-managed "
-                "table — deletion vectors live in per-file stats, "
-                "which directory mode does not record"
-            )
-        cur = commit.read_table(host, path, None)
-        out = cur.where(~cond | F.col(column).isNull())
-        n = out.sparkSession.sparkContext.defaultParallelism
-        commit.snapshot_rewrite(
-            host, path, _clustered_write(out, [column], n)
-        )
-        return DeleteStats(-1, -1)
-
-    root, member = commit._resolve(host, path)
-    smeta, phys = _mapping_ctx(commit, host, path)
-    total = len(managed)
-    preds = {column: (lo, hi)}
-    affected, _ = commit.prune_files(host, path, preds)
-    if not affected:
-        return DeleteStats(0, total)
-    guard = _envelope_guard(
-        commit, member, set(managed) | set(affected),
-        {phys(column): (lo, hi)},
-    )
-    if mode in ("dv", "auto"):
-        entry = commit._load_entry(host, path, root, None)
-        fstats = entry.get("stats", {}).get(member, {})
-        matched = commit.scan_member_subset(
-            host, path, affected, keep_pos=True
-        ).where(cond)
-        use_dv = mode == "dv"
-        if not use_dv:
-            live = 0
-            for f in affected:
-                s = fstats.get(f)
-                rows = None if s is None else s.get("rows")
-                if rows is None:
-                    live = None
-                    break
-                live += int(rows) - int(
-                    (s.get("dv") or {}).get("count", 0)
-                )
-            use_dv = (
-                live is not None
-                and live > 0
-                and matched.count() <= DV_AUTO_MAX_FRACTION * live
-            )
-        if use_dv:
-            n = _apply_dv_delete(
-                host, commit, path, root, member, smeta,
-                affected, matched, fstats, guard,
-            )
-            return DeleteStats(n, total)
-    plan: dict = {}
-    cur = _affected_df(host, commit, path, affected, smeta, plan=plan)
-    survivors = cur.where(~cond | F.col(column).isNull())
-    cdf = _cdf_sized(
-        _physical_out(
-            commit, host, root, member,
-            cur.where(cond)
-            .withColumn(commit.CDF_TYPE_COL, F.lit("delete")),
-            smeta,
-        ),
-        len(affected) * 250_000,
-    )
-    write_fn = (
-        None
-        if survivors.isEmpty()
-        else _clustered_write(
-            _physical_out(commit, host, root, member, survivors, smeta),
-            [phys(column)], len(affected),
-            partition_cols_of(affected),
-        )
-    )
-    commit.rewrite_files(
-        host, path, affected, write_fn, entry_guard=guard, cdf_df=cdf,
-        plan_dv=plan["dv"],
-    )
-    return DeleteStats(len(affected), total)
-
-
 def replace_range(
     host,
     path: str,
@@ -1546,7 +1421,7 @@ def replace_range(
 ) -> DeleteStats:
     """Atomically replace every row with ``lo <= column <= hi`` by
     ``source`` — the Delta ``replaceWhere`` idiom in ONE commit
-    (delete_range + append would leave a visible gap between two
+    (a delete + append would leave a visible gap between two
     entries): the idempotent backfill/restatement primitive ("recompute
     day X and swap it in"). Every source row must satisfy the
     predicate (enforced — a stray row outside the range would silently

@@ -115,10 +115,10 @@ def pack_documents(
             "n_windows",
             (F.col("pack_id_end") - F.col("pack_id") + 1).cast("long"),
         )
-        # carried so downstream consumers (manifest, utilization,
-        # materialization) can VERIFY they were called with the same
-        # window size the layout was computed under — a mismatch
-        # would silently corrupt every slice boundary.
+        # carried so downstream consumers (the window manifest) can
+        # VERIFY they were called with the same window size the layout
+        # was computed under — a mismatch would silently corrupt every
+        # slice boundary.
         .withColumn("pack_window_tokens", wt.cast("long"))
     )
 
@@ -149,37 +149,6 @@ def _checked_wt(df: DataFrame, window_tokens: int | None, caller: str):
                 F.col("pack_window_tokens").cast("string"),
             )
         ).cast("long")
-    )
-
-
-def pack_utilization(packed: DataFrame) -> DataFrame:
-    """Per-(source, shard) packing summary: total tokens, windows
-    consumed, boundary-crossing docs, and ``fill_frac`` — the mean
-    fill of the consumed windows, the number a pipeline watches to
-    size ``window_tokens``. One map-side-combined aggregate.
-
-    ``n_windows_used`` = ceil(stream tokens / window) — computed from
-    the token total, NOT from max(pack_id_end): a trailing zero-token
-    document whose nominal start sits exactly on a window boundary
-    reports a pack_id_end one past the last window any token
-    occupies."""
-    wt = F.max("pack_window_tokens")
-    total = F.sum("n_tokens").cast("long")
-    used = F.ceil(total / wt).cast("long")
-    return (
-        packed.groupBy("source", "shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            total.alias("total_tokens"),
-            used.alias("n_windows_used"),
-            F.sum(F.col("crosses_boundary").cast("long"))
-            .cast("long")
-            .alias("n_boundary_docs"),
-            F.when(used > 0, total.cast("double") / (used * wt))
-            .otherwise(F.lit(0.0))
-            .alias("fill_frac"),
-        )
-        .orderBy("source", "shard")
     )
 
 
@@ -239,82 +208,6 @@ def window_manifest(
             (F.greatest(win_lo, doc_lo) - win_lo).cast("long"),
         )
         .drop("pack_id", "pack_id_end", "crosses_boundary", "n_windows")
-    )
-
-
-def materialize_windows(
-    docs: DataFrame,
-    manifest: DataFrame,
-    window_tokens: int | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Assemble the actual training windows from a ``window_manifest``:
-    one row per (source, shard, window_id) carrying the window's token
-    sequence, ready for a shard writer (a real pipeline maps tokens to
-    BPE ids here; this engine stays tokenizer-agnostic and emits the
-    token strings).
-
-    Output: (source, shard, window_id, toks array<string>, n_tokens).
-    Every window holds exactly ``window_tokens`` tokens except each
-    stream's final one.
-
-    Scale shape: the manifest joins the corpus on the document key
-    (both sides hash-partition on id — at 100 TB co-locate by storing
-    both bucketed by id), each row slices ONLY the token range the
-    window needs, and the assembly groupBy shuffles token payloads
-    keyed by window — data-volume-linear, the same bytes a shard
-    writer must move anyway. In-window order is restored by sorting
-    the collected slices on ``win_tok_start`` (array_sort on structs —
-    no ordering assumption on collect_list).
-
-    ``window_tokens`` is a pure cross-check (slice boundaries come
-    from the manifest): passing a value mismatching the manifest's
-    ``pack_window_tokens`` raises at execution."""
-    if window_tokens is not None and "pack_window_tokens" in manifest.columns:
-        # assert_true yields NULL on success, raises on the first
-        # mismatching row; as a filter predicate it cannot be pruned.
-        manifest = manifest.where(
-            F.assert_true(
-                F.col("pack_window_tokens") == F.lit(int(window_tokens)),
-                F.lit(
-                    f"materialize_windows: window_tokens="
-                    f"{int(window_tokens)} mismatches the manifest's "
-                    f"pack_window_tokens"
-                ),
-            ).isNull()
-        )
-    toks = nonempty_tokens(text_col)
-    sliced = (
-        manifest.join(
-            docs.select(F.col(id_col), toks.alias("_toks")), id_col
-        )
-        .select(
-            "source",
-            "shard",
-            "window_id",
-            "win_tok_start",
-            F.slice(
-                "_toks",
-                F.col("doc_tok_start").cast("int") + F.lit(1),
-                (F.col("doc_tok_end") - F.col("doc_tok_start")).cast("int"),
-            ).alias("_slice"),
-        )
-    )
-    return (
-        sliced.groupBy("source", "shard", "window_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("win_tok_start", "_slice"))
-            ).alias("_parts")
-        )
-        .select(
-            "source",
-            "shard",
-            "window_id",
-            F.flatten(F.col("_parts._slice")).alias("toks"),
-        )
-        .withColumn("n_tokens", F.size("toks").cast("long"))
     )
 
 
@@ -424,53 +317,4 @@ def pack_documents_nosplit(
         slim.groupBy(source_col, "shard")
         .applyInPandas(place, out_schema)
         .withColumn("pack_window_tokens", F.lit(wt).cast("long"))
-    )
-
-
-def materialize_windows_nosplit(
-    docs: DataFrame,
-    packed: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Assemble the actual training windows from a
-    ``pack_documents_nosplit`` layout: one row per (source, shard,
-    window) carrying the window's token sequence — documents intact,
-    in placement order.
-
-    Output: (source, shard, window_id, toks, n_tokens, n_docs,
-    has_oversize). Windows hold <= window_tokens tokens unless
-    ``has_oversize`` (a single too-long document placed alone —
-    truncate or split downstream, the layout never cuts silently).
-
-    Scale shape mirrors ``materialize_windows``: the layout joins the
-    corpus on the document key, and the assembly groupBy shuffles
-    token payloads keyed by window — the same bytes a shard writer
-    must move. In-window order is (win_offset, id): ties happen only
-    between zero-token documents, whose empty arrays cannot affect
-    the flattened stream."""
-    toks = nonempty_tokens(text_col)
-    joined = packed.join(
-        docs.select(F.col(id_col), toks.alias("_toks")), id_col
-    )
-    return (
-        joined.groupBy("source", "shard", F.col("pack_id").alias("window_id"))
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct("win_offset", F.col(id_col).alias("_id"), "_toks")
-                )
-            ).alias("_parts"),
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.max(F.col("oversize")).alias("has_oversize"),
-        )
-        .select(
-            "source",
-            "shard",
-            "window_id",
-            F.flatten(F.col("_parts._toks")).alias("toks"),
-            "n_docs",
-            "has_oversize",
-        )
-        .withColumn("n_tokens", F.size("toks").cast("long"))
     )

@@ -172,62 +172,6 @@ def m4_downsample(
     )
 
 
-def counter_rate(
-    samples: DataFrame,
-    tag_col: str = "tag",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """Per-second rate of a monotonically-increasing counter with
-    reset detection (the Prometheus ``rate()`` contract): a value
-    DROP between consecutive samples means the counter restarted, so
-    the increase since the reset is the new value itself, not the
-    (negative) difference.
-
-    Output, one row per sample after each series' first:
-    (tag, ts, increase, rate_per_unit, reset) where ``rate_per_unit``
-    = increase / (ts - prev_ts) in the ts column's own unit. A NULL
-    value (the store's tombstone convention) yields NULL
-    increase/rate for its own row AND the next one — the interval
-    around a tombstone is unknowable, but the rows still appear (the
-    filter is on row POSITION, not on the previous value, so a
-    tombstone cannot silently swallow its successor's interval).
-
-    One lag window partitioned by series — the same shuffle class as
-    every other per-series pass; no cross-series data motion."""
-    w = Window.partitionBy(tag_col).orderBy(ts_col)
-    prev_v = F.lag(F.col(value_col).cast("double")).over(w)
-    prev_ts = F.lag(F.col(ts_col).cast("long")).over(w)
-    v = F.col(value_col).cast("double")
-    return (
-        samples.select(
-            F.col(tag_col).alias("tag"),
-            F.col(ts_col).cast("long").alias("ts"),
-            v.alias("_v"),
-            prev_v.alias("_pv"),
-            prev_ts.alias("_pts"),
-            F.row_number().over(w).alias("_rn"),
-        )
-        .where(F.col("_rn") > 1)
-        .withColumn("reset", F.col("_v") < F.col("_pv"))
-        .withColumn(
-            "increase",
-            F.when(F.col("reset"), F.col("_v")).otherwise(
-                F.col("_v") - F.col("_pv")
-            ),
-        )
-        .withColumn(
-            "rate_per_unit",
-            F.when(
-                F.col("ts") > F.col("_pts"),
-                F.col("increase")
-                / (F.col("ts") - F.col("_pts")).cast("double"),
-            ),
-        )
-        .select("tag", "ts", "increase", "rate_per_unit", "reset")
-    )
-
-
 def with_zscore_anomaly(
     samples: DataFrame,
     trailing_rows: int = 20,

@@ -15,18 +15,13 @@ portable md5-based ``hash64`` of the row key, not an RNG, so:
    ``hash64(key) % denom < rate(stratum)``. A pure map-side filter:
    no shuffle, no window, no state; scales to any corpus size and
    pushes straight down onto the scan.
-2. ``stratified_quota_sample`` — exact per-stratum counts: rank rows
-   within each stratum by ``(hash64(key), key)`` and keep the first
-   ``quota``. Needs one hash-partitioned sort per stratum (a window),
-   so at 100 TB it's the top-up/repair pass over the (much smaller)
-   output of path 1, not the primary sampler; skewed strata fall to
-   AQE like any other window partition.
+2. ``hash_split`` — the same hash as a deterministic train/val/test
+   split.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.window import Window
 
 from redis_lsm_timeseries_spark.functions.portable import hash64
 
@@ -73,37 +68,6 @@ def hash_mod_sample(
         df.withColumn("mix_bucket", sample_bucket(key_col, denom))
         .withColumn("rate_per_mille", rate.cast("long"))
         .where(F.col("mix_bucket") < F.col("rate_per_mille"))
-    )
-
-
-def stratified_quota_sample(
-    df: DataFrame,
-    strata_col: str,
-    quotas: dict[str, int] | int,
-    key_col: str,
-) -> DataFrame:
-    """Exact-size stratified sample: the first ``quota`` rows of each
-    stratum in deterministic pseudo-random order ``(hash64(key),
-    key)`` — the key tie-break makes the rank total even under hash
-    collisions, so the member set is unique and oracle-reproducible.
-
-    ``quotas``: one int for all strata, or a dict (missing strata
-    drop). One window sort per stratum; see the module docstring for
-    where this sits at 100 TB."""
-    if isinstance(quotas, int):
-        quota: Column = F.lit(quotas)
-    else:
-        quota = F.lit(0)
-        for stratum, q in sorted(quotas.items()):
-            quota = F.when(
-                F.col(strata_col) == stratum, F.lit(int(q))
-            ).otherwise(quota)
-    w = Window.partitionBy(strata_col).orderBy(
-        sample_bucket(key_col, 1 << 60), F.col(key_col)
-    )
-    return (
-        df.withColumn("sample_rank", F.row_number().over(w).cast("long"))
-        .where(F.col("sample_rank") <= quota)
     )
 
 

@@ -1,6 +1,6 @@
 """Text-analysis operators for the LLM-data-pipeline surface (north
 star): token statistics, quality scoring, language-ID heuristic,
-document fingerprinting.
+URL extraction, repetition statistics.
 
 All pure Column expressions (JVM-side, whole-stage-codegen'd) — no
 Python UDFs in any hot path. Every computation has a portable DuckDB
@@ -116,20 +116,6 @@ def with_lang_guess(df: DataFrame) -> DataFrame:
     )
 
 
-def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Document fingerprint: md5 over the sorted distinct token set —
-    order- and repetition-insensitive, so reshuffled/duplicated-word
-    variants collide (the classic key-collision fingerprint)."""
-    return df.withColumn(
-        "fingerprint",
-        F.md5(
-            F.concat_ws(
-                " ", F.array_sort(F.array_distinct(tokens(text_col)))
-            )
-        ),
-    )
-
-
 #: http(s) URLs as they appear in prose: scheme + host + optional path,
 #: terminated before whitespace and closing brackets/quotes. Sentence
 #: punctuation ('.', ',', ';', '!', '?') is legal INSIDE a path, so the
@@ -222,7 +208,7 @@ def with_repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
         ).cast("double")
         / F.size(F.col("_rs_grams")).cast("double"),
     ).otherwise(F.lit(0.0))
-    # Same phantom-empty-token filter as chunk_documents: edge
+    # Phantom-empty-token filter (as in portable.nonempty_tokens): edge
     # whitespace makes tokens() emit '' entries, and a gram containing
     # '' would count repetition that no real token stream has (a
     # whitespace-only doc would otherwise score top_2gram_frac = 1.0).
@@ -239,111 +225,3 @@ def with_repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
         )
         .drop("_rs_toks", "_rs_grams")
     )
-
-
-def chunk_documents(
-    df: DataFrame,
-    chunk_size: int = 256,
-    overlap: int = 32,
-    text_col: str = "text",
-) -> DataFrame:
-    """Split documents into overlapping token-window chunks — the
-    context-length-bound preprocessing step of a training pipeline
-    (each chunk fits a model's window; the overlap preserves cross-
-    boundary context).
-
-    Chunks are windows over the NORMALIZED token stream (``tokens``:
-    lowercased, whitespace-collapsed, with the phantom empty tokens
-    that edge whitespace produces filtered out), not byte offsets into
-    the raw text — chunk_text joins tokens with single spaces, the way
-    a tokenizer-fed pipeline consumes them. Callers needing the
-    original casing/spacing should chunk by character ranges instead.
-    NULL or empty text is one empty chunk row (``n_chunk_tokens`` 0)
-    rather than silently vanishing from the output.
-
-    1-in/N-out entirely in Column expressions: tokenize once, build the
-    chunk-start sequence with ``sequence`` (stride = size - overlap),
-    ``posexplode`` it, and slice the token array per chunk — no Python
-    in the loop, and the explode is a map-side expansion (no shuffle).
-    Short documents yield exactly one chunk. Chunk count per doc is
-    ceil((n_tokens - overlap) / stride), matching the trailing partial
-    chunk a tokenizer-based pipeline keeps.
-
-    Output: one row per chunk — (id, chunk_idx, chunk_text,
-    n_chunk_tokens) plus the carried-through input columns."""
-    if not 0 <= overlap < chunk_size:
-        raise ValueError("need 0 <= overlap < chunk_size")
-    stride = chunk_size - overlap
-    # split('', '\\s+') yields [''] and edge whitespace yields phantom
-    # '' tokens — filter them so counts and windows see real tokens.
-    toks = F.filter(
-        F.coalesce(tokens(text_col), F.expr("CAST(array() AS ARRAY<STRING>)")),
-        lambda t: t != "",
-    )
-    starts = F.expr(
-        f"sequence(0, greatest(size(_toks) - {overlap} - 1, 0), {stride})"
-    )
-    return (
-        df.withColumn("_toks", toks)
-        .withColumn("_starts", starts)
-        .select(
-            "*",
-            F.posexplode("_starts").alias("chunk_idx", "_start"),
-        )
-        .withColumn(
-            "chunk_text",
-            F.concat_ws(
-                " ", F.expr(f"slice(_toks, _start + 1, {chunk_size})")
-            ),
-        )
-        .withColumn(
-            "n_chunk_tokens",
-            F.least(
-                F.size("_toks") - F.col("_start"), F.lit(chunk_size)
-            ).cast("long"),
-        )
-        .drop("_toks", "_starts", "_start")
-    )
-
-
-#: (pattern, replacement) pairs for the PII scrubber, applied in order.
-#: Deliberately conservative patterns: emails, IPv4 addresses,
-#: dash-formatted card numbers, 13+-digit runs, then phones.
-#: Order is load-bearing: the phone pattern is the greediest digit
-#: matcher, so the more specific shapes must claim their text first
-#: (an IP or card number would otherwise half-match as a phone,
-#: leaking the unmatched digits). Both the card and phone patterns
-#: require unambiguous separators (``-``/``.``/parens/leading ``+``):
-#: bare digit runs (epoch timestamps, record ids), space-separated
-#: digit groups (``1914 1918 1939 1945``, ``4111 1111 1111 1111``),
-#: year ranges followed by a count (``2023-2024 1500 staff``), and
-#: groups spanning a sentence boundary all pass through verbatim, at
-#: the cost of missing space-formatted phones/cards. That trade favors
-#: corpus fidelity: an unredacted number is recoverable by a later,
-#: stricter pass; a redacted year list or timestamp is data loss.
-PII_PATTERNS = (
-    (r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
-    (r"\b(?:\d{1,3}\.){3}\d{1,3}\b", "<IP>"),
-    (r"\b\d{4}-\d{4}-\d{4}-\d{1,7}\b", "<NUMBER>"),
-    (r"\b\d{13,}\b", "<NUMBER>"),
-    (
-        r"\+\d{7,15}"
-        r"|(?:\+\d{1,3}[-. ]?)?(?:\(\d{2,4}\)[-. ]?|\d{2,4}[-.])\d{3,4}[-.]\d{3,4}",
-        "<PHONE>",
-    ),
-)
-
-
-def scrub_pii(
-    df: DataFrame, text_col: str = "text", out_col: str = "text_scrubbed"
-) -> DataFrame:
-    """Regex PII redaction (emails, IPv4, long digit runs, phone
-    numbers) — the standard pre-training hygiene pass. A chain of
-    ``regexp_replace`` Column expressions, so the whole scrub runs
-    inside whole-stage codegen; patterns apply in declaration order
-    (see PII_PATTERNS — specific shapes before the greedy phone one).
-    """
-    col: Column = F.col(text_col)
-    for pattern, replacement in PII_PATTERNS:
-        col = F.regexp_replace(col, pattern, replacement)
-    return df.withColumn(out_col, col)

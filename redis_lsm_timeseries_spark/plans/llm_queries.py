@@ -202,54 +202,6 @@ from redis_lsm_timeseries_spark.plans.reference_queries import (  # noqa: E402
 UNREGISTERED_ORACLES["text_lang_id"] = (text_lang_id, TEXT_LANG_ID_ORACLE)
 
 
-# text_fingerprint_dups was unregistered in round 7 (50-entry driver
-# window) in favor of text_decontaminate: its digest-groupBy shape is
-# subsumed by dedup_exact (same plan, md5-of-token-set vs md5-of-text
-# key), and the fingerprint operator itself stays pytest-differential
-# in tests/test_llm_operators.py (FINGERPRINT_DUPS_SQL below is the
-# retired oracle, kept for that test).
-FINGERPRINT_DUPS_SQL = f"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + {EXACT_OFFSET} AS doc_id,
-         text || ' ' || regexp_extract(lower(text), '^\\S+') AS text
-  FROM documents
-), fp AS (
-  SELECT doc_id,
-         md5(array_to_string(list_sort(list_distinct(
-           {TOKENS_SQL.format(e='text')})), ' ')) AS fingerprint
-  FROM corpus
-)
-SELECT fingerprint,
-       min(doc_id) AS keep_id,
-       count(*) AS n_members
-FROM fp GROUP BY fingerprint
-"""
-
-
-def text_fingerprint_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set-of-tokens fingerprint: copies that merely REPEAT an existing
-    token collide with their original (repetition/order-insensitive
-    near-dup key). Corpus = docs + copies appending their own first
-    token; every fingerprint group has exactly 2 members."""
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    copies = d.select(
-        (F.col("doc_id") + EXACT_OFFSET).alias("doc_id"),
-        F.concat(
-            F.col("text"),
-            F.lit(" "),
-            F.regexp_extract(F.lower(F.col("text")), r"^\S+", 0),
-        ).alias("text"),
-    )
-    corpus = d.unionByName(copies)
-    return (
-        TX.with_fingerprint(corpus)
-        .groupBy("fingerprint")
-        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_members"))
-    )
-
-
 # ------------------------------------------------------ decontamination
 #: Eval set for the decontamination entry: every 20th document, its
 #: first EVAL_GRAMS_PER_DOC shingle hashes — a deterministic stand-in
@@ -504,10 +456,10 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolve transitive duplicate groups — A~B and B~C collapse {A,B,C}
     to one cluster even though A~C was never emitted as a pair. Each
     node's ``component`` is the minimum doc_id of its cluster, i.e. its
-    canonical document; ``canonical_docs`` anti-joins everything else
-    away. The DuckDB oracle recomputes the identical closure with a
-    recursive CTE over the same band-derived pairs — an ITERATIVE
-    DataFrame algorithm holding a full rows+schema+hash oracle row."""
+    canonical document. The DuckDB oracle recomputes the identical
+    closure with a recursive CTE over the same band-derived pairs — an
+    ITERATIVE DataFrame algorithm holding a full rows+schema+hash
+    oracle row."""
     from redis_lsm_timeseries_spark.operators.components import (
         connected_components,
     )

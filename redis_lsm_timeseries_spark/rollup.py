@@ -307,16 +307,6 @@ def _refresh_locked(
         return RollupMetrics(n_buckets, n_tags, new_watermark)
 
     meta = _load_meta(store, meta_path, name)
-    if meta.get("cascade_of") is not None:
-        # A cascade target is DERIVED from its source rollup; a base-
-        # data refresh would silently mix exact countDistinct buckets
-        # into an HLL-estimated table and strip the cascade_of marker,
-        # breaking every later cascade_rollup call.
-        raise ValidationError(
-            f"rollup {name!r} is a cascade of {meta['cascade_of']!r}; "
-            "refresh the source and re-run cascade_rollup instead of "
-            "refreshing the cascade from base data"
-        )
     if meta["step"] != step:
         raise ValidationError(
             f"rollup {name!r} was created with step={meta['step']}, "
@@ -613,123 +603,3 @@ def read_rollup(
         if hi is not None:
             df = df.where(F.col("bucket_start") <= int(hi))
     return df
-
-
-def cascade_rollup(
-    store: TimeseriesStore, src: str, name: str, step: int
-) -> RollupMetrics:
-    """Hierarchical rollup (TimescaleDB's continuous-aggregate-on-
-    continuous-aggregate): materialize a COARSER rollup ``name`` at
-    ``step`` from the finer rollup ``src`` — never touching base data.
-
-    Why this is exact for everything but distincts: LWW winners are
-    per (tag, ts) and a ts lives in exactly ONE fine bucket, so fine
-    buckets within a coarse bucket partition the members — ``n``,
-    ``n_numeric``, ``sum_num``, ``min_num``, ``max_num`` merge
-    losslessly. Distinct VALUES can repeat across fine buckets, so
-    ``n_distinct`` comes from ``hll_union_agg`` over the source's
-    mergeable sketches (the reason ``with_sketch`` exists): the
-    cascade therefore REQUIRES ``src`` to carry sketches and raises
-    otherwise, instead of silently summing an overcount. The output is
-    itself a sketch-carrying rollup, so cascades chain (hour -> day ->
-    month).
-
-    Refresh posture: FULL recompute per call, replacing the target
-    atomically through the seam (``snapshot_rewrite`` — one manifest
-    entry under ``ManifestCommit``, crash-repairable swap on the
-    directory backend). Incremental machinery would buy nothing here:
-    the input is the already-aggregated fine rollup, orders of
-    magnitude smaller than base data at any scale, and one
-    groupBy((tag, coarse_bucket)) over it is a single
-    partial-aggregated shuffle. Keep ``src`` fresh with
-    ``refresh_rollup``; re-cascade after.
-
-    Scale: input rows = fine buckets (bounded by tags x fine buckets),
-    aggregation is map-side combined, output partitioned by tag like
-    every rollup. No base-table contact, no driver-side state beyond
-    the metrics row."""
-    store._require_init()
-    step = int(step)
-    src_data, src_meta_path = _paths(store, src)
-    dst_data, dst_meta_path = _paths(store, name)
-    if name == src:
-        raise ValidationError("cascade target must differ from source")
-    if not store.fs.exists(src_meta_path):
-        raise ValidationError(f"rollup {src!r} does not exist")
-    src_meta = _load_meta(store, src_meta_path, src)
-    fine = int(src_meta["step"])
-    if step <= 0 or step % fine != 0 or step == fine:
-        raise ValidationError(
-            f"cascade step must be a strict positive multiple of the "
-            f"source step {fine}; got {step}"
-        )
-    if not src_meta.get("with_sketch", False):
-        raise ValidationError(
-            f"rollup {src!r} carries no distinct sketches; cascading "
-            "n_distinct from exact per-bucket counts would overcount "
-            "values repeating across fine buckets. Recreate the source "
-            "with with_sketch=True."
-        )
-    if store.fs.exists(dst_meta_path):
-        dst_meta = _load_meta(store, dst_meta_path, name)
-        if dst_meta.get("step") != step or dst_meta.get("cascade_of") != src:
-            raise ValidationError(
-                f"rollup {name!r} exists with step="
-                f"{dst_meta.get('step')}, cascade_of="
-                f"{dst_meta.get('cascade_of')!r}; requested step={step} "
-                f"from {src!r}"
-            )
-
-    with maintenance_lease(store):
-        # A previous cascade may have crashed between snapshot_rewrite's
-        # two renames (directory backend): complete or roll back FIRST,
-        # like every other rewrite caller — without this, the next
-        # rewrite's remove_tree(old) would delete the only surviving
-        # copy and then fail renaming the absent live dir.
-        store.commit.repair_interrupted_rewrite(store, dst_data)
-        fine_df = read_rollup(store, src)
-        coarse_bucket = (
-            F.col("bucket_start")
-            - F.pmod(F.col("bucket_start"), F.lit(step))
-        ).cast("long")
-        merged_sketch = F.hll_union_agg("distinct_sketch")
-        out = (
-            fine_df.groupBy("tag", coarse_bucket.alias("bucket_start"))
-            .agg(
-                F.sum("n").cast("long").alias("n"),
-                F.sum("n_numeric").cast("long").alias("n_numeric"),
-                F.sum(F.col("sum_num").cast(SUM_DECIMAL))
-                .cast("double")
-                .alias("sum_num"),
-                F.min("min_num").alias("min_num"),
-                F.max("max_num").alias("max_num"),
-                F.hll_sketch_estimate(merged_sketch)
-                .cast("long")
-                .alias("n_distinct"),
-                merged_sketch.alias("distinct_sketch"),
-            )
-            .repartition("tag")
-            # materialize before replacing the dir — lazily: the
-            # bucket count below is the materializing action
-            .localCheckpoint(eager=False)
-        )
-        n_buckets = out.count()
-        n_tags = out.select("tag").distinct().count()
-
-        if store.commit.table_exists(store, dst_data):
-            def write_snapshot(tmp):
-                out.write.mode("overwrite").partitionBy("tag").parquet(tmp)
-
-            store.commit.snapshot_rewrite(store, dst_data, write_snapshot)
-        elif n_buckets:
-            store.commit.append_partitioned(store, out, dst_data, ["tag"])
-        _write_meta(
-            store, dst_meta_path,
-            step=step,
-            watermark_ingest_ts=int(src_meta["watermark_ingest_ts"]),
-            boundary_rows=src_meta.get("boundary_rows"),
-            partial=None,
-            with_sketch=True,
-            cascade_of=src,
-        )
-    return RollupMetrics(n_buckets, n_tags, int(src_meta["watermark_ingest_ts"]))

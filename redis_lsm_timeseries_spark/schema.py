@@ -41,15 +41,6 @@ WRITE_SCHEMA = T.StructType(
     ]
 )
 
-# Range-read request shape (reference readIndex input, index.js:163-201).
-RANGE_SCHEMA = T.StructType(
-    [
-        T.StructField("tag", T.StringType(), nullable=False),
-        T.StructField("start", T.LongType(), nullable=False),
-        T.StructField("end", T.LongType(), nullable=False),
-    ]
-)
-
 # Columns that identify one physical sample (a ZSET member identity in the
 # reference); exact-duplicate drop across hot/cold uses all of these.
 MEMBER_IDENTITY_COLS = ["tag", "ts", "value", "ingest_ts", "writer_id", "seq"]

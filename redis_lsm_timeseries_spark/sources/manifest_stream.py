@@ -6,7 +6,7 @@ plus a BATCH reader (``spark.read.format("rlts_table")``) whose
 manifest-stats file skipping and whose ``versionAsOf`` time-travels.
 
 The engine has had streaming SINKS into manifest tables since r8
-(``streaming/sink.py``, the admission sink) and a pull-based
+(``streaming/sink.py``) and a pull-based
 incremental consumer (``changefeed.mirror_changes``); this closes the
 triangle with a native source: a Spark 4 Python DataSource
 (``pyspark.sql.datasource``) whose offsets are manifest VERSIONS, so

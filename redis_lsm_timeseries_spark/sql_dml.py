@@ -1171,6 +1171,6 @@ def sql(spark_or_host, statement: str, commit=None) -> DataFrame:
         "AS|CLONE / ALTER TABLE / RESTORE TABLE / DESCRIBE "
         "HISTORY|DETAIL / SHOW TBLPROPERTIES|PARTITIONS / ANALYZE "
         "TABLE / VACUUM / OPTIMIZE over a quoted manifest path). "
-        "Other mutations: replace_range / delete_range / "
-        "overwrite_partitions via the Python API."
+        "Other mutations: replace_range / overwrite_partitions via "
+        "the Python API."
     )

@@ -25,8 +25,7 @@ Physical layout — a two-level LSM:
   predicate pushed to row-group min/max — strictly better (SURVEY.md
   §4 P9). Bulk loads (``write_df``) land here directly, clustered.
 - L0 ``{root}/{settings-hash}/hot_l0``: flat Parquet segments, ONE
-  file per row-batch ``write()``, globally sorted by (tag, ts) so
-  row-group stats prune reads. The memtable-flush analog of the
+  file per row-batch ``write()``. The memtable-flush analog of the
   reference's append-first LSM posture (``recipe:19-20``);
   ``flush_l0`` (called by ack/compact maintenance) folds segments
   into L1.
@@ -47,6 +46,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from redis_lsm_timeseries_spark.config import (
     MAX_PAGE_NAME_LENGTH,
+    MAX_SAMPLES_PER_WRITE,
+    MAX_TAG_NAME_LENGTH,
+    MAX_TAGS_PER_READ,
+    PARTITION_COLS,
+    VERSION,
     EngineConfig,
 )
 from redis_lsm_timeseries_spark.fs import LOCAL_FS, StorageFilesystem
@@ -243,7 +247,7 @@ class TimeseriesStore:
             if not isinstance(meta.get("epoch"), int):
                 raise ValidationError(f"corrupted engine meta at {meta_path}")
         else:
-            meta = {"epoch": _now_ms(), "version": self.config.version}
+            meta = {"epoch": _now_ms(), "version": VERSION}
             self.fs.write_text(meta_path, json.dumps(meta))
         self._epoch = meta["epoch"]
         return self._epoch
@@ -294,10 +298,8 @@ class TimeseriesStore:
         # 200 tags touches 200+ partition directories, and writing the
         # partitioned layout per batch costs >1 s in file/commit
         # overhead alone (measured; it is why the reference's LSM
-        # appends first and sorts later, recipe:19-20). L0 segments are
-        # globally sorted by (tag, ts) so the row-group min/max stats
-        # give reads the same pruning the partition directories give
-        # L1; flush_l0/compact fold them into the partitioned layout.
+        # appends first and sorts later, recipe:19-20). flush_l0/compact
+        # fold the segments into the partitioned layout.
         import pandas as pd
 
         pdf = pd.DataFrame(data, columns=[f.name for f in SAMPLE_SCHEMA.fields])
@@ -408,16 +410,12 @@ class TimeseriesStore:
         self, df: DataFrame, app_meta: dict | None = None,
         expected_app: dict | None = None,
     ) -> None:
-        writer = df
-        if self.config.sort_within_partitions:
-            writer = df.sortWithinPartitions("tag", "ts")
         if self._hot_is_manifest():
             # Transactional L1: one atomic manifest commit per append
             # (creates the version log on the first write); app_meta
             # rides the same entry — the streaming batch cursor.
             self.commit.append_partitioned(
-                self, writer, self.config.hot_path,
-                list(self.config.partition_cols),
+                self, df, self.config.hot_path, list(PARTITION_COLS),
                 app_meta=app_meta, expected_app=expected_app,
             )
         else:
@@ -428,23 +426,18 @@ class TimeseriesStore:
                     " directory sink keeps no metadata map"
                 )
             (
-                writer.write.mode("append")
-                .partitionBy(*self.config.partition_cols)
+                df.write.mode("append")
+                .partitionBy(*PARTITION_COLS)
                 .parquet(self.config.hot_path)
             )
         self.invalidate_hot_cache()
 
     def _append_l0(self, df: DataFrame) -> None:
-        # coalesce(1): one segment file per batch, and the
-        # sortWithinPartitions becomes a global (tag, ts) sort of the
-        # segment — maximal row-group pruning. Cheap here because the
+        # coalesce(1): one segment file per batch. Cheap here because the
         # input is Arrow batches already in the JVM (unlike coalescing
         # a Python-parallelized DataFrame, see tiering._append_log).
-        writer = df.coalesce(1)
-        if self.config.sort_within_partitions:
-            writer = writer.sortWithinPartitions("tag", "ts")
         (
-            writer.write.mode("append")
+            df.coalesce(1).write.mode("append")
             # No _SUCCESS marker for L0 segments: nothing reads it
             # (hot() lists segment files; staleness tokens hash the
             # listing) and flush_l0 deletes it — which RACED a
@@ -636,18 +629,18 @@ class TimeseriesStore:
                 ) from exc
         if not rows:
             raise ValidationError("empty batch")
-        if len(rows) > self.config.max_samples_per_write:
+        if len(rows) > MAX_SAMPLES_PER_WRITE:
             raise BatchTooLargeError(
                 f"batch of {len(rows)} exceeds cap "
-                f"{self.config.max_samples_per_write} (reference index.js:12)"
+                f"{MAX_SAMPLES_PER_WRITE} (reference index.js:12)"
             )
         out = []
         for tag, ts, value in rows:
             if not isinstance(tag, str) or not tag:
                 raise ValidationError(f"tag must be a non-empty string, got {tag!r}")
-            if len(tag) > self.config.max_tag_name_length:
+            if len(tag) > MAX_TAG_NAME_LENGTH:
                 raise KeyTooLongError(
-                    f"tag longer than {self.config.max_tag_name_length} chars"
+                    f"tag longer than {MAX_TAG_NAME_LENGTH} chars"
                 )
             if isinstance(ts, bool) or not isinstance(ts, int):
                 # The reference coerces to BigInt and rejects floats
@@ -919,9 +912,9 @@ class TimeseriesStore:
     def _validate_ranges(self, ranges) -> list[tuple]:
         if not isinstance(ranges, Mapping) or not ranges:
             raise ValidationError("ranges must be a non-empty mapping tag -> (start, end)")
-        if len(ranges) > self.config.max_tags_per_read:
+        if len(ranges) > MAX_TAGS_PER_READ:
             raise TooManyTagsError(
-                f"{len(ranges)} tags exceeds cap {self.config.max_tags_per_read} "
+                f"{len(ranges)} tags exceeds cap {MAX_TAGS_PER_READ} "
                 "(reference index.js:13)"
             )
         parsed = []
@@ -942,9 +935,9 @@ class TimeseriesStore:
     def _check_range_bounds(self, tag, start, end) -> None:
         if not isinstance(tag, str) or not tag:
             raise ValidationError(f"tag must be a non-empty string, got {tag!r}")
-        if len(tag) > self.config.max_tag_name_length:
+        if len(tag) > MAX_TAG_NAME_LENGTH:
             raise KeyTooLongError(
-                f"tag longer than {self.config.max_tag_name_length} chars"
+                f"tag longer than {MAX_TAG_NAME_LENGTH} chars"
             )
         for bound, name in ((start, "start"), (end, "end")):
             if bound is None:

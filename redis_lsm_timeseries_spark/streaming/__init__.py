@@ -1,7 +1,12 @@
-"""Structured Streaming surface: continuous ingest into the hot layout
-and event-time windowed rollups."""
+"""Structured Streaming surface.
 
-from redis_lsm_timeseries_spark.streaming.curation import curate_stream
+- ``ingest``   continuous ingest into the hot layout (file sink, or
+               foreachBatch with in-stream maintenance)
+- ``dedup``    watermark-bounded streaming dedup by key or content
+- ``stateful`` per-tag latest-sample state (applyInPandasWithState)
+- ``sink``     exactly-once foreachBatch sink into a manifest table
+"""
+
 from redis_lsm_timeseries_spark.streaming.dedup import (
     dedup_stream_by_content,
     dedup_stream_by_key,
@@ -9,14 +14,11 @@ from redis_lsm_timeseries_spark.streaming.dedup import (
 from redis_lsm_timeseries_spark.streaming.ingest import (
     start_hot_ingest,
     start_hot_ingest_with_maintenance,
-    streaming_rollup,
 )
 
 __all__ = [
-    "curate_stream",
     "dedup_stream_by_content",
     "dedup_stream_by_key",
     "start_hot_ingest",
     "start_hot_ingest_with_maintenance",
-    "streaming_rollup",
 ]

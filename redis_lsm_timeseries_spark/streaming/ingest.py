@@ -14,7 +14,6 @@ partition and re-registers it (``index.js:81``;
   the engine's partition key;
 - late data: appended to its old partition, resolved at read time by
   the LWW merge — reference semantics, not watermark-dropped. The
-  windowed ROLLUP view uses a watermark for bounded state; the
   INGEST path never drops.
 
 Exactly-once: the parquet sink + checkpoint gives idempotent file
@@ -31,6 +30,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from redis_lsm_timeseries_spark.config import PARTITION_COLS
 from redis_lsm_timeseries_spark.errors import ConcurrentMaintenanceError
 from redis_lsm_timeseries_spark.schema import SAMPLE_SCHEMA, WRITE_SCHEMA
 from redis_lsm_timeseries_spark.store import TimeseriesStore
@@ -107,7 +107,7 @@ def start_hot_ingest(
         enriched.writeStream.format("parquet")
         .option("path", store.config.hot_path)
         .option("checkpointLocation", checkpoint_dir)
-        .partitionBy(*store.config.partition_cols)
+        .partitionBy(*PARTITION_COLS)
         .outputMode("append")
     )
     if available_now:
@@ -318,39 +318,3 @@ def start_hot_ingest_with_maintenance(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def streaming_rollup(
-    events_stream: DataFrame,
-    window_duration: str = "5 minutes",
-    watermark: str = "10 minutes",
-    slide_duration: str | None = None,
-) -> DataFrame:
-    """Event-time windowed rollup with a watermark for bounded state —
-    the continuous version of ts_rollup_hourly. Input needs ``ts``
-    (timestamp), ``event_type``, ``value``.
-
-    Default is tumbling; pass ``slide_duration`` for SLIDING windows
-    (each event lands in duration/slide overlapping windows — Spark
-    expands the assignment, state stays one row per open (window, tag)).
-    The watermark bounds state either way: windows older than the
-    horizon finalize and evict."""
-    win = (
-        F.window("ts", window_duration)
-        if slide_duration is None
-        else F.window("ts", window_duration, slide_duration)
-    )
-    return (
-        events_stream.withWatermark("ts", watermark)
-        .groupBy(win, F.col("event_type").alias("tag"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_v"),
-        )
-        .select(
-            "tag",
-            F.unix_millis(F.col("window.start")).alias("bucket_ms"),
-            "n",
-            "sum_v",
-        )
-    )

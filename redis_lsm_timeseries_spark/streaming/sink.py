@@ -12,11 +12,8 @@ skipped before any write.
 The engine's ``app`` metadata map gives this for free on ANY manifest
 table: ``manifest_sink(path)`` returns a ``foreachBatch`` callable
 whose every commit is ``append_table_with_meta(rows, {cursor:
-batch_id})``. The specialized admission sink
-(``streaming/curation.py``) keeps its own machinery (it must also
-maintain dedup index members in the same entry); this is the
-general-purpose sibling for plain append pipelines — metrics streams,
-event mirrors, curated-output shards.
+batch_id})`` — for plain append pipelines: metrics streams, event
+mirrors, curated-output shards.
 
 Cursor semantics: batch ids are per-CHECKPOINT monotonic. A fresh
 checkpoint restarts ids at 0, so pair every new checkpoint with a new

@@ -48,6 +48,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
+from redis_lsm_timeseries_spark.config import PARTITION_COLS
 from redis_lsm_timeseries_spark.errors import ValidationError
 from redis_lsm_timeseries_spark.schema import (
     COLD_SNAPSHOT_SCHEMA,
@@ -408,7 +409,7 @@ def purge_ack_many(
             store,
             remaining if nonempty else None,
             store.config.hot_path,
-            store.config.partition_cols,
+            PARTITION_COLS,
             cdf_df=evicted.coalesce(max(1, min(32, n_rows // 1_000_000 + 1))),
             drop_prefixes=_hot_partition_prefixes(store, affected - nonempty),
         )
@@ -427,7 +428,7 @@ def purge_ack_many(
             # dynamic-overwrite requirement.
             store.commit.overwrite_partitions(
                 store, remaining, store.config.hot_path,
-                store.config.partition_cols,
+                PARTITION_COLS,
             )
     store.invalidate_hot_cache()
     _append_log(
@@ -629,7 +630,7 @@ def compact(
         cdf = losers.coalesce(max(1, min(32, excess // 1_000_000 + 1)))
     store.commit.overwrite_partitions(
         store, winners, store.config.hot_path,
-        store.config.partition_cols, cdf_df=cdf,
+        PARTITION_COLS, cdf_df=cdf,
     )
     store.invalidate_hot_cache()
     return CompactionMetrics(
@@ -733,7 +734,7 @@ def apply_retention(
             store,
             None,
             store.config.hot_path,
-            store.config.partition_cols,
+            PARTITION_COLS,
             cdf_df=victims.coalesce(max(1, min(32, rows // 1_000_000 + 1))),
             drop_prefixes=_hot_partition_prefixes(store, pairs),
         )
@@ -764,174 +765,3 @@ def apply_retention(
                 f"/tag={r.tag}/part_start={r.part_start}",
             )
     return RetentionMetrics(len(doomed), rows)
-
-
-@dataclass(frozen=True)
-class SeriesDeletionMetrics:
-    hot_partitions_dropped: int
-    cold_files_rewritten: int
-    purge_log_rows_removed: int
-    rollups_swept: int
-
-
-@_serialized_maintenance
-def delete_series(
-    store: TimeseriesStore, tags: list[str]
-) -> SeriesDeletionMetrics:
-    """Erase every trace of the given tags across the WHOLE engine —
-    hot tier, cold tier, purge log, and every rollup: the GDPR
-    right-to-erasure path a 100 TB deployment eventually needs, which
-    the reference (tags live inside Redis keys, ``index.js:121-122``)
-    could only do with SCAN+DEL. Lease-serialized like every mutation
-    job; idempotent (a second call finds nothing).
-
-    Cost shape per tier:
-    - hot: partition-dir drops — ``tag=X`` is a directory prefix, so
-      erasure is metadata-only, no rewrite (L0 folded first so no
-      staged rows survive);
-    - cold: ``delete_rows`` on the manifest member — per-file tag
-      stats (hive min==max) prune to exactly the tag's files, which
-      drop without replacement (a cold file holds one partition of
-      one tag);
-    - purge log: the log ROWS name the tags (marked/acked history),
-      so GDPR requires scrubbing them too — same stats-pruned
-      row-level delete; an unacked mark for an erased tag simply
-      acks to nothing later;
-    - rollups: aggregates keyed by the tag are partition-dir drops;
-      the watermark is untouched — erased rows cannot resurface
-      because the base tiers no longer hold them.
-
-    Erasure is physical only after ``vacuum``'s retention horizon
-    passes (time-travel snapshots retain history by design — run
-    ``vacuum(retain_versions=1)`` for immediate reclaim) and, on the
-    hot tier, once streaming checkpoints replaying the erased range
-    are gone; both are the documented deployment checklist, not
-    engine gaps."""
-    from redis_lsm_timeseries_spark.operators.merge import delete_rows
-
-    store._require_init()
-    store._require_l1_batch_writable()
-    if not tags:
-        return SeriesDeletionMetrics(0, 0, 0, 0)
-    for t in tags:
-        if not isinstance(t, str) or not t:
-            raise ValidationError(f"delete_series: invalid tag {t!r}")
-    store.flush_l0()
-
-    # hot: drop each tag's partition directory tree
-    hot_dropped = 0
-    if store.commit.tracks_changes(store, store.config.hot_path):
-        # manifest-hot (r13): a physical `{hot}/tag=X` probe would
-        # MISS (data lives under the manifest's data/ root) and the
-        # erasure would silently skip the hot tier. Resolve the tag's
-        # committed files instead and erase them in ONE atomic commit
-        # with typed CDF deletes — keyed mirrors consume the erasure
-        # as O(erased rows).
-        want = {str(t) for t in sorted(set(tags))}
-        tag_prefixes = set(
-            _hot_partition_prefixes(store, {(t,) for t in want}, depth=1)
-        )
-        # partition count = distinct 2-level prefixes under the tags
-        part_prefixes = {
-            "/".join(f.split("/")[:2])
-            for f in store.commit.member_files(
-                store, store.config.hot_path
-            ) or []
-            if f.split("/", 1)[0] in tag_prefixes and f.count("/") >= 2
-        }
-        if tag_prefixes:
-            victims = store.commit.read_table(
-                store, store.config.hot_path, SAMPLE_SCHEMA
-            ).where(
-                F.col("tag").isin(sorted(want))
-            ).withColumn(store.commit.CDF_TYPE_COL, F.lit("delete"))
-            store.commit.overwrite_partitions(
-                store,
-                None,
-                store.config.hot_path,
-                store.config.partition_cols,
-                cdf_df=victims.coalesce(4),
-                drop_prefixes=sorted(tag_prefixes),
-            )
-            hot_dropped = len(part_prefixes)
-    else:
-        for t in sorted(set(tags)):
-            tag_dir = f"{store.config.hot_path}/tag={t}"
-            if store.fs.exists(tag_dir):
-                n_parts = len(store.fs.listdir(tag_dir))
-                store.commit.drop_partition_dir(store, tag_dir)
-                hot_dropped += n_parts
-    if hot_dropped:
-        store.invalidate_hot_cache()
-
-    # cold + purge log: stats-pruned row-level deletes
-    tag_df = store.spark.createDataFrame(
-        [(t,) for t in sorted(set(tags))], "tag string"
-    )
-    from redis_lsm_timeseries_spark.commit import ManifestCommit
-
-    cold_files = 0
-    if store.commit.table_exists(store, store.config.cold_path):
-        if isinstance(store.commit, ManifestCommit):
-            st = delete_rows(
-                store, store.config.cold_path, tag_df, ["tag"],
-                commit=store.commit,
-            )
-            cold_files = max(0, st.files_rewritten)
-        else:
-            # directory mode: the cold layout is purge_id/tag/
-            # part_start dirs — a tag erasure is a subtree drop per
-            # snapshot, metadata-only and layout-preserving (a flat
-            # row-rewrite would strip the hive dirs retention's
-            # partition-granular sweep depends on)
-            cp = store.config.cold_path
-            for pid in sorted(store.fs.listdir(cp)):
-                if not pid.startswith("purge_id="):
-                    continue
-                for t in sorted(set(tags)):
-                    tdir = f"{cp}/{pid}/tag={t}"
-                    if store.fs.exists(tdir):
-                        store.commit.drop_partition_dir(store, tdir)
-                        cold_files += 1
-    log_removed = 0
-    if store.commit.table_exists(store, store.config.purge_log_path):
-        # metadata-first count: when every log file's stats PROVE its
-        # match count (tag-clustered files), no scan runs; anything
-        # unprovable falls back to the exact scan
-        before = None
-        if isinstance(store.commit, ManifestCommit):
-            from redis_lsm_timeseries_spark.maintenance import fast_count
-
-            before = fast_count(
-                store, store.config.purge_log_path,
-                {"tag": {str(t) for t in tags}},
-                commit=store.commit,
-            )
-        if before is None:
-            before = purge_log(store).where(
-                F.col("tag").isin([str(t) for t in tags])
-            ).count()
-        if before:
-            delete_rows(
-                store, store.config.purge_log_path, tag_df, ["tag"],
-                commit=store.commit,
-            )
-        log_removed = int(before)
-
-    # rollups: tag-keyed partition drops in every maintained rollup
-    swept = 0
-    rollup_base = f"{store.config.base_path}/rollups"
-    if store.fs.exists(rollup_base):
-        for name in sorted(store.fs.listdir(rollup_base)):
-            data_path = f"{rollup_base}/{name}/data"
-            touched = False
-            for t in sorted(set(tags)):
-                tdir = f"{data_path}/tag={t}"
-                if store.commit.table_exists(store, data_path):
-                    store.commit.drop_partition_dir(store, tdir)
-                    touched = True
-            if touched:
-                swept += 1
-    return SeriesDeletionMetrics(
-        hot_dropped, cold_files, log_removed, swept
-    )

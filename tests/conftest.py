@@ -35,25 +35,20 @@ SLOW_FILES = {
     "test_property_roundtrip.py",     # (40s) hypothesis roundtrip; driver covers read paths
     "test_hot_multiwriter.py",        # (62s) multiwriter stress; store fast suite covers write paths
     # heavy suites whose family keeps a fast-tier or driver differential
-    "test_streaming_near_dup.py",     # (>300s) fast test_streaming_dedup + test_in_batch_near_dup
     "test_sql_dml.py",                # (>300s) sql_dml_lifecycle differential stays in fast parity (UNREGISTERED_ORACLES)
     "test_rollup.py",                 # (>300s) driver rollup_incremental_lifecycle + fast test_resample
-    "test_rollup_cascade.py",         # (155s) same family
     "test_deletion_vectors.py",       # (299s) driver dv_row_mutation differential
     "test_dv_model.py",               # (151s) same family
     "test_dv_equivalence.py",         # (159s) same family
     "test_merge.py",                  # (262s) driver dv_row_mutation + replace_range parity
     "test_replace_backfill.py",       # (89s) replace_range_restatement parity stays fast
     "test_tiering.py",                # (219s) driver runs 3 tiering lifecycle entries
-    "test_delete_series.py",          # (142s) tiering/GDPR family, driver purge entries
     "test_maintenance.py",            # (77s) retention/compaction; driver compaction_rewrite
     "test_row_changefeed.py",         # (199s) CDF family; fast test_changefeed + test_manifest_sink
     "test_cdf_stream.py",             # (174s) same family
     "test_manifest_stream.py",        # (138s) connector; driver connector_roundtrip
     "test_mirror_model.py",           # (175s) mirror; fast test_changefeed covers feeds
-    "test_streaming_mirror.py",       # (88s) same family
     "test_streaming.py",              # (71s) driver runs 4 stream_* entries
-    "test_streaming_curation.py",     # (57s) fast test_streaming_dedup covers the sink shape
     "test_schema_evolution.py",       # (185s) driver nested_evolution_roundtrip
     "test_nested_evolution.py",       # (167s) same family
     "test_nested_repetition.py",      # (103s) same family
@@ -62,7 +57,6 @@ SLOW_FILES = {
     "test_llm_operators.py",          # (112s) LLM family has 8 fast files + 12 driver entries
     "test_incremental_dedup.py",      # (61s) fast test_in_batch_near_dup covers admission
     "test_substring_dedup.py",        # (73s) driver dedup_substring differential
-    "test_ivf_sync.py",               # (68s) fast test_ivf covers the IVF family
     "test_ann_index.py",              # (57s) driver ann_* entries + fast test_ivf
     "test_copy_into.py",              # (57s) clone_copy_lifecycle parity stays fast
     "test_temporal_stats.py",         # (63s) driver ts_* entries
@@ -82,11 +76,28 @@ SLOW_FILES = {
 SLOW_TESTS = {("test_oracle_parity.py", "test_oracle_parity")}
 
 
+def _named_files(config) -> set[str]:
+    """Test files named directly on the command line (``tests/x.py`` or
+    ``tests/x.py::Test::test``). Their items are never marked slow: a
+    file asked for by name runs in full instead of being deselected to
+    zero tests by the default ``-m "not slow"``."""
+    base = str(config.invocation_params.dir)
+    out = set()
+    for arg in config.args:
+        path = os.path.realpath(os.path.join(base, arg.split("::", 1)[0]))
+        if os.path.isfile(path):
+            out.add(path)
+    return out
+
+
 def pytest_collection_modifyitems(config, items):
     import pytest as _pytest
 
     slow = _pytest.mark.slow
+    named = _named_files(config)
     for item in items:
+        if os.path.realpath(str(item.fspath)) in named:
+            continue
         fname = os.path.basename(str(item.fspath))
         if fname in SLOW_FILES:
             item.add_marker(slow)

@@ -2,7 +2,7 @@
 
 1. Duplicate source keys reaching a conditional merge clause raise the
    typed error BEFORE the left-join fan-out could let one (t,s) pair
-   fail the condition while another passes (`_resolve_source` guards
+   fail the condition while another passes (`_resolve_source_counted` guards
    every merge path; this pins the conditional-clause one).
 2. Orphan `.claim-*` temp files from a crashed create_exclusive are
    swept by vacuum past the grace window (tested in

@@ -1,7 +1,6 @@
 """Adversarial hardening of the round-14 surfaces: the dropped-name
-remint under racing schema evolutions, the sharded Bloom build's
-crash-consistency (manifest-last protocol), and the manifest-hot
-ingest cursor on empty micro-batches."""
+remint under racing schema evolutions and the manifest-hot ingest
+cursor on empty micro-batches."""
 
 from __future__ import annotations
 
@@ -122,71 +121,6 @@ class TestRemintRaces:
             for r in commit.read_table(host, path, None).collect()
         )
         assert got == [(1, None), (2, None), (8, 88), (9, 99)]
-
-
-class TestShardedBloomCrash:
-    def test_crashed_rebuild_leaves_the_old_generation_probing(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """The manifest is written LAST: a build that dies after
-        writing shard files but before the manifest leaves the OLD
-        sidecar fully valid (old token dir untouched), so probes keep
-        their no-false-negative guarantee."""
-        from redis_lsm_timeseries_spark.fs import LOCAL_FS
-        from redis_lsm_timeseries_spark.streaming import curation as C
-
-        root = str(tmp_path / "admission")
-        process = C.near_dup_admitting_batch(root)
-        doc = " ".join(f"w{i}" for i in range(30))
-        process(
-            spark.createDataFrame([(1, doc)], "doc_id long, text string"),
-            0,
-        )
-        C.build_digest_bloom(spark, root)
-        bloom0 = C._load_bloom(root, LOCAL_FS)
-        # admit more, then crash the rebuild at the manifest write
-        doc2 = " ".join(f"q{i}" for i in range(30))
-        process(
-            spark.createDataFrame([(2, doc2)], "doc_id long, text string"),
-            1,
-        )
-        real = type(LOCAL_FS).write_text
-
-        def dying(self_, path, text):
-            if path.endswith(C.BLOOM_SIDECAR):
-                raise OSError("crash before the manifest write")
-            return real(self_, path, text)
-
-        monkeypatch.setattr(type(LOCAL_FS), "write_text", dying)
-        with pytest.raises(OSError):
-            C.build_digest_bloom(spark, root)
-        monkeypatch.setattr(type(LOCAL_FS), "write_text", real)
-        bloom1 = C._load_bloom(root, LOCAL_FS)
-        assert bloom1["dir"] == bloom0["dir"]  # old manifest intact
-        # every digest the old manifest covers still hits
-        digests = [
-            r.digest
-            for r in C.read_admission_table(
-                spark, root, C.DIGESTS_MEMBER
-            ).collect()
-        ]
-        covered = set(bloom1["files"])
-        assert any(covered)
-        # the exact guard still blocks a replayed duplicate
-        process(
-            spark.createDataFrame([(3, doc)], "doc_id long, text string"),
-            2,
-        )
-        out_ids = {
-            r.doc_id
-            for r in C.read_admitted(spark, root).select("doc_id").collect()
-        }
-        assert out_ids == {1, 2}
-        # and a successful rebuild sweeps the crashed token dir
-        C.build_digest_bloom(spark, root)
-        bloom2 = C._load_bloom(root, LOCAL_FS)
-        base = f"{root}/{C.BLOOM_SHARD_DIR}"
-        assert LOCAL_FS.listdir(base) == [bloom2["dir"]]
 
 
 class TestManifestHotIngestCursor:

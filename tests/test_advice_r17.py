@@ -9,7 +9,7 @@
 - ``per_group_linear_trend``: a non-int64 input column (pandas
   upcasts on nulls; callers may pass float) must not silently degrade
   the exact integer accumulation to float — integral floats coerce
-  exactly, NaN fails loudly.
+  exactly, NaN and fractional values fail loudly.
 - ``TimeseriesStore._shuffle_partitions``: an unpinned session's
   vanilla ``spark.sql.shuffle.partitions`` default (200) must not
   produce 200 near-empty write tasks — the conf is capped at
@@ -91,6 +91,12 @@ def test_grouped_trend_nan_fails_loudly(spark):
     # loud failure the exact-integer contract requires
     with pytest.raises(Exception, match="(?i)cannot convert|nan|error"):
         per_group_linear_trend(df).collect()
+    # a fractional value must not truncate (2.5 -> 2) into a wrong slope
+    frac = spark.createDataFrame(
+        [("a", 1.0, 2.0), ("a", 2.5, 4.0)], "tag string, x double, y double"
+    )
+    with pytest.raises(Exception, match="not an integer"):
+        per_group_linear_trend(frac).collect()
 
 
 def test_store_shuffle_partitions_capped(spark, store):

@@ -20,8 +20,6 @@ from redis_lsm_timeseries_spark.operators.ann_index import (
     VECTORS_MEMBER,
     build_ivf_index,
     ivf_index_topk,
-    load_ivf_centroids,
-    read_ivf_vectors,
 )
 from redis_lsm_timeseries_spark.operators.similarity import (
     cosine_topk,
@@ -36,6 +34,11 @@ N_LIST = 8
 @pytest.fixture(scope="module")
 def emb(spark):
     return spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+
+
+def _member(spark, path, member):
+    """A committed index member, read through a fresh commit/host pair."""
+    return ManifestCommit().read_table(CommitHost(spark), f"{path}/{member}")
 
 
 def _topk_sets(rows):
@@ -88,8 +91,7 @@ class TestBuildAndServe:
         in memory — loads the quantizer from the manifest and serves
         with unchanged recall."""
         path, _ = index
-        cents = load_ivf_centroids(spark, path)  # fresh objects each call
-        assert len(cents) == N_LIST
+        assert _member(spark, path, CENTROIDS_MEMBER).count() == N_LIST
         queries = emb.where(F.col("vec_id") < 20)
         exact = _topk_sets(cosine_topk(emb, queries, k=10).collect())
         approx = _topk_sets(
@@ -120,10 +122,10 @@ class TestRebuild:
         meta2 = build_ivf_index(emb, path, n_list=N_LIST, iters=2)
         assert meta2["version"] == 1  # second atomic entry
         # both members reflect the NEW generation together
-        assert len(load_ivf_centroids(spark, path)) == N_LIST
+        assert _member(spark, path, CENTROIDS_MEMBER).count() == N_LIST
         lists = {
             r.list_id
-            for r in read_ivf_vectors(spark, path)
+            for r in _member(spark, path, VECTORS_MEMBER)
             .select("list_id")
             .distinct()
             .collect()
@@ -139,7 +141,7 @@ class TestRebuild:
         retained-version files), while a fresh read sees generation 1."""
         path = str(tmp_path / "ivf")
         build_ivf_index(emb, path, n_list=4, iters=1)
-        pinned = read_ivf_vectors(spark, path)
+        pinned = _member(spark, path, VECTORS_MEMBER)
         n0 = pinned.count()
         lists0 = {r.list_id for r in pinned.select("list_id").distinct().collect()}
         assert lists0 <= set(range(4))
@@ -152,7 +154,7 @@ class TestRebuild:
         # a new resolve serves the new generation
         fresh_lists = {
             r.list_id
-            for r in read_ivf_vectors(spark, path)
+            for r in _member(spark, path, VECTORS_MEMBER)
             .select("list_id")
             .distinct()
             .collect()

@@ -9,7 +9,6 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from redis_lsm_timeseries_spark.operators.components import (
-    canonical_docs,
     connected_components,
 )
 
@@ -129,49 +128,6 @@ class TestConnectedComponents:
 
 
 class TestCanonicalDocs:
-    def test_keeps_min_per_cluster_and_all_unpaired(self, spark):
-        docs = spark.createDataFrame(
-            [(i, f"text-{i}") for i in (1, 2, 3, 10, 11, 50)],
-            ["doc_id", "text"],
-        )
-        pairs = spark.createDataFrame(
-            [(1, 2), (2, 3), (10, 11)], ["doc_id_a", "doc_id_b"]
-        )
-        kept = sorted(
-            r.doc_id for r in canonical_docs(docs, pairs).collect()
-        )
-        # Cluster {1,2,3} -> keep 1; {10,11} -> keep 10; 50 untouched.
-        assert kept == [1, 10, 50]
-
-    def test_end_to_end_with_lsh_pairs(self, spark):
-        """Wire the real LSH candidate pairs into the cluster step: the
-        planted near-copies (doc_id + 10_000_000) must collapse onto
-        their originals."""
-        from redis_lsm_timeseries_spark.plans.llm_queries import (
-            _docs_with_near_copies,
-            dedup_minhash_lsh_pairs,
-        )
-
-        sf = "/root/testdata/sf0.001"
-        corpus = _docs_with_near_copies(spark, sf).select("doc_id", "text")
-        pairs = dedup_minhash_lsh_pairs(spark, sf)  # columns (a, b)
-        kept = canonical_docs(corpus, pairs, src="a", dst="b")
-        kept_ids = {r.doc_id for r in kept.select("doc_id").collect()}
-        n_docs = corpus.count()
-        # Every planted copy (id >= 10M) whose pair was surfaced is gone,
-        # and no original lost its canonical slot to its copy.
-        edge_list = [(r.a, r.b) for r in pairs.collect()]
-        surfaced = {x for e in edge_list for x in e if x >= 10_000_000}
-        assert surfaced and kept_ids.isdisjoint(surfaced)
-        # Exact expectation from the union-find oracle over the SAME
-        # pairs (banding may also surface original-original near-dups):
-        # drop every node that is not its own component minimum.
-        comp = _uf_oracle(edge_list)
-        losers = {n for n, c in comp.items() if n != c}
-        all_ids = {r.doc_id for r in corpus.select("doc_id").collect()}
-        assert kept_ids == all_ids - losers
-        assert len(kept_ids) < n_docs
-
     def test_embedding_pairs_cluster_too(self, spark):
         """The EMBEDDING near-dup path feeds the same clustering stage:
         hyperplane-LSH cosine pairs -> components -> canonical vectors,
@@ -239,17 +195,19 @@ class TestQualityCanonical:
 
     def test_constant_scores_match_min_id_rule(self, spark, corpus, pairs):
         from redis_lsm_timeseries_spark.operators.components import (
-            canonical_docs,
             canonical_docs_by,
         )
 
         flat = corpus.withColumn("quality", F.lit(1.0))
-        a = {r.doc_id for r in canonical_docs(corpus, pairs).collect()}
-        b = {
+        comp = _uf_oracle([(r.doc_id_a, r.doc_id_b) for r in pairs.collect()])
+        want = {r.doc_id for r in corpus.collect()} - {
+            n for n, c in comp.items() if n != c
+        }
+        got = {
             r.doc_id
             for r in canonical_docs_by(flat, pairs, "quality").collect()
         }
-        assert a == b
+        assert got == want
 
     def test_no_window_in_plan(self, corpus, pairs):
         from redis_lsm_timeseries_spark.operators.components import (

@@ -53,7 +53,6 @@ from redis_lsm_timeseries_spark.maintenance import (
     table_report,
 )
 from redis_lsm_timeseries_spark.operators.merge import (
-    delete_range,
     delete_rows,
     merge_into,
 )
@@ -177,16 +176,6 @@ class TestDvDelete:
         assert len(commit.member_files(host, path)) == 2
         assert not any(_dv_stats(host, commit, path).values())
         assert commit.read_table(host, path).count() == 200
-
-    def test_delete_range_dv(self, spark, tmp_path):
-        host, commit, path = _fx(spark, tmp_path)
-        st = delete_range(
-            host, path, "id", lo=95, hi=105, commit=commit, mode="dv"
-        )
-        assert st.files_rewritten == 2
-        cur = commit.read_table(host, path)
-        assert cur.count() == 289
-        assert cur.where(F.col("id").between(95, 105)).isEmpty()
 
     def test_idempotent_absent_keys(self, spark, tmp_path):
         host, commit, path = _fx(spark, tmp_path)

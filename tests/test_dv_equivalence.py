@@ -24,7 +24,6 @@ from redis_lsm_timeseries_spark.maintenance import (
     fast_count,
 )
 from redis_lsm_timeseries_spark.operators.merge import (
-    delete_range,
     delete_rows,
     merge_into,
 )
@@ -67,7 +66,7 @@ def _script(spark):
         ("merge", dict(
             source=src([(10, "a", -1), (300, "z", 1)]), keys=["id"],
         )),
-        ("delete_range", dict(column="id", lo=200, hi=214)),
+        ("delete", dict(delete_keys=ids(range(200, 215)), keys=["id"])),
         ("merge_cond", dict(
             source=src([(11, "x", 0), (12, "x", 9_999)]), keys=["id"],
             when_matched="update", matched_condition="s.v < t.v",
@@ -79,7 +78,7 @@ def _script(spark):
         # a second pass over already-DV'd territory: superseding union
         ("delete", dict(delete_keys=ids([6, 7, 10]), keys=["id"])),
         # a delete wiping one whole file's remainder
-        ("delete_range", dict(column="id", lo=160, hi=239)),
+        ("delete", dict(delete_keys=ids(range(160, 240)), keys=["id"])),
     ]
 
 
@@ -87,8 +86,6 @@ def _apply(host, commit, path, step, mode):
     op, kw = step
     if op == "delete":
         delete_rows(host, path, commit=commit, mode=mode, **kw)
-    elif op == "delete_range":
-        delete_range(host, path, commit=commit, mode=mode, **kw)
     else:
         merge_into(host, path, commit=commit, mode=mode, **kw)
 

@@ -1,5 +1,5 @@
 """Model-based fuzz of deletion-vector mutation: random interleavings
-of appends, keyed deletes (dv / rewrite / auto), range deletes, merges
+of appends, keyed deletes (dv / rewrite / auto), merges
 (both physical modes), compaction and vacuum — after EVERY op the
 table must equal a plain dict model and ``fast_count`` must stay
 exact (metadata-only, DV counts subtracted). The dict model is the
@@ -18,7 +18,6 @@ from redis_lsm_timeseries_spark.maintenance import (
     fast_count,
 )
 from redis_lsm_timeseries_spark.operators.merge import (
-    delete_range,
     delete_rows,
     merge_into,
     replace_range,
@@ -63,18 +62,6 @@ def test_dv_mutation_tracks_model(spark, tmp_path, seed):
         )
         for k in keys:
             model.pop(k, None)
-
-    def do_delete_range():
-        if not model:
-            return
-        lo = rng.choice(sorted(model))
-        hi = lo + rng.randint(0, 8)
-        delete_range(
-            host, path, "k", lo=lo, hi=hi, commit=commit,
-            mode=rng.choice(["dv", "rewrite", "auto"]),
-        )
-        for k in [k for k in model if lo <= k <= hi]:
-            del model[k]
 
     def do_merge():
         nonlocal next_key
@@ -122,7 +109,7 @@ def test_dv_mutation_tracks_model(spark, tmp_path, seed):
         commit.vacuum(host, root, retain_versions=3, grace_s=0)
 
     do_append()
-    ops = [do_append, do_delete, do_delete, do_delete_range,
+    ops = [do_append, do_delete, do_delete,
            do_merge, do_merge, do_replace, do_compact, do_vacuum]
     for i in range(18):
         op = rng.choice(ops)

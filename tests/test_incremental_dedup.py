@@ -281,80 +281,3 @@ class TestWindowManifest:
         )
         # no exchange beyond the packing window's own single shuffle
         assert plan.count("Exchange") <= 1, plan
-
-
-class TestMaterializeWindows:
-    W, S = 16, 4
-
-    @pytest.fixture(scope="class")
-    def materialized(self, spark, docs):
-        from redis_lsm_timeseries_spark.operators.packing import (
-            materialize_windows,
-        )
-
-        packed = pack_documents(docs, window_tokens=self.W, num_shards=self.S)
-        man = window_manifest(packed, self.W)
-        return materialize_windows(docs, man, self.W), packed
-
-    def test_every_window_is_full_except_stream_final(
-        self, spark, materialized
-    ):
-        wins, _ = materialized
-        last = wins.groupBy("source", "shard").agg(
-            F.max("window_id").alias("last_win")
-        )
-        bad = (
-            wins.join(last, ["source", "shard"])
-            .where(
-                (F.col("window_id") != F.col("last_win"))
-                & (F.col("n_tokens") != self.W)
-            )
-            .count()
-        )
-        assert bad == 0
-        assert wins.where(F.col("n_tokens") > self.W).count() == 0
-
-    def test_streams_reconstruct_document_order(self, spark, materialized):
-        """Concatenating a stream's windows in window_id order yields
-        the concatenation of its documents' tokens in doc_id order —
-        packing is lossless."""
-        wins, packed = materialized
-        got = (
-            wins.groupBy("source", "shard")
-            .agg(
-                F.flatten(
-                    F.array_sort(
-                        F.collect_list(F.struct("window_id", "toks"))
-                    )["toks"]
-                ).alias("stream")
-            )
-        )
-        docs_df = packed.sparkSession.read.parquet(
-            f"{SF_DIR}/documents.parquet"
-        )
-        want = (
-            packed.join(docs_df.select("doc_id", "text"), "doc_id")
-            .groupBy("source", "shard")
-            .agg(
-                F.flatten(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                "doc_id",
-                                F.expr(
-                                    "filter(split(lower(text), '\\\\s+'),"
-                                    " t -> t != '')"
-                                ).alias("t"),
-                            )
-                        )
-                    )["t"]
-                ).alias("stream")
-            )
-        )
-        diff = (
-            got.join(want, ["source", "shard"])
-            .where(got["stream"] != want["stream"])
-            .count()
-        )
-        assert diff == 0
-        assert got.count() == want.count() > 0

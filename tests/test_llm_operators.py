@@ -102,161 +102,6 @@ class TestMultimodal:
             assert r.n_bytes == len(texts[k].encode("utf-8"))
 
 
-class TestChunking:
-    """chunk_documents: the context-window preprocessing step. Exact
-    boundary math on synthetic docs, then shape invariants on the real
-    documents table."""
-
-    def test_exact_boundaries_with_overlap(self, spark):
-        from redis_lsm_timeseries_spark.operators.text import chunk_documents
-
-        text = " ".join(f"t{i}" for i in range(1, 12))  # 11 tokens
-        df = spark.createDataFrame([(1, text)], ["doc_id", "text"])
-        got = {
-            r.chunk_idx: (r.chunk_text, r.n_chunk_tokens)
-            for r in chunk_documents(
-                df, chunk_size=4, overlap=1
-            ).collect()
-        }
-        # stride 3 -> starts 0,3,6,9: [t1..t4][t4..t7][t7..t10][t10 t11]
-        assert got == {
-            0: ("t1 t2 t3 t4", 4),
-            1: ("t4 t5 t6 t7", 4),
-            2: ("t7 t8 t9 t10", 4),
-            3: ("t10 t11", 2),
-        }
-
-    def test_short_doc_is_one_chunk(self, spark):
-        from redis_lsm_timeseries_spark.operators.text import chunk_documents
-
-        df = spark.createDataFrame([(1, "a b c")], ["doc_id", "text"])
-        rows = chunk_documents(df, chunk_size=256, overlap=32).collect()
-        assert len(rows) == 1
-        assert rows[0].chunk_text == "a b c"
-        assert rows[0].n_chunk_tokens == 3
-
-    def test_chunks_reconstruct_document(self, spark):
-        """Dropping each chunk's leading `overlap` tokens (except the
-        first chunk's) and concatenating must reproduce the tokenized
-        document — no token lost or duplicated, for every real doc."""
-        from redis_lsm_timeseries_spark.functions.portable import tokens
-        from redis_lsm_timeseries_spark.operators.text import chunk_documents
-
-        # orderBy before limit: an unordered limit may pick different
-        # rows in the two independent jobs below.
-        docs = (
-            spark.read.parquet(f"{SF_DIR}/documents.parquet")
-            .select("doc_id", "text")
-            .orderBy("doc_id")
-            .limit(50)
-        )
-        overlap = 8
-        chunks = chunk_documents(docs, chunk_size=32, overlap=overlap)
-        rebuilt = (
-            chunks.withColumn(
-                "part",
-                F.when(F.col("chunk_idx") == 0, F.col("chunk_text")).otherwise(
-                    F.concat_ws(
-                        " ",
-                        F.expr(
-                            f"slice(split(chunk_text, ' '), {overlap + 1}, "
-                            "size(split(chunk_text, ' ')))"
-                        ),
-                    )
-                ),
-            )
-            .groupBy("doc_id")
-            .agg(
-                F.concat_ws(
-                    " ", F.array_sort(F.collect_list(F.struct("chunk_idx", "part")))
-                    .getField("part")
-                ).alias("rebuilt")
-            )
-        )
-        # Same phantom-empty-token filter chunk_documents applies.
-        want = {
-            r.doc_id: " ".join(r.toks)
-            for r in docs.select(
-                "doc_id",
-                F.filter(tokens("text"), lambda t: t != "").alias("toks"),
-            ).collect()
-        }
-        got = {r.doc_id: r.rebuilt for r in rebuilt.collect()}
-        assert got == want
-
-    def test_invalid_overlap_rejected(self, spark):
-        from redis_lsm_timeseries_spark.operators.text import chunk_documents
-
-        df = spark.createDataFrame([(1, "a")], ["doc_id", "text"])
-        with pytest.raises(ValueError):
-            chunk_documents(df, chunk_size=4, overlap=4)
-
-
-class TestPiiScrub:
-    def test_patterns_redacted_and_clean_text_untouched(self, spark):
-        from redis_lsm_timeseries_spark.operators.text import scrub_pii
-
-        rows = [
-            (1, "contact bob.smith+x@example.co.uk today"),
-            (2, "call +1 (555) 123-4567 or 555-123-4567"),
-            (3, "server at 192.168.001.1 went down"),
-            (4, "card 4111111111111111 declined"),
-            (5, "card 4111-1111-1111-1111 declined"),  # dashed card
-            (6, "account 12345678901234567890 ok"),  # 20-digit run
-            (7, "dotted 555.123.4567 phone"),
-            # Space-separated card: deliberately UNTOUCHED (whole, not
-            # half-leaked) — indistinguishable from a list of years,
-            # and the module's posture favors corpus fidelity; see
-            # test_clean_text_is_never_redacted for the year list.
-            (8, "card 4111 1111 1111 1111 declined"),
-        ]
-        df = spark.createDataFrame(rows, ["id", "text"])
-        got = {r.id: r.text_scrubbed for r in scrub_pii(df).collect()}
-        assert got[1] == "contact <EMAIL> today"
-        assert got[2] == "call <PHONE> or <PHONE>"
-        assert got[3] == "server at <IP> went down"
-        assert got[4] == "card <NUMBER> declined"
-        assert got[5] == "card <NUMBER> declined"  # no digit leaks
-        assert got[6] == "account <NUMBER> ok"
-        assert got[7] == "dotted <PHONE> phone"
-        assert got[8] == rows[7][1]  # untouched whole, never half-leaked
-
-    def test_clean_text_is_never_redacted(self, spark):
-        """False-positive guard: ordinary numeric text — epoch
-        timestamps, record ids, version numbers, dates, page ranges,
-        digit groups spanning a sentence boundary — passes through
-        verbatim. An unredacted phone is recoverable by a later pass; a
-        redacted timestamp is data loss."""
-        from redis_lsm_timeseries_spark.operators.text import scrub_pii
-
-        clean = [
-            (1, "a perfectly clean sentence with numbers like 42"),
-            (2, "ts 1704067200 id 123456789 stay intact"),
-            (3, "meeting on 2024. 555 2000 people came"),
-            (4, "version 2.4.1 released, pages 100-200"),
-            (5, "date 2024-01-15 12:30 fine"),
-            (6, "in 2023-2024 1500 staff were hired"),
-            (7, "the wars of 1914 1918 1939 1945 reshaped Europe"),
-        ]
-        df = spark.createDataFrame(clean, ["id", "text"])
-        got = {r.id: r.text_scrubbed for r in scrub_pii(df).collect()}
-        assert got == {i: t for i, t in clean}
-
-    def test_scrub_stays_in_codegen(self, spark):
-        """The scrub must be a Column-expression chain (no Python UDF
-        stage in the plan)."""
-        from redis_lsm_timeseries_spark.operators.text import scrub_pii
-
-        df = scrub_pii(
-            spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-                "doc_id", "text"
-            )
-        )
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "BatchEvalPython" not in plan
-        assert "ArrowEvalPython" not in plan
-
-
 class TestRepetitionStats:
     """Gopher-style repetition filters: known-repetitive synthetic docs
     must trip the thresholds, normal prose must not."""
@@ -424,39 +269,6 @@ class TestDecontamination:
         assert "ArrowEvalPython" not in plan
 
 
-class TestFingerprint:
-    def test_fingerprint_dups_differential(self, spark):
-        """text_fingerprint_dups left the driver catalog in round 7
-        (slot swapped for text_decontaminate) — the retired oracle
-        keeps gating it here, same comparison the driver ran."""
-        import duckdb
-
-        from redis_lsm_timeseries_spark.plans.llm_queries import (
-            FINGERPRINT_DUPS_SQL,
-            text_fingerprint_dups,
-        )
-
-        got = (
-            text_fingerprint_dups(spark, SF_DIR)
-            .toPandas()
-            .sort_values(["fingerprint"], ignore_index=True)
-        )
-        con = duckdb.connect()
-        con.execute(
-            "CREATE VIEW documents AS SELECT * FROM "
-            f"'{SF_DIR}/documents.parquet'"
-        )
-        want = (
-            con.execute(FINGERPRINT_DUPS_SQL)
-            .fetchdf()
-            .sort_values(["fingerprint"], ignore_index=True)
-        )
-        con.close()
-        assert got["fingerprint"].tolist() == want["fingerprint"].tolist()
-        assert got["keep_id"].tolist() == want["keep_id"].tolist()
-        assert got["n_members"].tolist() == want["n_members"].tolist()
-
-
 class TestSampling:
     def test_hash_mod_sample_deterministic_and_rate_shaped(self, spark):
         """Same inputs -> identical member set across runs, and each
@@ -496,48 +308,3 @@ class TestSampling:
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan
         assert "BatchEvalPython" not in plan
-
-    def test_quota_sample_exact_counts_and_oracle(self, spark):
-        """Quota top-up path: exact per-stratum sizes, and the member
-        set matches a DuckDB recomputation of the same rank."""
-        import duckdb
-
-        from redis_lsm_timeseries_spark.functions.portable import HASH64_SQL
-        from redis_lsm_timeseries_spark.operators.sampling import (
-            stratified_quota_sample,
-        )
-
-        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-            "doc_id", "source"
-        )
-        out = stratified_quota_sample(docs, "source", 3, "doc_id")
-        sizes = {
-            r.source: r.n
-            for r in out.groupBy("source").agg(F.count("*").alias("n")).collect()
-        }
-        per_stratum = {
-            r.source: r.n
-            for r in docs.groupBy("source").agg(F.count("*").alias("n")).collect()
-        }
-        for s, n in per_stratum.items():
-            assert sizes.get(s, 0) == min(3, n)
-
-        h = HASH64_SQL.format(e="CAST(doc_id AS VARCHAR)")
-        con = duckdb.connect()
-        con.execute(
-            "CREATE VIEW documents AS SELECT * FROM "
-            f"'{SF_DIR}/documents.parquet'"
-        )
-        want = con.execute(
-            f"""
-            SELECT doc_id FROM (
-              SELECT doc_id, row_number() OVER (
-                PARTITION BY source ORDER BY {h}, doc_id
-              ) AS rk FROM documents
-            ) WHERE rk <= 3
-            """
-        ).fetchdf()
-        con.close()
-        assert {r.doc_id for r in out.select("doc_id").collect()} == set(
-            want["doc_id"].tolist()
-        )

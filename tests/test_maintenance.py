@@ -293,87 +293,6 @@ class TestSteadyStateLoop:
         assert commit.read_table(host, out, schema).count() == 110
 
 
-class TestOptimizeStore:
-    """r12: one cron pass over every engine-owned manifest table —
-    cold tier, purge log, rollup members — content-preserving, reads
-    identical before/after, change feeds unbroken."""
-
-    def _store(self, spark, tmp_path, manifest=True):
-        from redis_lsm_timeseries_spark.config import EngineConfig
-        from redis_lsm_timeseries_spark.rollup import refresh_rollup
-        from redis_lsm_timeseries_spark.store import TimeseriesStore
-        from redis_lsm_timeseries_spark.tiering import (
-            purge_ack_many,
-            purge_scan,
-        )
-
-        cfg = EngineConfig(root=str(tmp_path / "e"), partition_width=10)
-        s = TimeseriesStore(
-            spark, cfg, commit=ManifestCommit() if manifest else None
-        )
-        s.initialize()
-        # several small purge cycles -> many small cold + log files
-        for gen in range(3):
-            s.write(
-                [("A", gen * 20 + t, f"a{gen}-{t}") for t in range(10)],
-                ingest_ts=gen + 1,
-            )
-            marks = purge_scan(
-                s, partition_age_threshold_s=0.0,
-                max_partitions_to_mark=5,
-            )
-            purge_ack_many(s, [m.purge_id for m in marks])
-        s.write([("A", 500, "hot")], ingest_ts=99)
-        refresh_rollup(s, "daily", 10)
-        return s
-
-    def test_optimize_store_folds_engine_tables(self, spark, tmp_path):
-        from redis_lsm_timeseries_spark.maintenance import optimize_store
-
-        s = self._store(spark, tmp_path)
-        before = {
-            (r.tag, r.ts, r.value)
-            for r in s.read_all(include_cold=True).collect()
-        }
-        files_before = s.commit.table_file_count(s, s.config.cold_path)
-        out = optimize_store(s, target_rows=1_000_000)
-        assert s.config.cold_path in out
-        assert s.config.purge_log_path in out
-        assert any("/rollups/daily/data" in k for k in out)
-        stats = out[s.config.purge_log_path]
-        assert stats.compacted_files >= 2  # the log folded
-        files_after = s.commit.table_file_count(s, s.config.cold_path)
-        assert files_after <= files_before
-        after = {
-            (r.tag, r.ts, r.value)
-            for r in s.read_all(include_cold=True).collect()
-        }
-        assert after == before
-
-    def test_optimize_store_commits_are_preserve_kind(
-        self, spark, tmp_path
-    ):
-        """A mirror of the purge log keeps consuming incrementally
-        across the whole store pass — zero resyncs."""
-        from redis_lsm_timeseries_spark.changefeed import mirror_changes
-        from redis_lsm_timeseries_spark.maintenance import optimize_store
-
-        s = self._store(spark, tmp_path)
-        dst = str(tmp_path / "log_mirror")
-        mirror_changes(s, s.config.purge_log_path, dst, commit=s.commit)
-        optimize_store(s)
-        m = mirror_changes(
-            s, s.config.purge_log_path, dst, commit=s.commit
-        )
-        assert m.mode in ("noop", "incremental")  # never "resync"
-
-    def test_directory_store_is_a_noop(self, spark, tmp_path):
-        from redis_lsm_timeseries_spark.maintenance import optimize_store
-
-        s = self._store(spark, tmp_path, manifest=False)
-        assert optimize_store(s) == {}
-
-
 class TestFastMinMax:
     """r12: exact column min/max from the log alone — the
     what-time-range-does-this-table-cover question at zero storage

@@ -20,7 +20,6 @@ from redis_lsm_timeseries_spark.errors import (
     ValidationError,
 )
 from redis_lsm_timeseries_spark.operators.merge import (
-    delete_range,
     delete_rows,
     merge_into,
 )
@@ -273,34 +272,6 @@ class TestDelete:
         assert n_after < n_before  # dropped, nothing written back
         got = _rows(spark, host, commit, path)
         assert set(got) == set(range(25, 100))
-
-    def test_delete_range_inclusive_bounds(self, spark, env):
-        host, commit, path = env
-        delete_range(host, path, "k", lo=10, hi=19, commit=commit)
-        got = _rows(spark, host, commit, path)
-        assert set(got) == set(range(10)) | set(range(20, 100))
-
-    def test_delete_range_keeps_null_column_rows(self, spark, tmp_path):
-        host, commit = CommitHost(spark), ManifestCommit()
-        path = str(tmp_path / "t")
-        df = spark.createDataFrame(
-            [(1, "a"), (None, "keepme"), (50, "b")], SCHEMA
-        )
-        commit.rewrite_files(
-            host, path, [],
-            lambda tmp: df.write.mode("overwrite").parquet(tmp),
-        )
-        delete_range(host, path, "k", lo=0, hi=100, commit=commit)
-        vals = {
-            r.v for r in commit.read_table(host, path, SCHEMA).collect()
-        }
-        assert vals == {"keepme"}
-
-    def test_delete_range_requires_a_bound(self, spark, env):
-        host, commit, path = env
-        with pytest.raises(ValidationError, match="bound"):
-            delete_range(host, path, "k", commit=commit)
-
 
 class TestOracleAgreement:
     """DuckDB differential: merge == anti-join ∪ source, delete ==

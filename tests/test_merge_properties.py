@@ -5,19 +5,17 @@ pruning, or rewrite path the engine picked along the way."""
 
 from __future__ import annotations
 
-import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from redis_lsm_timeseries_spark.commit import CommitHost, ManifestCommit
 from redis_lsm_timeseries_spark.operators.merge import (
-    delete_range,
     delete_rows,
     merge_into,
 )
 
 SCHEMA = "k long, v string"
 
-# an op is ("merge", {k: v}) | ("del", [k]) | ("delrange", lo, hi)
+# an op is ("merge", {k: v}) | ("del", [k])
 _keys = st.integers(min_value=0, max_value=40)
 _ops = st.lists(
     st.one_of(
@@ -30,14 +28,12 @@ _ops = st.lists(
             st.just("del"),
             st.lists(_keys, min_size=1, max_size=5),
         ),
-        st.tuples(st.just("delrange"), _keys, _keys),
     ),
     min_size=1,
     max_size=6,
 )
 
 
-@pytest.mark.slow
 @settings(
     max_examples=12,
     deadline=None,
@@ -79,12 +75,6 @@ def test_merge_delete_sequence_matches_dict_model(
             )
             for k in ks:
                 model.pop(k, None)
-        else:
-            lo, hi = min(op[1], op[2]), max(op[1], op[2])
-            delete_range(host, path, "k", lo=lo, hi=hi, commit=commit)
-            model = {
-                k: v for k, v in model.items() if not (lo <= k <= hi)
-            }
         got = {
             r.k: r.v
             for r in commit.read_table(host, path, SCHEMA).collect()

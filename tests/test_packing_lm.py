@@ -18,10 +18,7 @@ from redis_lsm_timeseries_spark.operators.lm import (
     unigram_model,
     with_lm_score,
 )
-from redis_lsm_timeseries_spark.operators.packing import (
-    pack_documents,
-    pack_utilization,
-)
+from redis_lsm_timeseries_spark.operators.packing import pack_documents
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_ORACLE", "/root/testdata/sf0.01")
 
@@ -108,21 +105,6 @@ class TestPackingDifferential:
             .count()
         )
         assert bad == 0
-
-    def test_utilization_consistency(self, spark, docs):
-        packed = pack_documents(docs, window_tokens=self.W, num_shards=self.S)
-        util = pack_utilization(packed).collect()
-        assert len(util) > 0
-        for r in util:
-            # windows used = ceil(stream length / W); 0 for all-empty
-            assert r.n_windows_used == -(-r.total_tokens // self.W)
-            assert 0 <= r.n_boundary_docs <= r.n_docs
-            if r.total_tokens > 0:
-                assert 0.0 < r.fill_frac <= 1.0
-                assert abs(
-                    r.fill_frac
-                    - r.total_tokens / (r.n_windows_used * self.W)
-                ) < 1e-12
 
     def test_boundary_flags_on_tiny_window(self, spark, docs):
         """window_tokens=1: every doc with >= 2 tokens crosses."""

@@ -123,52 +123,6 @@ class TestInvariants:
         )
 
 
-class TestMaterialization:
-    def test_windows_reconstruct_streams_losslessly(self, spark, docs):
-        from redis_lsm_timeseries_spark.operators.packing import (
-            materialize_windows_nosplit,
-            pack_documents_nosplit,
-        )
-        from redis_lsm_timeseries_spark.functions.portable import (
-            nonempty_tokens,
-        )
-
-        packed = pack_documents_nosplit(docs, window_tokens=WT)
-        wins = materialize_windows_nosplit(docs, packed).collect()
-        # size bound: every non-oversize window fits
-        for w in wins:
-            if not w.has_oversize:
-                assert w.n_tokens <= WT, (w.source, w.shard, w.window_id)
-        # lossless order-preserving reconstruction per stream
-        by_stream: dict = {}
-        for w in wins:
-            by_stream.setdefault((w.source, w.shard), []).append(w)
-        ref = docs.select(
-            "doc_id", "source",
-            F.size(nonempty_tokens("text")).alias("_n"),
-            nonempty_tokens("text").alias("_toks"),
-        ).collect()
-        packed_rows = {r.doc_id: r for r in packed.collect()}
-        stream_docs: dict = {}
-        for r in ref:
-            p = packed_rows[r.doc_id]
-            stream_docs.setdefault((r.source, p.shard), []).append(
-                (r.doc_id, list(r._toks))
-            )
-        for key, ws in by_stream.items():
-            got = [
-                t
-                for w in sorted(ws, key=lambda w: w.window_id)
-                for t in w.toks
-            ]
-            want = [
-                t
-                for _, toks in sorted(stream_docs[key])
-                for t in toks
-            ]
-            assert got == want, key
-
-
 class TestPlanShape:
     def test_single_exchange_arrow_grouped(self, docs):
         from redis_lsm_timeseries_spark.operators.packing import (

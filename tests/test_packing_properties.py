@@ -1,18 +1,13 @@
 """Hypothesis fuzz of the packing layout: for ANY corpus (random
 texts including empty/whitespace docs, random window size and shard
 count), the layout invariants hold — gapless streams, correct window
-arithmetic, manifest tiling, lossless reconstruction."""
+arithmetic."""
 
 from __future__ import annotations
 
 from hypothesis import HealthCheck, given, settings, strategies as st
-from pyspark.sql import functions as F
 
-from redis_lsm_timeseries_spark.operators.packing import (
-    materialize_windows,
-    pack_documents,
-    window_manifest,
-)
+from redis_lsm_timeseries_spark.operators.packing import pack_documents
 
 _word = st.text(
     alphabet=st.sampled_from("abcxyz019"), min_size=1, max_size=6
@@ -64,46 +59,3 @@ class TestPackingProperties:
                 assert p.pack_id_end == (p.token_start + span - 1) // window
                 assert p.crosses_boundary == (p.pack_id_end > p.pack_id)
                 offset += p.n_tokens
-
-    @settings(
-        max_examples=8,
-        deadline=None,
-        suppress_health_check=[HealthCheck.function_scoped_fixture],
-    )
-    @given(
-        rows=st.lists(_doc, min_size=1, max_size=20, unique_by=lambda r: r[0]),
-        window=st.integers(1, 24),
-    )
-    def test_materialized_windows_reconstruct(self, spark, rows, window):
-        df = spark.createDataFrame(
-            rows, "doc_id long, text string, source string"
-        )
-        packed_df = pack_documents(df, window_tokens=window, num_shards=2)
-        man = window_manifest(packed_df, window)
-        wins = materialize_windows(df, man, window).collect()
-
-        packed = packed_df.collect()
-        toks = {
-            r[0]: [t for t in r[1].lower().split() if t] for r in rows
-        }
-        want: dict[tuple, list] = {}
-        for p in sorted(packed, key=lambda r: (r.source, r.shard, r.doc_id)):
-            want.setdefault((p.source, p.shard), []).extend(toks[p.doc_id])
-
-        got: dict[tuple, dict[int, list]] = {}
-        for w in wins:
-            got.setdefault((w.source, w.shard), {})[w.window_id] = list(
-                w.toks
-            )
-        for key, stream in want.items():
-            if not stream:
-                assert key not in got
-                continue
-            by_win = got[key]
-            flat = []
-            for wid in sorted(by_win):
-                chunk = by_win[wid]
-                assert len(chunk) <= window
-                assert wid == len(flat) // window
-                flat.extend(chunk)
-            assert flat == stream

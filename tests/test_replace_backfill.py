@@ -2,7 +2,7 @@
 (retrofit skipping stats via the restat op) — round 14.
 
 replace_range is the backfill/restatement primitive: "recompute this
-key band and swap it in" as ONE commit — delete_range + append would
+key band and swap it in" as ONE commit — a delete + append would
 expose a gap between two entries. backfill_file_stats is the second
 life of the restat delta op: files committed without stats (pre-stats
 history, transient footer failures) regain data skipping, fast_count,

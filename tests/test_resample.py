@@ -151,32 +151,6 @@ class TestDifferential:
 
 
 class TestM4AndRate:
-    @pytest.fixture(scope="class")
-    def counter(self, spark):
-        # monotone counter with one reset at ts 40
-        return spark.createDataFrame(
-            [
-                ("c", 0, 100.0),
-                ("c", 10, 150.0),
-                ("c", 25, 150.0),
-                ("c", 40, 20.0),   # reset
-                ("c", 50, 70.0),
-            ],
-            "tag string, ts long, value double",
-        )
-
-    def test_counter_rate_semantics(self, spark, counter):
-        from redis_lsm_timeseries_spark.operators.resample import (
-            counter_rate,
-        )
-
-        out = {r.ts: r for r in counter_rate(counter).collect()}
-        assert set(out) == {10, 25, 40, 50}  # first sample emits none
-        assert out[10].increase == 50.0 and out[10].rate_per_unit == 5.0
-        assert out[25].increase == 0.0 and not out[25].reset
-        assert out[40].reset and out[40].increase == 20.0
-        assert out[50].increase == 50.0 and out[50].rate_per_unit == 5.0
-
     def test_m4_matches_duckdb(self, spark):
         from redis_lsm_timeseries_spark.operators.resample import (
             m4_downsample,

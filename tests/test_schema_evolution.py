@@ -266,17 +266,6 @@ class TestMappedRowLevelRewrites:
         )
         assert got == [(2, "b")]
 
-    def test_delete_range_on_renamed_column(self, spark, tmp_path):
-        from redis_lsm_timeseries_spark.operators.merge import delete_range
-
-        host, commit, path = _mfx(spark, tmp_path)
-        commit.rename_column(host, path, "v", "score")
-        delete_range(host, path, "score", lo=15, hi=25, commit=commit)
-        got = sorted(
-            r.score for r in commit.read_table(host, path, None).collect()
-        )
-        assert got == [10]
-
     def test_zorder_after_widen_mixed_width_files(self, spark, tmp_path):
         """zorder_compact on a renamed+widened member clusters narrow
         and wide generations in one pass and stays content-identical
@@ -875,7 +864,7 @@ class TestMappedEquivalence:
         self, spark, tmp_path
     ):
         """Differential pin for the r14 mapping-aware rewrites: one
-        deterministic append/merge/delete/delete_range/compact/zorder
+        deterministic append/merge/delete/compact/zorder
         sequence applied to (a) a plain member and (b) a renamed+
         widened member must leave IDENTICAL logical tables after every
         step — the mapping is invisible to semantics, only to file
@@ -884,7 +873,6 @@ class TestMappedEquivalence:
             compact_small_files,
         )
         from redis_lsm_timeseries_spark.operators.merge import (
-            delete_range,
             delete_rows,
             merge_into,
         )
@@ -936,18 +924,14 @@ class TestMappedEquivalence:
                 commit=commit,
             )
         check("delete_rows")
-        # 3: range delete on the mapped/widened column
-        delete_range(host, plain, "v", lo=100, hi=140, commit=commit)
-        delete_range(host, mapped, "score", lo=100, hi=140, commit=commit)
-        check("delete_range")
-        # 4: physical maintenance (content-identical)
+        # 3: physical maintenance (content-identical)
         for p in (plain, mapped):
             compact_small_files(host, p, commit=commit)
         check("compact")
         for p, cols in ((plain, ["k", "v"]), (mapped, ["k", "score"])):
             zorder_compact(host, p, cols, min_files=1, commit=commit)
         check("zorder")
-        # 5: conditional merge (matched-delete clause)
+        # 4: conditional merge (matched-delete clause)
         for p, vcol, t in ((plain, "v", "int"), (mapped, "score", "long")):
             merge_into(
                 host, p,

@@ -5,7 +5,6 @@ Morton key must equal its pure-Python reference everywhere."""
 
 from __future__ import annotations
 
-import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from redis_lsm_timeseries_spark.commit import CommitHost, ManifestCommit
@@ -32,7 +31,6 @@ _pred = st.one_of(
 )
 
 
-@pytest.mark.slow
 @settings(
     max_examples=15,
     deadline=None,
@@ -114,7 +112,6 @@ _ts_pred = st.one_of(
 )
 
 
-@pytest.mark.slow
 @settings(
     max_examples=12,
     deadline=None,
@@ -164,7 +161,6 @@ def test_timestamp_pruning_is_always_a_superset(
     assert got == want, (bound, kept, total)
 
 
-@pytest.mark.slow
 @settings(
     max_examples=20,
     deadline=None,

@@ -367,6 +367,19 @@ class TestPhysicalLayout:
             store.read_range({"t": (0, 10)}).collect()
 
 
+class TestNamespace:
+    """The settings hash names the on-disk directory of every table, so
+    an existing store root only reopens while it stays the same
+    (reference ``_settingsHash``, index.js:149-155)."""
+
+    def test_namespace_hash_is_pinned(self):
+        assert EngineConfig(root="/r").namespace == "f7cca7dfd857cf8a"
+        assert (
+            EngineConfig(root="/r", partition_width=5).namespace
+            == "bb67686719bc9218"
+        )
+
+
 class TestFileSchemeRoot:
     """file:// roots are normalized to bare local paths so Spark writes
     and the local-FS probes agree on one location (ADVICE r3: with the

@@ -239,62 +239,6 @@ class TestReplayIdentity:
         assert store.hot().count() == 2
 
 
-class TestSlidingRollup:
-    def test_sliding_matches_batch_window_expansion(self, spark):
-        """Sliding windows (10 min duration, 5 min slide): every event
-        lands in exactly 2 windows; the streamed complete-mode result
-        must equal the batch window() computation on the same input."""
-        from redis_lsm_timeseries_spark.plans.streaming_queries import (
-            _run_to_memory_sink,
-        )
-        from redis_lsm_timeseries_spark.sources.testdata import (
-            load_events,
-            read_events_stream,
-        )
-        from redis_lsm_timeseries_spark.streaming import streaming_rollup
-
-        sf = "/root/testdata/sf0.001"
-        stream = read_events_stream(spark, sf).select(
-            "event_type", "ts", "value"
-        )
-        # Watermark far larger than the data span: complete-mode sink
-        # then holds EVERY window, so batch equality is exact.
-        agg = streaming_rollup(
-            stream,
-            window_duration="10 minutes",
-            watermark="100 days",
-            slide_duration="5 minutes",
-        )
-        got = {
-            (r.tag, r.bucket_ms): (r.n, r.sum_v)
-            for r in _run_to_memory_sink(spark, agg, "slide").collect()
-        }
-        batch = load_events(spark, sf).select("event_type", "ts", "value")
-        want = {
-            (r.tag, r.bucket_ms): (r.n, r.sum_v)
-            for r in batch.groupBy(
-                F.window("ts", "10 minutes", "5 minutes"),
-                F.col("event_type").alias("tag"),
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("value").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("sum_v"),
-            )
-            .select(
-                "tag",
-                F.unix_millis(F.col("window.start")).alias("bucket_ms"),
-                "n",
-                "sum_v",
-            )
-            .collect()
-        }
-        assert got == want
-        # Overlap sanity: sliding windows double-count vs tumbling.
-        assert sum(n for n, _ in got.values()) == 2 * batch.count()
-
-
 class TestColdArchiveSink:
     def test_foreachbatch_writes_reference_text_archive(
         self, spark, store, stream_dirs, tmp_path
