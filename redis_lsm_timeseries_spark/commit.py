@@ -1589,6 +1589,27 @@ class ManifestCommit(ParquetLeaseCommit):
     #: never pruned on that column)
     HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
+    #: characters Spark's ``ExternalCatalogUtils.escapePathName`` hex-
+    #: escapes in a partition directory name, plus NUL (Spark leaves
+    #: it raw, but no filesystem path can hold it, so ``%00`` keeps a
+    #: NUL-bearing value writable and ``_unescape_partition`` reads it
+    #: back)
+    _PARTITION_ESCAPE = frozenset('"#%\'*/:=?\\{[]^\x7f') | {
+        chr(i) for i in range(32)
+    }
+
+    @staticmethod
+    def _escape_partition_value(s: str) -> str:
+        """Spark's partition-path escaping: the directory-name text
+        Spark's own ``partitionBy`` writes for the non-empty string
+        value ``s``, NUL aside (see ``_PARTITION_ESCAPE``). The
+        connector writer and the store's per-tag partition reads both
+        build paths with it. ``_unescape_partition`` inverts it."""
+        return "".join(
+            f"%{ord(c):02X}" if c in ManifestCommit._PARTITION_ESCAPE else c
+            for c in s
+        )
+
     @staticmethod
     def _unescape_partition(raw: str) -> str:
         """Inverse of Spark's partition-path escaping

@@ -1337,22 +1337,6 @@ def _validate_constraints_arrow(tbl, cons: dict, path: str) -> None:
         con.close()
 
 
-#: characters Spark's ``ExternalCatalogUtils.escapePathName`` hex-
-#: escapes in a partition directory name (plus all control chars) —
-#: the connector writer must agree with it so ``read_table``'s native
-#: partition discovery and the engine's ``_unescape_partition``
-#: decode the connector's paths identically
-_PARTITION_ESCAPE = set('"#%\'*/:=?\\{[]^\x7f') | {
-    chr(i) for i in range(32)
-}
-
-
-def _escape_partition_value(s: str) -> str:
-    return "".join(
-        f"%{ord(c):02X}" if c in _PARTITION_ESCAPE else c for c in s
-    )
-
-
 def _hive_segment_value(v) -> str:
     """Partition directory VALUE text for one row value, matching
     what Spark's own ``partitionBy`` writes (so connector files and
@@ -1366,7 +1350,7 @@ def _hive_segment_value(v) -> str:
         return ManifestCommit.HIVE_NULL
     if isinstance(v, bool):
         return "true" if v else "false"
-    return _escape_partition_value(str(v))
+    return ManifestCommit._escape_partition_value(str(v))
 
 
 def _check_partition_write_schema(schema, part_logical) -> None:

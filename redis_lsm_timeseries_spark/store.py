@@ -30,8 +30,12 @@ Physical layout — a two-level LSM:
   ``flush_l0`` (called by ack/compact maintenance) folds segments
   into L1.
 
-Reads union both tiers and cache the table handle per store instance
-(mutators invalidate), so repeated point reads skip the file listing.
+Reads union both tiers. Range reads (``read_range``, ``read_index``,
+``read_page``) plan over only the requested tags' partition
+directories, listed on the driver (``hot_pruned``), so a ``write()``
+costs the next read no re-listing of L1. Full-table reads (``hot``,
+``read_all``) cache the table handle per store instance (mutators
+invalidate), so repeated full reads skip the file listing.
 """
 
 from __future__ import annotations
@@ -121,7 +125,8 @@ class TimeseriesStore:
         # (index.js:58) used in the member uniquifier.
         self.writer_id = uuid.uuid4().hex[:8]
         # In-process hot-table handle cache: re-listing the partitioned
-        # table per read is the dominant point-read cost. Every mutator
+        # table is the dominant cost of a full-table read (range reads
+        # list only their own partitions, see hot_pruned). Every mutator
         # in this module and tiering.py invalidates it explicitly, and
         # the cache self-validates against a layout mtime token (hot
         # root, its _spark_metadata streaming-commit dir, L0 root), so
@@ -141,22 +146,23 @@ class TimeseriesStore:
         self._lease_plock = threading.Lock()
 
     def _shuffle_partitions(self) -> int:
-        """The session's current ``spark.sql.shuffle.partitions`` —
-        the explicit task count for clustering shuffles that must not
-        be AQE-coalesced to one task (partitioned writes serialize
-        their directory IO in a single task otherwise). Respects
-        ``pinned_shuffle_partitions`` contexts; falls back to
-        defaultParallelism if the conf is unreadable. Capped at
-        defaultParallelism (r18, ADVICE r17): an UNPINNED session
-        still carrying the vanilla conf default (200) must not shuffle
-        a small hot append into 200 tiny tasks/files — the conf only
-        *lowers* the count below the core count, it never raises it."""
+        """The session's current ``spark.sql.shuffle.partitions``,
+        capped at defaultParallelism — the explicit task count for
+        clustering shuffles that must not be AQE-coalesced to one task
+        (partitioned writes serialize their directory IO in a single
+        task otherwise). A ``pinned_shuffle_partitions`` context or
+        any other pin is respected only up to the cap: it can lower
+        the count below the core count, never raise it (r18, ADVICE
+        r17: an UNPINNED session still carrying the vanilla conf
+        default, 200, must not shuffle a small hot append into 200
+        tiny tasks/files). A conf value that is not an integer falls
+        back to defaultParallelism."""
         par = max(1, int(self.spark.sparkContext.defaultParallelism))
         try:
             return min(
                 int(self.spark.conf.get("spark.sql.shuffle.partitions")), par
             )
-        except Exception:
+        except ValueError:
             return par
 
     def invalidate_hot_cache(self) -> None:
@@ -686,13 +692,19 @@ class TimeseriesStore:
                 .parquet(self.config.hot_path)
                 .select(*field_names)
             )
-        tiers.extend(self._l0_tiers(field_names))
+        df = self._union_l0(tiers, field_names)
+        self._hot_cache = (token, df)
+        return df
+
+    def _union_l0(self, tiers: list[DataFrame], field_names) -> DataFrame:
+        """``tiers`` (the L1 scan, if any) unioned with the L0 tiers,
+        in that order; a store with neither reads as empty."""
+        tiers = tiers + self._l0_tiers(field_names)
         if not tiers:
             return self.spark.createDataFrame([], SAMPLE_SCHEMA)
         df = tiers[0]
         for t in tiers[1:]:
             df = df.unionByName(t)
-        self._hot_cache = (token, df)
         return df
 
     def _l0_tiers(self, field_names) -> list[DataFrame]:
@@ -728,33 +740,80 @@ class TimeseriesStore:
         return tiers
 
     def hot_pruned(self, predicates: Mapping | None) -> DataFrame:
-        """``hot()`` with manifest-stats FILE skipping on the L1 tier
-        (manifest-hot mode, r13): the scan plans over only the
-        committed files whose stats overlap ``predicates`` (same shape
-        as ``ManifestCommit.prune_files``) — at a 100k-file hot table
-        a narrow range read stops listing the world at plan time,
-        before Catalyst's directory-level pruning even runs. Superset
-        guard: callers keep their row predicates. Directory-mode
-        stores (no per-file stats) return the full ``hot()``. Not
-        cached — the pruned plan is query-specific; the underlying
-        manifest entry reads are cache-served either way."""
+        """``hot()`` planned over only what ``predicates`` (same shape
+        as ``ManifestCommit.prune_files``, with a ``tag`` set and
+        ``part_start`` bounds) can touch, so a narrow range read stops
+        listing the world at plan time. Superset guard: callers keep
+        their row predicates.
+
+        - Manifest-hot mode (r13): the L1 scan plans over only the
+          committed files whose stats overlap ``predicates``.
+        - Directory mode: the L1 scan plans over the
+          ``tag=``/``part_start=`` directories of the requested tags
+          (``_hot_partition_dirs``), listed on the driver. A
+          ``write()`` changes only L0, so the read after it lists no
+          L1 directory it does not need. A sink-managed L1
+          (``_spark_metadata``) reads the full, cached ``hot()``.
+
+        The L0 tiers are unioned as in ``hot()`` (``_union_l0``).
+        Not cached — the pruned plan is query-specific."""
         self._require_init()
-        if not predicates or not self.commit.tracks_changes(
-            self, self.config.hot_path
-        ):
+        if not predicates:
             return self.hot()
         field_names = [f.name for f in SAMPLE_SCHEMA.fields]
-        tiers = [
-            self.commit.read_table_pruned(
-                self, self.config.hot_path, SAMPLE_SCHEMA,
-                predicates=dict(predicates),
-            ).select(*field_names)
-        ]
-        tiers.extend(self._l0_tiers(field_names))
-        df = tiers[0]
-        for t in tiers[1:]:
-            df = df.unionByName(t)
-        return df
+        tiers = []
+        if self.commit.tracks_changes(self, self.config.hot_path):
+            tiers.append(
+                self.commit.read_table_pruned(
+                    self, self.config.hot_path, SAMPLE_SCHEMA,
+                    predicates=dict(predicates),
+                ).select(*field_names)
+            )
+        else:
+            dirs = self._hot_partition_dirs(predicates)
+            if dirs is None:
+                return self.hot()
+            if dirs:
+                tiers.append(
+                    self.spark.read.schema(SAMPLE_SCHEMA)
+                    .option("basePath", self.config.hot_path)
+                    .parquet(*dirs)
+                    .select(*field_names)
+                )
+        return self._union_l0(tiers, field_names)
+
+    def _hot_partition_dirs(self, predicates: Mapping) -> list[str] | None:
+        """The directory-mode L1 partition directories ``predicates``
+        (a ``tag`` set and inclusive ``part_start`` bounds) can touch:
+        each requested tag's ``tag=`` directory, its path built with
+        Spark's own escaping and listed through ``self.fs``, keeping
+        the ``part_start=`` entries inside the bounds. None means
+        "read the full ``hot()``": a streaming file sink owns L1, and
+        its ``_spark_metadata`` log, not its directories, defines what
+        is committed."""
+        from redis_lsm_timeseries_spark.commit import ManifestCommit
+
+        hot = self.config.hot_path
+        if self.fs.exists(f"{hot}/_spark_metadata"):
+            return None
+        lo, hi = predicates["part_start"]
+        dirs = []
+        for tag in sorted(predicates["tag"]):
+            tag_dir = f"{hot}/tag={ManifestCommit._escape_partition_value(tag)}"
+            if not self.fs.exists(tag_dir):
+                continue
+            for name in sorted(self.fs.listdir(tag_dir)):
+                key, _, value = name.partition("=")
+                if key != "part_start":
+                    continue
+                try:
+                    part_start = int(value)
+                except ValueError:
+                    # the hive NULL sentinel: no range matches NULL
+                    continue
+                if lo <= part_start <= hi:
+                    dirs.append(f"{tag_dir}/{name}")
+        return dirs
 
     def cold(self, predicates: Mapping | None = None) -> DataFrame:
         """The cold tier. ``predicates`` ({col: (lo, hi)} inclusive

@@ -1,0 +1,193 @@
+"""Directory-mode range reads plan over only the requested partition
+directories (``TimeseriesStore.hot_pruned``). Differential against
+last-write-wins over the full ``hot()``, a pin of Spark's partition
+path escaping, and a job-count pin for the read after a ``write()``."""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+
+from redis_lsm_timeseries_spark.commit import ManifestCommit
+from redis_lsm_timeseries_spark.config import EngineConfig
+from redis_lsm_timeseries_spark.operators.lww import lww_latest
+from redis_lsm_timeseries_spark.store import TimeseriesStore
+
+WIDTH = 10
+#: tags whose hive directory names need escaping, or hold a glob
+#: character Spark leaves unescaped (``}``), a space, or non-ASCII text
+TAGS = ["a:b", "c%d", "x=y", "p/q", "sp ace", "ü", "a}b", "plain"]
+
+
+def _next_job_id(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def _store(spark, root) -> TimeseriesStore:
+    s = TimeseriesStore(spark, EngineConfig(root=str(root), partition_width=WIDTH))
+    s.initialize()
+    return s
+
+
+class TestPartitionEscaping:
+    def test_escape_matches_spark(self, spark):
+        spark_escape = (
+            spark._jvm.org.apache.spark.sql.catalyst.catalog
+            .ExternalCatalogUtils.escapePathName
+        )
+        non_ascii = ["é", "ü", "中", "\U0001F600"]
+        for c in [chr(i) for i in range(1, 128)] + non_ascii:
+            s = f"a{c}b"
+            assert ManifestCommit._escape_partition_value(s) == spark_escape(s), repr(c)
+
+    def test_nul_is_escaped(self):
+        """Spark leaves NUL raw; no path can hold it, so it is escaped."""
+        assert ManifestCommit._escape_partition_value("a\x00b") == "a%00b"
+
+    def test_unescape_round_trip(self):
+        non_ascii = ["é", "ü", "中", "\U0001F600"]
+        for c in [chr(i) for i in range(128)] + non_ascii:
+            s = f"a{c}b"
+            assert ManifestCommit._unescape_partition(
+                ManifestCommit._escape_partition_value(s)
+            ) == s, repr(c)
+
+
+@pytest.fixture(scope="module")
+def layered(spark, tmp_path_factory):
+    """Rows in L1 (bulk load and a flushed write), in L0, and in an
+    uncommitted staging dir; duplicate keys split across the tiers,
+    tombstones, negative ``ts``."""
+    s = _store(spark, tmp_path_factory.mktemp("pruning") / "engine")
+    base = [(t, ts, f"{t}@{ts}") for t in TAGS for ts in range(-35, 36, 7)]
+    s.write_df(
+        spark.createDataFrame(base, "tag string, ts long, value string"),
+        ingest_ts=100,
+    )
+    # flushed into L1: overwrites one key per tag and adds new ones
+    s.write([(t, ts, f"flushed {t}@{ts}") for t in TAGS for ts in (-35, 40)], ingest_ts=200)
+    s.flush_l0()
+    # uncommitted staging: a flush that crashed after its L0 move
+    s.write([(t, -28, f"staged {t}") for t in TAGS], ingest_ts=300)
+    stage = f"{s.config.l0_staging_path}/crashed"
+    os.makedirs(stage)
+    for name in os.listdir(s.config.l0_path):
+        os.rename(f"{s.config.l0_path}/{name}", f"{stage}/{name}")
+    # L0: newer duplicates of L1 keys, and tombstones over L1 and L0 keys
+    s.write([(t, -21, f"l0 {t}") for t in TAGS] + [(t, 41, "new") for t in TAGS], ingest_ts=400)
+    s.write([(t, 0, None) for t in TAGS] + [(t, 41, None) for t in TAGS[:3]], ingest_ts=500)
+    return s
+
+
+def _expected(store, ranges):
+    latest = lww_latest(store.hot()).collect()
+    return sorted(
+        (r.tag, r.ts, r.value)
+        for r in latest
+        if r.tag in ranges
+        and ranges[r.tag][0] <= r.ts <= ranges[r.tag][1]
+        and r.value is not None
+    )
+
+
+def _got(store, ranges):
+    return sorted(tuple(r) for r in store.read_range(ranges).collect())
+
+
+class TestReadRangeDifferential:
+    @pytest.mark.parametrize("tag", TAGS)
+    def test_each_tag_across_partitions(self, layered, tag):
+        ranges = {tag: (-33, 42)}
+        got = _got(layered, ranges)
+        assert got and got == _expected(layered, ranges)
+
+    @pytest.mark.parametrize(
+        "ranges",
+        [
+            {"a:b": (-40, -1), "p/q": (-9, 9), "ü": (15, 100)},
+            {"c%d": (-21, -21), "x=y": (0, 0), "sp ace": (41, 41)},
+            {"a:b": (1000, 2000), "nothing:here": (-50, 50)},
+        ],
+        ids=["mixed", "points-and-tombstones", "empty"],
+    )
+    def test_multi_tag(self, layered, ranges):
+        assert _got(layered, ranges) == _expected(layered, ranges)
+
+    def test_lists_only_the_requested_directories(self, layered):
+        preds = layered._range_file_predicates([("a:b", -33, -1)])
+        dirs = layered._hot_partition_dirs(preds)
+        hot = layered.config.hot_path
+        assert sorted(os.path.relpath(d, hot) for d in dirs) == sorted(
+            f"tag=a%3Ab/part_start={p}" for p in (-40, -30, -20, -10)
+        )
+
+    def test_read_index_and_read_page(self, layered):
+        ranges = {"a:b": (-33, 42), "sp ace": (5, 25)}
+        idx = [tuple(r) for r in layered.read_index(ranges).collect()]
+        hot = layered.hot()
+        want = {}
+        for r in hot.select("tag", "part_start").distinct().collect():
+            if r.tag not in ranges:
+                continue
+            lo, hi = ranges[r.tag]
+            if lo - lo % WIDTH <= r.part_start <= hi:
+                want.setdefault(r.tag, []).append(r.part_start)
+        expected = [
+            (tag, ps, i + 1)
+            for tag in sorted(want)
+            for i, ps in enumerate(sorted(want[tag], reverse=True))
+        ]
+        assert idx == expected
+        page = sorted(
+            tuple(r) for r in layered.read_page("a:b-10", 12, 25).collect()
+        )
+        assert page == sorted(
+            tuple(r)
+            for r in hot.where("tag = 'a:b' AND part_start = 10 AND ts BETWEEN 12 AND 25")
+            .select("tag", "ts", "value", "ingest_ts", "writer_id", "seq")
+            .collect()
+        )
+        assert {r[1] for r in page} == {14}
+
+    def test_sink_log_falls_back_to_hot(self, layered):
+        preds = layered._range_file_predicates([("a:b", 0, 9)])
+        assert layered._hot_partition_dirs(preds)
+        log = f"{layered.config.hot_path}/_spark_metadata"
+        os.makedirs(log)
+        try:
+            assert layered._hot_partition_dirs(preds) is None
+        finally:
+            os.rmdir(log)
+
+
+def test_many_candidate_directories(spark, tmp_path):
+    """More candidate directories than Spark's parallel partition
+    discovery threshold (32), which Spark lists with a job of its own:
+    the per-directory read still matches LWW over the full ``hot()``."""
+    s = _store(spark, tmp_path / "engine")
+    rows = [("t", ts, f"v{ts}") for ts in range(-200, 200, 5)]
+    s.write_df(spark.createDataFrame(rows, "tag string, ts long, value string"))
+    s.write([("t", -200, "new"), ("t", 150, None)])
+    ranges = {"t": (-195, 195)}
+    dirs = s._hot_partition_dirs(s._range_file_predicates([("t", -195, 195)]))
+    assert len(dirs) == 40
+    got = _got(s, ranges)
+    assert len(got) == 78 and got == _expected(s, ranges)
+
+
+def test_read_after_write_starts_no_listing_job(spark, tmp_path):
+    """A 40-tag store (more ``tag=`` directories than the parallel
+    discovery threshold), then a ``write()``: the one-tag read plans
+    with no Spark job, and its collect starts two."""
+    s = _store(spark, tmp_path / "engine")
+    rows = [(f"tag{t:02d}", ts, "v") for t in range(40) for ts in range(0, 40, 3)]
+    s.write_df(spark.createDataFrame(rows, "tag string, ts long, value string"))
+    s.write([(f"tag{t:02d}", 41, "w") for t in range(40)])
+    j0 = _next_job_id(spark)
+    df = s.read_range({"tag07": (10, 45)})
+    j1 = _next_job_id(spark)
+    got = df.collect()
+    j2 = _next_job_id(spark)
+    assert (j1 - j0, j2 - j1) == (0, 2)
+    assert sorted(r.ts for r in got) == [12, 15, 18, 21, 24, 27, 30, 33, 36, 39, 41]
