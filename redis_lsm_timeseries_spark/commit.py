@@ -155,6 +155,41 @@ def _driver_parquet_file(rows: list[tuple], schema, dest: str) -> bool:
     return True
 
 
+def _driver_parquet_append(fs, rows: list[tuple], schema, dir_path: str) -> bool:
+    """Add ``rows`` to ``dir_path`` as one new parquet file written on
+    the driver (``_driver_parquet_file``) and published atomically:
+    the bytes go to a hidden temp name, ``.<name>.inprogress``, which
+    Spark's file listing and the engine's own listings skip, and
+    ``fs.rename`` then gives the file its ``part-<uuid>.snappy.parquet``
+    name. A reader sees the whole file or nothing.
+
+    ``flush_l0`` retires an emptied L0 directory with
+    ``rmdir_if_empty``, which can land between the ``makedirs`` and the
+    write; the write then re-creates the directory and retries. Once
+    the temp file exists the directory is not empty and stays. A write
+    that raises removes its temp file; a crashed one leaves it behind,
+    inert. Returns False, writing nothing, when ``schema`` holds a type
+    the driver writer does not reproduce exactly."""
+    if _driver_writable_fields(schema) is None:
+        return False
+    name = f"part-{uuid.uuid4().hex}.snappy.parquet"
+    tmp = f"{dir_path}/.{name}.inprogress"
+    try:
+        for attempt in range(3):
+            fs.makedirs(dir_path)
+            try:
+                _driver_parquet_file(rows, schema, tmp)
+                break
+            except FileNotFoundError:
+                if attempt == 2:
+                    raise
+        fs.rename(tmp, f"{dir_path}/{name}")
+    except Exception:
+        fs.remove_file(tmp)
+        raise
+    return True
+
+
 class TableCommit:
     """Interface. Subclasses provide the operations above plus the
     read-side resolution (a transactional backend decides WHAT a
@@ -623,19 +658,12 @@ class ParquetLeaseCommit(TableCommit):
         exact-mappable scalar (``_driver_parquet_file``) — the rows
         are bounded protocol metadata already sitting in driver
         memory, and the Spark job the old path paid per append was
-        the purge/ack protocol's single largest fixed cost. Non-scalar
-        schemas (or any driver-write failure) keep the Spark path."""
-        import uuid as _uuid
-
-        try:
-            store.fs.makedirs(path)
-            if _driver_parquet_file(
-                rows, schema,
-                f"{path}/part-{_uuid.uuid4().hex}.snappy.parquet",
-            ):
-                return
-        except Exception:
-            pass  # fall back to the Spark writer below
+        the purge/ack protocol's single largest fixed cost. The file
+        is published by rename (``_driver_parquet_append``), so a
+        reader never sees it half-written, and an I/O error raises.
+        Non-scalar schemas keep the Spark path."""
+        if _driver_parquet_append(store.fs, rows, schema, path):
+            return
         rdd = store.spark.sparkContext.parallelize(rows, 1)
         df = store.spark.createDataFrame(rdd, schema)
         df.write.mode("append").parquet(path)

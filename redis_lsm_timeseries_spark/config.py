@@ -19,6 +19,17 @@ MAX_TAGS_PER_READ = 100
 MAX_TAG_NAME_LENGTH = 200
 MAX_PAGE_NAME_LENGTH = 400
 
+#: Driver-memory bound for a range read answered on the driver
+#: (``TimeseriesStore.read_range``): the most Parquet bytes its
+#: candidate files may total. Not a tuning option. A serve-shaped L0
+#: segment (2,000 rows, 200 tags, short JSON values) measures 40 KB as
+#: snappy Parquet and 141 KB as an Arrow table, 3.5x (serve's small L1
+#: partition files measure 1.0x, their footers dominate); so 16 MiB of
+#: candidates decode to at most about 56 MB of Arrow before the row
+#: filter, and the last-write-wins sort copies no more than that once.
+#: A request over the cap is planned as a Spark job instead.
+MAX_DRIVER_READ_BYTES = 16 << 20
+
 # Reference default partition width: 120,000 ms (index.js:46).
 DEFAULT_PARTITION_WIDTH = 120_000
 

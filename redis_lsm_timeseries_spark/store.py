@@ -25,17 +25,27 @@ Physical layout — a two-level LSM:
   predicate pushed to row-group min/max — strictly better (SURVEY.md
   §4 P9). Bulk loads (``write_df``) land here directly, clustered.
 - L0 ``{root}/{settings-hash}/hot_l0``: flat Parquet segments, ONE
-  file per row-batch ``write()``. The memtable-flush analog of the
-  reference's append-first LSM posture (``recipe:19-20``);
-  ``flush_l0`` (called by ack/compact maintenance) folds segments
-  into L1.
+  file per row-batch ``write()``, written on the driver with pyarrow
+  and published by rename, so a ``write()`` starts no Spark job. The
+  memtable-flush analog of the reference's append-first LSM posture
+  (``recipe:19-20``); ``flush_l0`` (called by ack/compact
+  maintenance) folds segments into L1.
 
 Reads union both tiers. Range reads (``read_range``, ``read_index``,
 ``read_page``) plan over only the requested tags' partition
 directories, listed on the driver (``hot_pruned``), so a ``write()``
-costs the next read no re-listing of L1. Full-table reads (``hot``,
-``read_all``) cache the table handle per store instance (mutators
-invalidate), so repeated full reads skip the file listing.
+costs the next read no re-listing of L1. A directory-mode
+``read_range`` of the hot tier whose candidate files are small
+(``MAX_DRIVER_READ_BYTES``) is answered on the driver with pyarrow and
+starts no Spark job; every other read is a Spark plan. Full-table
+reads (``hot``, ``read_all``) cache the table handle per store
+instance (mutators invalidate), so repeated full reads skip the file
+listing.
+
+Every listing of the hot tier runs in the order rows move between its
+parts — L0, then the uncommitted staging dirs, then L1 — so a
+``flush_l0`` running beside a read cannot move a row out of a part the
+read has yet to list into one it has listed already.
 """
 
 from __future__ import annotations
@@ -46,9 +56,10 @@ import uuid
 from collections.abc import Iterable, Mapping
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from redis_lsm_timeseries_spark.config import (
+    MAX_DRIVER_READ_BYTES,
     MAX_PAGE_NAME_LENGTH,
     MAX_SAMPLES_PER_WRITE,
     MAX_TAG_NAME_LENGTH,
@@ -67,11 +78,32 @@ from redis_lsm_timeseries_spark.errors import (
     TooManyTagsError,
     ValidationError,
 )
-from redis_lsm_timeseries_spark.operators.lww import lww_latest
+from redis_lsm_timeseries_spark.operators.lww import lww_latest, lww_latest_arrow
 from redis_lsm_timeseries_spark.schema import (
     MEMBER_IDENTITY_COLS,
     SAMPLE_SCHEMA,
 )
+
+#: ``read_range``'s result schema, the same on both of its paths (a
+#: Parquet scan reads every column as nullable)
+RANGE_RESULT_SCHEMA = T.StructType(
+    [
+        T.StructField(f.name, f.dataType, True)
+        for f in SAMPLE_SCHEMA.fields
+        if f.name in ("tag", "ts", "value")
+    ]
+)
+
+#: times ``read_range`` re-plans a driver-side read whose listed files
+#: a concurrent flush moved before they were read
+_DRIVER_READ_ATTEMPTS = 5
+
+
+def _visible(names) -> list[str]:
+    """The data entries of a directory listing: Spark and the engine
+    skip ``_``- and ``.``-prefixed names (markers, sidecars, in-flight
+    temp files)."""
+    return sorted(n for n in names if not n.startswith(("_", ".")))
 
 
 @dataclass(frozen=True)
@@ -281,6 +313,12 @@ class TimeseriesStore:
         Appends only — duplicates of existing (tag, ts) keys become new
         members resolved at read time by LWW, exactly the reference's
         LSM posture (``recipe:19-20``).
+
+        The batch (at most ``MAX_SAMPLES_PER_WRITE`` rows) lands as one
+        L0 segment written on the driver with pyarrow, with no Spark
+        job. It is written under a hidden temp name and renamed into
+        place (``commit._driver_parquet_append``), so a reader or a
+        concurrent ``flush_l0`` sees the whole segment or none of it.
         """
         self._require_init()
         rows = self._validate_batch(key_value_pairs)
@@ -306,11 +344,13 @@ class TimeseriesStore:
         # overhead alone (measured; it is why the reference's LSM
         # appends first and sorts later, recipe:19-20). flush_l0/compact
         # fold the segments into the partitioned layout.
-        import pandas as pd
+        from redis_lsm_timeseries_spark.commit import _driver_parquet_append
 
-        pdf = pd.DataFrame(data, columns=[f.name for f in SAMPLE_SCHEMA.fields])
-        df = self.spark.createDataFrame(pdf, SAMPLE_SCHEMA)
-        self._append_l0(df)
+        if not _driver_parquet_append(
+            self.fs, data, SAMPLE_SCHEMA, self.config.l0_path
+        ):
+            raise TypeError("SAMPLE_SCHEMA holds a type the driver writer cannot reproduce")
+        self.invalidate_hot_cache()
         partitions = len({(t, ps) for (t, _, _, _, _, _, ps) in data})
         return WriteMetrics(rows_written=len(data), partitions_touched=partitions)
 
@@ -438,30 +478,6 @@ class TimeseriesStore:
             )
         self.invalidate_hot_cache()
 
-    def _append_l0(self, df: DataFrame) -> None:
-        # coalesce(1): one segment file per batch. Cheap here because the
-        # input is Arrow batches already in the JVM (unlike coalescing
-        # a Python-parallelized DataFrame, see tiering._append_log).
-        (
-            df.coalesce(1).write.mode("append")
-            # No _SUCCESS marker for L0 segments: nothing reads it
-            # (hot() lists segment files; staleness tokens hash the
-            # listing) and flush_l0 deletes it — which RACED a
-            # concurrent write()'s job commit creating it (Hadoop's
-            # committer creates the marker then chmods it; the delete
-            # landing between the two fails the whole write job with
-            # "chmod: cannot access .../_SUCCESS"). Root cause of the
-            # ~1/40 multiwriter lose-nothing flake (r13): the leaseless
-            # write()-vs-maintenance contract was broken not by data
-            # loss but by maintenance failing the writer's commit.
-            .option(
-                "mapreduce.fileoutputcommitter.marksuccessfuljobs",
-                "false",
-            )
-            .parquet(self.config.l0_path)
-        )
-        self.invalidate_hot_cache()
-
     def flush_l0(self) -> bool:
         """Fold the L0 staging segments into the partitioned L1 layout
         (the LSM memtable -> sorted-run flush). Returns True if
@@ -472,12 +488,12 @@ class TimeseriesStore:
         1. every L0 segment is MOVED (atomic local rename) into a fresh
            ``hot_l0_staging/<id>/`` dir — new ``write()`` batches
            landing mid-flush are untouched. Entries starting with ``_``
-           or ``.`` are left in place: ``_temporary`` is a concurrent
-           append's IN-FLIGHT commit (moving it would strand that
-           batch's rows in staging, where ``_fold_staged`` skips
-           hidden names, and then delete them with the staging dir —
-           a silent data loss + failed commit); ``_SUCCESS``/``.crc``
-           are inert markers/sidecars;
+           or ``.`` are left in place: ``.<name>.inprogress`` is a
+           concurrent ``write()``'s IN-FLIGHT segment (moving it would
+           strand that batch's rows in staging, where ``_fold_staged``
+           skips hidden names, and then delete them with the staging
+           dir — a silent data loss + failed write); ``_SUCCESS``/
+           ``.crc`` are inert markers/sidecars of older layouts;
         2. the staged segments are clustered onto their
            (tag, part_start) key (explicit parallelism: AQE would
            coalesce the tiny shuffle into one task and serialize the
@@ -507,9 +523,8 @@ class TimeseriesStore:
             self.fs.is_dir(f"{staging}/{n}")
             for n in self.fs.listdir(staging)
         )
-        pending_l0 = self.fs.exists(self.config.l0_path) and any(
-            not n.startswith(("_", "."))
-            for n in self.fs.listdir(self.config.l0_path)
+        pending_l0 = self.fs.exists(self.config.l0_path) and bool(
+            _visible(self.fs.listdir(self.config.l0_path))
         )
         if not (pending_staging or pending_l0):
             return False
@@ -521,11 +536,7 @@ class TimeseriesStore:
         did = self._recover_staging()
         if not self.fs.exists(self.config.l0_path):
             return did
-        entries = [
-            n
-            for n in self.fs.listdir(self.config.l0_path)
-            if not n.startswith(("_", "."))
-        ]
+        entries = _visible(self.fs.listdir(self.config.l0_path))
         if not entries:
             return did
         stage_dir = f"{self.config.l0_staging_path}/{uuid.uuid4().hex[:12]}"
@@ -541,12 +552,10 @@ class TimeseriesStore:
                 )
         # The _SUCCESS marker (and its sidecar) describe batches that
         # were ALL just moved out — inert now, and they'd block the
-        # rmdir below. New L0 writes no longer create the marker (r13:
-        # deleting it here raced a concurrent write()'s job commit,
-        # which creates-then-chmods it — the captured root cause of
-        # the multiwriter flake), so this removal only tidies legacy
-        # layouts. _temporary (an in-flight append) is never
-        # touched: it keeps the dir alive, as it must.
+        # rmdir below. L0 writes are driver-side and never create the
+        # marker, so this removal only tidies legacy layouts. An
+        # in-flight write's .inprogress temp file is never touched: it
+        # keeps the dir alive, as it must.
         for marker in ("_SUCCESS", "._SUCCESS.crc"):
             if self.fs.exists(f"{self.config.l0_path}/{marker}"):
                 self.fs.remove_file(f"{self.config.l0_path}/{marker}")
@@ -562,9 +571,7 @@ class TimeseriesStore:
         to L1, mark committed, remove. Spark's path filter skips the
         ``_``-prefixed marker and ``.crc`` sidecars, so re-reading a
         staging dir is safe."""
-        segments = [
-            n for n in self.fs.listdir(stage_dir) if not n.startswith(("_", "."))
-        ]
+        segments = _visible(self.fs.listdir(stage_dir))
         if segments:
             staged = self.spark.read.schema(SAMPLE_SCHEMA).parquet(stage_dir)
             # Cluster onto the partition key, but size the shuffle to the
@@ -675,6 +682,8 @@ class TimeseriesStore:
         if self._hot_cache is not None and self._hot_cache[0] == token:
             return self._hot_cache[1]
         field_names = [f.name for f in SAMPLE_SCHEMA.fields]
+        # L0 before L1: see _unflushed_dirs
+        l0_tiers = self._l0_tiers(field_names)
         tiers = []
         if self.commit.tracks_changes(self, self.config.hot_path):
             # Manifest-managed L1 (see EngineConfig.manifest_hot): the
@@ -692,14 +701,12 @@ class TimeseriesStore:
                 .parquet(self.config.hot_path)
                 .select(*field_names)
             )
-        df = self._union_l0(tiers, field_names)
+        df = self._union(tiers + l0_tiers)
         self._hot_cache = (token, df)
         return df
 
-    def _union_l0(self, tiers: list[DataFrame], field_names) -> DataFrame:
-        """``tiers`` (the L1 scan, if any) unioned with the L0 tiers,
-        in that order; a store with neither reads as empty."""
-        tiers = tiers + self._l0_tiers(field_names)
+    def _union(self, tiers: list[DataFrame]) -> DataFrame:
+        """``tiers`` unioned in order; no tiers read as an empty store."""
         if not tiers:
             return self.spark.createDataFrame([], SAMPLE_SCHEMA)
         df = tiers[0]
@@ -707,37 +714,51 @@ class TimeseriesStore:
             df = df.unionByName(t)
         return df
 
-    def _l0_tiers(self, field_names) -> list[DataFrame]:
-        """The unflushed L0 segments plus any UNCOMMITTED staging dirs
+    def _unflushed_dirs(self):
+        """Yield ``(dir, data file names)`` for each directory holding
+        unflushed rows: the L0 root, then every UNCOMMITTED staging dir
         (a flush crashed — or is running — between the L0 move and the
         L1 append; those rows live only in staging, so reads must
-        include them). COMMITTED dirs are already in L1 and excluded
-        (including them would double-read)."""
-        tiers: list[DataFrame] = []
-        if self.fs.exists(self.config.l0_path):
-            tiers.append(
-                self.spark.read.schema(SAMPLE_SCHEMA)
-                .parquet(self.config.l0_path)
-                .select(*field_names)
-            )
-        if self.fs.exists(self.config.l0_staging_path):
-            for name in sorted(self.fs.listdir(self.config.l0_staging_path)):
-                stage_dir = f"{self.config.l0_staging_path}/{name}"
-                if not self.fs.is_dir(stage_dir):
-                    continue
-                if self.fs.exists(f"{stage_dir}/_COMMITTED"):
-                    continue
-                if all(
-                    n.startswith(("_", "."))
-                    for n in self.fs.listdir(stage_dir)
+        include them). COMMITTED dirs are already in L1 and skipped
+        (including them would double-read).
+
+        The order is the order rows move: L0 -> staging -> L1. A reader
+        that takes each directory before the generator lists the next,
+        and lists L1 last, sees every row at least once however a
+        concurrent ``flush_l0`` moves it (a row caught in two places is
+        the same member twice, which LWW collapses). A directory that
+        vanishes before it is listed was emptied into the next one."""
+
+        def candidates():
+            if self.fs.exists(self.config.l0_path):
+                yield self.config.l0_path
+            staging = self.config.l0_staging_path
+            if not self.fs.exists(staging):
+                return
+            for name in sorted(self.fs.listdir(staging)):
+                stage_dir = f"{staging}/{name}"
+                if self.fs.is_dir(stage_dir) and not self.fs.exists(
+                    f"{stage_dir}/_COMMITTED"
                 ):
-                    continue
-                tiers.append(
-                    self.spark.read.schema(SAMPLE_SCHEMA)
-                    .parquet(stage_dir)
-                    .select(*field_names)
-                )
-        return tiers
+                    yield stage_dir
+
+        for d in candidates():
+            try:
+                names = _visible(self.fs.listdir(d))
+            except FileNotFoundError:
+                continue
+            if names:
+                yield d, names
+
+    def _l0_tiers(self, field_names) -> list[DataFrame]:
+        """One scan per ``_unflushed_dirs`` directory, each created —
+        and so listed by Spark — before the next directory is probed."""
+        return [
+            self.spark.read.schema(SAMPLE_SCHEMA)
+            .parquet(d)
+            .select(*field_names)
+            for d, _names in self._unflushed_dirs()
+        ]
 
     def hot_pruned(self, predicates: Mapping | None) -> DataFrame:
         """``hot()`` planned over only what ``predicates`` (same shape
@@ -755,12 +776,13 @@ class TimeseriesStore:
           L1 directory it does not need. A sink-managed L1
           (``_spark_metadata``) reads the full, cached ``hot()``.
 
-        The L0 tiers are unioned as in ``hot()`` (``_union_l0``).
-        Not cached — the pruned plan is query-specific."""
+        The L0 tiers are listed first and unioned after L1, as in
+        ``hot()``. Not cached — the pruned plan is query-specific."""
         self._require_init()
         if not predicates:
             return self.hot()
         field_names = [f.name for f in SAMPLE_SCHEMA.fields]
+        l0_tiers = self._l0_tiers(field_names)
         tiers = []
         if self.commit.tracks_changes(self, self.config.hot_path):
             tiers.append(
@@ -780,7 +802,7 @@ class TimeseriesStore:
                     .parquet(*dirs)
                     .select(*field_names)
                 )
-        return self._union_l0(tiers, field_names)
+        return self._union(tiers + l0_tiers)
 
     def _hot_partition_dirs(self, predicates: Mapping) -> list[str] | None:
         """The directory-mode L1 partition directories ``predicates``
@@ -929,9 +951,23 @@ class TimeseriesStore:
         them (``recipe:22-23``). We define value ``NULL`` as a tombstone:
         it participates in LWW (a newer NULL beats an older value) and is
         filtered from results unless ``with_tombstones``.
+
+        A small hot-only read in directory mode — no ``include_cold``,
+        no streaming sink log, candidate files totalling at most
+        ``MAX_DRIVER_READ_BYTES`` — is computed on the driver instead
+        (``_read_range_on_driver``) and returned as a local relation,
+        whose ``collect()`` starts no Spark job. Both paths return the
+        same rows under the same schema (``RANGE_RESULT_SCHEMA``). A
+        driver-path result is a snapshot taken at call time; the Spark
+        path freezes its file list at plan time, also inside this
+        call.
         """
         self._require_init()
         parsed = self._validate_ranges(ranges)
+        if not include_cold:
+            out = self._read_range_on_driver(parsed, with_tombstones)
+            if out is not None:
+                return out
         pred = self._prune_predicate(parsed)
         residual = self._residual_predicate(parsed)
 
@@ -946,6 +982,95 @@ class TimeseriesStore:
         if not with_tombstones:
             out = out.where(F.col("value").isNotNull())
         return out.select("tag", "ts", "value")
+
+    def _read_range_on_driver(
+        self, parsed: list[tuple], with_tombstones: bool
+    ) -> DataFrame | None:
+        """``read_range`` of the hot tier computed with pyarrow, or None
+        when the request needs the Spark plan: a manifest-managed or
+        sink-managed L1, or candidate files over
+        ``MAX_DRIVER_READ_BYTES``.
+
+        The candidates are listed in row-movement order (L0, staging,
+        then the requested L1 partition directories; see
+        ``_unflushed_dirs``), read with the ``tag``/``ts``/``part_start``
+        predicate pushed down — L1 files take ``tag`` and
+        ``part_start`` from their directory names — then merged by
+        ``lww_latest_arrow``. A listed file that a concurrent flush has
+        moved by the time it is read re-plans the read; any other read
+        error (a corrupt file) raises."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+        from pyarrow import fs as pafs
+
+        from redis_lsm_timeseries_spark.commit import (
+            ManifestCommit,
+            _driver_writable_fields,
+        )
+
+        if self.commit.tracks_changes(self, self.config.hot_path):
+            return None
+        w = self.config.partition_width
+        predicate = ds.scalar(False)
+        for tag, start, end in parsed:
+            predicate = predicate | (
+                (ds.field("tag") == tag)
+                & (ds.field("ts") >= start)
+                & (ds.field("ts") <= end)
+                & (ds.field("part_start") >= start - (start % w))
+                & (ds.field("part_start") <= end)
+            )
+        schema = pa.schema(
+            [(name, getattr(pa, t)()) for name, t in _driver_writable_fields(SAMPLE_SCHEMA)]
+        )
+        local = pafs.LocalFileSystem()
+        file_predicates = self._range_file_predicates(parsed)
+        for _ in range(_DRIVER_READ_ATTEMPTS):
+            files, partitions = [], []
+            for d, names in self._unflushed_dirs():
+                files += [f"{d}/{n}" for n in names]
+                partitions += [ds.scalar(True)] * len(names)
+            dirs = self._hot_partition_dirs(file_predicates)
+            if dirs is None:
+                return None
+            try:
+                for d in dirs:
+                    tag_dir, part_dir = d.rsplit("/", 2)[1:]
+                    tag = ManifestCommit._unescape_partition(tag_dir.partition("=")[2])
+                    part_start = int(part_dir.partition("=")[2])
+                    known = (ds.field("tag") == tag) & (ds.field("part_start") == part_start)
+                    names = _visible(self.fs.listdir(d))
+                    files += [f"{d}/{n}" for n in names]
+                    partitions += [known] * len(names)
+            except FileNotFoundError:
+                continue  # a partition directory was dropped: re-plan
+            infos = local.get_file_info(files)
+            if any(i.type == pafs.FileType.NotFound for i in infos):
+                continue  # a flush moved a listed file: re-plan
+            if sum(i.size for i in infos) > MAX_DRIVER_READ_BYTES:
+                return None
+            dataset = ds.FileSystemDataset.from_paths(
+                files, schema=schema, format=ds.ParquetFileFormat(),
+                filesystem=local, partitions=partitions,
+            )
+            try:
+                table = dataset.to_table(filter=predicate)
+            except (OSError, pa.ArrowException):
+                if all(
+                    i.type == pafs.FileType.File for i in local.get_file_info(files)
+                ):
+                    raise
+                continue  # a flush moved a listed file before it was read
+            break
+        else:
+            return None  # files kept moving under the read: plan it in Spark
+        out = lww_latest_arrow(table)
+        if not with_tombstones:
+            out = out.filter(out["value"].is_valid())
+        return self.spark.createDataFrame(
+            out.select([f.name for f in RANGE_RESULT_SCHEMA.fields]),
+            RANGE_RESULT_SCHEMA,
+        )
 
     def read_all(
         self,

@@ -60,7 +60,7 @@ def _install(spark):
 
     for name in (
         "write_df", "write", "flush_l0", "_fold_staged", "initialize",
-        "_recover_staging", "_append_hot", "_append_l0",
+        "_recover_staging", "_append_hot",
     ):
         wrap(S.TimeseriesStore, name, f"store.{name}")
     for name in (

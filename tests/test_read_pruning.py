@@ -1,18 +1,23 @@
 """Directory-mode range reads plan over only the requested partition
-directories (``TimeseriesStore.hot_pruned``). Differential against
-last-write-wins over the full ``hot()``, a pin of Spark's partition
-path escaping, and a job-count pin for the read after a ``write()``."""
+directories (``TimeseriesStore.hot_pruned``), and small ones are
+answered on the driver (``_read_range_on_driver``). Differential of
+both read paths against last-write-wins over the full ``hot()``, a pin
+of Spark's partition path escaping, and a job-count pin for the read
+after a ``write()``."""
 
 from __future__ import annotations
 
 import os
+from unittest import mock
 
+import pyarrow as pa
 import pytest
 
+from redis_lsm_timeseries_spark import store as store_module
 from redis_lsm_timeseries_spark.commit import ManifestCommit
 from redis_lsm_timeseries_spark.config import EngineConfig
 from redis_lsm_timeseries_spark.operators.lww import lww_latest
-from redis_lsm_timeseries_spark.store import TimeseriesStore
+from redis_lsm_timeseries_spark.store import RANGE_RESULT_SCHEMA, TimeseriesStore
 
 WIDTH = 10
 #: tags whose hive directory names need escaping, or hold a glob
@@ -22,6 +27,10 @@ TAGS = ["a:b", "c%d", "x=y", "p/q", "sp ace", "ü", "a}b", "plain"]
 
 def _next_job_id(spark) -> int:
     return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def _store(spark, root) -> TimeseriesStore:
@@ -58,7 +67,9 @@ class TestPartitionEscaping:
 def layered(spark, tmp_path_factory):
     """Rows in L1 (bulk load and a flushed write), in L0, and in an
     uncommitted staging dir; duplicate keys split across the tiers,
-    tombstones, negative ``ts``."""
+    tombstones, negative ``ts``, and duplicate keys of tag ``tie``
+    whose ``(ingest_ts, writer_id, seq)`` are equal, so the value
+    decides (a tombstone lowest)."""
     s = _store(spark, tmp_path_factory.mktemp("pruning") / "engine")
     base = [(t, ts, f"{t}@{ts}") for t in TAGS for ts in range(-35, 36, 7)]
     s.write_df(
@@ -67,7 +78,12 @@ def layered(spark, tmp_path_factory):
     )
     # flushed into L1: overwrites one key per tag and adds new ones
     s.write([(t, ts, f"flushed {t}@{ts}") for t in TAGS for ts in (-35, 40)], ingest_ts=200)
+    writer_id, s.writer_id = s.writer_id, "tie"
+    s.write([("tie", 1, "b"), ("tie", 2, "a"), ("tie", 3, None), ("tie", 4, "a")], ingest_ts=600)
     s.flush_l0()
+    # in L0 below: the same (ingest_ts, writer_id, seq) per key
+    s.write([("tie", 1, "a"), ("tie", 2, None), ("tie", 3, "a"), ("tie", 4, "a")], ingest_ts=600)
+    s.writer_id = writer_id
     # uncommitted staging: a flush that crashed after its L0 move
     s.write([(t, -28, f"staged {t}") for t in TAGS], ingest_ts=300)
     stage = f"{s.config.l0_staging_path}/crashed"
@@ -80,19 +96,30 @@ def layered(spark, tmp_path_factory):
     return s
 
 
-def _expected(store, ranges):
+def _expected(store, ranges, with_tombstones=False):
     latest = lww_latest(store.hot()).collect()
     return sorted(
         (r.tag, r.ts, r.value)
         for r in latest
         if r.tag in ranges
         and ranges[r.tag][0] <= r.ts <= ranges[r.tag][1]
-        and r.value is not None
+        and (with_tombstones or r.value is not None)
     )
 
 
-def _got(store, ranges):
-    return sorted(tuple(r) for r in store.read_range(ranges).collect())
+def _got(store, ranges, with_tombstones=False):
+    """``read_range``'s rows, read on the driver and again with the cap
+    at 0, which forces the Spark plan; both must agree, rows and
+    schema."""
+    driver = store.read_range(ranges, with_tombstones=with_tombstones)
+    with mock.patch.object(store_module, "MAX_DRIVER_READ_BYTES", 0):
+        spark_df = store.read_range(ranges, with_tombstones=with_tombstones)
+    assert "LocalTableScan" in _plan(driver)
+    assert "FileScan parquet" in _plan(spark_df)
+    assert driver.schema == spark_df.schema == RANGE_RESULT_SCHEMA
+    got = sorted(tuple(r) for r in driver.collect())
+    assert got == sorted(tuple(r) for r in spark_df.collect())
+    return got
 
 
 class TestReadRangeDifferential:
@@ -108,11 +135,26 @@ class TestReadRangeDifferential:
             {"a:b": (-40, -1), "p/q": (-9, 9), "ü": (15, 100)},
             {"c%d": (-21, -21), "x=y": (0, 0), "sp ace": (41, 41)},
             {"a:b": (1000, 2000), "nothing:here": (-50, 50)},
+            {t: (-40, 45) for t in [*TAGS, "tie"]},
         ],
-        ids=["mixed", "points-and-tombstones", "empty"],
+        ids=["mixed", "points-and-tombstones", "empty", "every-tag"],
     )
     def test_multi_tag(self, layered, ranges):
         assert _got(layered, ranges) == _expected(layered, ranges)
+
+    @pytest.mark.parametrize("with_tombstones", [False, True])
+    def test_equal_lww_order_ties(self, layered, with_tombstones):
+        ranges = {"tie": (0, 10)}
+        got = _got(layered, ranges, with_tombstones)
+        assert got == _expected(layered, ranges, with_tombstones)
+        assert got == [("tie", 1, "b"), ("tie", 2, "a"), ("tie", 3, "a"), ("tie", 4, "a")]
+
+    def test_with_tombstones(self, layered):
+        ranges = {"a:b": (-40, 45), "plain": (-5, 45), "x=y": (30, 45)}
+        got = _got(layered, ranges, with_tombstones=True)
+        assert got == _expected(layered, ranges, with_tombstones=True)
+        assert ("a:b", 0, None) in got and ("a:b", 41, None) in got
+        assert ("plain", 41, "new") in got
 
     def test_lists_only_the_requested_directories(self, layered):
         preds = layered._range_file_predicates([("a:b", -33, -1)])
@@ -178,8 +220,9 @@ def test_many_candidate_directories(spark, tmp_path):
 
 def test_read_after_write_starts_no_listing_job(spark, tmp_path):
     """A 40-tag store (more ``tag=`` directories than the parallel
-    discovery threshold), then a ``write()``: the one-tag read plans
-    with no Spark job, and its collect starts two."""
+    discovery threshold), then a ``write()``: the one-tag read is
+    answered on the driver, a local relation whose plan and collect
+    start no Spark job."""
     s = _store(spark, tmp_path / "engine")
     rows = [(f"tag{t:02d}", ts, "v") for t in range(40) for ts in range(0, 40, 3)]
     s.write_df(spark.createDataFrame(rows, "tag string, ts long, value string"))
@@ -189,5 +232,17 @@ def test_read_after_write_starts_no_listing_job(spark, tmp_path):
     j1 = _next_job_id(spark)
     got = df.collect()
     j2 = _next_job_id(spark)
-    assert (j1 - j0, j2 - j1) == (0, 2)
+    assert (j1 - j0, j2 - j1) == (0, 0)
+    assert _plan(df).startswith("LocalTableScan")
     assert sorted(r.ts for r in got) == [12, 15, 18, 21, 24, 27, 30, 33, 36, 39, 41]
+
+
+def test_corrupt_candidate_file_raises(spark, tmp_path):
+    """A candidate file that is not Parquet fails the driver read
+    itself; the request is not handed to the Spark path."""
+    s = _store(spark, tmp_path / "engine")
+    s.write([("t", 1, "v")])
+    with open(f"{s.config.l0_path}/part-corrupt.snappy.parquet", "wb") as fh:
+        fh.write(b"not parquet" * 10)
+    with pytest.raises(pa.ArrowInvalid):
+        s.read_range({"t": (0, 9)})

@@ -15,6 +15,7 @@ from redis_lsm_timeseries_spark.errors import (
     TooManyTagsError,
     ValidationError,
 )
+from redis_lsm_timeseries_spark import store as store_module
 from redis_lsm_timeseries_spark.store import TimeseriesStore
 
 GAP_SERIAL = [
@@ -268,13 +269,16 @@ class TestPhysicalLayout:
             (t, ts): v for t, ts, v in GAP_SERIAL
         }
 
-    def test_read_range_partition_prunes_the_scan(self, store):
+    def test_read_range_partition_prunes_the_scan(self, store, monkeypatch):
         """The 100 TB property of the composed read: tag and part_start
         are DIRECTORY columns in L1, so a narrow range read must plan
         as PartitionFilters (directory pruning — untouched partitions
         are never listed, let alone scanned) plus a PushedFilters ts
         residual inside the surviving files. A filter that only runs
-        post-scan would read the whole store per point query."""
+        post-scan would read the whole store per point query. A read
+        this small is answered on the driver; a zero cap forces the
+        Spark plan that every read over the cap relies on."""
+        monkeypatch.setattr(store_module, "MAX_DRIVER_READ_BYTES", 0)
         store.write(GAP_SERIAL)
         store.flush_l0()  # all rows in the partitioned L1 layout
         df = store.read_range({"GapTag": (10, 12)})
