@@ -125,60 +125,74 @@ def _driver_writable_fields(schema) -> list[tuple[str, str]] | None:
         return None
 
 
-def _driver_parquet_file(rows: list[tuple], schema, dest: str) -> bool:
-    """Write a BOUNDED protocol-metadata row batch as one parquet file
-    from the driver — no Spark job. The append-only protocol tables
-    (purge log: <= K marks / <= max_ids acks per call) pay one whole
-    Spark job per append under the createDataFrame path, pure fixed
-    cost at any scale; real table formats write commit metadata
-    driver-side for exactly this reason (Delta's JSON actions). Returns
-    False (caller falls back to the Spark write) when the schema
-    carries any type outside the exact-scalar map — datum fidelity is
-    the contract, so anything nontrivial keeps the old path.
-
-    Parquet shape matches the Spark writer where it matters for reads:
-    snappy compression, optional (nullable) fields — Spark writes all
-    fields optional regardless of declared nullability."""
+def _driver_arrow_schema(schema):
+    """``schema`` as a pyarrow schema, or None when it holds a type the
+    driver writer does not reproduce exactly (``_driver_writable_fields``)."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     fields = _driver_writable_fields(schema)
     if fields is None:
-        return False
-    pa_fields = [(name, getattr(pa, t)()) for name, t in fields]
-    cols = list(zip(*rows)) if rows else [[] for _ in pa_fields]
-    table = pa.Table.from_arrays(
-        [pa.array(list(c), type=t) for c, (_, t) in zip(cols, pa_fields)],
-        schema=pa.schema(pa_fields),
+        return None
+    return pa.schema([(name, getattr(pa, t)()) for name, t in fields])
+
+
+def _driver_arrow_table(rows: list[tuple], schema):
+    """A BOUNDED row batch as an Arrow table, for a parquet write from
+    the driver — no Spark job. The append-only protocol tables (purge
+    log: <= K marks / <= max_ids acks per call) pay one whole Spark job
+    per append under the createDataFrame path, pure fixed cost at any
+    scale; real table formats write commit metadata driver-side for
+    exactly this reason (Delta's JSON actions). Returns None (caller
+    falls back to the Spark write) when the schema carries any type
+    outside the exact-scalar map — datum fidelity is the contract, so
+    anything nontrivial keeps the old path."""
+    import pyarrow as pa
+
+    pa_schema = _driver_arrow_schema(schema)
+    if pa_schema is None:
+        return None
+    cols = list(zip(*rows)) if rows else [[] for _ in pa_schema]
+    return pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, pa_schema)],
+        schema=pa_schema,
     )
-    pq.write_table(table, dest, compression="snappy")
-    return True
 
 
-def _driver_parquet_append(fs, rows: list[tuple], schema, dir_path: str) -> bool:
-    """Add ``rows`` to ``dir_path`` as one new parquet file written on
-    the driver (``_driver_parquet_file``) and published atomically:
-    the bytes go to a hidden temp name, ``.<name>.inprogress``, which
-    Spark's file listing and the engine's own listings skip, and
-    ``fs.rename`` then gives the file its ``part-<uuid>.snappy.parquet``
-    name. A reader sees the whole file or nothing.
+def _driver_parquet_file(table, dest: str) -> None:
+    """Write an Arrow table as one parquet file. Its shape matches the
+    Spark writer where it matters for reads: snappy compression,
+    optional (nullable) fields — Spark writes all fields optional
+    regardless of declared nullability. The footer carries no
+    ``ARROW:schema`` copy: every column is a scalar whose Parquet type
+    reads back as itself, and on a flush's small per-partition files
+    that copy made them about 16% larger than Spark's."""
+    import pyarrow.parquet as pq
+
+    pq.write_table(table, dest, compression="snappy", store_schema=False)
+
+
+def _driver_parquet_append(fs, table, dir_path: str) -> None:
+    """Add the Arrow ``table`` to ``dir_path`` as one new parquet file
+    written on the driver (``_driver_parquet_file``) and published
+    atomically: the bytes go to a hidden temp name,
+    ``.<name>.inprogress``, which Spark's file listing and the engine's
+    own listings skip, and ``fs.rename`` then gives the file its
+    ``part-<uuid>.snappy.parquet`` name. A reader sees the whole file
+    or nothing.
 
     ``flush_l0`` retires an emptied L0 directory with
     ``rmdir_if_empty``, which can land between the ``makedirs`` and the
     write; the write then re-creates the directory and retries. Once
     the temp file exists the directory is not empty and stays. A write
     that raises removes its temp file; a crashed one leaves it behind,
-    inert. Returns False, writing nothing, when ``schema`` holds a type
-    the driver writer does not reproduce exactly."""
-    if _driver_writable_fields(schema) is None:
-        return False
+    inert."""
     name = f"part-{uuid.uuid4().hex}.snappy.parquet"
     tmp = f"{dir_path}/.{name}.inprogress"
     try:
         for attempt in range(3):
             fs.makedirs(dir_path)
             try:
-                _driver_parquet_file(rows, schema, tmp)
+                _driver_parquet_file(table, tmp)
                 break
             except FileNotFoundError:
                 if attempt == 2:
@@ -187,7 +201,6 @@ def _driver_parquet_append(fs, rows: list[tuple], schema, dir_path: str) -> bool
     except Exception:
         fs.remove_file(tmp)
         raise
-    return True
 
 
 class TableCommit:
@@ -655,14 +668,16 @@ class ParquetLeaseCommit(TableCommit):
         measured 4.5 s per append). One input slice = one task.
 
         r18: the file is written DRIVER-SIDE when every column is an
-        exact-mappable scalar (``_driver_parquet_file``) — the rows
+        exact-mappable scalar (``_driver_arrow_table``) — the rows
         are bounded protocol metadata already sitting in driver
         memory, and the Spark job the old path paid per append was
         the purge/ack protocol's single largest fixed cost. The file
         is published by rename (``_driver_parquet_append``), so a
         reader never sees it half-written, and an I/O error raises.
         Non-scalar schemas keep the Spark path."""
-        if _driver_parquet_append(store.fs, rows, schema, path):
+        table = _driver_arrow_table(rows, schema)
+        if table is not None:
+            _driver_parquet_append(store.fs, table, path)
             return
         rdd = store.spark.sparkContext.parallelize(rows, 1)
         df = store.spark.createDataFrame(rdd, schema)
@@ -1990,17 +2005,15 @@ class ManifestCommit(ParquetLeaseCommit):
         if target is None:
             return super().append_rows(store, rows, schema, path)
         root, member = target
-        all_scalar = _driver_writable_fields(schema) is not None
-        if all_scalar and not self.schema_meta(store, path):
+        table = _driver_arrow_table(rows, schema)
+        if table is not None and not self.schema_meta(store, path):
             # unmapped member + exact-scalar schema: stage the bounded
             # protocol-metadata batch DRIVER-SIDE (r18 — see the
             # directory backend's append_rows); the staged file goes
             # through the same constraint gate and stats derivation
             def driver_write(tmp):
                 store.fs.makedirs(tmp)
-                _driver_parquet_file(
-                    rows, schema, f"{tmp}/part-00000.snappy.parquet"
-                )
+                _driver_parquet_file(table, f"{tmp}/part-00000.snappy.parquet")
 
             files = self._stage_data(store, root, member, driver_write)
             mutate = lambda t: {**t, member: t.get(member, []) + files}  # noqa: E731

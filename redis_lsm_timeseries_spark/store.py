@@ -29,7 +29,10 @@ Physical layout — a two-level LSM:
   and published by rename, so a ``write()`` starts no Spark job. The
   memtable-flush analog of the reference's append-first LSM posture
   (``recipe:19-20``); ``flush_l0`` (called by ack/compact
-  maintenance) folds segments into L1.
+  maintenance) folds segments into L1. In directory mode the fold
+  also runs on the driver with pyarrow — one file per
+  ``(tag, part_start)`` per flush, no Spark job; a manifest-managed
+  L1 is folded by a Spark write that commits to its log.
 
 Reads union both tiers. Range reads (``read_range``, ``read_index``,
 ``read_page``) plan over only the requested tags' partition
@@ -163,9 +166,10 @@ class TimeseriesStore:
         # the cache self-validates against a layout mtime token (hot
         # root, its _spark_metadata streaming-commit dir, L0 root), so
         # any Spark writer — including an external streaming sink on
-        # hot_path — is picked up on the next read. Residual caveat: a
-        # non-Spark tool dropping a bare file into an EXISTING partition
-        # subdirectory bumps none of the watched mtimes; call
+        # hot_path — is picked up on the next read, as is another store
+        # instance's flush_l0 (it replaces hot/_SUCCESS). Residual
+        # caveat: any other tool dropping a bare file into an EXISTING
+        # partition subdirectory bumps none of the watched mtimes; call
         # invalidate_hot_cache() after such writes.
         self._hot_cache: tuple[tuple, DataFrame] | None = None
         # In-process lease primitives, created EAGERLY so the first
@@ -241,8 +245,10 @@ class TimeseriesStore:
         Appends into an EXISTING partition subdirectory change neither
         the root mtime nor its listing; those are caught by the
         _SUCCESS marker's (mtime, inode) — FileOutputCommitter recreates
-        it on every batch job, so the inode changes even when mtime
-        granularity doesn't. CAVEAT: committers configured with
+        it on every batch job, and ``flush_l0``'s driver-side fold
+        replaces it by rename after every fold, so the inode changes
+        even when mtime granularity doesn't. CAVEAT: committers
+        configured with
         ``mapreduce.fileoutputcommitter.marksuccessfuljobs=false``
         never rewrite _SUCCESS; external batch appends into existing
         partition dirs then go undetected — call
@@ -344,12 +350,14 @@ class TimeseriesStore:
         # overhead alone (measured; it is why the reference's LSM
         # appends first and sorts later, recipe:19-20). flush_l0/compact
         # fold the segments into the partitioned layout.
-        from redis_lsm_timeseries_spark.commit import _driver_parquet_append
+        from redis_lsm_timeseries_spark.commit import (
+            _driver_arrow_table,
+            _driver_parquet_append,
+        )
 
-        if not _driver_parquet_append(
-            self.fs, data, SAMPLE_SCHEMA, self.config.l0_path
-        ):
-            raise TypeError("SAMPLE_SCHEMA holds a type the driver writer cannot reproduce")
+        _driver_parquet_append(
+            self.fs, _driver_arrow_table(data, SAMPLE_SCHEMA), self.config.l0_path
+        )
         self.invalidate_hot_cache()
         partitions = len({(t, ps) for (t, _, _, _, _, _, ps) in data})
         return WriteMetrics(rows_written=len(data), partitions_touched=partitions)
@@ -494,10 +502,14 @@ class TimeseriesStore:
            skips hidden names, and then delete them with the staging
            dir — a silent data loss + failed write); ``_SUCCESS``/
            ``.crc`` are inert markers/sidecars of older layouts;
-        2. the staged segments are clustered onto their
-           (tag, part_start) key (explicit parallelism: AQE would
-           coalesce the tiny shuffle into one task and serialize the
-           directory writes) and appended to L1;
+        2. the staged segments are appended to L1. In directory mode
+           this runs on the driver (``_fold_on_driver``): the segments
+           are read with pyarrow in chunks of at most
+           ``MAX_DRIVER_READ_BYTES``, sorted by (tag, part_start, ts),
+           and each (tag, part_start) run is published by rename as
+           one file in its partition directory, so the flush starts no
+           Spark job. A manifest-managed L1 takes a Spark write
+           clustered onto (tag, part_start) and committed to its log;
         3. a ``_COMMITTED`` marker is written in the staging dir, then
            the dir is removed.
 
@@ -568,11 +580,18 @@ class TimeseriesStore:
 
     def _fold_staged(self, stage_dir: str) -> None:
         """Phase 2+3 of ``flush_l0``: append one staging dir's segments
-        to L1, mark committed, remove. Spark's path filter skips the
-        ``_``-prefixed marker and ``.crc`` sidecars, so re-reading a
-        staging dir is safe."""
+        to L1, mark committed, remove. Every reader skips the
+        ``_``-prefixed marker and ``.``-prefixed temp files and
+        sidecars, so re-reading a staging dir is safe.
+
+        A directory-mode L1 is appended on the driver
+        (``_fold_on_driver``). A manifest-managed L1 needs its commit
+        log entry, so its fold stays a Spark write through
+        ``commit.append_partitioned``."""
         segments = _visible(self.fs.listdir(stage_dir))
-        if segments:
+        if segments and not self._hot_is_manifest():
+            self._fold_on_driver(stage_dir, segments)
+        elif segments:
             staged = self.spark.read.schema(SAMPLE_SCHEMA).parquet(stage_dir)
             # Cluster onto the partition key, but size the shuffle to the
             # input: each segment is one <=2,000-row write() batch, so a
@@ -594,6 +613,65 @@ class TimeseriesStore:
         self.fs.write_text(f"{stage_dir}/_COMMITTED", "")
         self.fs.remove_tree(stage_dir)
         self.invalidate_hot_cache()
+
+    def _fold_on_driver(self, stage_dir: str, segments: list[str]) -> None:
+        """Append staged L0 segments to the directory-mode L1 with
+        pyarrow, starting no Spark job. The segments are read in chunks
+        of at most ``MAX_DRIVER_READ_BYTES`` Parquet bytes (one segment
+        over the cap is a chunk of its own), each chunk sorted by
+        ``(tag, part_start, ts)``, and each ``(tag, part_start)`` run
+        written as one file of the non-partition columns into its hive
+        directory, named with Spark's escaping. Files are published by
+        rename (``commit._driver_parquet_append``).
+
+        Then ``_SUCCESS`` at the L1 root is replaced by a new file:
+        ``_layout_token`` watches its inode to see appends into
+        partition directories that already existed."""
+        import itertools
+
+        import pyarrow.dataset as ds
+        from pyarrow import fs as pafs
+
+        from redis_lsm_timeseries_spark.commit import (
+            ManifestCommit,
+            _driver_arrow_schema,
+            _driver_parquet_append,
+        )
+
+        hot = self.config.hot_path
+        schema = _driver_arrow_schema(SAMPLE_SCHEMA)
+        data_cols = [n for n in schema.names if n not in PARTITION_COLS]
+        local = pafs.LocalFileSystem()
+        paths = [f"{stage_dir}/{n}" for n in segments]
+        chunks, size = [[]], 0
+        for info in local.get_file_info(paths):
+            if chunks[-1] and size + info.size > MAX_DRIVER_READ_BYTES:
+                chunks.append([])
+                size = 0
+            chunks[-1].append(info.path)
+            size += info.size
+        folded = 0
+        for chunk in chunks:
+            table = (
+                ds.dataset(chunk, schema=schema, format="parquet", filesystem=local)
+                .to_table()
+                .sort_by([("tag", "ascending"), ("part_start", "ascending"), ("ts", "ascending")])
+            )
+            keys = zip(table["tag"].to_pylist(), table["part_start"].to_pylist())
+            offset = 0
+            for (tag, part_start), run in itertools.groupby(keys):
+                n = sum(1 for _ in run)
+                _driver_parquet_append(
+                    self.fs,
+                    table.slice(offset, n).select(data_cols),
+                    f"{hot}/tag={ManifestCommit._escape_partition_value(tag)}"
+                    f"/part_start={part_start}",
+                )
+                offset += n
+            folded += offset
+        if folded:
+            self.fs.write_text(f"{hot}/._SUCCESS.inprogress", "")
+            self.fs.rename(f"{hot}/._SUCCESS.inprogress", f"{hot}/_SUCCESS")
 
     def _recover_staging(self) -> bool:
         """Fold or garbage-collect staging dirs a crashed flush left
@@ -1005,7 +1083,7 @@ class TimeseriesStore:
 
         from redis_lsm_timeseries_spark.commit import (
             ManifestCommit,
-            _driver_writable_fields,
+            _driver_arrow_schema,
         )
 
         if self.commit.tracks_changes(self, self.config.hot_path):
@@ -1020,9 +1098,7 @@ class TimeseriesStore:
                 & (ds.field("part_start") >= start - (start % w))
                 & (ds.field("part_start") <= end)
             )
-        schema = pa.schema(
-            [(name, getattr(pa, t)()) for name, t in _driver_writable_fields(SAMPLE_SCHEMA)]
-        )
+        schema = _driver_arrow_schema(SAMPLE_SCHEMA)
         local = pafs.LocalFileSystem()
         file_predicates = self._range_file_predicates(parsed)
         for _ in range(_DRIVER_READ_ATTEMPTS):

@@ -59,8 +59,8 @@ def _install(spark):
     from redis_lsm_timeseries_spark.operators import merge as M
 
     for name in (
-        "write_df", "write", "flush_l0", "_fold_staged", "initialize",
-        "_recover_staging", "_append_hot",
+        "write_df", "write", "flush_l0", "_fold_staged", "_fold_on_driver",
+        "initialize", "_recover_staging", "_append_hot",
     ):
         wrap(S.TimeseriesStore, name, f"store.{name}")
     for name in (

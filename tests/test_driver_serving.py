@@ -1,6 +1,8 @@
 """The driver-side serving path: ``write()`` lands its L0 segment with
-pyarrow, published by rename, and a range read that overlaps a
-concurrent ``flush_l0`` still sees every row, on both read paths."""
+pyarrow, published by rename; ``flush_l0`` folds L0 into L1 with
+pyarrow too; and a range read that overlaps a concurrent ``flush_l0``,
+or follows one that crashed at any point, still sees every row, on
+both read paths."""
 
 from __future__ import annotations
 
@@ -32,6 +34,10 @@ def _rows(df) -> list[tuple]:
     return sorted(tuple(r) for r in df.collect())
 
 
+def _members(df) -> set[tuple]:
+    return {tuple(r) for r in df.collect()}
+
+
 class _Crash(BaseException):
     """A process dying mid-call: no ``except Exception`` cleanup runs."""
 
@@ -61,6 +67,44 @@ class _RmdirAfterMakedirs(StorageFilesystem):
         if path == self.path:
             self.path = None
             self.rmdir_if_empty(path)
+
+
+#: the ``StorageFilesystem`` calls that change storage
+_MUTATING = ("makedirs", "rename", "write_text", "remove_file", "remove_tree", "rmdir_if_empty")
+
+
+class _CrashAtCall(StorageFilesystem):
+    """Records every mutating call; from the ``crash_at``-th on (1-based,
+    0 = never), each raises ``_Crash``: the process died, so nothing
+    after that point lands, its own cleanup included."""
+
+    def __init__(self, crash_at=0):
+        self.crash_at = crash_at
+        self.ops = []
+
+    def _call(self, op, *args):
+        self.ops.append(op)
+        if self.crash_at and len(self.ops) >= self.crash_at:
+            raise _Crash(f"{op}{args}")
+        return getattr(super(), op)(*args)
+
+    def makedirs(self, path):
+        self._call("makedirs", path)
+
+    def rename(self, src, dst):
+        self._call("rename", src, dst)
+
+    def write_text(self, path, text):
+        self._call("write_text", path, text)
+
+    def remove_file(self, path):
+        self._call("remove_file", path)
+
+    def remove_tree(self, path):
+        self._call("remove_tree", path)
+
+    def rmdir_if_empty(self, path):
+        return self._call("rmdir_if_empty", path)
 
 
 class _FlushWhenProbed(StorageFilesystem):
@@ -165,3 +209,87 @@ def test_driver_read_replans_when_a_listed_segment_moves(spark, tmp_path):
     assert fs.flusher is None
     assert "LocalTableScan" in _plan(df)
     assert _rows(df) == [("t", 5, "old"), ("t", 15, "a"), ("t", 25, "b")]
+
+
+def test_flush_starts_no_job_and_folds_in_chunks(spark, tmp_path, monkeypatch):
+    """A directory-mode flush runs on the driver. With the read cap
+    small enough that every segment is a chunk of its own, it writes
+    one file per chunk into a partition directory, and reads back the
+    same members and rows as a one-chunk flush."""
+    batches = [
+        [("a", 1, f"v{k}"), ("a", 12, f"w{k}"), ("b:c", 3 + k, None if k == 1 else "x")]
+        for k in range(3)
+    ]
+
+    def flushed(root, cap):
+        s = _store(spark, root)
+        s.writer_id = "w"
+        for k, batch in enumerate(batches):
+            s.write(batch, ingest_ts=100 + k)
+        with monkeypatch.context() as m:
+            if cap is not None:
+                m.setattr(store_module, "MAX_DRIVER_READ_BYTES", cap)
+            j0 = _next_job_id(spark)
+            assert s.flush_l0() is True
+            assert _next_job_id(spark) - j0 == 0
+        return s
+
+    one, many = flushed(tmp_path / "one", None), flushed(tmp_path / "many", 1)
+    for s, n_files in ((one, 1), (many, 3)):
+        part_dir = f"{s.config.hot_path}/tag=a/part_start=0"
+        assert len(store_module._visible(os.listdir(part_dir))) == n_files
+        assert not os.path.exists(s.config.l0_path)
+    assert _members(one.hot()) == _members(many.hot())
+    expected = [("a", 1, "v2"), ("a", 12, "w2"), ("b:c", 3, "x"), ("b:c", 5, "x")]
+    assert _rows(one.read_all()) == _rows(many.read_all()) == expected
+
+
+def test_flush_crashed_at_every_storage_call(spark, tmp_path, monkeypatch):
+    """Crash-point sweep over ``flush_l0``: for every k, the flush dies
+    at its k-th mutating storage call. A fresh store on the same root
+    then reads, on every read path, exactly the rows from before the
+    flush, no reader sees an ``.inprogress`` temp file, and a retried
+    flush leaves an empty L0, no staging dir and the same rows."""
+    ranges = {"a": (0, 40), "b:c": (0, 40)}
+    expected = [("a", 1, "a1-newer"), ("a", 33, "a33"), ("b:c", 25, "b25")]
+
+    def prepared(root):
+        s = _store(spark, root)
+        s.writer_id = "w"
+        s.write([("a", 1, "a1"), ("a", 12, "a12"), ("b:c", 3, "b3")], ingest_ts=100)
+        s.flush_l0()
+        s.write([("a", 1, "a1-new"), ("b:c", 3, None), ("b:c", 25, "b25")], ingest_ts=200)
+        s.write([("a", 12, None), ("a", 33, "a33"), ("a", 1, "a1-newer")], ingest_ts=300)
+        return s
+
+    dry = prepared(tmp_path / "dry")
+    members = _members(dry.hot())
+    assert len(members) == 9
+    dry.fs = _CrashAtCall()
+    dry.flush_l0()
+    assert set(dry.fs.ops) == set(_MUTATING)
+    for k in range(1, len(dry.fs.ops) + 1):
+        s = prepared(tmp_path / f"k{k}")
+        s.fs = _CrashAtCall(crash_at=k)
+        with pytest.raises(_Crash):
+            s.flush_l0()
+        fresh = _store(spark, s.config.root)
+        driver = fresh.read_range(ranges)
+        assert "LocalTableScan" in _plan(driver)
+        assert _rows(driver) == expected, k
+        with monkeypatch.context() as m:
+            m.setattr(store_module, "MAX_DRIVER_READ_BYTES", 0)
+            spark_df = fresh.read_range(ranges)
+            assert "FileScan parquet" in _plan(spark_df)
+            assert _rows(spark_df) == expected, k
+        hot = fresh.hot()
+        assert _members(hot) == members, k
+        assert not [f for f in hot.inputFiles() + spark_df.inputFiles() if ".inprogress" in f]
+        assert _rows(fresh.read_all()) == expected, k
+
+        s.fs = StorageFilesystem()  # the same writer restarts: its lease re-acquires
+        s.flush_l0()
+        l0, staging = s.config.l0_path, s.config.l0_staging_path
+        assert not os.path.exists(l0) or not store_module._visible(os.listdir(l0)), k
+        assert not os.path.exists(staging) or not os.listdir(staging), k
+        assert _rows(fresh.read_range(ranges)) == expected, k

@@ -164,6 +164,16 @@ class TestReadRangeDifferential:
             f"tag=a%3Ab/part_start={p}" for p in (-40, -30, -20, -10)
         )
 
+    def test_flush_writes_into_the_bulk_load_directories(self, layered):
+        """The driver-side flush names each ``tag=`` directory with
+        Spark's escaping, so it appends to the bulk load's directory
+        instead of creating a second one for the same tag."""
+        hot = layered.config.hot_path
+        tag_dirs = [n for n in os.listdir(hot) if n.startswith("tag=")]
+        assert sorted(
+            ManifestCommit._unescape_partition(n[len("tag="):]) for n in tag_dirs
+        ) == sorted([*TAGS, "tie"])
+
     def test_read_index_and_read_page(self, layered):
         ranges = {"a:b": (-33, 42), "sp ace": (5, 25)}
         idx = [tuple(r) for r in layered.read_index(ranges).collect()]

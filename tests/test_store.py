@@ -505,6 +505,32 @@ class TestLayoutTokenGranularity:
         os.utime(store.config.l0_path, ns=(st.st_atime_ns, st.st_mtime_ns))
         assert {r.ts for r in store.hot().collect()} == {1, 2}
 
+    def test_other_instance_flush_into_existing_partition_detected(
+        self, spark, store
+    ):
+        """Another store instance's ``flush_l0`` appends a file to a
+        partition directory this store's cached ``hot()`` already
+        holds. The directory listings the token hashes do not change;
+        the fold's new ``_SUCCESS`` inode must reveal the append."""
+        import os
+
+        from redis_lsm_timeseries_spark.store import TimeseriesStore
+
+        store.write([("t", 1, "a")], ingest_ts=100)
+        store.flush_l0()
+        assert {r.ts for r in store.hot().collect()} == {1}
+        watched = [store.config.hot_path, store.config.l0_staging_path]
+        stats = [os.stat(p) for p in watched]
+        other = TimeseriesStore(spark, store.config)
+        other.initialize()
+        other.write([("t", 2, "b")], ingest_ts=200)
+        other.flush_l0()
+        assert sorted(os.listdir(f"{store.config.hot_path}/tag=t")) == ["part_start=0"]
+        assert not os.path.exists(store.config.l0_path)
+        for path, st in zip(watched, stats):
+            os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
+        assert {r.ts for r in store.hot().collect()} == {1, 2}
+
 
 class TestManifestHotPrunedReads:
     """r13: with the manifest-managed hot tier, range reads plan over
