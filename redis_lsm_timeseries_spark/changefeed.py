@@ -109,11 +109,7 @@ def mirror_changes(
     initial/resync snapshot), and a row the transform FILTERS OUT is
     applied as a key delete, so a per-tenant filtered mirror tracks
     rows leaving its subset. A transform that drops a key column
-    raises ``ValidationError``. The engine's own maintenance is fully
-    feed-transparent (r13): LWW compaction stages its losing
-    duplicates — and purge-ack, retention, and tag erasure their
-    removed rows — as CDF delete rows in the same atomic commit, so
-    only an EXTERNAL unmarked content rewrite (a raw
+    raises ``ValidationError``. An unmarked content rewrite (a raw
     ``snapshot_rewrite`` without change metadata) still resyncs."""
     commit = commit if commit is not None else ManifestCommit()
     versions = commit.table_versions(host, src_path)

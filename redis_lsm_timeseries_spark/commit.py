@@ -233,18 +233,6 @@ class TableCommit:
     def drop_partition_dir(self, store, path: str) -> None:
         raise NotImplementedError
 
-    #: True for backends that can create/manage versioned manifest
-    #: tables (EngineConfig.manifest_hot requires one — asking for a
-    #: transactional hot tier from a directory backend must fail
-    #: loudly, not silently write plain directories)
-    CAN_MANAGE_MANIFESTS = False
-
-    def tracks_changes(self, store, path: str) -> bool:
-        """True when writes to ``path`` land in a version log whose
-        change feeds can serve row-level CDF — callers use it to skip
-        computing change rows a backend would only throw away."""
-        return False
-
     def snapshot_rewrite(self, store, path: str, write_snapshot) -> None:
         raise NotImplementedError
 
@@ -2037,10 +2025,9 @@ class ManifestCommit(ParquetLeaseCommit):
         """Partitioned append as one manifest commit. ``app_meta``
         merges into the entry's ``app`` map ATOMICALLY with the files
         and ``expected_app`` CASes on the keys' planning-time values —
-        the Delta ``txn`` idiom on the partitioned write path, so a
-        streaming hot-tier ingest commits its batch cursor in the
-        same entry as the batch's files (r14 exactly-once manifest-hot
-        ingest; see ``streaming/ingest.py``)."""
+        the Delta ``txn`` idiom on the partitioned write path, so
+        ``copy_into`` commits its load cursor in the same entry as the
+        loaded files of a hive-partitioned target."""
         target = self._target_for_write(store, path)
         if target is None:
             return super().append_partitioned(
@@ -2202,14 +2189,6 @@ class ManifestCommit(ParquetLeaseCommit):
             mutate.change_meta = dict(change)
         self._commit(store, root, mutate)
         self.vacuum(store, root)
-
-    CAN_MANAGE_MANIFESTS = True
-
-    def tracks_changes(self, store, path: str) -> bool:
-        # _resolve, not _target_for_write: a capability probe must not
-        # mkdir a log for a not-yet-existing table. A path with no
-        # version log YET has no feed consumers to serve either.
-        return self._resolve(store, path) is not None
 
     # -- schema evolution (r13) ---------------------------------------------
     #

@@ -55,20 +55,6 @@ class EngineConfig:
     root: str
     partition_width: int = DEFAULT_PARTITION_WIDTH
     purge_queue_name: str = "Purge"
-    #: Transactional hot tier (r13, opt-in): route L1 appends through
-    #: the store's ``TableCommit`` seam so a ``ManifestCommit`` backend
-    #: manages the hot table under its versioned log — atomic commits,
-    #: snapshot-isolated reads, time travel, stats-based data skipping,
-    #: and a row-level change feed that makes the engine's own
-    #: maintenance (LWW compaction, purge eviction) mirrorable with
-    #: O(changed rows) work instead of full resyncs. Once the log
-    #: exists, the mode is sticky regardless of this flag (a layout
-    #: property, not a session preference). Incompatible with the raw
-    #: file-sink streaming mode (``start_hot_ingest``), which needs an
-    #: exclusive directory committer; use
-    #: ``start_hot_ingest_with_maintenance``. Directory mode (default)
-    #: keeps the r12-and-earlier behavior exactly.
-    manifest_hot: bool = False
 
     def __post_init__(self) -> None:
         # The store's table probes (hot/cold/purge-log existence checks)

@@ -534,8 +534,8 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------------------------ unpivot
 # Unregistered in round 14: its slot carries tiering_purge_lifecycle_mhot
-# (the opt-in manifest-managed hot tier's end-to-end driver hash row —
-# VERDICT r13 #8). Pivot/unpivot stays differentially verified with the
+# (the purge protocol over a ManifestCommit store, end to end).
+# Pivot/unpivot stays differentially verified with the
 # identical rows+schema+values check via UNREGISTERED_ORACLES below.
 UNPIVOT_STATUS_ORACLE = """
 WITH p AS (

@@ -27,6 +27,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from redis_lsm_timeseries_spark.commit import ManifestCommit, ParquetLeaseCommit
 from redis_lsm_timeseries_spark.config import EngineConfig
 from redis_lsm_timeseries_spark.operators.lww import lww_latest
 from redis_lsm_timeseries_spark.plans.catalog import register
@@ -93,20 +94,18 @@ def tiering_purge_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "tiering_purge_lifecycle_mhot",
     oracle=PURGE_LIFECYCLE_ORACLE,
-    tags=("tiering", "lifecycle", "mutation", "manifest-hot"),
+    tags=("tiering", "lifecycle", "mutation", "manifest-commit"),
 )
 def tiering_purge_lifecycle_mhot(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The identical mark -> write-after-mark -> ack lifecycle with
-    the hot tier OPT-IN manifest-managed (``EngineConfig.manifest_hot``,
-    r13): every bulk append, L0 fold, and ack eviction commits through
-    the hot table's version log instead of raw directory writes. Same
-    oracle as ``tiering_purge_lifecycle`` — the driver's hash row
-    certifies the transactional hot tier END-TO-END (r14, VERDICT r13
-    #8), the way r13's ``metadata_fast_stats`` certified the
-    metadata-only path."""
-    return _run_lifecycle(spark, sf_dir, manifest_hot=True)
+    """The identical mark -> write-after-mark -> ack lifecycle on a
+    ``ManifestCommit`` store: the hot tier keeps its directory layout,
+    while the cold snapshots and the purge log are committed to
+    version logs. Same oracle as ``tiering_purge_lifecycle``, so the
+    driver's hash row certifies the purge protocol over the
+    transactional backend end to end."""
+    return _run_lifecycle(spark, sf_dir, commit_cls=ManifestCommit)
 
 
 # Cache of materialized lifecycle reads, keyed by Spark application id
@@ -124,10 +123,10 @@ _LIFECYCLE_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _run_lifecycle(
-    spark: SparkSession, sf_dir: str, manifest_hot: bool = False,
+    spark: SparkSession, sf_dir: str, commit_cls: type = ParquetLeaseCommit,
     want: str = "hot",
 ) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, manifest_hot, want)
+    key = (spark.sparkContext.applicationId, sf_dir, commit_cls, want)
     if key in _LIFECYCLE_CACHE:
         return _LIFECYCLE_CACHE[key]
     base_dir = tempfile.mkdtemp(prefix="rlts_lifecycle_")
@@ -135,25 +134,17 @@ def _run_lifecycle(
     # maintenance job cost more than the work they do.
     with pinned_shuffle_partitions(spark, 8):
         return _run_lifecycle_inner(
-            spark, sf_dir, base_dir, key, manifest_hot, want
+            spark, sf_dir, base_dir, key, commit_cls, want
         )
 
 
 def _run_lifecycle_inner(
     spark: SparkSession, sf_dir: str, base_dir: str, key,
-    manifest_hot: bool = False, want: str = "hot",
+    commit_cls: type, want: str,
 ) -> DataFrame:
     try:
-        cfg = EngineConfig(
-            root=base_dir, partition_width=LIFECYCLE_W,
-            manifest_hot=manifest_hot,
-        )
-        if manifest_hot:
-            from redis_lsm_timeseries_spark.commit import ManifestCommit
-
-            store = TimeseriesStore(spark, cfg, commit=ManifestCommit())
-        else:
-            store = TimeseriesStore(spark, cfg)
+        cfg = EngineConfig(root=base_dir, partition_width=LIFECYCLE_W)
+        store = TimeseriesStore(spark, cfg, commit=commit_cls())
         store.initialize()
 
         ev = load_events(spark, sf_dir).where(
@@ -191,12 +182,11 @@ def _run_lifecycle_inner(
         if purge_ack(store, marks[0].purge_id):
             raise RuntimeError("re-ack was not idempotent")
 
-        if want == "union" and not manifest_hot:
+        if want == "union":
             # The unified read: hot UNION cold, member-identity dedup,
             # LWW — read_all is read_range over every tag and the whole
             # range, without the tag-enumeration job a range map would
-            # need. (The manifest-hot variant serves its hot read
-            # alone, so `want` degrades to "hot" there.)
+            # need.
             out = store.read_all(include_cold=True).localCheckpoint(
                 eager=True
             )

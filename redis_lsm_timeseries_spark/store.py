@@ -29,16 +29,15 @@ Physical layout — a two-level LSM:
   and published by rename, so a ``write()`` starts no Spark job. The
   memtable-flush analog of the reference's append-first LSM posture
   (``recipe:19-20``); ``flush_l0`` (called by ack/compact
-  maintenance) folds segments into L1. In directory mode the fold
-  also runs on the driver with pyarrow — one file per
-  ``(tag, part_start)`` per flush, no Spark job; a manifest-managed
-  L1 is folded by a Spark write that commits to its log.
+  maintenance) folds segments into L1, also on the driver with
+  pyarrow — one file per ``(tag, part_start)`` per flush, no Spark
+  job.
 
 Reads union both tiers. Range reads (``read_range``, ``read_index``,
 ``read_page``) plan over only the requested tags' partition
 directories, listed on the driver (``hot_pruned``), so a ``write()``
-costs the next read no re-listing of L1. A directory-mode
-``read_range`` of the hot tier whose candidate files are small
+costs the next read no re-listing of L1. A ``read_range`` of the
+hot tier whose candidate files are small
 (``MAX_DRIVER_READ_BYTES``) is answered on the driver with pyarrow and
 starts no Spark job; every other read is a Spark plan. Full-table
 reads (``hot``, ``read_all``) cache the table handle per store
@@ -146,13 +145,18 @@ class TimeseriesStore:
             from redis_lsm_timeseries_spark.commit import DEFAULT_COMMIT
 
             commit = DEFAULT_COMMIT
-        if config.manifest_hot and not getattr(
-            commit, "CAN_MANAGE_MANIFESTS", False
-        ):
+        # The hot tier is always a plain directory layout. A version log
+        # at its root was left by the retired manifest-managed hot tier,
+        # whose superseded files a directory scan would read as live:
+        # refuse to open it rather than switch modes silently.
+        from redis_lsm_timeseries_spark.commit import LOG_DIR
+
+        if self.fs.is_dir(f"{config.hot_path}/{LOG_DIR}"):
             raise ValidationError(
-                "EngineConfig.manifest_hot requires a manifest-capable "
-                "commit backend (ManifestCommit); the directory backend "
-                "would silently write a plain layout"
+                f"{config.hot_path}/{LOG_DIR} exists: this hot tier was "
+                "written by the retired manifest-managed hot tier. Read "
+                "its rows with ManifestCommit.read_table and load them "
+                "into a store at a new root with write_df"
             )
         self.commit = commit
         self._epoch: int | None = None
@@ -258,10 +262,6 @@ class TimeseriesStore:
         for path in (
             self.config.hot_path,
             f"{self.config.hot_path}/_spark_metadata",
-            # manifest-hot mode: every commit adds a _log entry, so the
-            # log listing is the staleness signal for ALL mutations
-            # (appends into existing partition dirs included)
-            f"{self.config.hot_path}/_log",
             self.config.l0_path,
             self.config.l0_staging_path,
         ):
@@ -367,8 +367,6 @@ class TimeseriesStore:
         df: DataFrame,
         ingest_ts: int | None = None,
         cluster_by_partition: bool = True,
-        app_meta: dict | None = None,
-        expected_app: dict | None = None,
     ) -> None:
         """Bulk ingest path for DataFrame-shaped input (columns
         ``tag, ts, value`` at minimum; ``ingest_ts/writer_id/seq`` kept
@@ -385,8 +383,8 @@ class TimeseriesStore:
 
         Multi-writer posture: the append runs under the maintenance
         lease. A direct L1 append racing a compaction/retention
-        partition overwrite is the one lost-update window the
-        directory-mode hot tier has (the overwrite's committer replaces
+        partition overwrite is the one lost-update window the hot
+        tier has (the overwrite's committer replaces
         the partition's contents, wiping an append that landed after
         the rewrite's scan) — serializing bulk loads against
         maintenance closes it, at the cost of
@@ -398,13 +396,7 @@ class TimeseriesStore:
         stolen anyway, the lock's exit raises rather than succeeding
         silently. The chatty ``write()`` path needs no lease: it lands
         in L0, which maintenance folds via the rename protocol, never
-        overwrites.
-
-        ``app_meta`` / ``expected_app`` (r14): commit application
-        metadata (a streaming batch cursor) ATOMICALLY with the
-        append, CAS-guarded — the exactly-once leg of the manifest-hot
-        ingest path. Requires a manifest-managed hot tier (the
-        directory sink has no metadata map and refuses loudly)."""
+        overwrites."""
         self._require_init()
         self._require_l1_batch_writable()
         cols = set(df.columns)
@@ -439,52 +431,12 @@ class TimeseriesStore:
                 self._shuffle_partitions(), "tag", "part_start"
             )
         with self.commit.maintenance_lock(self):
-            self._append_hot(out, app_meta=app_meta, expected_app=expected_app)
-
-    def _hot_is_manifest(self) -> bool:
-        """True when the L1 hot table is (or should become) managed by
-        the commit backend's version log. STICKY: once a hot manifest
-        log exists, every writer commits through it regardless of its
-        own ``manifest_hot`` flag — mixed-mode writes would make files
-        invisible to manifest readers. A pre-existing PLAIN hot
-        directory stays directory-mode even under the flag (the seam
-        refuses to adopt a layout it didn't create)."""
-        if self.commit.tracks_changes(self, self.config.hot_path):
-            return True
-        if not self.config.manifest_hot:
-            return False
-        # the flag asks for manifest mode on a NEW table only
-        hot = self.config.hot_path
-        return not (
-            self.fs.exists(hot)
-            and (not self.fs.is_dir(hot) or self.fs.listdir(hot))
-        )
-
-    def _append_hot(
-        self, df: DataFrame, app_meta: dict | None = None,
-        expected_app: dict | None = None,
-    ) -> None:
-        if self._hot_is_manifest():
-            # Transactional L1: one atomic manifest commit per append
-            # (creates the version log on the first write); app_meta
-            # rides the same entry — the streaming batch cursor.
-            self.commit.append_partitioned(
-                self, df, self.config.hot_path, list(PARTITION_COLS),
-                app_meta=app_meta, expected_app=expected_app,
-            )
-        else:
-            if app_meta or expected_app:
-                raise ValidationError(
-                    "write_df: app_meta/expected_app need a manifest-"
-                    "managed hot tier (EngineConfig.manifest_hot); the"
-                    " directory sink keeps no metadata map"
-                )
             (
-                df.write.mode("append")
+                out.write.mode("append")
                 .partitionBy(*PARTITION_COLS)
                 .parquet(self.config.hot_path)
             )
-        self.invalidate_hot_cache()
+            self.invalidate_hot_cache()
 
     def flush_l0(self) -> bool:
         """Fold the L0 staging segments into the partitioned L1 layout
@@ -502,14 +454,12 @@ class TimeseriesStore:
            skips hidden names, and then delete them with the staging
            dir — a silent data loss + failed write); ``_SUCCESS``/
            ``.crc`` are inert markers/sidecars of older layouts;
-        2. the staged segments are appended to L1. In directory mode
-           this runs on the driver (``_fold_on_driver``): the segments
-           are read with pyarrow in chunks of at most
-           ``MAX_DRIVER_READ_BYTES``, sorted by (tag, part_start, ts),
-           and each (tag, part_start) run is published by rename as
-           one file in its partition directory, so the flush starts no
-           Spark job. A manifest-managed L1 takes a Spark write
-           clustered onto (tag, part_start) and committed to its log;
+        2. the staged segments are appended to L1 on the driver
+           (``_fold_on_driver``): they are read with pyarrow in chunks
+           of at most ``MAX_DRIVER_READ_BYTES``, sorted by
+           (tag, part_start, ts), and each (tag, part_start) run is
+           published by rename as one file in its partition directory,
+           so the flush starts no Spark job;
         3. a ``_COMMITTED`` marker is written in the staging dir, then
            the dir is removed.
 
@@ -582,43 +532,20 @@ class TimeseriesStore:
         """Phase 2+3 of ``flush_l0``: append one staging dir's segments
         to L1, mark committed, remove. Every reader skips the
         ``_``-prefixed marker and ``.``-prefixed temp files and
-        sidecars, so re-reading a staging dir is safe.
-
-        A directory-mode L1 is appended on the driver
-        (``_fold_on_driver``). A manifest-managed L1 needs its commit
-        log entry, so its fold stays a Spark write through
-        ``commit.append_partitioned``."""
+        sidecars, so re-reading a staging dir is safe. The append runs
+        on the driver (``_fold_on_driver``)."""
         segments = _visible(self.fs.listdir(stage_dir))
-        if segments and not self._hot_is_manifest():
+        if segments:
             self._fold_on_driver(stage_dir, segments)
-        elif segments:
-            staged = self.spark.read.schema(SAMPLE_SCHEMA).parquet(stage_dir)
-            # Cluster onto the partition key, but size the shuffle to the
-            # input: each segment is one <=2,000-row write() batch, so a
-            # 1-segment fold gets 1 task, not a full session's worth of
-            # near-empty ones (explicit count still needed — AQE would
-            # coalesce to one task and serialize the directory writes on
-            # BIG folds). Session-conf-sized like write_df (r17).
-            n_parts = min(self._shuffle_partitions(), len(segments))
-            if n_parts == 1:
-                # one <=2,000-row batch: a keyed repartition(1) pays a
-                # full shuffle stage (its own AQE job) to land every
-                # row in the one task coalesce(1) reaches shuffle-free
-                # (r18, guide §2.4) — same rows, same single writer
-                # task, same (tag, ts) sort from _append_hot
-                clustered = staged.coalesce(1)
-            else:
-                clustered = staged.repartition(n_parts, "tag", "part_start")
-            self._append_hot(clustered)
         self.fs.write_text(f"{stage_dir}/_COMMITTED", "")
         self.fs.remove_tree(stage_dir)
         self.invalidate_hot_cache()
 
     def _fold_on_driver(self, stage_dir: str, segments: list[str]) -> None:
-        """Append staged L0 segments to the directory-mode L1 with
-        pyarrow, starting no Spark job. The segments are read in chunks
-        of at most ``MAX_DRIVER_READ_BYTES`` Parquet bytes (one segment
-        over the cap is a chunk of its own), each chunk sorted by
+        """Append staged L0 segments to L1 with pyarrow, starting no
+        Spark job. The segments are read in chunks of at most
+        ``MAX_DRIVER_READ_BYTES`` Parquet bytes (one segment over the
+        cap is a chunk of its own), each chunk sorted by
         ``(tag, part_start, ts)``, and each ``(tag, part_start)`` run
         written as one file of the non-partition columns into its hive
         directory, named with Spark's escaping. Files are published by
@@ -763,17 +690,7 @@ class TimeseriesStore:
         # L0 before L1: see _unflushed_dirs
         l0_tiers = self._l0_tiers(field_names)
         tiers = []
-        if self.commit.tracks_changes(self, self.config.hot_path):
-            # Manifest-managed L1 (see EngineConfig.manifest_hot): the
-            # snapshot is the COMMITTED file list — a raw directory
-            # scan would double-read superseded files a rewrite left
-            # for deferred vacuum.
-            tiers.append(
-                self.commit.read_table(
-                    self, self.config.hot_path, SAMPLE_SCHEMA
-                ).select(*field_names)
-            )
-        elif self.fs.exists(self.config.hot_path):
+        if self.fs.exists(self.config.hot_path):
             tiers.append(
                 self.spark.read.schema(SAMPLE_SCHEMA)
                 .parquet(self.config.hot_path)
@@ -845,14 +762,11 @@ class TimeseriesStore:
         listing the world at plan time. Superset guard: callers keep
         their row predicates.
 
-        - Manifest-hot mode (r13): the L1 scan plans over only the
-          committed files whose stats overlap ``predicates``.
-        - Directory mode: the L1 scan plans over the
-          ``tag=``/``part_start=`` directories of the requested tags
-          (``_hot_partition_dirs``), listed on the driver. A
-          ``write()`` changes only L0, so the read after it lists no
-          L1 directory it does not need. A sink-managed L1
-          (``_spark_metadata``) reads the full, cached ``hot()``.
+        The L1 scan plans over the ``tag=``/``part_start=`` directories
+        of the requested tags (``_hot_partition_dirs``), listed on the
+        driver. A ``write()`` changes only L0, so the read after it
+        lists no L1 directory it does not need. A sink-managed L1
+        (``_spark_metadata``) reads the full, cached ``hot()``.
 
         The L0 tiers are listed first and unioned after L1, as in
         ``hot()``. Not cached — the pruned plan is query-specific."""
@@ -861,29 +775,21 @@ class TimeseriesStore:
             return self.hot()
         field_names = [f.name for f in SAMPLE_SCHEMA.fields]
         l0_tiers = self._l0_tiers(field_names)
+        dirs = self._hot_partition_dirs(predicates)
+        if dirs is None:
+            return self.hot()
         tiers = []
-        if self.commit.tracks_changes(self, self.config.hot_path):
+        if dirs:
             tiers.append(
-                self.commit.read_table_pruned(
-                    self, self.config.hot_path, SAMPLE_SCHEMA,
-                    predicates=dict(predicates),
-                ).select(*field_names)
+                self.spark.read.schema(SAMPLE_SCHEMA)
+                .option("basePath", self.config.hot_path)
+                .parquet(*dirs)
+                .select(*field_names)
             )
-        else:
-            dirs = self._hot_partition_dirs(predicates)
-            if dirs is None:
-                return self.hot()
-            if dirs:
-                tiers.append(
-                    self.spark.read.schema(SAMPLE_SCHEMA)
-                    .option("basePath", self.config.hot_path)
-                    .parquet(*dirs)
-                    .select(*field_names)
-                )
         return self._union(tiers + l0_tiers)
 
     def _hot_partition_dirs(self, predicates: Mapping) -> list[str] | None:
-        """The directory-mode L1 partition directories ``predicates``
+        """The L1 partition directories ``predicates``
         (a ``tag`` set and inclusive ``part_start`` bounds) can touch:
         each requested tag's ``tag=`` directory, its path built with
         Spark's own escaping and listed through ``self.fs``, keeping
@@ -1030,7 +936,7 @@ class TimeseriesStore:
         it participates in LWW (a newer NULL beats an older value) and is
         filtered from results unless ``with_tombstones``.
 
-        A small hot-only read in directory mode — no ``include_cold``,
+        A small hot-only read — no ``include_cold``,
         no streaming sink log, candidate files totalling at most
         ``MAX_DRIVER_READ_BYTES`` — is computed on the driver instead
         (``_read_range_on_driver``) and returned as a local relation,
@@ -1049,8 +955,6 @@ class TimeseriesStore:
         pred = self._prune_predicate(parsed)
         residual = self._residual_predicate(parsed)
 
-        # manifest-hot: file skipping from the log's stats; the row
-        # predicates below stay mandatory (superset guard)
         df = self.hot_pruned(self._range_file_predicates(parsed))
         if include_cold:
             df = df.unionByName(
@@ -1065,8 +969,8 @@ class TimeseriesStore:
         self, parsed: list[tuple], with_tombstones: bool
     ) -> DataFrame | None:
         """``read_range`` of the hot tier computed with pyarrow, or None
-        when the request needs the Spark plan: a manifest-managed or
-        sink-managed L1, or candidate files over
+        when the request needs the Spark plan: a sink-managed L1, or
+        candidate files over
         ``MAX_DRIVER_READ_BYTES``.
 
         The candidates are listed in row-movement order (L0, staging,
@@ -1086,8 +990,6 @@ class TimeseriesStore:
             _driver_arrow_schema,
         )
 
-        if self.commit.tracks_changes(self, self.config.hot_path):
-            return None
         w = self.config.partition_width
         predicate = ds.scalar(False)
         for tag, start, end in parsed:

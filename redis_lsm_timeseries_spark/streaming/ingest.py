@@ -74,19 +74,6 @@ def start_hot_ingest(
     route through ``start_hot_ingest_with_maintenance``, which collapses
     intra-batch duplicates per micro-batch.
     """
-    if store._hot_is_manifest():
-        # _hot_is_manifest, not the raw flag: a store whose hot tier
-        # is STICKY directory-mode (pre-existing plain layout) keeps
-        # using the file sink legitimately even with the flag set
-        from redis_lsm_timeseries_spark.errors import ValidationError
-
-        raise ValidationError(
-            "start_hot_ingest writes raw files under the hot root, "
-            "which a manifest-managed hot tier (EngineConfig."
-            "manifest_hot) would never see — use "
-            "start_hot_ingest_with_maintenance (foreachBatch -> "
-            "write_df commits through the log)"
-        )
     w = store.config.partition_width
     enriched = (
         stream.withColumn(
@@ -192,59 +179,20 @@ def make_maintenance_batch_handler(
                 F.struct(*[f.name for f in SAMPLE_SCHEMA.fields]), F.col("seq")
             ).alias("m")
         ).select("m.*")
-        # Manifest-hot (r14): the L1 append rides the per-app batch-id
-        # cursor in the SAME atomic log entry (the manifest_sink /
-        # Delta txn idiom) — a foreachBatch replay of a committed
-        # batch writes NOTHING, not a transient duplicate member. The
-        # directory-mode hot tier keeps the documented at-least-once
-        # posture below (replayed members are byte-identical; LWW
-        # collapses them on read, compaction removes them).
-        skip_append = False
-        txn_meta = expected = None
-        if store._hot_is_manifest():
-            cursor_key = f"sink:hot-ingest:{writer_id}"
-            cur = store.commit.read_app_meta(
-                store, store.config.hot_path
-            ).get(cursor_key)
-            bid = int(batch_id)
-            if cur is not None and bid <= int(cur) - 1:
-                from redis_lsm_timeseries_spark.errors import (
-                    ValidationError,
-                )
-
-                raise ValidationError(
-                    f"hot ingest[{writer_id}]: batch {bid} arrived "
-                    f"after cursor {cur} — two queries are sharing "
-                    "this writer_id or a checkpoint was reused; give "
-                    "each query its own writer_id"
-                )
-            if cur is not None and bid <= int(cur):
-                # exact replay of a committed batch: skip the append
-                # (maintenance below still runs — it is idempotent)
-                skip_append = True
-            else:
-                txn_meta = {cursor_key: bid}
-                expected = {cursor_key: cur}
         # write_df takes the maintenance lease per micro-batch; another
         # lease holder (a concurrent compact, a bulk load) would
         # otherwise turn transient contention into a terminated
         # streaming query. Bounded retry with backoff; the terminal
-        # raise is safe because micro-batch replay is idempotent (the
-        # cursor skips committed batches on manifest-hot; the
-        # content-hash seq makes a directory-mode re-run
-        # byte-identical).
-        if not skip_append:
-            for attempt in range(3):
-                try:
-                    store.write_df(
-                        collapsed, cluster_by_partition=False,
-                        app_meta=txn_meta, expected_app=expected,
-                    )
-                    break
-                except ConcurrentMaintenanceError:
-                    if attempt == 2:
-                        raise
-                    time.sleep(0.5 * (attempt + 1))
+        # raise is safe because a re-run of the micro-batch is
+        # byte-identical (replay-stable ingest_ts, content-hash seq).
+        for attempt in range(3):
+            try:
+                store.write_df(collapsed, cluster_by_partition=False)
+                break
+            except ConcurrentMaintenanceError:
+                if attempt == 2:
+                    raise
+                time.sleep(0.5 * (attempt + 1))
         if batch_id % maintenance_every == 0:
             marks = purge_scan(
                 store,
@@ -286,15 +234,8 @@ def start_hot_ingest_with_maintenance(
       ``write()`` path's one-member-per-key posture;
     - appends go through ``store.write_df``, so the hot-handle cache is
       invalidated per batch and concurrent readers see fresh data;
-    - MANIFEST-HOT stores are exactly-once at the STORAGE level (r14):
-      each micro-batch's L1 files commit in one atomic log entry with
-      a per-writer batch-id cursor (``sink:hot-ingest:{writer_id}`` —
-      the ``manifest_sink`` / Delta ``txn`` idiom), so a replayed
-      batch is detected by the cursor and writes nothing; a crash
-      between the commit and Spark's checkpoint advance replays into
-      a skip, never a duplicate member on disk;
-    - DIRECTORY-mode hot tiers stay at-least-once: the plain append is
-      not idempotent, but replayed members ARE exact duplicates —
+    - the append is at-least-once: it is not idempotent, but replayed
+      members ARE exact duplicates —
       ``ingest_ts`` is pinned per batch_id in a checkpoint sidecar
       (``_batch_ingest_ts``) and ``seq`` is a content hash — so LWW
       collapses them at read time and the ack anti-join removes

@@ -52,7 +52,6 @@ from redis_lsm_timeseries_spark.config import PARTITION_COLS
 from redis_lsm_timeseries_spark.errors import ValidationError
 from redis_lsm_timeseries_spark.schema import (
     COLD_SNAPSHOT_SCHEMA,
-    LWW_ORDER_COLS,
     MEMBER_IDENTITY_COLS,
     PURGE_LOG_SCHEMA,
     SAMPLE_SCHEMA,
@@ -240,33 +239,6 @@ def purge_scan(
     return marks
 
 
-def _hot_partition_prefixes(
-    store: TimeseriesStore, parts: set[tuple], depth: int = 2
-) -> list[str]:
-    """Member-relative hive prefixes of the given partition-value
-    tuples (``depth`` leading hive segments — (tag, part_start) pairs
-    by default, tag-only with depth=1), derived from the manifest's
-    OWN file paths (so hive ``%XX``-escaped values match byte-for-byte
-    — a hand-built ``tag={tag}`` string would miss them)."""
-    if not parts:
-        return []
-    from redis_lsm_timeseries_spark.commit import ManifestCommit
-
-    want = {tuple(str(x) for x in t) for t in parts}
-    prefixes: set[str] = set()
-    for f in store.commit.member_files(store, store.config.hot_path) or []:
-        segs = f.split("/")
-        if len(segs) <= depth:
-            continue
-        vals = tuple(
-            ManifestCommit._unescape_partition(s.partition("=")[2])
-            for s in segs[:depth]
-        )
-        if vals in want:
-            prefixes.add("/".join(segs[:depth]))
-    return sorted(prefixes)
-
-
 def purge_ack(
     store: TimeseriesStore, purge_id: str, now_ms: int | None = None
 ) -> bool:
@@ -369,16 +341,7 @@ def purge_ack_many(
         part_pred = part_pred | (
             (F.col("tag") == tag) & (F.col("part_start") == part_start)
         )
-    hot_parts = store.hot().where(part_pred)
-    if store.commit.tracks_changes(store, store.config.hot_path):
-        # the manifest branch consumes the marked partitions TWICE
-        # (the remainder anti-join and the evicted-rows semi-join for
-        # the CDF) — materialize the slice once, lazily: the
-        # nonempty-partition collect below is the materializing action
-        # (r18, guide §2.3; single-consumer directory mode skips the
-        # cache)
-        hot_parts = hot_parts.localCheckpoint(eager=False)
-    remainder = hot_parts.join(
+    remainder = store.hot().where(part_pred).join(
         F.broadcast(snapshot), on=MEMBER_IDENTITY_COLS, how="left_anti"
     )
     # Materialize before overwriting the directories we just read
@@ -394,42 +357,20 @@ def purge_ack_many(
         (r.tag, r.part_start)
         for r in remaining.select("tag", "part_start").distinct().collect()
     }
-    if store.commit.tracks_changes(store, store.config.hot_path):
-        # Manifest backend: ONE atomic commit carries the partition
-        # rewrites, the emptied-partition drops, AND the evicted rows
-        # as typed CDF deletes — a keyed mirror of the hot table
-        # consumes the eviction as O(evicted) row deletes instead of
-        # a full resync, and no feed version ever shows a torn ack
-        # (rows gone from one partition but not yet another).
-        evicted = hot_parts.join(
-            F.broadcast(snapshot), on=MEMBER_IDENTITY_COLS, how="left_semi"
-        ).withColumn(store.commit.CDF_TYPE_COL, F.lit("delete"))
-        n_rows = sum(marks[pid][2] for pid in valid)
-        store.commit.overwrite_partitions(
+    for tag, part_start in affected - nonempty:
+        # Partition fully evicted: dynamic overwrite rewrites only
+        # partitions present in the output, so drop emptied ones here.
+        store.commit.drop_partition_dir(
             store,
-            remaining if nonempty else None,
-            store.config.hot_path,
-            PARTITION_COLS,
-            cdf_df=evicted.coalesce(max(1, min(32, n_rows // 1_000_000 + 1))),
-            drop_prefixes=_hot_partition_prefixes(store, affected - nonempty),
+            f"{store.config.hot_path}/tag={tag}/part_start={part_start}",
         )
-    else:
-        for tag, part_start in affected - nonempty:
-            # Partition fully evicted: dynamic overwrite rewrites only
-            # partitions present in the output, so drop emptied ones
-            # here.
-            store.commit.drop_partition_dir(
-                store,
-                f"{store.config.hot_path}/tag={tag}/part_start={part_start}",
-            )
-        if nonempty:
-            # Only the acked partitions' directories are replaced — see
-            # ParquetLeaseCommit.overwrite_partitions for the per-write
-            # dynamic-overwrite requirement.
-            store.commit.overwrite_partitions(
-                store, remaining, store.config.hot_path,
-                PARTITION_COLS,
-            )
+    if nonempty:
+        # Only the acked partitions' directories are replaced — see
+        # ParquetLeaseCommit.overwrite_partitions for the per-write
+        # dynamic-overwrite requirement.
+        store.commit.overwrite_partitions(
+            store, remaining, store.config.hot_path, PARTITION_COLS,
+        )
     store.invalidate_hot_cache()
     _append_log(
         store,
@@ -491,10 +432,6 @@ def _vacuum_locked(store: TimeseriesStore) -> dict:
     backends (ManifestCommit) reclaim here; the directory backend's
     inherited no-op returns 0 everywhere. Caller holds the lease."""
     roots = [store.config.purge_log_path, store.config.cold_path]
-    if store.commit.tracks_changes(store, store.config.hot_path):
-        # manifest-hot mode (r13): L1 rewrites defer physical deletes
-        # to vacuum like every other manifest table
-        roots.append(store.config.hot_path)
     rollups_dir = f"{store.config.base_path}/rollups"
     if store.fs.exists(rollups_dir):
         roots.extend(
@@ -599,38 +536,8 @@ def compact(
         .localCheckpoint(eager=False)
     )
     rows_after = winners.count()
-    cdf = None
-    if store.commit.tracks_changes(store, store.config.hot_path):
-        # Tell row-level change feeds exactly which duplicates lost
-        # the LWW race, staged ATOMICALLY with the rewrite: the
-        # winners are content-identical to rows the feed already
-        # delivered, so the change set nets to pure deletes and a
-        # keyed mirror applies O(losers) work instead of a full
-        # resync after every compaction pass. The anti-join keys on
-        # the non-nullable member identity (key + full LWW order
-        # tuple — `value` is nullable and equality-join-unsafe);
-        # a physically duplicated identical member compacts with no
-        # change rows, which is right: its content never changed.
-        identity = ["tag", "ts", *LWW_ORDER_COLS]
-        # losers come from the COMMITTED L1 snapshot, never the hot()
-        # union: a leaseless write() landing rows in L0 mid-job must
-        # not surface in the feed as deletes of rows the manifest
-        # never held (they flush into L1 later, as inserts)
-        l1 = store.commit.read_table(
-            store, store.config.hot_path, SAMPLE_SCHEMA
-        ).join(
-            F.broadcast(part_stats.select("tag", "part_start")),
-            ["tag", "part_start"],
-            "left_semi",
-        )
-        losers = l1.join(
-            winners.select(*identity), identity, "left_anti"
-        ).withColumn(store.commit.CDF_TYPE_COL, F.lit("delete"))
-        excess = max(0, rows_before - rows_after)
-        cdf = losers.coalesce(max(1, min(32, excess // 1_000_000 + 1)))
     store.commit.overwrite_partitions(
-        store, winners, store.config.hot_path,
-        PARTITION_COLS, cdf_df=cdf,
+        store, winners, store.config.hot_path, PARTITION_COLS,
     )
     store.invalidate_hot_cache()
     return CompactionMetrics(
@@ -712,42 +619,13 @@ def apply_retention(
         .collect()
     )
     rows = sum(r.n for r in doomed)
-    if doomed and store.commit.tracks_changes(store, store.config.hot_path):
-        # manifest-hot (r13): ONE atomic commit drops every expired
-        # partition and stages the dropped rows as typed CDF deletes —
-        # a keyed mirror consumes retention as O(expired rows) instead
-        # of a full resync, and no feed version shows a half-applied
-        # sweep. The CDF read is bounded by what is being deleted
-        # (exactly the mirror's delta), not the table.
-        pairs = {(r.tag, r.part_start) for r in doomed}
-        keys_df = store.spark.createDataFrame(
-            sorted(pairs), "tag string, part_start long"
-        )
-        # committed L1 rows only (racing L0 rows were never in the
-        # manifest; they flush later and survive as inserts)
-        victims = store.commit.read_table(
-            store, store.config.hot_path, SAMPLE_SCHEMA
-        ).join(
-            F.broadcast(keys_df), ["tag", "part_start"], "left_semi"
-        ).withColumn(store.commit.CDF_TYPE_COL, F.lit("delete"))
-        store.commit.overwrite_partitions(
+    for r in doomed:
+        store.commit.drop_partition_dir(
             store,
-            None,
-            store.config.hot_path,
-            PARTITION_COLS,
-            cdf_df=victims.coalesce(max(1, min(32, rows // 1_000_000 + 1))),
-            drop_prefixes=_hot_partition_prefixes(store, pairs),
+            f"{store.config.hot_path}/tag={r.tag}/part_start={r.part_start}",
         )
+    if doomed:
         store.invalidate_hot_cache()
-    else:
-        for r in doomed:
-            store.commit.drop_partition_dir(
-                store,
-                f"{store.config.hot_path}/tag={r.tag}"
-                f"/part_start={r.part_start}",
-            )
-        if doomed:
-            store.invalidate_hot_cache()
     if drop_cold:
         cold_doomed = (
             cold_snapshots(store)

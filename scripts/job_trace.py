@@ -60,7 +60,7 @@ def _install(spark):
 
     for name in (
         "write_df", "write", "flush_l0", "_fold_staged", "_fold_on_driver",
-        "initialize", "_recover_staging", "_append_hot",
+        "initialize", "_recover_staging",
     ):
         wrap(S.TimeseriesStore, name, f"store.{name}")
     for name in (

@@ -1,6 +1,5 @@
-"""Adversarial hardening of the round-14 surfaces: the dropped-name
-remint under racing schema evolutions and the manifest-hot ingest
-cursor on empty micro-batches."""
+"""Adversarial hardening of a round-14 surface: the dropped-name
+remint under racing schema evolutions."""
 
 from __future__ import annotations
 
@@ -121,42 +120,3 @@ class TestRemintRaces:
             for r in commit.read_table(host, path, None).collect()
         )
         assert got == [(1, None), (2, None), (8, 88), (9, 99)]
-
-
-class TestManifestHotIngestCursor:
-    def test_empty_batch_advances_the_cursor(self, spark, tmp_path):
-        """An empty micro-batch still lands a (metadata+empty) commit
-        with its cursor, so replay detection never regresses."""
-        from redis_lsm_timeseries_spark.config import EngineConfig
-        from redis_lsm_timeseries_spark.store import TimeseriesStore
-        from redis_lsm_timeseries_spark.streaming.ingest import (
-            make_maintenance_batch_handler,
-        )
-
-        cfg = EngineConfig(
-            root=str(tmp_path / "mh"), partition_width=5,
-            manifest_hot=True,
-        )
-        store = TimeseriesStore(spark, cfg, commit=ManifestCommit())
-        store.initialize()
-        handler = make_maintenance_batch_handler(
-            store, str(tmp_path / "ckpt"),
-            partition_age_threshold_s=3600.0,
-        )
-        empty = spark.createDataFrame(
-            [], "tag string, ts long, value string"
-        )
-        handler(empty, 0)
-        hot = store.config.hot_path
-        assert store.commit.read_app_meta(store, hot).get(
-            "sink:hot-ingest:stream"
-        ) == 0
-        handler(
-            spark.createDataFrame([("T", 1, "a")],
-                                  "tag string, ts long, value string"),
-            1,
-        )
-        assert store.commit.read_app_meta(store, hot).get(
-            "sink:hot-ingest:stream"
-        ) == 1
-        assert store.hot().count() == 1

@@ -6,17 +6,9 @@ applying every row-level op copy-on-write and one merge-on-read
 after every step — then after compaction materializes the DVs, and
 after vacuum reclaims the blobs. Any divergence in clause semantics,
 position bookkeeping, superseding-union logic, or the DV read path
-shows up as the first differing step.
-
-Also pins merge-on-read on the engine's own flagship table: a
-manifest-hot store whose hot member takes a DV point-delete keeps
-serving exact LWW range reads, and its compaction lifecycle
-materializes the vector."""
+shows up as the first differing step."""
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
 
 from redis_lsm_timeseries_spark.commit import CommitHost, ManifestCommit
 from redis_lsm_timeseries_spark.maintenance import (
@@ -144,36 +136,3 @@ class TestDvEquivalenceDifferential:
             b = sorted(map(tuple, commit.read_table(
                 host, mor, version=vm).collect()))
             assert a == b
-
-
-class TestManifestHotDvIntegration:
-    def test_hot_point_delete_serves_lww_reads(self, spark, tmp_path):
-        from redis_lsm_timeseries_spark.config import EngineConfig
-        from redis_lsm_timeseries_spark.store import TimeseriesStore
-
-        cfg = EngineConfig(
-            root=str(tmp_path / "mh"), partition_width=10,
-            manifest_hot=True,
-        )
-        s = TimeseriesStore(spark, cfg, commit=ManifestCommit())
-        s.initialize()
-        for tag, base in (("A", 0), ("B", 0)):
-            s.write(
-                [(tag, base + i, f"{tag}{base + i}") for i in range(5)],
-                ingest_ts=1_000,
-            )
-            s.flush_l0()
-        # DV point-delete one (tag, ts) member row on the hot member
-        dk = spark.createDataFrame([("A", 2)], "tag string, ts long")
-        st = delete_rows(
-            s, cfg.hot_path, dk, ["tag", "ts"],
-            commit=s.commit, mode="dv",
-        )
-        assert st.files_rewritten >= 1
-        got = sorted(
-            (r.tag, r.ts)
-            for r in s.read_range({"A": (0, 9)}).collect()
-        )
-        assert got == [("A", 0), ("A", 1), ("A", 3), ("A", 4)]
-        # B untouched
-        assert s.read_range({"B": (0, 9)}).count() == 5

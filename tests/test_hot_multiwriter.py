@@ -36,17 +36,9 @@ from redis_lsm_timeseries_spark.tiering import compact, maintenance_lease
 T0 = 1_000_000
 
 
-def _mk(spark, tmp_path, name="engine", manifest_hot=False):
-    cfg = EngineConfig(
-        root=str(tmp_path / name), partition_width=1_000,
-        manifest_hot=manifest_hot,
-    )
-    if manifest_hot:
-        from redis_lsm_timeseries_spark.commit import ManifestCommit
-
-        s = TimeseriesStore(spark, cfg, commit=ManifestCommit())
-    else:
-        s = TimeseriesStore(spark, cfg)
+def _mk(spark, tmp_path, name="engine"):
+    cfg = EngineConfig(root=str(tmp_path / name), partition_width=1_000)
+    s = TimeseriesStore(spark, cfg)
     s.initialize()
     return s
 
@@ -91,16 +83,14 @@ def _second_writer(spark, store):
 
 
 class TestRowBatchWritesVsMaintenance:
-    @pytest.mark.parametrize("manifest_hot", [False, True],
-                             ids=["directory", "manifest_hot"])
     def test_concurrent_writes_and_compaction_lose_nothing(
-        self, spark, tmp_path, manifest_hot
+        self, spark, tmp_path
     ):
         """Writer B hammers leaseless row-batch writes (with LWW
         updates) while writer A runs compaction cycles. Every key must
         read back with its latest value — the L0 protocol's guarantee
         under real concurrency."""
-        a = _mk(spark, tmp_path, manifest_hot=manifest_hot)
+        a = _mk(spark, tmp_path)
         b = _second_writer(spark, a)
         n_batches, keys_per_batch = 8, 20
         compact_errors: list[Exception] = []
@@ -216,17 +206,12 @@ class TestBulkLoadLease:
         self, spark, tmp_path
     ):
         a = _mk(spark, tmp_path)
-        real = a._append_hot
-
-        def crash(df, **kw):
-            raise RuntimeError("bulk job died")
-
-        a._append_hot = crash
-        try:
-            with pytest.raises(RuntimeError, match="bulk job died"):
-                a.write_df(self._df(spark), ingest_ts=T0)
-        finally:
-            a._append_hot = real
+        # every task of the bulk write job fails
+        dying = self._df(spark).withColumn(
+            "value", F.raise_error(F.lit("bulk job died")).cast("string")
+        )
+        with pytest.raises(Exception, match="bulk job died"):
+            a.write_df(dying, ingest_ts=T0)
         # lease released: the retry needs no steal, and no partial rows
         a.write_df(self._df(spark), ingest_ts=T0)
         assert a.read_all().count() == 10

@@ -435,166 +435,6 @@ class TestFeedPredicates:
         assert all(k <= 100 for k, _ in got)
 
 
-class TestEngineMaintenanceFeedTransparency:
-    """r13: the engine's OWN maintenance emits CDF — LWW compaction
-    stages its losing duplicates and purge-ack its evicted members as
-    typed delete rows in the same atomic commit, so a keyed mirror of
-    the hot table survives the cron jobs with O(changed rows) work
-    and ZERO resyncs (VERDICT r12 #1)."""
-
-    IDENTITY = ["tag", "ts", "ingest_ts", "writer_id", "seq"]
-
-    def _store(self, spark, tmp_path):
-        from redis_lsm_timeseries_spark.config import EngineConfig
-        from redis_lsm_timeseries_spark.store import TimeseriesStore
-
-        cfg = EngineConfig(
-            root=str(tmp_path / "engine"), partition_width=5,
-            manifest_hot=True,
-        )
-        s = TimeseriesStore(spark, cfg, commit=ManifestCommit())
-        s.initialize()
-        return s
-
-    @staticmethod
-    def _hot_rows(store, path=None):
-        path = path or store.config.hot_path
-        df = store.commit.read_table(store, path, None)
-        return sorted(
-            (r.tag, r.ts, r.value, r.ingest_ts, r.writer_id, r.seq)
-            for r in df.collect()
-        )
-
-    def test_lww_compaction_mirrors_as_pure_deletes(
-        self, spark, tmp_path
-    ):
-        from redis_lsm_timeseries_spark.tiering import compact
-
-        store = self._store(spark, tmp_path)
-        store.write(
-            [("GapTag", 1, "One"), ("GapTag", 2, "Two"),
-             ("SerialTag", 3, "Three")],
-            ingest_ts=1_000_000,
-        )
-        store.write(
-            [("GapTag", 2, "NewTwo"), ("SerialTag", 3, "NewThree")],
-            ingest_ts=2_000_000,
-        )
-        store.flush_l0()
-        dst = str(tmp_path / "mirror")
-        m0 = mirror_changes(
-            store, store.config.hot_path, dst,
-            keys=self.IDENTITY, commit=store.commit,
-        )
-        assert m0.mode == "initial" and m0.rows_mirrored == 5
-
-        metrics = compact(store)
-        assert metrics.rows_before - metrics.rows_after == 2
-
-        m1 = mirror_changes(
-            store, store.config.hot_path, dst,
-            keys=self.IDENTITY, commit=store.commit,
-        )
-        # the acceptance criterion: NOT a resync, and O(losers) work
-        assert m1.mode == "row-incremental"
-        assert m1.rows_mirrored == 2
-        assert self._hot_rows(store, dst) == self._hot_rows(store)
-        assert mirror_changes(
-            store, store.config.hot_path, dst,
-            keys=self.IDENTITY, commit=store.commit,
-        ).mode == "noop"
-
-    def test_compaction_cdf_rows_are_exactly_the_losers(
-        self, spark, tmp_path
-    ):
-        from redis_lsm_timeseries_spark.tiering import compact
-
-        store = self._store(spark, tmp_path)
-        store.write([("T", 1, "old")], ingest_ts=1_000_000)
-        store.write([("T", 1, "new"), ("T", 2, "only")],
-                    ingest_ts=2_000_000)
-        store.flush_l0()
-        commit = store.commit
-        v0 = commit.table_versions(store, store.config.hot_path)[-1]
-        compact(store)
-        changes = commit.read_row_changes(
-            store, store.config.hot_path, v0
-        )
-        rows = changes.collect()
-        assert [
-            (r.tag, r.ts, r.value, r[commit.CDF_TYPE_COL])
-            for r in rows
-        ] == [("T", 1, "old", "delete")]
-
-    def test_purge_ack_mirrors_as_keyed_deletes(self, spark, tmp_path):
-        from redis_lsm_timeseries_spark.tiering import (
-            purge_ack,
-            purge_scan,
-        )
-
-        store = self._store(spark, tmp_path)
-        t0 = 1_000_000
-        store.write(
-            [("GapTag", 1, "One"), ("GapTag", 2, "Two"),
-             ("GapTag", 10, "Ten"), ("SerialTag", 1, "S1")],
-            ingest_ts=t0,
-        )
-        store.flush_l0()
-        dst = str(tmp_path / "mirror")
-        mirror_changes(
-            store, store.config.hot_path, dst,
-            keys=self.IDENTITY, commit=store.commit,
-        )
-        marks = purge_scan(
-            store, partition_age_threshold_s=0, now_ms=t0 + 10_000_000
-        )
-        assert marks
-        # a write AFTER the mark must survive the ack AND arrive at
-        # the mirror as a plain insert
-        store.write([("GapTag", 2, "PostMark")], ingest_ts=t0 + 1)
-        for m in marks:
-            assert purge_ack(store, m.purge_id, now_ms=t0 + 10_000_001)
-        m1 = mirror_changes(
-            store, store.config.hot_path, dst,
-            keys=self.IDENTITY, commit=store.commit,
-        )
-        assert m1.mode == "row-incremental"
-        got = self._hot_rows(store, dst)
-        assert got == self._hot_rows(store)
-        assert [(r[0], r[1], r[2]) for r in got] == [
-            ("GapTag", 2, "PostMark")
-        ]
-
-
-    def test_retention_mirrors_as_keyed_deletes(self, spark, tmp_path):
-        from redis_lsm_timeseries_spark.tiering import apply_retention
-
-        store = self._store(spark, tmp_path)
-        t0 = 1_000_000
-        store.write(
-            [("A", 1, "old1"), ("A", 2, "old2"),  # partition 0 (W=5)
-             ("A", 12, "keep")],                  # partition 10
-            ingest_ts=t0,
-        )
-        store.flush_l0()
-        dst = str(tmp_path / "mirror")
-        mirror_changes(
-            store, store.config.hot_path, dst,
-            keys=self.IDENTITY, commit=store.commit,
-        )
-        m0 = apply_retention(store, older_than_ms=10)
-        assert m0.partitions_dropped == 1 and m0.rows_dropped == 2
-        m = mirror_changes(
-            store, store.config.hot_path, dst,
-            keys=self.IDENTITY, commit=store.commit,
-        )
-        assert m.mode == "row-incremental"
-        assert m.rows_mirrored == 2
-        got = self._hot_rows(store, dst)
-        assert got == self._hot_rows(store)
-        assert [(r[0], r[1]) for r in got] == [("A", 12)]
-
-
 class TestKeyedMirrorTransform:
     """r13 (VERDICT r12 #6): transform composes with keys — a mirror
     can reshape (column subset, per-tenant filter) AND survive

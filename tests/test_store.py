@@ -532,23 +532,19 @@ class TestLayoutTokenGranularity:
         assert {r.ts for r in store.hot().collect()} == {1, 2}
 
 
-class TestManifestHotPrunedReads:
-    """r13: with the manifest-managed hot tier, range reads plan over
-    only the committed files whose (tag, part_start, ts) stats overlap
-    the request — file skipping from the log, before Catalyst's
-    directory pruning even lists anything."""
+class TestHotOverManifestCommit:
+    """A ``ManifestCommit`` store keeps the directory hot tier: range
+    reads plan over the requested ``tag=``/``part_start=`` directories
+    only, and no hot mutation creates a version log under ``hot/`` (a
+    store refuses to open a hot tier that has one)."""
 
     def _store(self, spark, tmp_path):
         from redis_lsm_timeseries_spark.commit import ManifestCommit
 
-        cfg = EngineConfig(
-            root=str(tmp_path / "mh"), partition_width=10,
-            manifest_hot=True,
-        )
+        cfg = EngineConfig(root=str(tmp_path / "mh"), partition_width=10)
         s = TimeseriesStore(spark, cfg, commit=ManifestCommit())
         s.initialize()
-        # four partitions across two tags, one flush per batch so
-        # every partition is its own committed file set
+        # four partitions across two tags, one flush per batch
         for tag, base in (("A", 0), ("A", 100), ("B", 0), ("B", 100)):
             s.write(
                 [(tag, base + i, f"{tag}{base + i}") for i in range(3)],
@@ -560,18 +556,23 @@ class TestManifestHotPrunedReads:
     def test_range_read_plans_over_overlapping_files_only(
         self, spark, tmp_path
     ):
+        from unittest import mock
+
         s = self._store(spark, tmp_path)
-        df = s.read_range({"A": (0, 5)})
+        driver = s.read_range({"A": (0, 5)})
+        # a cap of 0 bytes hands the read to the Spark plan
+        with mock.patch.object(store_module, "MAX_DRIVER_READ_BYTES", 0):
+            df = s.read_range({"A": (0, 5)})
         files = [f for f in df.inputFiles() if "/hot/" in f]
         all_files = [f for f in s.hot().inputFiles() if "/hot/" in f]
         assert len(all_files) >= 4
         assert files and len(files) < len(all_files)
         assert all("tag=A" in f for f in files)
         assert all("part_start=0" in f for f in files)
-        # and values are exactly the requested band
-        assert sorted((r.tag, r.ts) for r in df.collect()) == [
-            ("A", 0), ("A", 1), ("A", 2),
-        ]
+        # and values are exactly the requested band, on both paths
+        want = [("A", 0), ("A", 1), ("A", 2)]
+        assert sorted((r.tag, r.ts) for r in df.collect()) == want
+        assert sorted((r.tag, r.ts) for r in driver.collect()) == want
 
     def test_unflushed_l0_rows_still_visible_through_pruned_read(
         self, spark, tmp_path
@@ -596,11 +597,73 @@ class TestManifestHotPrunedReads:
             ("B", 0),
         ]
 
-    def test_manifest_hot_requires_capable_backend(self, spark, tmp_path):
-        from redis_lsm_timeseries_spark.errors import ValidationError
+    def test_retired_hot_log_refused(self, spark, tmp_path):
+        import os
 
-        cfg = EngineConfig(
-            root=str(tmp_path / "bad"), manifest_hot=True
+        from redis_lsm_timeseries_spark.commit import ManifestCommit
+
+        cfg = EngineConfig(root=str(tmp_path / "old"))
+        os.makedirs(f"{cfg.hot_path}/_log")
+        for commit in (None, ManifestCommit()):
+            with pytest.raises(ValidationError, match="retired") as err:
+                TimeseriesStore(spark, cfg, commit=commit)
+            assert f"{cfg.hot_path}/_log" in str(err.value)
+
+    def test_hot_mutations_never_create_a_hot_log(self, spark, tmp_path):
+        """The maintenance cycle from an empty root: the hot tier of a
+        ``ManifestCommit`` store stays a plain directory after every
+        step, and reads back what the same cycle leaves on
+        ``ParquetLeaseCommit``."""
+        import os
+
+        from redis_lsm_timeseries_spark.commit import (
+            ManifestCommit,
+            ParquetLeaseCommit,
         )
-        with pytest.raises(ValidationError, match="manifest_hot"):
-            TimeseriesStore(spark, cfg)  # default directory backend
+        from redis_lsm_timeseries_spark.tiering import (
+            apply_retention,
+            compact,
+            purge_ack_many,
+            purge_scan,
+        )
+
+        ranges = {"A": (0, 200), "B": (0, 200)}
+
+        def cycle(name, commit):
+            cfg = EngineConfig(root=str(tmp_path / name), partition_width=10)
+            s = TimeseriesStore(spark, cfg, commit=commit)
+            s.initialize()
+            hot_log = f"{cfg.hot_path}/_log"
+            steps = [
+                lambda: s.write(
+                    [(t, ts, f"{t}{ts}") for t in "AB" for ts in (1, 2, 101, 102, 151)],
+                    ingest_ts=1_000,
+                ),
+                s.flush_l0,
+                lambda: s.write([("A", 101, "new"), ("B", 2, None)], ingest_ts=2_000),
+                s.flush_l0,
+                lambda: purge_ack_many(
+                    s,
+                    [m.purge_id for m in purge_scan(s, 0, 1, now_ms=5_000)],
+                ),
+                lambda: s.write([("A", 102, "newer")], ingest_ts=3_000),
+                lambda: compact(s),
+                lambda: apply_retention(s, older_than_ms=110),
+            ]
+            for step in steps:
+                step()
+                assert not os.path.exists(hot_log)
+            hot = sorted(tuple(r) for r in s.read_range(ranges).collect())
+            union = sorted(
+                tuple(r)
+                for r in s.read_range(ranges, include_cold=True).collect()
+            )
+            return hot, union
+
+        manifest = cycle("manifest", ManifestCommit())
+        assert manifest == cycle("parquet", ParquetLeaseCommit())
+        hot, union = manifest
+        # the one mark took (A, 0) to cold; retention dropped every
+        # hot partition that ends by 110
+        assert hot == [("A", 151, "A151"), ("B", 151, "B151")]
+        assert union == [("A", 1, "A1"), ("A", 2, "A2"), *hot]

@@ -340,142 +340,3 @@ class TestIngestLeaseContention:
         calls["n"] = -10_000  # every attempt fails -> bounded raise
         with pytest.raises(ConcurrentMaintenanceError):
             handler(batch, 1)
-
-
-class TestManifestHotStreaming:
-    """r13: the maintenance-compatible streaming mode composes with
-    the manifest-managed hot tier — every micro-batch is one atomic
-    manifest commit (foreachBatch -> write_df -> the seam), the purge
-    pipeline runs mid-stream, and the raw file-sink mode refuses."""
-
-    def _mh_store(self, spark, tmp_path):
-        from redis_lsm_timeseries_spark.commit import ManifestCommit
-        from redis_lsm_timeseries_spark.config import EngineConfig
-        from redis_lsm_timeseries_spark.store import TimeseriesStore
-
-        cfg = EngineConfig(
-            root=str(tmp_path / "mh"), partition_width=5,
-            manifest_hot=True,
-        )
-        s = TimeseriesStore(spark, cfg, commit=ManifestCommit())
-        s.initialize()
-        return s
-
-    def test_ingest_with_maintenance_commits_through_the_log(
-        self, spark, tmp_path, stream_dirs
-    ):
-        from redis_lsm_timeseries_spark.streaming import (
-            start_hot_ingest_with_maintenance,
-        )
-
-        store = self._mh_store(spark, tmp_path)
-        input_dir, ckpt = stream_dirs
-        rows = [("GapTag", 1, "One"), ("GapTag", 7, "Seven"),
-                ("SerialTag", 2, "Two")]
-        _land_batch(spark, input_dir, rows, batch=0)
-        q = start_hot_ingest_with_maintenance(
-            store,
-            read_sample_stream(spark, f"{input_dir}/*"),
-            ckpt,
-            partition_age_threshold_s=0.0,
-        )
-        assert q.awaitTermination(300)
-        assert q.exception() is None
-        # the hot tier IS a manifest table now: versioned, readable
-        # through the committed file list, purge pipeline included
-        assert store.commit.tracks_changes(store, store.config.hot_path)
-        assert store.commit.table_versions(
-            store, store.config.hot_path
-        )
-        out = {
-            (r.tag, r.ts): r.value
-            for r in store.read_range(
-                {"GapTag": (0, 100), "SerialTag": (0, 100)},
-                include_cold=True,
-            ).collect()
-        }
-        assert out == {(t, ts): v for t, ts, v in rows}
-
-    def test_raw_file_sink_refuses_manifest_hot(
-        self, spark, tmp_path, stream_dirs
-    ):
-        from redis_lsm_timeseries_spark.errors import ValidationError
-
-        store = self._mh_store(spark, tmp_path)
-        input_dir, ckpt = stream_dirs
-        _land_batch(spark, input_dir, [("t", 1, "v")], batch=0)
-        with pytest.raises(ValidationError, match="manifest"):
-            start_hot_ingest(
-                store, read_sample_stream(spark, f"{input_dir}/*"), ckpt
-            )
-
-    def test_replayed_batch_writes_nothing_on_manifest_hot(
-        self, spark, tmp_path, stream_dirs
-    ):
-        """r14 exactly-once: a foreachBatch replay (crash between the
-        batch's side effects and Spark's checkpoint commit = calling
-        the handler twice with one batch_id) is detected by the
-        per-writer batch cursor committed ATOMICALLY with the L1 files
-        — the replay appends NO files and NO duplicate members, where
-        directory mode holds transient byte-identical duplicates."""
-        from redis_lsm_timeseries_spark.streaming.ingest import (
-            make_maintenance_batch_handler,
-        )
-
-        store = self._mh_store(spark, tmp_path)
-        _, ckpt = stream_dirs
-        handler = make_maintenance_batch_handler(
-            store, ckpt, partition_age_threshold_s=3600.0
-        )
-        batch = spark.createDataFrame(
-            [("T", 1, "a"), ("T", 2, "b")], WRITE_SCHEMA
-        )
-        handler(batch, 0)
-        hot = store.config.hot_path
-        files_v1 = store.commit.member_files(store, hot)
-        v1 = store.commit.table_versions(store, hot)[-1]
-        assert store.hot().count() == 2
-        handler(batch, 0)  # replay: cursor says committed -> no write
-        assert store.commit.member_files(store, hot) == files_v1
-        assert store.commit.table_versions(store, hot)[-1] == v1
-        assert store.hot().count() == 2  # zero duplicates ON DISK
-        # the cursor is the manifest_sink idiom under a sink: key
-        cur = store.commit.read_app_meta(store, hot).get(
-            "sink:hot-ingest:stream"
-        )
-        assert cur == 0
-        # the next batch advances normally
-        handler(
-            spark.createDataFrame([("T", 3, "c")], WRITE_SCHEMA), 1
-        )
-        assert store.hot().count() == 3
-        assert store.commit.read_app_meta(store, hot).get(
-            "sink:hot-ingest:stream"
-        ) == 1
-        out = {
-            (r.tag, r.ts): r.value
-            for r in store.read_range({"T": (0, 10)}).collect()
-        }
-        assert out == {("T", 1): "a", ("T", 2): "b", ("T", 3): "c"}
-
-    def test_stale_cursor_regression_raises_on_manifest_hot(
-        self, spark, tmp_path, stream_dirs
-    ):
-        """A batch id BELOW cursor-1 means two queries share the
-        writer_id or a checkpoint was reused — loud error, not a
-        silent skip."""
-        from redis_lsm_timeseries_spark.errors import ValidationError
-        from redis_lsm_timeseries_spark.streaming.ingest import (
-            make_maintenance_batch_handler,
-        )
-
-        store = self._mh_store(spark, tmp_path)
-        _, ckpt = stream_dirs
-        handler = make_maintenance_batch_handler(
-            store, ckpt, partition_age_threshold_s=3600.0
-        )
-        handler(spark.createDataFrame([("T", 1, "a")], WRITE_SCHEMA), 5)
-        with pytest.raises(ValidationError, match="writer_id"):
-            handler(
-                spark.createDataFrame([("T", 2, "b")], WRITE_SCHEMA), 3
-            )

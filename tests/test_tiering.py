@@ -39,15 +39,14 @@ GAP_SERIAL = [
 T0 = 1_000_000
 
 
-@pytest.fixture(params=["parquet", "manifest", "manifest_hot"])
+@pytest.fixture(params=["parquet", "manifest"])
 def store(spark, tmp_path, request):
-    """Every tiering lifecycle test runs against ALL commit postures:
-    the directory-mode ParquetLeaseCommit, the transactional
-    ManifestCommit (VERDICT r8 #2) with the default directory-mode hot
-    tier, and — r13 — ManifestCommit with the MANIFEST-MANAGED hot
-    tier (EngineConfig.manifest_hot: L1 appends/overwrites/drops are
-    log commits, reads resolve the committed file list). Identical
-    observable semantics across all three is the seam's contract."""
+    """Every tiering lifecycle test runs against both commit backends:
+    the directory-mode ParquetLeaseCommit and the transactional
+    ManifestCommit (VERDICT r8 #2), whose purge log and cold snapshots
+    are version-logged while the hot tier stays a directory layout.
+    Identical observable semantics across both is the seam's
+    contract."""
     from redis_lsm_timeseries_spark.config import EngineConfig
     from redis_lsm_timeseries_spark.store import TimeseriesStore
 
@@ -55,10 +54,7 @@ def store(spark, tmp_path, request):
         ParquetLeaseCommit() if request.param == "parquet"
         else ManifestCommit()
     )
-    cfg = EngineConfig(
-        root=str(tmp_path / "engine"), partition_width=5,
-        manifest_hot=(request.param == "manifest_hot"),
-    )
+    cfg = EngineConfig(root=str(tmp_path / "engine"), partition_width=5)
     s = TimeseriesStore(spark, cfg, commit=commit)
     s.initialize()
     return s
@@ -142,26 +138,12 @@ class TestPurgeAck:
         marks = purge_scan(store, 0, 10, now_ms=T0 + 1_000)
         gap0 = next(m for m in marks if (m.tag, m.part_start) == ("GapTag", 0))
         purge_ack(store, gap0.purge_id, now_ms=T0 + 2_000)
-        if store.commit.tracks_changes(store, store.config.hot_path):
-            # manifest-hot: "directory removal" is a manifest edit
-            # (physical files follow at vacuum's horizon) — the index
-            # analog is the committed file list
-            files = store.commit.member_files(
-                store, store.config.hot_path
-            )
-            assert not any(
-                f.startswith("tag=GapTag/part_start=0/") for f in files
-            )
-            assert any(
-                f.startswith("tag=GapTag/part_start=10/") for f in files
-            )
-        else:
-            assert not os.path.exists(
-                f"{store.config.hot_path}/tag=GapTag/part_start=0"
-            )
-            assert os.path.exists(
-                f"{store.config.hot_path}/tag=GapTag/part_start=10"
-            )
+        assert not os.path.exists(
+            f"{store.config.hot_path}/tag=GapTag/part_start=0"
+        )
+        assert os.path.exists(
+            f"{store.config.hot_path}/tag=GapTag/part_start=10"
+        )
         # read_index no longer lists the vanished partition.
         parts = {
             (r.tag, r.part_start)
