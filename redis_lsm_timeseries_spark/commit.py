@@ -266,6 +266,14 @@ class TableCommit:
         how many files the scan plans over."""
         return self.read_table(store, path, schema, version=version)
 
+    def driver_table_files(self, store, path: str) -> list[str] | None:
+        """The data files of the table, or table directory, at ``path``
+        as a driver-side pyarrow reader would read them; None when this
+        backend decides what a reader sees through its own reader
+        (``read_table``), so a driver reader must hand the work to
+        Spark."""
+        return None
+
     def table_exists(self, store, path: str) -> bool:
         raise NotImplementedError
 
@@ -712,8 +720,14 @@ class ParquetLeaseCommit(TableCommit):
     def drop_partition_dir(self, store, path: str) -> None:
         """Remove one partition directory (dynamic overwrite rewrites
         only partitions present in the output, so emptied ones are
-        dropped explicitly). On a lakehouse table: DELETE WHERE."""
+        dropped explicitly), then each parent partition directory
+        (a ``key=value`` name) the removal left empty, such as the
+        ``tag=`` directory of a tag whose last partition went. On a
+        lakehouse table: DELETE WHERE."""
         store.fs.remove_tree(path)
+        parent = path.rsplit("/", 1)[0]
+        while "=" in parent.rsplit("/", 1)[-1] and store.fs.rmdir_if_empty(parent):
+            parent = parent.rsplit("/", 1)[0]
 
     def snapshot_rewrite(self, store, path: str, write_snapshot) -> None:
         """Replace a table directory with a freshly-written snapshot,
@@ -787,6 +801,33 @@ class ParquetLeaseCommit(TableCommit):
         if schema is not None:
             reader = reader.schema(schema)
         return reader.parquet(path)
+
+    def driver_table_files(self, store, path: str) -> list[str]:
+        """Every data file under ``path``, found by a walk through
+        ``store.fs`` that skips ``_``- and ``.``-prefixed names at each
+        level, as Spark's listing does. ``path`` resolves as in
+        ``read_table``: a table between the two renames of
+        ``snapshot_rewrite`` reads its ``.compact-old`` copy, and an
+        absent one holds no files."""
+        if not (
+            store.fs.exists(path)
+            and store.fs.count_files_with_suffix(path, ".parquet") > 0
+        ):
+            path += OLD_SUFFIX
+            if not store.fs.exists(path):
+                return []
+
+        def walk(d):
+            for name in sorted(store.fs.listdir(d)):
+                if name.startswith(("_", ".")):
+                    continue
+                child = f"{d}/{name}"
+                if store.fs.is_dir(child):
+                    yield from walk(child)
+                else:
+                    yield child
+
+        return list(walk(path))
 
     def table_exists(self, store, path: str) -> bool:
         return store.fs.exists(path) or store.fs.exists(path + OLD_SUFFIX)
@@ -2118,6 +2159,12 @@ class ManifestCommit(ParquetLeaseCommit):
         if change:
             mutate.change_meta = change
         self._commit(store, root, mutate)
+
+    def driver_table_files(self, store, path: str) -> None:
+        """None: a version-logged table's directory also holds files a
+        newer version superseded, and its live files may carry deletion
+        vectors or a column mapping, which only ``read_table`` applies."""
+        return None
 
     def drop_partition_dir(self, store, path: str) -> None:
         found = self._resolve_walk(store, path)

@@ -96,6 +96,10 @@ RANGE_RESULT_SCHEMA = T.StructType(
     ]
 )
 
+#: the columns a partition file of the hot or cold tier stores; ``tag``
+#: and ``part_start`` are its hive directory names
+DATA_COLS = [f.name for f in SAMPLE_SCHEMA.fields if f.name not in PARTITION_COLS]
+
 #: times ``read_range`` re-plans a driver-side read whose listed files
 #: a concurrent flush moved before they were read
 _DRIVER_READ_ATTEMPTS = 5
@@ -106,6 +110,82 @@ def _visible(names) -> list[str]:
     skip ``_``- and ``.``-prefixed names (markers, sidecars, in-flight
     temp files)."""
     return sorted(n for n in names if not n.startswith(("_", ".")))
+
+
+def partition_dir(root: str, tag: str, part_start: int) -> str:
+    """The hive directory of one ``(tag, part_start)`` partition under
+    ``root``, its ``tag=`` name built with Spark's own escaping (a tag
+    ``a:b`` lives in ``tag=a%3Ab``)."""
+    from redis_lsm_timeseries_spark.commit import ManifestCommit
+
+    return (
+        f"{root}/tag={ManifestCommit._escape_partition_value(tag)}"
+        f"/part_start={part_start}"
+    )
+
+
+@dataclass(frozen=True)
+class DriverFiles:
+    """Hot-tier data files as a driver-side read lists them, in
+    row-movement order: the L0 and uncommitted staging segments, then
+    the L1 partition files. ``partitions[i]`` is the ``(tag,
+    part_start)`` an L1 file's directory names give it, and None for a
+    segment, whose rows carry both columns."""
+
+    paths: list[str]
+    partitions: list[tuple[str, int] | None]
+
+    def l1(self) -> dict[tuple[str, int], list[str]]:
+        """The L1 files of each listed partition."""
+        out: dict[tuple[str, int], list[str]] = {}
+        for path, key in zip(self.paths, self.partitions):
+            if key is not None:
+                out.setdefault(key, []).append(path)
+        return out
+
+    def read(self, filter=None):
+        """The raw members of these files as an Arrow table of
+        ``SAMPLE_SCHEMA``'s columns, ``filter`` pushed down; an L1 file
+        takes ``tag`` and ``part_start`` from its directory names."""
+        return read_members(self.paths, self.partitions, filter)
+
+
+def driver_read_bytes(paths: list[str]) -> int | None:
+    """The total size of the local files ``paths``, or None when it is
+    over ``MAX_DRIVER_READ_BYTES``: the rule for what a driver-side
+    read (``read_range``'s, and the maintenance steps') may take on.
+    Raises ``FileNotFoundError`` when one of them is gone."""
+    from pyarrow import fs as pafs
+
+    infos = pafs.LocalFileSystem().get_file_info(paths)
+    if any(i.type == pafs.FileType.NotFound for i in infos):
+        raise FileNotFoundError("a listed file moved")
+    nbytes = sum(i.size for i in infos)
+    return None if nbytes > MAX_DRIVER_READ_BYTES else nbytes
+
+
+def read_members(paths: list[str], partitions: list, filter=None):
+    """Read ``SAMPLE_SCHEMA`` rows from local Parquet files with
+    pyarrow. ``partitions[i]`` is the ``(tag, part_start)`` that file
+    ``i`` holds but does not store (a hive partition file), or None
+    when the file stores both columns."""
+    import pyarrow.dataset as ds
+    from pyarrow import fs as pafs
+
+    from redis_lsm_timeseries_spark.commit import _driver_arrow_schema
+
+    exprs = [
+        ds.scalar(True)
+        if key is None
+        else (ds.field("tag") == key[0]) & (ds.field("part_start") == key[1])
+        for key in partitions
+    ]
+    dataset = ds.FileSystemDataset.from_paths(
+        paths, schema=_driver_arrow_schema(SAMPLE_SCHEMA),
+        format=ds.ParquetFileFormat(), filesystem=pafs.LocalFileSystem(),
+        partitions=exprs,
+    )
+    return dataset.to_table(filter=filter)
 
 
 @dataclass(frozen=True)
@@ -551,23 +631,20 @@ class TimeseriesStore:
         directory, named with Spark's escaping. Files are published by
         rename (``commit._driver_parquet_append``).
 
-        Then ``_SUCCESS`` at the L1 root is replaced by a new file:
-        ``_layout_token`` watches its inode to see appends into
-        partition directories that already existed."""
+        Then ``_SUCCESS`` at the L1 root is replaced
+        (``_mark_l1_changed``)."""
         import itertools
 
         import pyarrow.dataset as ds
         from pyarrow import fs as pafs
 
         from redis_lsm_timeseries_spark.commit import (
-            ManifestCommit,
             _driver_arrow_schema,
             _driver_parquet_append,
         )
 
         hot = self.config.hot_path
         schema = _driver_arrow_schema(SAMPLE_SCHEMA)
-        data_cols = [n for n in schema.names if n not in PARTITION_COLS]
         local = pafs.LocalFileSystem()
         paths = [f"{stage_dir}/{n}" for n in segments]
         chunks, size = [[]], 0
@@ -590,15 +667,24 @@ class TimeseriesStore:
                 n = sum(1 for _ in run)
                 _driver_parquet_append(
                     self.fs,
-                    table.slice(offset, n).select(data_cols),
-                    f"{hot}/tag={ManifestCommit._escape_partition_value(tag)}"
-                    f"/part_start={part_start}",
+                    table.slice(offset, n).select(DATA_COLS),
+                    partition_dir(hot, tag, part_start),
                 )
                 offset += n
             folded += offset
         if folded:
-            self.fs.write_text(f"{hot}/._SUCCESS.inprogress", "")
-            self.fs.rename(f"{hot}/._SUCCESS.inprogress", f"{hot}/_SUCCESS")
+            self._mark_l1_changed()
+
+    def _mark_l1_changed(self) -> None:
+        """Replace ``_SUCCESS`` at the L1 root with a new file, written
+        under a hidden name and renamed into place. A driver-side
+        writer calls it after changing files inside existing partition
+        directories: ``_layout_token`` watches the marker's inode,
+        which is how other store instances' cached ``hot()`` handles
+        see the change."""
+        hot = self.config.hot_path
+        self.fs.write_text(f"{hot}/._SUCCESS.inprogress", "")
+        self.fs.rename(f"{hot}/._SUCCESS.inprogress", f"{hot}/_SUCCESS")
 
     def _recover_staging(self) -> bool:
         """Fold or garbage-collect staging dirs a crashed flush left
@@ -788,23 +874,50 @@ class TimeseriesStore:
             )
         return self._union(tiers + l0_tiers)
 
-    def _hot_partition_dirs(self, predicates: Mapping) -> list[str] | None:
-        """The L1 partition directories ``predicates``
-        (a ``tag`` set and inclusive ``part_start`` bounds) can touch:
-        each requested tag's ``tag=`` directory, its path built with
-        Spark's own escaping and listed through ``self.fs``, keeping
-        the ``part_start=`` entries inside the bounds. None means
-        "read the full ``hot()``": a streaming file sink owns L1, and
-        its ``_spark_metadata`` log, not its directories, defines what
-        is committed."""
+    def _hot_partition_dirs(self, partitions) -> list[str] | None:
+        """The L1 partition directories that ``partitions`` selects,
+        listed through ``self.fs``:
+
+        - a ``_range_file_predicates`` mapping: each requested tag's
+          ``part_start=`` directories inside the inclusive bounds;
+        - a set of ``(tag, part_start)`` pairs: those that exist;
+        - None: every partition.
+
+        A requested tag's directory is named with Spark's own escaping
+        (``partition_dir``). None means "read the full ``hot()``": a
+        streaming file sink owns L1, and its ``_spark_metadata`` log,
+        not its directories, defines what is committed."""
         from redis_lsm_timeseries_spark.commit import ManifestCommit
 
         hot = self.config.hot_path
         if self.fs.exists(f"{hot}/_spark_metadata"):
             return None
-        lo, hi = predicates["part_start"]
+        if partitions is None:
+            names = _visible(self.fs.listdir(hot)) if self.fs.exists(hot) else []
+            tags = [
+                ManifestCommit._unescape_partition(n[len("tag="):])
+                for n in names
+                if n.startswith("tag=")
+            ]
+
+            def keep(tag, part_start):
+                return True
+
+        elif isinstance(partitions, Mapping):
+            tags = sorted(partitions["tag"])
+            lo, hi = partitions["part_start"]
+
+            def keep(tag, part_start):
+                return lo <= part_start <= hi
+
+        else:
+            tags = sorted({tag for tag, _ in partitions})
+
+            def keep(tag, part_start):
+                return (tag, part_start) in partitions
+
         dirs = []
-        for tag in sorted(predicates["tag"]):
+        for tag in tags:
             tag_dir = f"{hot}/tag={ManifestCommit._escape_partition_value(tag)}"
             if not self.fs.exists(tag_dir):
                 continue
@@ -817,7 +930,7 @@ class TimeseriesStore:
                 except ValueError:
                     # the hive NULL sentinel: no range matches NULL
                     continue
-                if lo <= part_start <= hi:
+                if keep(tag, part_start):
                     dirs.append(f"{tag_dir}/{name}")
         return dirs
 
@@ -969,26 +1082,10 @@ class TimeseriesStore:
         self, parsed: list[tuple], with_tombstones: bool
     ) -> DataFrame | None:
         """``read_range`` of the hot tier computed with pyarrow, or None
-        when the request needs the Spark plan: a sink-managed L1, or
-        candidate files over
-        ``MAX_DRIVER_READ_BYTES``.
-
-        The candidates are listed in row-movement order (L0, staging,
-        then the requested L1 partition directories; see
-        ``_unflushed_dirs``), read with the ``tag``/``ts``/``part_start``
-        predicate pushed down — L1 files take ``tag`` and
-        ``part_start`` from their directory names — then merged by
-        ``lww_latest_arrow``. A listed file that a concurrent flush has
-        moved by the time it is read re-plans the read; any other read
-        error (a corrupt file) raises."""
-        import pyarrow as pa
+        when the request needs the Spark plan: the requested members
+        (``_driver_members``, with the ``tag``/``ts``/``part_start``
+        predicate pushed down), merged by ``lww_latest_arrow``."""
         import pyarrow.dataset as ds
-        from pyarrow import fs as pafs
-
-        from redis_lsm_timeseries_spark.commit import (
-            ManifestCommit,
-            _driver_arrow_schema,
-        )
 
         w = self.config.partition_width
         predicate = ds.scalar(False)
@@ -1000,55 +1097,82 @@ class TimeseriesStore:
                 & (ds.field("part_start") >= start - (start % w))
                 & (ds.field("part_start") <= end)
             )
-        schema = _driver_arrow_schema(SAMPLE_SCHEMA)
-        local = pafs.LocalFileSystem()
-        file_predicates = self._range_file_predicates(parsed)
-        for _ in range(_DRIVER_READ_ATTEMPTS):
-            files, partitions = [], []
-            for d, names in self._unflushed_dirs():
-                files += [f"{d}/{n}" for n in names]
-                partitions += [ds.scalar(True)] * len(names)
-            dirs = self._hot_partition_dirs(file_predicates)
-            if dirs is None:
-                return None
-            try:
-                for d in dirs:
-                    tag_dir, part_dir = d.rsplit("/", 2)[1:]
-                    tag = ManifestCommit._unescape_partition(tag_dir.partition("=")[2])
-                    part_start = int(part_dir.partition("=")[2])
-                    known = (ds.field("tag") == tag) & (ds.field("part_start") == part_start)
-                    names = _visible(self.fs.listdir(d))
-                    files += [f"{d}/{n}" for n in names]
-                    partitions += [known] * len(names)
-            except FileNotFoundError:
-                continue  # a partition directory was dropped: re-plan
-            infos = local.get_file_info(files)
-            if any(i.type == pafs.FileType.NotFound for i in infos):
-                continue  # a flush moved a listed file: re-plan
-            if sum(i.size for i in infos) > MAX_DRIVER_READ_BYTES:
-                return None
-            dataset = ds.FileSystemDataset.from_paths(
-                files, schema=schema, format=ds.ParquetFileFormat(),
-                filesystem=local, partitions=partitions,
-            )
-            try:
-                table = dataset.to_table(filter=predicate)
-            except (OSError, pa.ArrowException):
-                if all(
-                    i.type == pafs.FileType.File for i in local.get_file_info(files)
-                ):
-                    raise
-                continue  # a flush moved a listed file before it was read
-            break
-        else:
-            return None  # files kept moving under the read: plan it in Spark
-        out = lww_latest_arrow(table)
+        got = self._driver_members(self._range_file_predicates(parsed), predicate)
+        if got is None:
+            return None
+        out = lww_latest_arrow(got[1])
         if not with_tombstones:
             out = out.filter(out["value"].is_valid())
         return self.spark.createDataFrame(
             out.select([f.name for f in RANGE_RESULT_SCHEMA.fields]),
             RANGE_RESULT_SCHEMA,
         )
+
+    def _driver_files(self, partitions, unflushed: bool = True) -> DriverFiles | None:
+        """List the hot-tier files that hold ``partitions``' members
+        (``_hot_partition_dirs``' forms) for a driver-side read, or
+        None when the work needs a Spark plan: a sink-managed L1, or
+        candidate files totalling more than ``MAX_DRIVER_READ_BYTES``.
+
+        The listing runs in row-movement order (see ``_unflushed_dirs``):
+        L0 and the uncommitted staging dirs first, unless ``unflushed``
+        is False, then the L1 partition directories. Raises
+        ``FileNotFoundError`` when a listed directory or file is gone
+        before the listing ends (a concurrent flush or drop moved it)."""
+        from redis_lsm_timeseries_spark.commit import ManifestCommit
+
+        paths, keys = [], []
+        if unflushed:
+            for d, names in self._unflushed_dirs():
+                paths += [f"{d}/{n}" for n in names]
+                keys += [None] * len(names)
+        dirs = self._hot_partition_dirs(partitions)
+        if dirs is None:
+            return None
+        for d in dirs:
+            tag_dir, part_dir = d.rsplit("/", 2)[1:]
+            key = (
+                ManifestCommit._unescape_partition(tag_dir.partition("=")[2]),
+                int(part_dir.partition("=")[2]),
+            )
+            names = _visible(self.fs.listdir(d))
+            paths += [f"{d}/{n}" for n in names]
+            keys += [key] * len(names)
+        if driver_read_bytes(paths) is None:
+            return None
+        return DriverFiles(paths, keys)
+
+    def _driver_members(
+        self, partitions, filter=None, unflushed: bool = True
+    ) -> tuple[DriverFiles, object] | None:
+        """The driver-side member reader: ``(files, members)`` for
+        ``partitions`` (``_hot_partition_dirs``' forms), where
+        ``members`` is the Arrow table of their raw rows, ``filter``
+        pushed down — or None when ``_driver_files`` hands the work to
+        Spark. A listed file that a concurrent flush moves before it
+        is read re-plans the read (up to ``_DRIVER_READ_ATTEMPTS``
+        times, then None); any other read error (a corrupt file)
+        raises."""
+        import pyarrow as pa
+        from pyarrow import fs as pafs
+
+        local = pafs.LocalFileSystem()
+        for _ in range(_DRIVER_READ_ATTEMPTS):
+            try:
+                files = self._driver_files(partitions, unflushed)
+            except FileNotFoundError:
+                continue  # a flush or drop moved a listed file: re-plan
+            if files is None:
+                return None
+            try:
+                return files, files.read(filter)
+            except (OSError, pa.ArrowException):
+                if all(
+                    i.type == pafs.FileType.File
+                    for i in local.get_file_info(files.paths)
+                ):
+                    raise
+        return None  # files kept moving under the read: plan it in Spark
 
     def read_all(
         self,

@@ -60,12 +60,15 @@ def _install(spark):
 
     for name in (
         "write_df", "write", "flush_l0", "_fold_staged", "_fold_on_driver",
-        "initialize", "_recover_staging",
+        "initialize", "_recover_staging", "_driver_members",
     ):
         wrap(S.TimeseriesStore, name, f"store.{name}")
     for name in (
         "purge_scan", "purge_ack_many", "compact", "compact_purge_log",
-        "_vacuum_locked", "_append_log", "apply_retention",
+        "_vacuum_locked", "_append_log", "apply_retention", "_driver_table",
+        "_coldest_on_driver", "_coldest_on_spark", "_snapshot_on_driver",
+        "_snapshot_on_spark", "_log_states", "_evict_on_driver",
+        "_evict_on_spark", "_compact_on_driver", "_compact_on_spark",
     ):
         wrap(T, name, f"tiering.{name}")
     for cls in (C.ParquetLeaseCommit, C.ManifestCommit):
@@ -75,21 +78,17 @@ def _install(spark):
             "append_tables", "replace_tables", "_commit", "_stage_in",
             "_write_checkpoint", "rewrite_files", "stage_dv",
             "dv_positions", "scan_member_subset", "prune_files",
-            "read_table",
+            "read_table", "driver_table_files",
         ):
             if name in cls.__dict__:
                 wrap(cls, name, f"{cls.__name__}.{name}")
     for name in (
-        "merge_into", "delete_rows", "update_rows",
-        "_resolve_source_counted", "_apply_dv_delete",
+        "merge_into", "delete_rows", "_resolve_source_counted",
+        "_apply_dv_delete",
     ):
         wrap(M, name, f"merge.{name}")
-    for name in (
-        "create_rollup", "refresh_rollup", "read_rollup", "_write_rollup",
-        "_refresh_incremental",
-    ):
-        if hasattr(R, name):
-            wrap(R, name, f"rollup.{name}")
+    for name in ("refresh_rollup", "_refresh_locked", "read_rollup"):
+        wrap(R, name, f"rollup.{name}")
     # the query plans import these BY NAME, so the module-level wraps
     # above don't intercept their calls — wrap the plan modules' own
     # references too (labels marked @plan)

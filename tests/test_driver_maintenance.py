@@ -1,0 +1,329 @@
+"""The maintenance steps on the driver: ``purge_scan``,
+``purge_ack_many`` and ``compact`` computed with pyarrow when their
+files pass ``read_range``'s rule, against the same steps on Spark
+(forced by a read cap of 0); eviction of tombstones and of tags whose
+directory names Spark escapes; emptied ``tag=`` directories; and
+crash-point sweeps over the driver-side ack and compaction."""
+
+from __future__ import annotations
+
+import os
+import shutil
+from collections import Counter
+from contextlib import nullcontext
+from unittest import mock
+
+import pytest
+
+from redis_lsm_timeseries_spark import store as store_module
+from redis_lsm_timeseries_spark.config import EngineConfig
+from redis_lsm_timeseries_spark.fs import StorageFilesystem
+from redis_lsm_timeseries_spark.schema import SAMPLE_SCHEMA
+from redis_lsm_timeseries_spark.store import TimeseriesStore
+from redis_lsm_timeseries_spark.tiering import (
+    apply_retention,
+    cold_snapshots,
+    compact,
+    purge_ack,
+    purge_ack_many,
+    purge_log,
+    purge_scan,
+)
+from store_helpers import TAGS, WIDTH, Crash, CrashAtCall, build_layered
+
+
+def _next_job_id(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def _open(spark, root) -> TimeseriesStore:
+    s = TimeseriesStore(spark, EngineConfig(root=str(root), partition_width=WIDTH))
+    s.initialize()
+    return s
+
+
+def _copy(spark, src: TimeseriesStore, root) -> TimeseriesStore:
+    shutil.copytree(src.config.root, root)
+    return _open(spark, root)
+
+
+def _rows(df) -> list[tuple]:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _hot_members(s) -> Counter:
+    return Counter(tuple(r) for r in s.hot().collect())
+
+
+def _driver_hot_members(s) -> Counter:
+    """``_hot_members`` through the driver-side member reader."""
+    return Counter(tuple(r.values()) for r in s._driver_members(None)[1].to_pylist())
+
+
+def _cold_members(s) -> Counter:
+    """Cold snapshot rows without their ``purge_id``, in ``hot()``'s
+    column order."""
+    cols = [f.name for f in SAMPLE_SCHEMA.fields]
+    return Counter(tuple(r) for r in cold_snapshots(s).select(*cols).collect())
+
+
+def _log_rows(s) -> list[tuple]:
+    return sorted(tuple(r)[1:] for r in purge_log(s).collect())
+
+
+def _tag_dirs(s) -> list[str]:
+    hot = s.config.hot_path
+    return sorted(n for n in os.listdir(hot) if n.startswith("tag=")) if os.path.exists(hot) else []
+
+
+def _path(on_spark: bool):
+    """The Spark path is forced by a driver read cap of 0."""
+    return mock.patch.object(store_module, "MAX_DRIVER_READ_BYTES", 0) if on_spark else nullcontext()
+
+
+def _run(spark, s, on_spark, fn, *args, **kw):
+    """``fn`` on the driver path or on Spark (``_path``); the driver
+    path must start no Spark job, the Spark one some."""
+    with _path(on_spark):
+        j0 = _next_job_id(spark)
+        out = fn(s, *args, **kw)
+        jobs = _next_job_id(spark) - j0
+    assert (jobs > 0) if on_spark else (jobs == 0), (fn.__name__, jobs)
+    return out
+
+
+@pytest.fixture(scope="module")
+def layered(spark, tmp_path_factory):
+    return build_layered(spark, tmp_path_factory.mktemp("maint") / "layered")
+
+
+class TestBothPathsAgree:
+    """Each step on a copy of the ``layered`` store, once per path:
+    equal hot rows, cold snapshot rows (but for ``purge_id``), purge-log
+    rows and returned marks or metrics."""
+
+    def _purge(self, spark, layered, root, on_spark):
+        s = _copy(spark, layered, root)
+        marks = _run(spark, s, on_spark, purge_scan, 0.0, 1000, now_ms=1000)
+        # a write into the first marked partition after the mark survives
+        s.writer_id = "late"
+        s.write([(marks[0].tag, marks[0].part_start + 1, "late")], ingest_ts=2000)
+        acked = _run(spark, s, on_spark, purge_ack_many, [m.purge_id for m in marks], now_ms=3000)
+        with _path(on_spark):
+            reack = purge_ack(s, marks[0].purge_id, now_ms=4000)
+        return s, marks, acked, reack
+
+    def test_purge_scan_ack_and_reack(self, spark, layered, tmp_path):
+        driver, d_marks, d_acked, d_reack = self._purge(spark, layered, tmp_path / "d", False)
+        sp, s_marks, s_acked, s_reack = self._purge(spark, layered, tmp_path / "s", True)
+        key = [(m.tag, m.part_start, m.n_rows) for m in d_marks]
+        assert key == [(m.tag, m.part_start, m.n_rows) for m in s_marks]
+        # every partition, the ``tie`` ones and the tombstones included
+        assert {t for t, _, _ in key} == {*TAGS, "tie"}
+        assert list(d_acked.values()) == list(s_acked.values()) == [True] * len(key)
+        assert d_reack is s_reack is False
+        assert _hot_members(driver) == _hot_members(sp)
+        late = ("a:b", -19, "late")
+        assert [m[:3] for m in _hot_members(driver)] == [late]
+        assert _cold_members(driver) == _cold_members(sp)
+        assert _log_rows(driver) == _log_rows(sp)
+        # fully evicted partitions leave no directory, escaped tags too
+        assert _tag_dirs(driver) == _tag_dirs(sp) == ["tag=a%3Ab"]
+        everything = sorted(_rows(layered.read_all()) + [late], key=repr)
+        assert _rows(driver.read_all(include_cold=True)) == everything
+
+    @pytest.mark.parametrize("max_partitions", [None, 3])
+    def test_compact(self, spark, layered, tmp_path, max_partitions):
+        stores, metrics = [], []
+        for on_spark in (False, True):
+            s = _copy(spark, layered, tmp_path / str(on_spark))
+            metrics.append(_run(spark, s, on_spark, compact, max_partitions))
+            stores.append(s)
+        assert metrics[0] == metrics[1]
+        assert metrics[0].rows_after < metrics[0].rows_before
+        assert _hot_members(stores[0]) == _hot_members(stores[1])
+        for s in stores:
+            assert _rows(s.read_all(with_tombstones=True)) == _rows(layered.read_all(with_tombstones=True))
+        if max_partitions is None:
+            keys = Counter(m[:2] for m in _hot_members(stores[0]))
+            assert max(keys.values()) == 1
+            # tombstone winners are kept, as are the value-decided ties
+            assert ("a:b", 0, None) in {m[:3] for m in _hot_members(stores[0])}
+
+    def test_purge_log_compaction(self, spark, layered, tmp_path):
+        logs = []
+        for on_spark in (False, True):
+            s = _copy(spark, layered, tmp_path / str(on_spark))
+            marks = purge_scan(s, 0.0, 2, now_ms=1000)
+            purge_ack_many(s, [m.purge_id for m in marks], now_ms=2000)
+            before = _log_rows(s)
+            _run(spark, s, on_spark, compact)
+            log_dir = s.config.purge_log_path
+            assert len([n for n in os.listdir(log_dir) if n.endswith(".parquet")]) == 1
+            assert _log_rows(s) == before
+            logs.append(before)
+        assert logs[0] == logs[1]
+
+
+@pytest.mark.parametrize("on_spark", [False, True], ids=["driver", "spark"])
+class TestEviction:
+    def test_tombstone_partition_evicted_and_dropped(self, spark, tmp_path, on_spark):
+        s = _open(spark, tmp_path / "engine")
+        s.write([("a", 1, "x"), ("a", 2, None)], ingest_ts=100)
+        s.flush_l0()
+        marks = _run(spark, s, on_spark, purge_scan, 0.0, 10, now_ms=1000)
+        assert _run(spark, s, on_spark, purge_ack_many, [m.purge_id for m in marks]) == {marks[0].purge_id: True}
+        assert _rows(s.hot()) == []
+        assert _tag_dirs(s) == []
+
+    def test_escaped_tag_evicted_and_dropped(self, spark, tmp_path, on_spark):
+        s = _open(spark, tmp_path / "engine")
+        s.write([("a:b", 1, "x"), ("a:b", 2, "y"), ("plain", 1, "z")], ingest_ts=100)
+        s.flush_l0()
+        marks = _run(spark, s, on_spark, purge_scan, 0.0, 1, now_ms=1000)
+        assert [(m.tag, m.part_start) for m in marks] == [("a:b", 0)]
+        _run(spark, s, on_spark, purge_ack_many, [marks[0].purge_id])
+        assert [r[:3] for r in _rows(s.hot())] == [("plain", 1, "z")]
+        assert _tag_dirs(s) == ["tag=plain"]
+        assert _rows(s.read_all(include_cold=True)) == [("a:b", 1, "x"), ("a:b", 2, "y"), ("plain", 1, "z")]
+
+
+def test_retention_drops_escaped_tags_and_their_directories(spark, tmp_path):
+    s = _open(spark, tmp_path / "engine")
+    s.write([("a:b", 1, "x"), ("a:b", 2, "y"), ("plain", 1, "z"), ("plain", 55, "w")], ingest_ts=100)
+    s.flush_l0()
+    marks = purge_scan(s, 0.0, 1, now_ms=1000)
+    assert [(m.tag, m.part_start) for m in marks] == [("a:b", 0)]
+    metrics = apply_retention(s, older_than_ms=WIDTH, drop_cold=True)
+    assert (metrics.partitions_dropped, metrics.rows_dropped) == (2, 3)
+    assert [r[:3] for r in _rows(s.hot())] == [("plain", 55, "w")]
+    assert _tag_dirs(s) == ["tag=plain"]
+    assert _rows(cold_snapshots(s)) == []
+    assert not [n for n in os.listdir(s.config.cold_path) if n.startswith("purge_id=")]
+
+
+def test_emptied_tag_directories_are_removed(spark, tmp_path):
+    """A tag whose last partition goes, through retention or through a
+    full-eviction ack, leaves no empty ``tag=`` directory behind."""
+    s = _open(spark, tmp_path / "engine")
+    s.write([("p", 1, "x"), ("q", 1, "y"), ("q", 55, "z"), ("r", 55, "w")], ingest_ts=100)
+    s.flush_l0()
+    apply_retention(s, older_than_ms=WIDTH)
+    assert _tag_dirs(s) == ["tag=q", "tag=r"]
+    marks = purge_scan(s, 0.0, 10, now_ms=1000)
+    assert {(m.tag, m.part_start) for m in marks} == {("q", 50), ("r", 50)}
+    purge_ack_many(s, [m.purge_id for m in marks if m.tag == "r"])
+    assert _tag_dirs(s) == ["tag=q"]
+
+
+@pytest.mark.parametrize("how", ["retention", "spark-ack"])
+def test_other_instance_sees_a_partition_drop(spark, tmp_path, how):
+    """A partition dropped from a ``tag=`` directory that stays, by
+    retention or by a full eviction on the Spark path, is seen by
+    another store instance that cached its ``hot()`` handle before."""
+    a = _open(spark, tmp_path / "engine")
+    a.write([("t", 1, "x"), ("t", 55, "y")], ingest_ts=100)
+    a.flush_l0()
+    assert _rows(a.read_all()) == [("t", 1, "x"), ("t", 55, "y")]
+    b = _open(spark, tmp_path / "engine")
+    if how == "retention":
+        apply_retention(b, older_than_ms=WIDTH)
+    else:
+        marks = purge_scan(b, 0.0, 1, now_ms=1000)
+        assert [(m.tag, m.part_start) for m in marks] == [("t", 0)]
+        _run(spark, b, True, purge_ack_many, [marks[0].purge_id])
+    assert _tag_dirs(a) == ["tag=t"]
+    assert _rows(a.read_all()) == [("t", 55, "y")]
+
+
+# ------------------------------------------------------ crash sweeps
+def _sweep(spark, tmp_path, prepared, step, check):
+    """Run ``step`` on a copy of ``prepared`` once to count its mutating
+    storage calls, then once per k dying at the k-th: ``check(fresh,
+    k)`` on a new store over the crashed copy; then the same writer
+    retries ``step`` and ``check(retried, None)`` must hold."""
+    dry = _copy(spark, prepared, tmp_path / "dry")
+    dry.fs = CrashAtCall()
+    step(dry)
+    n = len(dry.fs.ops)
+    assert n > 3
+    for k in range(1, n + 1):
+        s = _copy(spark, prepared, tmp_path / f"k{k}")
+        s.fs = CrashAtCall(crash_at=k)
+        with pytest.raises(Crash):
+            step(s)
+        check(_open(spark, s.config.root), k)
+        s.fs = StorageFilesystem()  # the same writer restarts: its lease re-acquires
+        step(s)
+        check(_open(spark, s.config.root), None)
+
+
+def _lww(s, **kw) -> list[tuple]:
+    return _rows(s.read_range({"a:b": (0, 40), "p": (0, 40)}, **kw))
+
+
+def test_purge_ack_crashed_at_every_storage_call(spark, tmp_path):
+    """For every k the ack dies at its k-th mutating storage call. A
+    fresh store reads hot∪cold as before the ack (which is also the
+    state after it), its hot tier keeps every member the snapshots do
+    not hold, and a retried ack reaches the after state."""
+    s = _open(spark, tmp_path / "prepared")
+    s.writer_id = "w"
+    s.write([("a:b", 1, "x"), ("a:b", 2, None), ("a:b", 12, "y"), ("p", 3, "z")], ingest_ts=100)
+    s.flush_l0()
+    s.write([("p", 4, "w")], ingest_ts=150)
+    marks = purge_scan(s, 0.0, 10, now_ms=1000)
+    assert len(marks) == 3
+    s.write([("a:b", 5, "late")], ingest_ts=2000)
+    ids = [m.purge_id for m in marks]
+    everything = sorted(
+        [("a:b", 1, "x"), ("a:b", 5, "late"), ("a:b", 12, "y"), ("p", 3, "z"), ("p", 4, "w")],
+        key=repr,
+    )
+    before = set(_hot_members(s))
+    snapshot = set(_cold_members(s))
+    survivors = before - snapshot
+    assert [m[:3] for m in survivors] == [("a:b", 5, "late")]
+
+    def check(fresh, k):
+        assert _rows(fresh.read_all(include_cold=True)) == everything, k
+        assert survivors <= set(_driver_hot_members(fresh)), k
+        if k is None:
+            assert set(_driver_hot_members(fresh)) == survivors
+            assert _lww(fresh) == [("a:b", 5, "late")]
+            assert _tag_dirs(fresh) == ["tag=a%3Ab"]
+            assert purge_ack_many(fresh, ids) == {pid: False for pid in ids}
+
+    _sweep(spark, tmp_path, s, lambda st: purge_ack_many(st, ids, now_ms=3000), check)
+
+
+def test_compact_crashed_at_every_storage_call(spark, tmp_path):
+    """For every k compaction (its purge-log rewrite included) dies at
+    its k-th mutating storage call. A fresh store reads the same LWW
+    rows and purge log on both read paths, holds no member that was not
+    there before, and a retried compaction leaves one member per key."""
+    s = _open(spark, tmp_path / "prepared")
+    s.writer_id = "w"
+    s.write([("q", 30, "gone")], ingest_ts=50)
+    s.write([("a:b", 1, "x"), ("a:b", 2, "y"), ("a:b", 12, "v"), ("p", 3, "z")], ingest_ts=100)
+    s.flush_l0()
+    purge_ack_many(s, [m.purge_id for m in purge_scan(s, 0.0, 1, now_ms=1000)])
+    s.write([("a:b", 1, "x2"), ("a:b", 2, None), ("p", 3, "z2")], ingest_ts=200)
+    s.flush_l0()
+    expected = _lww(s)
+    assert expected == [("a:b", 1, "x2"), ("a:b", 12, "v"), ("p", 3, "z2")]
+    with_tombstones = _lww(s, with_tombstones=True)
+    with_cold = _rows(s.read_all(include_cold=True))
+    log = _log_rows(s)
+    before = set(_hot_members(s))
+
+    def check(fresh, k):
+        assert _lww(fresh) == expected, k
+        assert _lww(fresh, with_tombstones=True) == with_tombstones, k
+        assert _rows(fresh.read_all(include_cold=True)) == with_cold, k
+        assert _log_rows(fresh) == log, k
+        assert set(_driver_hot_members(fresh)) <= before, k
+        if k is None:
+            assert max(Counter(m[:2] for m in _driver_hot_members(fresh)).values()) == 1
+
+    _sweep(spark, tmp_path, s, compact, check)

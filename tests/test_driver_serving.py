@@ -14,6 +14,7 @@ from redis_lsm_timeseries_spark import store as store_module
 from redis_lsm_timeseries_spark.config import EngineConfig
 from redis_lsm_timeseries_spark.fs import StorageFilesystem
 from redis_lsm_timeseries_spark.store import TimeseriesStore
+from store_helpers import MUTATING, Crash, CrashAtCall
 
 
 def _next_job_id(spark) -> int:
@@ -38,14 +39,10 @@ def _members(df) -> set[tuple]:
     return {tuple(r) for r in df.collect()}
 
 
-class _Crash(BaseException):
-    """A process dying mid-call: no ``except Exception`` cleanup runs."""
-
-
 class _CrashAtRename(StorageFilesystem):
     def rename(self, src, dst):
         if src.endswith(".inprogress"):
-            raise _Crash(src)
+            raise Crash(src)
         super().rename(src, dst)
 
 
@@ -67,44 +64,6 @@ class _RmdirAfterMakedirs(StorageFilesystem):
         if path == self.path:
             self.path = None
             self.rmdir_if_empty(path)
-
-
-#: the ``StorageFilesystem`` calls that change storage
-_MUTATING = ("makedirs", "rename", "write_text", "remove_file", "remove_tree", "rmdir_if_empty")
-
-
-class _CrashAtCall(StorageFilesystem):
-    """Records every mutating call; from the ``crash_at``-th on (1-based,
-    0 = never), each raises ``_Crash``: the process died, so nothing
-    after that point lands, its own cleanup included."""
-
-    def __init__(self, crash_at=0):
-        self.crash_at = crash_at
-        self.ops = []
-
-    def _call(self, op, *args):
-        self.ops.append(op)
-        if self.crash_at and len(self.ops) >= self.crash_at:
-            raise _Crash(f"{op}{args}")
-        return getattr(super(), op)(*args)
-
-    def makedirs(self, path):
-        self._call("makedirs", path)
-
-    def rename(self, src, dst):
-        self._call("rename", src, dst)
-
-    def write_text(self, path, text):
-        self._call("write_text", path, text)
-
-    def remove_file(self, path):
-        self._call("remove_file", path)
-
-    def remove_tree(self, path):
-        self._call("remove_tree", path)
-
-    def rmdir_if_empty(self, path):
-        return self._call("rmdir_if_empty", path)
 
 
 class _FlushWhenProbed(StorageFilesystem):
@@ -140,7 +99,7 @@ def test_write_interrupted_at_the_rename_leaves_no_segment(spark, tmp_path, monk
     s.write([("t", 1, "a")])
     s.flush_l0()
     s.fs = fs
-    with pytest.raises(_Crash):
+    with pytest.raises(Crash):
         s.write([("t", 2, "b")])
     names = os.listdir(s.config.l0_path)
     assert len(names) == 1 and names[0].startswith(".part-")
@@ -265,13 +224,13 @@ def test_flush_crashed_at_every_storage_call(spark, tmp_path, monkeypatch):
     dry = prepared(tmp_path / "dry")
     members = _members(dry.hot())
     assert len(members) == 9
-    dry.fs = _CrashAtCall()
+    dry.fs = CrashAtCall()
     dry.flush_l0()
-    assert set(dry.fs.ops) == set(_MUTATING)
+    assert set(dry.fs.ops) == set(MUTATING)
     for k in range(1, len(dry.fs.ops) + 1):
         s = prepared(tmp_path / f"k{k}")
-        s.fs = _CrashAtCall(crash_at=k)
-        with pytest.raises(_Crash):
+        s.fs = CrashAtCall(crash_at=k)
+        with pytest.raises(Crash):
             s.flush_l0()
         fresh = _store(spark, s.config.root)
         driver = fresh.read_range(ranges)

@@ -148,28 +148,43 @@ class TestRowBatchWritesVsMaintenance:
                 f"total rows {len(rows)}\n" + _dump_state(b, key)
             )
 
-    def test_write_after_compaction_scan_survives(self, spark, tmp_path):
+    @pytest.mark.parametrize("path", ["spark", "driver"])
+    def test_write_after_compaction_scan_survives(self, spark, tmp_path, monkeypatch, path):
         """A row-batch write landing while compaction is mid-flight
-        (after its hot scan) is in L0, not L1 — the partition overwrite
-        cannot touch it."""
+        (after its hot scan) is in L0, not L1 — the partition rewrite
+        cannot touch it. On the Spark path (forced by a driver read cap
+        of 0) the write lands before the partition overwrite; on the
+        driver path, before the rewritten partition's file is
+        published."""
+        from redis_lsm_timeseries_spark import store as store_module
+        from redis_lsm_timeseries_spark import tiering
+
         a = _mk(spark, tmp_path)
         b = _second_writer(spark, a)
         # seed duplicates so compaction has work
         a.write([("t", 100, "old")], ingest_ts=T0)
         a.write([("t", 100, "new")], ingest_ts=T0 + 1)
         a.flush_l0()
-        real = a.commit.overwrite_partitions
 
-        def racing_overwrite(store, df, path, cols, **kw):
-            # B's write lands between compaction's scan and its commit
-            b.write([("t", 100, "latest"), ("u", 5, "x")], ingest_ts=T0 + 2)
-            return real(store, df, path, cols, **kw)
+        def racing(real):
+            def run(*args, **kw):
+                # B's write lands between compaction's scan and its commit
+                b.write([("t", 100, "latest"), ("u", 5, "x")], ingest_ts=T0 + 2)
+                return real(*args, **kw)
 
-        a.commit.overwrite_partitions = racing_overwrite
-        try:
-            compact(a)
-        finally:
-            a.commit.overwrite_partitions = real
+            return run
+
+        if path == "spark":
+            monkeypatch.setattr(store_module, "MAX_DRIVER_READ_BYTES", 0)
+            monkeypatch.setattr(
+                a.commit, "overwrite_partitions", racing(a.commit.overwrite_partitions)
+            )
+        else:
+            monkeypatch.setattr(
+                tiering, "_driver_parquet_append", racing(tiering._driver_parquet_append)
+            )
+        compact(a)
+        monkeypatch.undo()
         got = {
             (r.tag, r.ts): r.value for r in b.read_all().collect()
         }

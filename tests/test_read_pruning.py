@@ -18,11 +18,7 @@ from redis_lsm_timeseries_spark.commit import ManifestCommit
 from redis_lsm_timeseries_spark.config import EngineConfig
 from redis_lsm_timeseries_spark.operators.lww import lww_latest
 from redis_lsm_timeseries_spark.store import RANGE_RESULT_SCHEMA, TimeseriesStore
-
-WIDTH = 10
-#: tags whose hive directory names need escaping, or hold a glob
-#: character Spark leaves unescaped (``}``), a space, or non-ASCII text
-TAGS = ["a:b", "c%d", "x=y", "p/q", "sp ace", "ü", "a}b", "plain"]
+from store_helpers import TAGS, WIDTH, build_layered
 
 
 def _next_job_id(spark) -> int:
@@ -65,35 +61,9 @@ class TestPartitionEscaping:
 
 @pytest.fixture(scope="module")
 def layered(spark, tmp_path_factory):
-    """Rows in L1 (bulk load and a flushed write), in L0, and in an
-    uncommitted staging dir; duplicate keys split across the tiers,
-    tombstones, negative ``ts``, and duplicate keys of tag ``tie``
-    whose ``(ingest_ts, writer_id, seq)`` are equal, so the value
-    decides (a tombstone lowest)."""
-    s = _store(spark, tmp_path_factory.mktemp("pruning") / "engine")
-    base = [(t, ts, f"{t}@{ts}") for t in TAGS for ts in range(-35, 36, 7)]
-    s.write_df(
-        spark.createDataFrame(base, "tag string, ts long, value string"),
-        ingest_ts=100,
-    )
-    # flushed into L1: overwrites one key per tag and adds new ones
-    s.write([(t, ts, f"flushed {t}@{ts}") for t in TAGS for ts in (-35, 40)], ingest_ts=200)
-    writer_id, s.writer_id = s.writer_id, "tie"
-    s.write([("tie", 1, "b"), ("tie", 2, "a"), ("tie", 3, None), ("tie", 4, "a")], ingest_ts=600)
-    s.flush_l0()
-    # in L0 below: the same (ingest_ts, writer_id, seq) per key
-    s.write([("tie", 1, "a"), ("tie", 2, None), ("tie", 3, "a"), ("tie", 4, "a")], ingest_ts=600)
-    s.writer_id = writer_id
-    # uncommitted staging: a flush that crashed after its L0 move
-    s.write([(t, -28, f"staged {t}") for t in TAGS], ingest_ts=300)
-    stage = f"{s.config.l0_staging_path}/crashed"
-    os.makedirs(stage)
-    for name in os.listdir(s.config.l0_path):
-        os.rename(f"{s.config.l0_path}/{name}", f"{stage}/{name}")
-    # L0: newer duplicates of L1 keys, and tombstones over L1 and L0 keys
-    s.write([(t, -21, f"l0 {t}") for t in TAGS] + [(t, 41, "new") for t in TAGS], ingest_ts=400)
-    s.write([(t, 0, None) for t in TAGS] + [(t, 41, None) for t in TAGS[:3]], ingest_ts=500)
-    return s
+    """``store_helpers.build_layered``: rows in L1, L0 and a crashed
+    flush's staging dir, with ties, tombstones and escaped tags."""
+    return build_layered(spark, tmp_path_factory.mktemp("pruning") / "engine")
 
 
 def _expected(store, ranges, with_tombstones=False):

@@ -480,7 +480,17 @@ class TestCommitSeam:
     transactional table operation through store.commit, so a lakehouse
     TableCommit drops in without touching tiering logic."""
 
-    def test_custom_commit_receives_every_operation(self, spark, tmp_path):
+    @pytest.mark.parametrize("on_spark", [True, False], ids=["spark", "driver"])
+    def test_custom_commit_receives_every_operation(self, spark, tmp_path, on_spark):
+        """On the Spark path (forced by a driver read cap of 0) every
+        table operation routes through the seam. On the driver path a
+        partially evicted hot partition is rewritten as a new file
+        instead of through ``overwrite_partitions``, because the hot
+        tier is always a plain directory layout (as ``flush_l0``'s
+        fold); the rest still routes through the seam."""
+        from unittest import mock
+
+        from redis_lsm_timeseries_spark import store as store_module
         from redis_lsm_timeseries_spark.commit import ParquetLeaseCommit
         from redis_lsm_timeseries_spark.config import EngineConfig
         from redis_lsm_timeseries_spark.store import TimeseriesStore
@@ -508,23 +518,25 @@ class TestCommitSeam:
                 calls.append("rewrite")
                 super().snapshot_rewrite(store, path, write_snapshot)
 
-        cfg = EngineConfig(root=str(tmp_path / "seam"), partition_width=5)
-        s = TimeseriesStore(spark, cfg, commit=Recording())
-        s.initialize()
-        s.write(GAP_SERIAL, ingest_ts=T0)
-        marks = purge_scan(s, 0, 10, now_ms=T0 + 1_000)
-        assert marks
-        assert "lock" in calls and "append" in calls
-        # ack a fully-evicted partition -> drop; write survivors first
-        # so another partition keeps rows -> overwrite
-        s.write([("GapTag", 11, "Eleven")], ingest_ts=T0 + 2_000)
-        acked = purge_ack_many(s, [m.purge_id for m in marks])
-        assert all(acked.values())
-        assert "drop" in calls and "overwrite" in calls
-        # force a multi-file protocol log, then compaction -> rewrite
-        _append_log(s, [("x1", "GapTag", 0, "marked", T0, 1)])
-        compact_purge_log(s)
-        assert "rewrite" in calls
+        cap = 0 if on_spark else store_module.MAX_DRIVER_READ_BYTES
+        with mock.patch.object(store_module, "MAX_DRIVER_READ_BYTES", cap):
+            cfg = EngineConfig(root=str(tmp_path / "seam"), partition_width=5)
+            s = TimeseriesStore(spark, cfg, commit=Recording())
+            s.initialize()
+            s.write(GAP_SERIAL, ingest_ts=T0)
+            marks = purge_scan(s, 0, 10, now_ms=T0 + 1_000)
+            assert marks
+            assert "lock" in calls and "append" in calls
+            # ack a fully-evicted partition -> drop; write survivors first
+            # so another partition keeps rows -> overwrite
+            s.write([("GapTag", 11, "Eleven")], ingest_ts=T0 + 2_000)
+            acked = purge_ack_many(s, [m.purge_id for m in marks])
+            assert all(acked.values())
+            assert "drop" in calls and ("overwrite" in calls) is on_spark
+            # force a multi-file protocol log, then compaction -> rewrite
+            _append_log(s, [("x1", "GapTag", 0, "marked", T0, 1)])
+            compact_purge_log(s)
+            assert "rewrite" in calls
         # behavior through the seam identical to the default: the
         # surviving post-mark write is still readable
         vals = {
