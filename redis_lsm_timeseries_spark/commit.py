@@ -203,6 +203,26 @@ def _driver_parquet_append(fs, table, dir_path: str) -> None:
         raise
 
 
+def _driver_parquet_replace(fs, table, dest: str) -> None:
+    """Replace the Parquet file ``dest`` with the Arrow ``table`` in one
+    rename: the bytes go to a hidden temp name beside it
+    (``.<name>.inprogress``), which then takes ``dest``'s name, so a
+    reader sees the old file or the new one, never both or neither.
+    ``dest``'s checksum sidecar goes first: a reader would check the
+    new bytes against it, while a file without one reads unchecked. A
+    write that raises removes its temp file; a crashed one leaves it
+    behind, inert."""
+    head, name = dest.rsplit("/", 1)
+    tmp = f"{head}/.{name}.inprogress"
+    fs.remove_file(f"{head}/.{name}.crc")
+    try:
+        _driver_parquet_file(table, tmp)
+        fs.rename(tmp, dest)
+    except Exception:
+        fs.remove_file(tmp)
+        raise
+
+
 class TableCommit:
     """Interface. Subclasses provide the operations above plus the
     read-side resolution (a transactional backend decides WHAT a
@@ -803,12 +823,12 @@ class ParquetLeaseCommit(TableCommit):
         return reader.parquet(path)
 
     def driver_table_files(self, store, path: str) -> list[str]:
-        """Every data file under ``path``, found by a walk through
-        ``store.fs`` that skips ``_``- and ``.``-prefixed names at each
-        level, as Spark's listing does. ``path`` resolves as in
-        ``read_table``: a table between the two renames of
-        ``snapshot_rewrite`` reads its ``.compact-old`` copy, and an
-        absent one holds no files."""
+        """Every data file under ``path``, from one recursive listing
+        through ``store.fs`` (``StorageFilesystem.list_files``), which
+        skips ``_``- and ``.``-prefixed names as Spark's listing does.
+        ``path`` resolves as in ``read_table``: a table between the two
+        renames of ``snapshot_rewrite`` reads its ``.compact-old``
+        copy, and an absent one holds no files."""
         if not (
             store.fs.exists(path)
             and store.fs.count_files_with_suffix(path, ".parquet") > 0
@@ -816,18 +836,7 @@ class ParquetLeaseCommit(TableCommit):
             path += OLD_SUFFIX
             if not store.fs.exists(path):
                 return []
-
-        def walk(d):
-            for name in sorted(store.fs.listdir(d)):
-                if name.startswith(("_", ".")):
-                    continue
-                child = f"{d}/{name}"
-                if store.fs.is_dir(child):
-                    yield from walk(child)
-                else:
-                    yield child
-
-        return list(walk(path))
+        return store.fs.list_files(path)
 
     def table_exists(self, store, path: str) -> bool:
         return store.fs.exists(path) or store.fs.exists(path + OLD_SUFFIX)

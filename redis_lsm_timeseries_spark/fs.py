@@ -202,6 +202,19 @@ class StorageFilesystem:
         except OSError:
             return None
 
+    def list_files(self, path: str) -> list[str]:
+        """Every file under the directory ``path``, recursively, as one
+        listing (an object store's recursive prefix LIST), skipping
+        ``_``- and ``.``-prefixed names at each level as Spark's
+        listing does: each directory's files in name order, then its
+        subdirectories in name order. A directory removed during the
+        walk lists as empty."""
+        out = []
+        for root, dirs, files in os.walk(path):
+            dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+            out += [f"{root}/{f}" for f in sorted(files) if not f.startswith(("_", "."))]
+        return out
+
     def count_files_with_suffix(self, path: str, suffix: str) -> int:
         """Recursive count of data files under a table root (purge-log
         compaction's should-I-run check)."""

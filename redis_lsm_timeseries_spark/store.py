@@ -36,13 +36,13 @@ Physical layout — a two-level LSM:
 Reads union both tiers. Range reads (``read_range``, ``read_index``,
 ``read_page``) plan over only the requested tags' partition
 directories, listed on the driver (``hot_pruned``), so a ``write()``
-costs the next read no re-listing of L1. A ``read_range`` of the
-hot tier whose candidate files are small
-(``MAX_DRIVER_READ_BYTES``) is answered on the driver with pyarrow and
-starts no Spark job; every other read is a Spark plan. Full-table
-reads (``hot``, ``read_all``) cache the table handle per store
-instance (mutators invalidate), so repeated full reads skip the file
-listing.
+costs the next read no re-listing of L1. A ``read_range`` (with or
+without the cold tier) or ``read_all(include_cold=True)`` whose
+candidate files are small (``MAX_DRIVER_READ_BYTES``) is answered on
+the driver with pyarrow and starts no Spark job; every other read is a
+Spark plan. Full-table reads of the hot tier (``hot``, ``read_all``)
+cache the table handle per store instance (mutators invalidate), so
+repeated full reads skip the file listing.
 
 Every listing of the hot tier runs in the order rows move between its
 parts — L0, then the uncommitted staging dirs, then L1 — so a
@@ -55,7 +55,7 @@ from __future__ import annotations
 import json
 import time
 import uuid
-from collections.abc import Iterable, Mapping
+from collections.abc import Callable, Iterable, Mapping
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -112,31 +112,90 @@ def _visible(names) -> list[str]:
     return sorted(n for n in names if not n.startswith(("_", ".")))
 
 
-def partition_dir(root: str, tag: str, part_start: int) -> str:
-    """The hive directory of one ``(tag, part_start)`` partition under
-    ``root``, its ``tag=`` name built with Spark's own escaping (a tag
-    ``a:b`` lives in ``tag=a%3Ab``)."""
+def tag_dir(root: str, tag: str) -> str:
+    """The hive directory of ``tag`` under ``root``, named with Spark's
+    own escaping (a tag ``a:b`` lives in ``tag=a%3Ab``)."""
     from redis_lsm_timeseries_spark.commit import ManifestCommit
 
+    return f"{root}/tag={ManifestCommit._escape_partition_value(tag)}"
+
+
+def partition_dir(root: str, tag: str, part_start: int) -> str:
+    """The hive directory of one ``(tag, part_start)`` partition under
+    ``root`` (``tag_dir``'s escaping)."""
+    return f"{tag_dir(root, tag)}/part_start={part_start}"
+
+
+def partition_key(part_dir: str) -> tuple[str, int]:
+    """The ``(tag, part_start)`` that the hive directory ``part_dir``
+    (``partition_dir``'s form) names."""
+    from redis_lsm_timeseries_spark.commit import ManifestCommit
+
+    tag_name, part_name = part_dir.rsplit("/", 2)[1:]
     return (
-        f"{root}/tag={ManifestCommit._escape_partition_value(tag)}"
-        f"/part_start={part_start}"
+        ManifestCommit._unescape_partition(tag_name.partition("=")[2]),
+        int(part_name.partition("=")[2]),
     )
 
 
 @dataclass(frozen=True)
+class PartitionFilter:
+    """The partitions a driver-side read takes: those of ``tags``
+    (every tag when None) that ``keep(tag, part_start)`` accepts."""
+
+    tags: frozenset | None
+    keep: Callable[[str, int], bool]
+
+    @classmethod
+    def of(cls, partitions) -> PartitionFilter:
+        """``partitions`` in any of its forms: a ``PartitionFilter``; a
+        ``_range_file_predicates`` mapping (each requested tag's
+        partitions inside the inclusive ``part_start`` bounds); a set
+        of ``(tag, part_start)`` pairs; None (every partition)."""
+        if partitions is None:
+            return cls(None, lambda tag, part_start: True)
+        if isinstance(partitions, PartitionFilter):
+            return partitions
+        if isinstance(partitions, Mapping):
+            lo, hi = partitions["part_start"]
+            return cls(frozenset(partitions["tag"]), lambda tag, part_start: lo <= part_start <= hi)
+        return cls(
+            frozenset(tag for tag, _ in partitions),
+            lambda tag, part_start: (tag, part_start) in partitions,
+        )
+
+
+def footer_max(path: str, column: str = "ingest_ts") -> tuple[int, object]:
+    """``(rows, max(column))`` of the Parquet file ``path`` from its
+    footer: the column statistics of every row group, or a read of the
+    one column when a row group has none (None for an empty file)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    meta = pq.read_metadata(path)
+    if meta.num_rows == 0:
+        return 0, None
+    col = meta.schema.names.index(column)
+    stats = [meta.row_group(i).column(col).statistics for i in range(meta.num_row_groups)]
+    if all(s is not None and s.has_min_max for s in stats):
+        return meta.num_rows, max(s.max for s in stats)
+    return meta.num_rows, pc.max(pq.read_table(path, columns=[column])[column]).as_py()
+
+
+@dataclass(frozen=True)
 class DriverFiles:
-    """Hot-tier data files as a driver-side read lists them, in
-    row-movement order: the L0 and uncommitted staging segments, then
-    the L1 partition files. ``partitions[i]`` is the ``(tag,
-    part_start)`` an L1 file's directory names give it, and None for a
-    segment, whose rows carry both columns."""
+    """Data files as a driver-side read lists them, in row-movement
+    order: the L0 and uncommitted staging segments, then the L1
+    partition files, then any cold snapshot files. ``partitions[i]`` is
+    the ``(tag, part_start)`` a partition file's directory names give
+    it, and None for a segment, whose rows carry both columns."""
 
     paths: list[str]
     partitions: list[tuple[str, int] | None]
 
     def l1(self) -> dict[tuple[str, int], list[str]]:
-        """The L1 files of each listed partition."""
+        """The L1 files of each listed partition, for a hot-only
+        listing."""
         out: dict[tuple[str, int], list[str]] = {}
         for path, key in zip(self.paths, self.partitions):
             if key is not None:
@@ -155,13 +214,19 @@ def driver_read_bytes(paths: list[str]) -> int | None:
     over ``MAX_DRIVER_READ_BYTES``: the rule for what a driver-side
     read (``read_range``'s, and the maintenance steps') may take on.
     Raises ``FileNotFoundError`` when one of them is gone."""
+    nbytes = sum(_file_sizes(paths))
+    return None if nbytes > MAX_DRIVER_READ_BYTES else nbytes
+
+
+def _file_sizes(paths: list[str]) -> list[int]:
+    """The sizes of the local files ``paths``. Raises
+    ``FileNotFoundError`` when one of them is gone."""
     from pyarrow import fs as pafs
 
     infos = pafs.LocalFileSystem().get_file_info(paths)
     if any(i.type == pafs.FileType.NotFound for i in infos):
         raise FileNotFoundError("a listed file moved")
-    nbytes = sum(i.size for i in infos)
-    return None if nbytes > MAX_DRIVER_READ_BYTES else nbytes
+    return [i.size for i in infos]
 
 
 def read_members(paths: list[str], partitions: list, filter=None):
@@ -875,16 +940,10 @@ class TimeseriesStore:
         return self._union(tiers + l0_tiers)
 
     def _hot_partition_dirs(self, partitions) -> list[str] | None:
-        """The L1 partition directories that ``partitions`` selects,
-        listed through ``self.fs``:
-
-        - a ``_range_file_predicates`` mapping: each requested tag's
-          ``part_start=`` directories inside the inclusive bounds;
-        - a set of ``(tag, part_start)`` pairs: those that exist;
-        - None: every partition.
-
+        """The L1 partition directories that ``partitions`` (any
+        ``PartitionFilter.of`` form) selects, listed through ``self.fs``.
         A requested tag's directory is named with Spark's own escaping
-        (``partition_dir``). None means "read the full ``hot()``": a
+        (``tag_dir``). None means "read the full ``hot()``": a
         streaming file sink owns L1, and its ``_spark_metadata`` log,
         not its directories, defines what is committed."""
         from redis_lsm_timeseries_spark.commit import ManifestCommit
@@ -892,36 +951,22 @@ class TimeseriesStore:
         hot = self.config.hot_path
         if self.fs.exists(f"{hot}/_spark_metadata"):
             return None
-        if partitions is None:
+        selection = PartitionFilter.of(partitions)
+        if selection.tags is None:
             names = _visible(self.fs.listdir(hot)) if self.fs.exists(hot) else []
             tags = [
                 ManifestCommit._unescape_partition(n[len("tag="):])
                 for n in names
                 if n.startswith("tag=")
             ]
-
-            def keep(tag, part_start):
-                return True
-
-        elif isinstance(partitions, Mapping):
-            tags = sorted(partitions["tag"])
-            lo, hi = partitions["part_start"]
-
-            def keep(tag, part_start):
-                return lo <= part_start <= hi
-
         else:
-            tags = sorted({tag for tag, _ in partitions})
-
-            def keep(tag, part_start):
-                return (tag, part_start) in partitions
-
+            tags = sorted(selection.tags)
         dirs = []
         for tag in tags:
-            tag_dir = f"{hot}/tag={ManifestCommit._escape_partition_value(tag)}"
-            if not self.fs.exists(tag_dir):
+            tag_path = tag_dir(hot, tag)
+            if not self.fs.exists(tag_path):
                 continue
-            for name in sorted(self.fs.listdir(tag_dir)):
+            for name in sorted(self.fs.listdir(tag_path)):
                 key, _, value = name.partition("=")
                 if key != "part_start":
                     continue
@@ -930,8 +975,8 @@ class TimeseriesStore:
                 except ValueError:
                     # the hive NULL sentinel: no range matches NULL
                     continue
-                if keep(tag, part_start):
-                    dirs.append(f"{tag_dir}/{name}")
+                if selection.keep(tag, part_start):
+                    dirs.append(f"{tag_path}/{name}")
         return dirs
 
     def cold(self, predicates: Mapping | None = None) -> DataFrame:
@@ -1049,22 +1094,22 @@ class TimeseriesStore:
         it participates in LWW (a newer NULL beats an older value) and is
         filtered from results unless ``with_tombstones``.
 
-        A small hot-only read — no ``include_cold``,
-        no streaming sink log, candidate files totalling at most
-        ``MAX_DRIVER_READ_BYTES`` — is computed on the driver instead
-        (``_read_range_on_driver``) and returned as a local relation,
-        whose ``collect()`` starts no Spark job. Both paths return the
-        same rows under the same schema (``RANGE_RESULT_SCHEMA``). A
-        driver-path result is a snapshot taken at call time; the Spark
-        path freezes its file list at plan time, also inside this
-        call.
+        A small read — no streaming sink log, candidate files
+        totalling at most ``MAX_DRIVER_READ_BYTES`` and, with
+        ``include_cold``, a cold tier the backend keeps as plain files
+        (``TableCommit.driver_table_files``) — is computed on the
+        driver instead (``_read_range_on_driver``) and returned as a
+        local relation, whose ``collect()`` starts no Spark job. Both
+        paths return the same rows under the same schema
+        (``RANGE_RESULT_SCHEMA``). A driver-path result is a snapshot
+        taken at call time; the Spark path freezes its file list at
+        plan time, also inside this call.
         """
         self._require_init()
         parsed = self._validate_ranges(ranges)
-        if not include_cold:
-            out = self._read_range_on_driver(parsed, with_tombstones)
-            if out is not None:
-                return out
+        out = self._read_range_on_driver(parsed, with_tombstones, include_cold)
+        if out is not None:
+            return out
         pred = self._prune_predicate(parsed)
         residual = self._residual_predicate(parsed)
 
@@ -1079,10 +1124,10 @@ class TimeseriesStore:
         return out.select("tag", "ts", "value")
 
     def _read_range_on_driver(
-        self, parsed: list[tuple], with_tombstones: bool
+        self, parsed: list[tuple], with_tombstones: bool, include_cold: bool
     ) -> DataFrame | None:
-        """``read_range`` of the hot tier computed with pyarrow, or None
-        when the request needs the Spark plan: the requested members
+        """``read_range`` computed with pyarrow, or None when the
+        request needs the Spark plan: the requested members
         (``_driver_members``, with the ``tag``/``ts``/``part_start``
         predicate pushed down), merged by ``lww_latest_arrow``."""
         import pyarrow.dataset as ds
@@ -1097,10 +1142,20 @@ class TimeseriesStore:
                 & (ds.field("part_start") >= start - (start % w))
                 & (ds.field("part_start") <= end)
             )
-        got = self._driver_members(self._range_file_predicates(parsed), predicate)
-        if got is None:
-            return None
-        out = lww_latest_arrow(got[1])
+        got = self._driver_members(
+            self._range_file_predicates(parsed), predicate, cold=include_cold
+        )
+        return None if got is None else self._driver_result(got[1], with_tombstones)
+
+    def _driver_result(self, members, with_tombstones: bool) -> DataFrame:
+        """The LWW winners of the Arrow table ``members`` as a local
+        relation of ``RANGE_RESULT_SCHEMA``, tombstones dropped unless
+        ``with_tombstones``. Exact duplicates (a member snapshotted to
+        cold and not yet acked out of hot) are equal in every column,
+        so ``lww_latest_arrow`` picks the same winner with or without
+        them, as the Spark path's identity dedup before ``lww_latest``
+        does."""
+        out = lww_latest_arrow(members)
         if not with_tombstones:
             out = out.filter(out["value"].is_valid())
         return self.spark.createDataFrame(
@@ -1108,45 +1163,78 @@ class TimeseriesStore:
             RANGE_RESULT_SCHEMA,
         )
 
-    def _driver_files(self, partitions, unflushed: bool = True) -> DriverFiles | None:
-        """List the hot-tier files that hold ``partitions``' members
-        (``_hot_partition_dirs``' forms) for a driver-side read, or
-        None when the work needs a Spark plan: a sink-managed L1, or
-        candidate files totalling more than ``MAX_DRIVER_READ_BYTES``.
+    def _driver_files(
+        self,
+        partitions,
+        unflushed: bool = True,
+        cold: bool | list[str] = False,
+        since: int | None = None,
+    ) -> DriverFiles | None:
+        """List the files that hold ``partitions``' members (any
+        ``PartitionFilter.of`` form) for a driver-side read, or None
+        when the work needs a Spark plan: a sink-managed L1, a cold
+        tier the backend does not keep as plain files
+        (``TableCommit.driver_table_files``), or candidate files
+        totalling more than ``MAX_DRIVER_READ_BYTES``.
 
-        The listing runs in row-movement order (see ``_unflushed_dirs``):
-        L0 and the uncommitted staging dirs first, unless ``unflushed``
-        is False, then the L1 partition directories. Raises
-        ``FileNotFoundError`` when a listed directory or file is gone
-        before the listing ends (a concurrent flush or drop moved it)."""
-        from redis_lsm_timeseries_spark.commit import ManifestCommit
+        The listing runs in row-movement order: L0 and the uncommitted
+        staging dirs first (see ``_unflushed_dirs``), unless
+        ``unflushed`` is False, then the L1 partition directories, then,
+        with ``cold``, the cold snapshot files, whose ``purge_id=/tag=/
+        part_start=`` directory names key them. A purge snapshots a
+        partition into cold before its ack removes it from hot, so a
+        member moving during the listing is listed at least once.
+        ``cold=True`` lists the snapshots here, after hot; a caller
+        holding the maintenance lease, under which no snapshot moves,
+        may pass the list of them it already made instead.
 
+        ``since`` keeps only the files whose footer ``max(ingest_ts)``
+        (``footer_max``) is at or past it; the byte cap applies to the
+        files kept, and the footers are read only until those pass it.
+        Raises ``FileNotFoundError`` when a listed directory or file is
+        gone before the listing ends (a concurrent flush or drop moved
+        it)."""
+        selection = PartitionFilter.of(partitions)
         paths, keys = [], []
         if unflushed:
             for d, names in self._unflushed_dirs():
                 paths += [f"{d}/{n}" for n in names]
                 keys += [None] * len(names)
-        dirs = self._hot_partition_dirs(partitions)
+        dirs = self._hot_partition_dirs(selection)
         if dirs is None:
             return None
         for d in dirs:
-            tag_dir, part_dir = d.rsplit("/", 2)[1:]
-            key = (
-                ManifestCommit._unescape_partition(tag_dir.partition("=")[2]),
-                int(part_dir.partition("=")[2]),
-            )
             names = _visible(self.fs.listdir(d))
             paths += [f"{d}/{n}" for n in names]
-            keys += [key] * len(names)
-        if driver_read_bytes(paths) is None:
-            return None
-        return DriverFiles(paths, keys)
+            keys += [partition_key(d)] * len(names)
+        if cold is True:
+            cold = self.commit.driver_table_files(self, self.config.cold_path)
+            if cold is None:
+                return None
+        for path in cold or []:
+            key = partition_key(path.rsplit("/", 1)[0])
+            if (selection.tags is None or key[0] in selection.tags) and selection.keep(*key):
+                paths.append(path)
+                keys.append(key)
+        if since is None:
+            return None if driver_read_bytes(paths) is None else DriverFiles(paths, keys)
+        kept, nbytes = [], 0
+        for i, size in enumerate(_file_sizes(paths)):
+            last = footer_max(paths[i])[1]
+            if last is None or last < since:
+                continue
+            nbytes += size
+            if nbytes > MAX_DRIVER_READ_BYTES:
+                return None
+            kept.append(i)
+        return DriverFiles([paths[i] for i in kept], [keys[i] for i in kept])
 
     def _driver_members(
-        self, partitions, filter=None, unflushed: bool = True
+        self, partitions, filter=None, unflushed: bool = True,
+        cold: bool | list[str] = False, since: int | None = None,
     ) -> tuple[DriverFiles, object] | None:
         """The driver-side member reader: ``(files, members)`` for
-        ``partitions`` (``_hot_partition_dirs``' forms), where
+        ``partitions`` (``_driver_files``' arguments), where
         ``members`` is the Arrow table of their raw rows, ``filter``
         pushed down — or None when ``_driver_files`` hands the work to
         Spark. A listed file that a concurrent flush moves before it
@@ -1159,7 +1247,7 @@ class TimeseriesStore:
         local = pafs.LocalFileSystem()
         for _ in range(_DRIVER_READ_ATTEMPTS):
             try:
-                files = self._driver_files(partitions, unflushed)
+                files = self._driver_files(partitions, unflushed, cold, since)
             except FileNotFoundError:
                 continue  # a flush or drop moved a listed file: re-plan
             if files is None:
@@ -1184,8 +1272,16 @@ class TimeseriesStore:
         has no all-tags read (its API is range-per-tag), but maintenance
         and analytics need one, and going through ``read_range`` would
         force the caller to first enumerate tags (an extra job) only to
-        build a disjunctive predicate that matches everything anyway."""
+        build a disjunctive predicate that matches everything anyway.
+
+        With ``include_cold``, computed on the driver under
+        ``read_range``'s rule; otherwise, and over the rule, a Spark
+        plan over the cached ``hot()`` handle."""
         self._require_init()
+        if include_cold:
+            got = self._driver_members(None, cold=True)
+            if got is not None:
+                return self._driver_result(got[1], with_tombstones)
         df = self.hot()
         if include_cold:
             df = df.unionByName(self.cold()).dropDuplicates(MEMBER_IDENTITY_COLS)

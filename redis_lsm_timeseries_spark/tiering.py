@@ -81,7 +81,9 @@ from redis_lsm_timeseries_spark.store import (
     DATA_COLS,
     TimeseriesStore,
     driver_read_bytes,
+    footer_max,
     partition_dir,
+    partition_key,
     read_members,
 )
 
@@ -319,9 +321,6 @@ def _partition_activity(files) -> dict[tuple, tuple[int, int]]:
     hot files: an L1 file's from its Parquet footer (row count and the
     column statistics, or a read of the one column when a row group
     has none), the L0 segments' from a read."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
     activity: dict[tuple, tuple[int, int]] = {}
 
     def add(key, last_seen, n):
@@ -332,16 +331,9 @@ def _partition_activity(files) -> dict[tuple, tuple[int, int]]:
 
     for key, paths in files.l1().items():
         for path in paths:
-            meta = pq.read_metadata(path)
-            if meta.num_rows == 0:
-                continue
-            col = meta.schema.names.index("ingest_ts")
-            stats = [meta.row_group(i).column(col).statistics for i in range(meta.num_row_groups)]
-            if all(s is not None and s.has_min_max for s in stats):
-                last_seen = max(s.max for s in stats)
-            else:
-                last_seen = pc.max(pq.read_table(path, columns=["ingest_ts"])["ingest_ts"]).as_py()
-            add(key, last_seen, meta.num_rows)
+            n, last_seen = footer_max(path)
+            if n:
+                add(key, last_seen, n)
     segments = [p for p, key in zip(files.paths, files.partitions) if key is None]
     if segments:
         per_part = read_members(segments, [None] * len(segments)).group_by(
@@ -923,9 +915,13 @@ def apply_retention(
     before the cutoff — ``part_start + W <= older_than_ms`` — as a
     whole-directory delete. A partition straddling the cutoff is
     KEPT in full: retention is partition-granular (chunk-granular in
-    Timescale terms), never a row rewrite, so the sweep costs one
-    metadata-narrow aggregate plus directory removals regardless of
-    data volume.
+    Timescale terms), never a row rewrite, so the sweep costs the
+    doomed-partition lookup plus directory removals regardless of data
+    volume. On the driver (see the module docstring) the lookup reads
+    the hot listing and its Parquet footers (``_partition_activity``)
+    and the cold snapshots' ``purge_id=/tag=/part_start=`` directory
+    names, and starts no Spark job; otherwise it is one metadata-narrow
+    aggregate per tier.
 
     ``drop_cold=True`` extends the sweep to cold-tier snapshots whose
     partition lies before the cutoff (the archive is otherwise
@@ -951,19 +947,29 @@ def apply_retention(
     store._require_l1_batch_writable()
     w = store.config.partition_width
     store.flush_l0()
-    doomed = (
-        store.hot()
-        .where(F.col("part_start") + F.lit(w) <= F.lit(int(older_than_ms)))
-        .groupBy("tag", "part_start")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("part_start", "tag")
-        .limit(int(max_partitions))
-        .collect()
+
+    def expired(part_start) -> bool:
+        return part_start + w <= older_than_ms
+
+    # one path for both tiers: the driver when the hot files pass the
+    # rule and the cold snapshots are plain files (only their names are
+    # read), else Spark
+    files = store._driver_files(None)
+    cold_paths = (
+        store.commit.driver_table_files(store, store.config.cold_path) if drop_cold else []
     )
-    rows = sum(r.n for r in doomed)
-    for r in doomed:
+    on_driver = files is not None and cold_paths is not None
+    if not on_driver:
+        doomed = _doomed_on_spark(store, older_than_ms, max_partitions)
+    else:
+        doomed = sorted(
+            (part_start, tag, n)
+            for (tag, part_start), (_, n) in _partition_activity(files).items()
+            if expired(part_start)
+        )[:max_partitions]
+    for part_start, tag, _ in doomed:
         store.commit.drop_partition_dir(
-            store, partition_dir(store.config.hot_path, r.tag, r.part_start)
+            store, partition_dir(store.config.hot_path, tag, part_start)
         )
     if doomed:
         # other instances' cached hot() handles see the drops by the
@@ -971,22 +977,50 @@ def apply_retention(
         store._mark_l1_changed()
         store.invalidate_hot_cache()
     if drop_cold:
-        cold_doomed = (
-            cold_snapshots(store)
-            .where(
-                F.col("part_start") + F.lit(w) <= F.lit(int(older_than_ms))
+        if not on_driver:
+            cold_doomed = _cold_doomed_on_spark(store, older_than_ms)
+        else:
+            # each snapshot file's directory names key it
+            part_dirs = {path.rsplit("/", 1)[0] for path in cold_paths}
+            cold_doomed = sorted(
+                (d.rsplit("/", 3)[1].partition("=")[2], *partition_key(d))
+                for d in part_dirs
+                if expired(partition_key(d)[1])
             )
-            .select("purge_id", "tag", "part_start")
-            .distinct()
-            .collect()
-        )
-        for r in cold_doomed:
+        for purge_id, tag, part_start in cold_doomed:
             store.commit.drop_partition_dir(
                 store,
-                partition_dir(
-                    f"{store.config.cold_path}/purge_id={r.purge_id}",
-                    r.tag,
-                    r.part_start,
-                ),
+                partition_dir(f"{store.config.cold_path}/purge_id={purge_id}", tag, part_start),
             )
-    return RetentionMetrics(len(doomed), rows)
+    return RetentionMetrics(len(doomed), sum(n for _, _, n in doomed))
+
+
+def _doomed_on_spark(store, older_than_ms, max_partitions) -> list[tuple]:
+    """``(part_start, tag, rows)`` of the oldest ``max_partitions`` hot
+    partitions lying wholly before ``older_than_ms``, from one Spark
+    aggregate over ``hot()``."""
+    w = store.config.partition_width
+    return [
+        (r.part_start, r.tag, r.n)
+        for r in store.hot()
+        .where(F.col("part_start") + F.lit(w) <= F.lit(int(older_than_ms)))
+        .groupBy("tag", "part_start")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .orderBy("part_start", "tag")
+        .limit(int(max_partitions))
+        .collect()
+    ]
+
+
+def _cold_doomed_on_spark(store, older_than_ms) -> list[tuple]:
+    """``(purge_id, tag, part_start)`` of the cold snapshot partitions
+    lying wholly before ``older_than_ms``, from one Spark query."""
+    w = store.config.partition_width
+    return [
+        (r.purge_id, r.tag, r.part_start)
+        for r in cold_snapshots(store)
+        .where(F.col("part_start") + F.lit(w) <= F.lit(int(older_than_ms)))
+        .select("purge_id", "tag", "part_start")
+        .distinct()
+        .collect()
+    ]

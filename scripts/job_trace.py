@@ -69,6 +69,7 @@ def _install(spark):
         "_coldest_on_driver", "_coldest_on_spark", "_snapshot_on_driver",
         "_snapshot_on_spark", "_log_states", "_evict_on_driver",
         "_evict_on_spark", "_compact_on_driver", "_compact_on_spark",
+        "_partition_activity", "_doomed_on_spark", "_cold_doomed_on_spark",
     ):
         wrap(T, name, f"tiering.{name}")
     for cls in (C.ParquetLeaseCommit, C.ManifestCommit):
@@ -87,8 +88,18 @@ def _install(spark):
         "_apply_dv_delete",
     ):
         wrap(M, name, f"merge.{name}")
-    for name in ("refresh_rollup", "_refresh_locked", "read_rollup"):
+    for name in (
+        "refresh_rollup", "_refresh_locked", "read_rollup", "_aggregate_arrow",
+        "_spark_select",
+    ):
         wrap(R, name, f"rollup.{name}")
+    # the refresh's data steps, on each path
+    for cls in (R._SparkSteps, R._DriverSteps):
+        for name in (
+            "watermark", "full", "boundary_rows", "probe", "bucket_stats",
+            "upper_boundary", "select", "merge", "publish",
+        ):
+            wrap(cls, name, f"rollup.{cls.__name__}.{name}")
     # the query plans import these BY NAME, so the module-level wraps
     # above don't intercept their calls — wrap the plan modules' own
     # references too (labels marked @plan)

@@ -16,6 +16,7 @@ from unittest import mock
 import pytest
 
 from redis_lsm_timeseries_spark import store as store_module
+from redis_lsm_timeseries_spark.commit import ManifestCommit
 from redis_lsm_timeseries_spark.config import EngineConfig
 from redis_lsm_timeseries_spark.fs import StorageFilesystem
 from redis_lsm_timeseries_spark.schema import SAMPLE_SCHEMA
@@ -149,6 +150,29 @@ class TestBothPathsAgree:
             assert max(keys.values()) == 1
             # tombstone winners are kept, as are the value-decided ties
             assert ("a:b", 0, None) in {m[:3] for m in _hot_members(stores[0])}
+
+    def test_apply_retention(self, spark, layered, tmp_path):
+        """Hot and cold partitions wholly before the cutoff go, tags
+        whose directory names Spark escapes among them; ``tie`` lives
+        in one partition and leaves no ``tag=`` directory."""
+        stores, metrics = [], []
+        for on_spark in (False, True):
+            s = _copy(spark, layered, tmp_path / str(on_spark))
+            assert len(purge_scan(s, 0.0, 30, now_ms=1000)) == 30
+            metrics.append(_run(spark, s, on_spark, apply_retention, older_than_ms=10, drop_cold=True))
+            stores.append(s)
+        assert metrics[0] == metrics[1]
+        assert metrics[0].partitions_dropped == 5 * len(TAGS) + 1
+        driver, sp = stores
+        assert _hot_members(driver) == _hot_members(sp)
+        assert _cold_members(driver) == _cold_members(sp)
+        assert min(m[6] for m in _hot_members(driver)) == 10
+        assert min(m[6] for m in _cold_members(driver)) == 10
+        assert _tag_dirs(driver) == _tag_dirs(sp) == sorted(
+            f"tag={ManifestCommit._escape_partition_value(t)}" for t in TAGS
+        )
+        kept = [r for r in _rows(layered.read_all()) if r[1] >= 10]
+        assert _rows(driver.read_all(include_cold=True)) == kept
 
     def test_purge_log_compaction(self, spark, layered, tmp_path):
         logs = []
