@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from redis_lsm_timeseries_spark.commit import ManifestCommit, ParquetLeaseCommit
 from redis_lsm_timeseries_spark.config import EngineConfig
-from redis_lsm_timeseries_spark.operators.lww import lww_latest
 from redis_lsm_timeseries_spark.plans.catalog import register
 from redis_lsm_timeseries_spark.session import pinned_shuffle_partitions
 from redis_lsm_timeseries_spark.sources.testdata import load_events
@@ -122,6 +121,13 @@ def tiering_purge_lifecycle_mhot(
 _LIFECYCLE_CACHE: dict[tuple, DataFrame] = {}
 
 
+def _outliving(df: DataFrame) -> DataFrame:
+    """``df`` in a form that outlives its temp store: a local relation
+    (a driver-side read's result) already holds its rows, and any other
+    plan is materialized by ``localCheckpoint``."""
+    return df if df.isLocal() else df.localCheckpoint(eager=True)
+
+
 def _run_lifecycle(
     spark: SparkSession, sf_dir: str, commit_cls: type = ParquetLeaseCommit,
     want: str = "hot",
@@ -182,20 +188,14 @@ def _run_lifecycle_inner(
         if purge_ack(store, marks[0].purge_id):
             raise RuntimeError("re-ack was not idempotent")
 
+        # read_all is read_range over every tag and the whole range,
+        # without the tag-enumeration job a range map would need. The
+        # hot read is the hot tier's LWW winners, tombstones included;
+        # the unified read is hot UNION cold, member-identity dedup, LWW.
         if want == "union":
-            # The unified read: hot UNION cold, member-identity dedup,
-            # LWW — read_all is read_range over every tag and the whole
-            # range, without the tag-enumeration job a range map would
-            # need.
-            out = store.read_all(include_cold=True).localCheckpoint(
-                eager=True
-            )
+            out = _outliving(store.read_all(include_cold=True))
         else:
-            out = (
-                lww_latest(store.hot())
-                .select("tag", "ts", "value")
-                .localCheckpoint(eager=True)
-            )
+            out = _outliving(store.read_all(with_tombstones=True))
         _LIFECYCLE_CACHE[key] = out
         return out
     finally:
@@ -291,8 +291,7 @@ def compaction_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             if metrics.rows_after >= metrics.rows_before:
                 raise RuntimeError(f"compaction removed nothing: {metrics}")
 
-            out = store.hot().select("tag", "ts", "value")
-            return out.localCheckpoint(eager=True)
+            return _outliving(store.hot().select("tag", "ts", "value"))
     finally:
         shutil.rmtree(base_dir, ignore_errors=True)
 
@@ -399,7 +398,7 @@ def rollup_incremental_lifecycle(
                     f"{m1.buckets_refreshed} buckets, phase2 "
                     f"{m2.buckets_refreshed}"
                 )
-            return read_rollup(store, "daily").localCheckpoint(eager=True)
+            return _outliving(read_rollup(store, "daily"))
         finally:
             shutil.rmtree(base_dir, ignore_errors=True)
 

@@ -23,7 +23,10 @@ Physical layout — a two-level LSM:
   reference fetches a whole partition and filters client-side
   (``index.js:262-263``), the Parquet scan gets the residual ``ts``
   predicate pushed to row-group min/max — strictly better (SURVEY.md
-  §4 P9). Bulk loads (``write_df``) land here directly, clustered.
+  §4 P9). Bulk loads (``write_df``) land here directly: a bounded
+  one is collected to the driver and written by ``flush_l0``'s run
+  writer, one file per ``(tag, part_start)``; a larger one, or one of
+  unknown size, is a Spark write clustered by ``repartition``.
 - L0 ``{root}/{settings-hash}/hot_l0``: flat Parquet segments, ONE
   file per row-batch ``write()``, written on the driver with pyarrow
   and published by rename, so a ``write()`` starts no Spark job. The
@@ -37,12 +40,11 @@ Reads union both tiers. Range reads (``read_range``, ``read_index``,
 ``read_page``) plan over only the requested tags' partition
 directories, listed on the driver (``hot_pruned``), so a ``write()``
 costs the next read no re-listing of L1. A ``read_range`` (with or
-without the cold tier) or ``read_all(include_cold=True)`` whose
-candidate files are small (``MAX_DRIVER_READ_BYTES``) is answered on
-the driver with pyarrow and starts no Spark job; every other read is a
-Spark plan. Full-table reads of the hot tier (``hot``, ``read_all``)
-cache the table handle per store instance (mutators invalidate), so
-repeated full reads skip the file listing.
+without the cold tier) or ``read_all`` (likewise) whose candidate
+files are small (``MAX_DRIVER_READ_BYTES``) is answered on the driver
+with pyarrow and starts no Spark job; every other read is a Spark
+plan. ``hot()`` caches the table handle per store instance (mutators
+invalidate), so repeated full Spark reads skip the file listing.
 
 Every listing of the hot tier runs in the order rows move between its
 parts — L0, then the uncommitted staging dirs, then L1 — so a
@@ -339,9 +341,12 @@ class TimeseriesStore:
         any other pin is respected only up to the cap: it can lower
         the count below the core count, never raise it (r18, ADVICE
         r17: an UNPINNED session still carrying the vanilla conf
-        default, 200, must not shuffle a small hot append into 200
-        tiny tasks/files). A conf value that is not an integer falls
-        back to defaultParallelism."""
+        default, 200, must not shuffle a hot append into 200 tiny
+        tasks/files). Since bounded ``write_df`` loads run on the
+        driver, the appends it sizes are those over
+        ``MAX_DRIVER_READ_BYTES`` or of unknown size (an RDD-backed
+        input). A conf value that is not an integer falls back to
+        defaultParallelism."""
         par = max(1, int(self.spark.sparkContext.defaultParallelism))
         try:
             return min(
@@ -517,17 +522,31 @@ class TimeseriesStore:
         ``tag, ts, value`` at minimum; ``ingest_ts/writer_id/seq`` kept
         if present). No batch-size cap — the 2,000-sample cap is client
         admission control (``index.js:12``), meaningless for a
-        distributed bulk load; validation here is schema-shape only.
+        distributed bulk load. Validation is the schema shape plus the
+        reference's two keys: a null or empty ``tag``, or a null
+        ``ts``, fails the load with nothing written (``index.js:102-119``).
 
-        ``cluster_by_partition`` (default) shuffles rows onto their
-        (tag, part_start) key before the partitioned write, so each
-        partition directory gets ONE file per batch instead of one per
-        input task — without it a 32-task batch over P partitions emits
-        up to 32*P small files, and small-file explosion is what kills
-        partitioned stores at scale. Disable for pre-clustered input.
+        A bounded load lands on the driver: when the projected plan's
+        Catalyst size estimate (no job) is at most
+        ``MAX_DRIVER_READ_BYTES`` and its column types are
+        ``SAMPLE_SCHEMA``'s, the projection is collected once with
+        ``toArrow()`` and published through the L1 run writer that
+        ``flush_l0`` uses (``_publish_l1_runs``): one file per
+        ``(tag, part_start)`` run, so ``cluster_by_partition`` has
+        nothing to do. An input over the estimate, or of unknown size
+        (an RDD-backed ``createDataFrame(list)`` reports none), is a
+        Spark write.
 
-        Multi-writer posture: the append runs under the maintenance
-        lease. A direct L1 append racing a compaction/retention
+        On the Spark write, ``cluster_by_partition`` (default) shuffles
+        rows onto their (tag, part_start) key before the partitioned
+        write, so each partition directory gets ONE file per batch
+        instead of one per input task — without it a 32-task batch over
+        P partitions emits up to 32*P small files, and small-file
+        explosion is what kills partitioned stores at scale. Disable for
+        pre-clustered input.
+
+        Multi-writer posture: the append, on either path, runs under the
+        maintenance lease. A direct L1 append racing a compaction/retention
         partition overwrite is the one lost-update window the hot
         tier has (the overwrite's committer replaces
         the partition's contents, wiping an append that landed after
@@ -557,11 +576,31 @@ class TimeseriesStore:
             df = df.withColumn(
                 "seq", F.monotonically_increasing_id().cast("long")
             )
-        df = df.withColumn(
-            "part_start",
-            (F.col("ts") - F.pmod(F.col("ts"), F.lit(self.config.partition_width))).cast("long"),
+        part_start = (
+            F.col("ts") - F.pmod(F.col("ts"), F.lit(self.config.partition_width))
+        ).cast("long")
+        out = df.withColumn("part_start", part_start).select(
+            *[f.name for f in SAMPLE_SCHEMA.fields]
         )
-        out = df.select(*[f.name for f in SAMPLE_SCHEMA.fields])
+        if self._loads_on_driver(out):
+            with self.commit.maintenance_lock(self):
+                self._publish_l1_runs([self._collect_load(out)])
+                self.invalidate_hot_cache()
+            return
+        # The key guard rides in the partition column, which every row
+        # of the write evaluates: a bad key fails the write job before
+        # its commit, and starts no job of its own.
+        out = out.withColumn(
+            "part_start",
+            F.when(
+                F.col("tag").isNull()
+                | (F.length("tag") == 0)
+                | F.col("ts").isNull(),
+                F.raise_error(
+                    F.lit("write_df: every row needs a non-empty tag and a non-null ts")
+                ),
+            ).otherwise(part_start),
+        )
         if cluster_by_partition:
             # Explicit partition count: with the count left implicit,
             # AQE coalesces a small clustering shuffle into ONE task
@@ -582,6 +621,36 @@ class TimeseriesStore:
                 .parquet(self.config.hot_path)
             )
             self.invalidate_hot_cache()
+
+    def _loads_on_driver(self, out: DataFrame) -> bool:
+        """Whether ``write_df`` lands the projected load ``out`` on the
+        driver: its optimized plan's size estimate, which Catalyst
+        computes without a job, is within ``read_range``'s rule, and its
+        column types are ``SAMPLE_SCHEMA``'s, which the driver writer
+        reproduces exactly."""
+        size = int(out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        return size <= MAX_DRIVER_READ_BYTES and [
+            f.dataType for f in out.schema.fields
+        ] == [f.dataType for f in SAMPLE_SCHEMA.fields]
+
+    def _collect_load(self, out: DataFrame):
+        """The projected load ``out`` as one Arrow table, collected once
+        and typed as the driver writer writes it. Raises
+        ``ValidationError``, with nothing written, on a null or empty
+        ``tag`` or a null ``ts``."""
+        import pyarrow.compute as pc
+
+        from redis_lsm_timeseries_spark.commit import _driver_arrow_schema
+
+        table = out.toArrow()
+        tags = table["tag"]
+        if tags.null_count or table["ts"].null_count or pc.any(
+            pc.equal(pc.utf8_length(tags), 0)
+        ).as_py():
+            raise ValidationError(
+                "write_df: every row needs a non-empty tag and a non-null ts"
+            )
+        return table.cast(_driver_arrow_schema(SAMPLE_SCHEMA))
 
     def flush_l0(self) -> bool:
         """Fold the L0 staging segments into the partitioned L1 layout
@@ -690,25 +759,13 @@ class TimeseriesStore:
         """Append staged L0 segments to L1 with pyarrow, starting no
         Spark job. The segments are read in chunks of at most
         ``MAX_DRIVER_READ_BYTES`` Parquet bytes (one segment over the
-        cap is a chunk of its own), each chunk sorted by
-        ``(tag, part_start, ts)``, and each ``(tag, part_start)`` run
-        written as one file of the non-partition columns into its hive
-        directory, named with Spark's escaping. Files are published by
-        rename (``commit._driver_parquet_append``).
-
-        Then ``_SUCCESS`` at the L1 root is replaced
-        (``_mark_l1_changed``)."""
-        import itertools
-
+        cap is a chunk of its own), and each chunk is published by the
+        L1 run writer (``_publish_l1_runs``)."""
         import pyarrow.dataset as ds
         from pyarrow import fs as pafs
 
-        from redis_lsm_timeseries_spark.commit import (
-            _driver_arrow_schema,
-            _driver_parquet_append,
-        )
+        from redis_lsm_timeseries_spark.commit import _driver_arrow_schema
 
-        hot = self.config.hot_path
         schema = _driver_arrow_schema(SAMPLE_SCHEMA)
         local = pafs.LocalFileSystem()
         paths = [f"{stage_dir}/{n}" for n in segments]
@@ -719,12 +776,30 @@ class TimeseriesStore:
                 size = 0
             chunks[-1].append(info.path)
             size += info.size
-        folded = 0
-        for chunk in chunks:
-            table = (
-                ds.dataset(chunk, schema=schema, format="parquet", filesystem=local)
-                .to_table()
-                .sort_by([("tag", "ascending"), ("part_start", "ascending"), ("ts", "ascending")])
+        self._publish_l1_runs(
+            ds.dataset(chunk, schema=schema, format="parquet", filesystem=local).to_table()
+            for chunk in chunks
+        )
+
+    def _publish_l1_runs(self, tables: Iterable) -> None:
+        """The driver-side L1 writer of ``flush_l0`` and ``write_df``:
+        each Arrow table of ``SAMPLE_SCHEMA``'s columns is sorted by
+        ``(tag, part_start, ts)``, and each ``(tag, part_start)`` run
+        written as one file of the non-partition columns into its hive
+        directory, named with Spark's escaping. Files are published by
+        rename (``commit._driver_parquet_append``), so a reader sees a
+        run whole or not at all.
+
+        Then, if any row was written, ``_SUCCESS`` at the L1 root is
+        replaced (``_mark_l1_changed``)."""
+        import itertools
+
+        from redis_lsm_timeseries_spark.commit import _driver_parquet_append
+
+        written = 0
+        for table in tables:
+            table = table.sort_by(
+                [("tag", "ascending"), ("part_start", "ascending"), ("ts", "ascending")]
             )
             keys = zip(table["tag"].to_pylist(), table["part_start"].to_pylist())
             offset = 0
@@ -733,11 +808,11 @@ class TimeseriesStore:
                 _driver_parquet_append(
                     self.fs,
                     table.slice(offset, n).select(DATA_COLS),
-                    partition_dir(hot, tag, part_start),
+                    partition_dir(self.config.hot_path, tag, part_start),
                 )
                 offset += n
-            folded += offset
-        if folded:
+            written += offset
+        if written:
             self._mark_l1_changed()
 
     def _mark_l1_changed(self) -> None:
@@ -1274,14 +1349,13 @@ class TimeseriesStore:
         force the caller to first enumerate tags (an extra job) only to
         build a disjunctive predicate that matches everything anyway.
 
-        With ``include_cold``, computed on the driver under
-        ``read_range``'s rule; otherwise, and over the rule, a Spark
-        plan over the cached ``hot()`` handle."""
+        Computed on the driver under ``read_range``'s rule, with or
+        without ``include_cold``, and returned as a local relation;
+        over the rule, a Spark plan over the cached ``hot()`` handle."""
         self._require_init()
-        if include_cold:
-            got = self._driver_members(None, cold=True)
-            if got is not None:
-                return self._driver_result(got[1], with_tombstones)
+        got = self._driver_members(None, cold=include_cold)
+        if got is not None:
+            return self._driver_result(got[1], with_tombstones)
         df = self.hot()
         if include_cold:
             df = df.unionByName(self.cold()).dropDuplicates(MEMBER_IDENTITY_COLS)

@@ -59,8 +59,9 @@ def _install(spark):
     from redis_lsm_timeseries_spark.operators import merge as M
 
     for name in (
-        "write_df", "write", "flush_l0", "_fold_staged", "_fold_on_driver",
-        "initialize", "_recover_staging", "_driver_members",
+        "write_df", "_collect_load", "_publish_l1_runs", "write", "flush_l0",
+        "_fold_staged", "_fold_on_driver", "initialize", "_recover_staging",
+        "_driver_members", "read_all",
     ):
         wrap(S.TimeseriesStore, name, f"store.{name}")
     for name in (
@@ -105,10 +106,7 @@ def _install(spark):
     # references too (labels marked @plan)
     from redis_lsm_timeseries_spark.plans import lifecycle_queries as LQ
 
-    for name in (
-        "purge_scan", "purge_ack", "purge_ack_many", "compact",
-        "lww_latest",
-    ):
+    for name in ("purge_scan", "purge_ack", "purge_ack_many", "compact"):
         if hasattr(LQ, name):
             wrap(LQ, name, f"{name}@plan")
     return njid

@@ -59,6 +59,10 @@ class TestSeamRouting:
         assert {
             (r.tag, r.ts): r.value for r in store.read_all().collect()
         } == {("A", 1): "a", ("A", 2): "b2", ("B", 11): "c"}
+        # read_all answers a small hot tier on the driver; the cached
+        # Spark handle checks its layout token through the seam
+        # (stat_signature)
+        assert store.hot().count() == 4
 
         marks = purge_scan(store, 0, 10, now_ms=10_000)
         assert marks

@@ -20,6 +20,7 @@ pinned by tests:
 
 from __future__ import annotations
 
+import os
 import threading
 
 import pytest
@@ -217,16 +218,27 @@ class TestBulkLoadLease:
             with pytest.raises(ConcurrentMaintenanceError):
                 compact(a)
 
+    @pytest.mark.parametrize("path", ["driver", "spark"])
     def test_crashed_bulk_load_releases_lease_and_commits_nothing(
-        self, spark, tmp_path
+        self, spark, tmp_path, monkeypatch, path
     ):
+        """The load's collect (a small input lands on the driver) or
+        its write job (forced by a driver read cap of 0) fails."""
+        from redis_lsm_timeseries_spark import store as store_module
+
+        if path == "spark":
+            monkeypatch.setattr(store_module, "MAX_DRIVER_READ_BYTES", 0)
         a = _mk(spark, tmp_path)
-        # every task of the bulk write job fails
+        # every task of the bulk load's job fails
         dying = self._df(spark).withColumn(
             "value", F.raise_error(F.lit("bulk job died")).cast("string")
         )
         with pytest.raises(Exception, match="bulk job died"):
             a.write_df(dying, ingest_ts=T0)
+        assert not [
+            n for _, _, names in os.walk(a.config.hot_path)
+            for n in names if n.endswith(".parquet")
+        ]
         # lease released: the retry needs no steal, and no partial rows
         a.write_df(self._df(spark), ingest_ts=T0)
         assert a.read_all().count() == 10
