@@ -767,10 +767,10 @@ def extras_bench(spark, sf_dir: str) -> dict:
     from redis_lsm_timeseries_spark.operators.similarity import (
         embedding_decontamination,
     )
-    from redis_lsm_timeseries_spark.sources.testdata import load_events
+    from redis_lsm_timeseries_spark.sources.testdata import load_events, load_table
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    docs = load_table(spark, sf_dir, "documents")
+    emb = load_table(spark, sf_dir, "embeddings")
     events = load_events(spark, sf_dir).select(
         F.col("event_type").alias("tag"),
         F.col("ts_ms").alias("ts"),
@@ -1198,6 +1198,7 @@ def sf1_scale_sample(spark, sf_dir: str) -> dict:
     from pyspark.sql import functions as F
 
     from redis_lsm_timeseries_spark.plans.catalog import REGISTRY
+    from redis_lsm_timeseries_spark.sources.testdata import read_parquet
 
     base = "/tmp/rlts_sf1x10"
     # _READY2 (r16): regenerated layout — events replicas now offset
@@ -1220,7 +1221,7 @@ def sf1_scale_sample(spark, sf_dir: str) -> dict:
         reps = spark.range(SF1_REP).select(F.col("id").alias("_r"))
         # orders/lineitem share the orderkey offset so their join
         # stays consistent across replicas
-        od = spark.read.parquet(f"{sf_dir}/orders.parquet")
+        od = read_parquet(spark, f"{sf_dir}/orders.parquet")
         okoff = od.agg(F.max("o_orderkey")).first()[0] + 1
         (
             od.crossJoin(F.broadcast(reps))
@@ -1230,7 +1231,7 @@ def sf1_scale_sample(spark, sf_dir: str) -> dict:
             .write.mode("overwrite")
             .parquet(f"{base}/orders.parquet")
         )
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        li = read_parquet(spark, f"{sf_dir}/lineitem.parquet")
         (
             li.crossJoin(F.broadcast(reps))
             .withColumn("l_orderkey", F.col("l_orderkey") + F.col("_r") * okoff)
@@ -1248,7 +1249,7 @@ def sf1_scale_sample(spark, sf_dir: str) -> dict:
         # 10x corpus has ~10x users, not 10x-denser users: offsetting
         # user_id per replica restores the linear shape every other
         # query already had.
-        evd = spark.read.parquet(f"{sf_dir}/events.parquet")
+        evd = read_parquet(spark, f"{sf_dir}/events.parquet")
         eoff = evd.agg(F.max("event_id")).first()[0] + 1
         uoff = evd.agg(F.max("user_id")).first()[0] + 1
         (

@@ -7,50 +7,67 @@ driver threads) and wall clock, indented by call depth. Job counts are
 drift-free: they tell you exactly which protocol step pays how many of
 the entry's jobs, on any host, at any load.
 
+With ``--all`` it runs every registered entry once instead, in name
+order, each after ``clear_query_caches()`` and into the noop sink, and
+prints each entry's job count and the catalog total.
+
+Spark runs on ``local[N]``, N the host's usable cores.
+
 Usage:
     python scripts/job_trace.py <entry_name> [sf_dir]
+    python scripts/job_trace.py --all [sf_dir]
 """
 
 from __future__ import annotations
 
+import argparse
 import functools
+import inspect
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
+DEFAULT_SF_DIR = "/root/testdata/sf0.01"
 
 _depth = 0
 _events: list[tuple[int, str, int, float]] = []
 
 
-def _install(spark):
-    def njid() -> int:
-        return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+def wrap(obj, name, label, njid):
+    """Replace ``obj.name`` with a wrapper that records the call's depth,
+    Spark job delta (``njid()`` before and after) and wall time. A
+    static or class method is re-wrapped as one, so it is still called
+    without (or with its class as) the first argument."""
+    attr = inspect.getattr_static(obj, name, None)
+    if attr is None:
+        return
+    fn = attr.__func__ if isinstance(attr, (staticmethod, classmethod)) else attr
 
-    def wrap(obj, name, label=None):
-        fn = getattr(obj, name, None)
-        if fn is None:
-            return
-        lbl = label or f"{obj.__name__ if hasattr(obj, '__name__') else type(obj).__name__}.{name}"
+    @functools.wraps(fn)
+    def inner(*a, **kw):
+        global _depth
+        d = _depth
+        _depth += 1
+        j0, t0 = njid(), time.perf_counter()
+        try:
+            return fn(*a, **kw)
+        finally:
+            _depth = d
+            _events.append((d, label, njid() - j0, time.perf_counter() - t0))
 
-        @functools.wraps(fn)
-        def inner(*a, **kw):
-            global _depth
-            d = _depth
-            _depth += 1
-            j0, t0 = njid(), time.perf_counter()
-            try:
-                return fn(*a, **kw)
-            finally:
-                _depth = d
-                _events.append(
-                    (d, lbl, njid() - j0, time.perf_counter() - t0)
-                )
+    if isinstance(attr, (staticmethod, classmethod)):
+        inner = type(attr)(inner)
+    setattr(obj, name, inner)
 
-        setattr(obj, name, inner)
+
+def _next_job_id(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def _install(spark) -> None:
+    njid = functools.partial(_next_job_id, spark)
 
     from redis_lsm_timeseries_spark import commit as C
     from redis_lsm_timeseries_spark import rollup as R
@@ -63,7 +80,7 @@ def _install(spark):
         "_fold_staged", "_fold_on_driver", "initialize", "_recover_staging",
         "_driver_members", "read_all",
     ):
-        wrap(S.TimeseriesStore, name, f"store.{name}")
+        wrap(S.TimeseriesStore, name, f"store.{name}", njid)
     for name in (
         "purge_scan", "purge_ack_many", "compact", "compact_purge_log",
         "_vacuum_locked", "_append_log", "apply_retention", "_driver_table",
@@ -72,7 +89,7 @@ def _install(spark):
         "_evict_on_spark", "_compact_on_driver", "_compact_on_spark",
         "_partition_activity", "_doomed_on_spark", "_cold_doomed_on_spark",
     ):
-        wrap(T, name, f"tiering.{name}")
+        wrap(T, name, f"tiering.{name}", njid)
     for cls in (C.ParquetLeaseCommit, C.ManifestCommit):
         for name in (
             "append_rows", "append_partitioned", "overwrite_partitions",
@@ -83,24 +100,24 @@ def _install(spark):
             "read_table", "driver_table_files",
         ):
             if name in cls.__dict__:
-                wrap(cls, name, f"{cls.__name__}.{name}")
+                wrap(cls, name, f"{cls.__name__}.{name}", njid)
     for name in (
         "merge_into", "delete_rows", "_resolve_source_counted",
         "_apply_dv_delete",
     ):
-        wrap(M, name, f"merge.{name}")
+        wrap(M, name, f"merge.{name}", njid)
     for name in (
         "refresh_rollup", "_refresh_locked", "read_rollup", "_aggregate_arrow",
         "_spark_select",
     ):
-        wrap(R, name, f"rollup.{name}")
+        wrap(R, name, f"rollup.{name}", njid)
     # the refresh's data steps, on each path
     for cls in (R._SparkSteps, R._DriverSteps):
         for name in (
             "watermark", "full", "boundary_rows", "probe", "bucket_stats",
             "upper_boundary", "select", "merge", "publish",
         ):
-            wrap(cls, name, f"rollup.{cls.__name__}.{name}")
+            wrap(cls, name, f"rollup.{cls.__name__}.{name}", njid)
     # the query plans import these BY NAME, so the module-level wraps
     # above don't intercept their calls — wrap the plan modules' own
     # references too (labels marked @plan)
@@ -108,30 +125,64 @@ def _install(spark):
 
     for name in ("purge_scan", "purge_ack", "purge_ack_many", "compact"):
         if hasattr(LQ, name):
-            wrap(LQ, name, f"{name}@plan")
-    return njid
+            wrap(LQ, name, f"{name}@plan", njid)
 
 
-def main() -> int:
-    entry = sys.argv[1]
-    from redis_lsm_timeseries_spark.session import get_spark
-    from redis_lsm_timeseries_spark.plans import catalog
-    import redis_lsm_timeseries_spark.plans  # noqa: F401
+def _run(spark, spec, sf_dir) -> tuple[int, float]:
+    """Run one entry into the noop sink; its Spark jobs and wall time."""
+    j0, t0 = _next_job_id(spark), time.perf_counter()
+    spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return _next_job_id(spark) - j0, time.perf_counter() - t0
 
-    spark = get_spark("rlts-job-trace", cpus=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    njid = _install(spark)
 
-    spec = catalog.REGISTRY[entry]
-    j0, t0 = njid(), time.perf_counter()
-    df = spec.fn(spark, SF_DIR)
-    df.write.format("noop").mode("overwrite").save()
-    total_jobs, total_wall = njid() - j0, time.perf_counter() - t0
+def _trace_all(spark, sf_dir) -> None:
+    from redis_lsm_timeseries_spark.plans import REGISTRY, clear_query_caches
 
+    total = 0
+    for name in sorted(REGISTRY):
+        clear_query_caches()
+        jobs, wall = _run(spark, REGISTRY[name], sf_dir)
+        total += jobs
+        print(f"{name:<44} jobs={jobs:<3} wall={wall:.2f}s", flush=True)
+    print(f"== {len(REGISTRY)} entries @ {sf_dir}: {total} jobs ==")
+
+
+def _trace_one(spark, entry, sf_dir) -> None:
+    from redis_lsm_timeseries_spark.plans import REGISTRY
+
+    _install(spark)
+    total_jobs, total_wall = _run(spark, REGISTRY[entry], sf_dir)
     # events were appended on EXIT (post-order); print in call order
-    print(f"== {entry} @ {SF_DIR}: {total_jobs} jobs, {total_wall:.2f}s ==")
+    print(f"== {entry} @ {sf_dir}: {total_jobs} jobs, {total_wall:.2f}s ==")
     for d, lbl, jobs, wall in _events:
         print(f"{'  ' * d}{lbl:<44} jobs={jobs:<3} wall={wall:.2f}s")
+
+
+def main(argv=None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument(
+        "args", nargs="*", metavar="entry [sf_dir]",
+        help=f"entry to trace (omitted with --all), then the test data "
+        f"directory (default {DEFAULT_SF_DIR})",
+    )
+    ap.add_argument(
+        "--all", action="store_true",
+        help="count every registered entry's jobs instead of tracing one",
+    )
+    args = ap.parse_args(argv)
+    rest = args.args if args.all else args.args[1:]
+    if len(rest) > 1 or not (args.all or args.args):
+        ap.error("expected <entry> [sf_dir] or --all [sf_dir]")
+    sf_dir = rest[0] if rest else DEFAULT_SF_DIR
+
+    from redis_lsm_timeseries_spark.session import get_spark
+
+    spark = get_spark("rlts-job-trace", cpus=len(os.sched_getaffinity(0)))
+    spark.sparkContext.setLogLevel("ERROR")
+    if args.all:
+        _trace_all(spark, sf_dir)
+    else:
+        _trace_one(spark, args.args[0], sf_dir)
     return 0
 
 

@@ -1,0 +1,65 @@
+"""``scripts/job_trace.py``'s ``wrap`` keeps a wrapped method's kind: a
+static method is still called without an instance, a class method with
+its class, and an instance method with its instance, whether called
+through the class or through an instance."""
+
+from __future__ import annotations
+
+import importlib.util
+import os
+
+import pytest
+
+_SCRIPT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts", "job_trace.py"
+)
+
+
+@pytest.fixture()
+def job_trace():
+    spec = importlib.util.spec_from_file_location("job_trace_under_test", _SCRIPT)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
+class _Toy:
+    base = 10
+
+    def __init__(self, n):
+        self.n = n
+
+    @staticmethod
+    def double(x):
+        return 2 * x
+
+    @classmethod
+    def shifted(cls, x):
+        return cls.base + x
+
+    def plus(self, x):
+        return self.n + x
+
+
+def test_wrap_keeps_static_class_and_instance_methods(job_trace):
+    class Toy(_Toy):
+        pass
+
+    jobs = iter(range(100))
+    for name in ("double", "shifted", "plus", "missing"):
+        job_trace.wrap(Toy, name, f"toy.{name}", lambda: next(jobs))
+
+    assert not hasattr(Toy, "missing")
+    toy = Toy(1)
+    assert (Toy.double(3), toy.double(3)) == (6, 6)
+    assert (Toy.shifted(3), toy.shifted(3)) == (13, 13)
+    assert (Toy.plus(toy, 3), toy.plus(3)) == (4, 4)
+    # each call is recorded once, at depth 0, with the counter's delta
+    assert [(d, label, n) for d, label, n, _ in job_trace._events] == [
+        (0, f"toy.{name}", 1)
+        for name in ("double", "double", "shifted", "shifted", "plus", "plus")
+    ]
+    # the wrapped attributes keep their kinds
+    assert isinstance(Toy.__dict__["double"], staticmethod)
+    assert isinstance(Toy.__dict__["shifted"], classmethod)
+    assert Toy.double.__name__ == "double"
