@@ -171,14 +171,23 @@ def _driver_parquet_file(table, dest: str) -> None:
     pq.write_table(table, dest, compression="snappy", store_schema=False)
 
 
+def _inprogress_path(dir_path: str) -> str:
+    """A new data file's hidden temp path in ``dir_path``, which every
+    listing skips until ``_published_path`` names it."""
+    return f"{dir_path}/.part-{uuid.uuid4().hex}.snappy.parquet.inprogress"
+
+
+def _published_path(tmp: str) -> str:
+    head, name = tmp.rsplit("/", 1)
+    return f"{head}/{name[1:-len('.inprogress')]}"
+
+
 def _driver_parquet_append(fs, table, dir_path: str) -> None:
     """Add the Arrow ``table`` to ``dir_path`` as one new parquet file
     written on the driver (``_driver_parquet_file``) and published
-    atomically: the bytes go to a hidden temp name,
-    ``.<name>.inprogress``, which Spark's file listing and the engine's
-    own listings skip, and ``fs.rename`` then gives the file its
-    ``part-<uuid>.snappy.parquet`` name. A reader sees the whole file
-    or nothing.
+    atomically: the bytes go to a hidden temp name
+    (``_inprogress_path``), and ``fs.rename`` then gives the file its
+    own. A reader sees the whole file or nothing.
 
     ``flush_l0`` retires an emptied L0 directory with
     ``rmdir_if_empty``, which can land between the ``makedirs`` and the
@@ -186,8 +195,7 @@ def _driver_parquet_append(fs, table, dir_path: str) -> None:
     the temp file exists the directory is not empty and stays. A write
     that raises removes its temp file; a crashed one leaves it behind,
     inert."""
-    name = f"part-{uuid.uuid4().hex}.snappy.parquet"
-    tmp = f"{dir_path}/.{name}.inprogress"
+    tmp = _inprogress_path(dir_path)
     try:
         for attempt in range(3):
             fs.makedirs(dir_path)
@@ -197,7 +205,7 @@ def _driver_parquet_append(fs, table, dir_path: str) -> None:
             except FileNotFoundError:
                 if attempt == 2:
                     raise
-        fs.rename(tmp, f"{dir_path}/{name}")
+        fs.rename(tmp, _published_path(tmp))
     except Exception:
         fs.remove_file(tmp)
         raise

@@ -210,6 +210,25 @@ class DriverFiles:
         takes ``tag`` and ``part_start`` from its directory names."""
         return read_members(self.paths, self.partitions, filter)
 
+    def batches(self, keys) -> list[set[tuple[str, int]]]:
+        """The partitions ``keys`` in batches whose listed L1 files
+        total at most ``MAX_DRIVER_READ_BYTES`` (a partition over the
+        cap is a batch of its own), in partition order. Raises
+        ``FileNotFoundError`` when a listed file is gone."""
+        sizes: dict[tuple, int] = {}
+        for key, size in zip(self.partitions, _file_sizes(self.paths)):
+            if key is not None:
+                sizes[key] = sizes.get(key, 0) + size
+        out, nbytes = [], 0
+        for key in sorted(keys):
+            size = sizes.get(key, 0)
+            if not out or nbytes + size > MAX_DRIVER_READ_BYTES:
+                out.append(set())
+                nbytes = 0
+            out[-1].add(key)
+            nbytes += size
+        return out
+
 
 def driver_read_bytes(paths: list[str]) -> int | None:
     """The total size of the local files ``paths``, or None when it is
@@ -231,11 +250,11 @@ def _file_sizes(paths: list[str]) -> list[int]:
     return [i.size for i in infos]
 
 
-def read_members(paths: list[str], partitions: list, filter=None):
-    """Read ``SAMPLE_SCHEMA`` rows from local Parquet files with
-    pyarrow. ``partitions[i]`` is the ``(tag, part_start)`` that file
-    ``i`` holds but does not store (a hive partition file), or None
-    when the file stores both columns."""
+def read_members(paths: list[str], partitions: list, filter=None, columns=None):
+    """Read ``SAMPLE_SCHEMA`` rows (``columns`` of them, or all) from
+    local Parquet files with pyarrow. ``partitions[i]`` is the
+    ``(tag, part_start)`` that file ``i`` holds but does not store (a
+    hive partition file), or None when the file stores both columns."""
     import pyarrow.dataset as ds
     from pyarrow import fs as pafs
 
@@ -252,7 +271,7 @@ def read_members(paths: list[str], partitions: list, filter=None):
         format=ds.ParquetFileFormat(), filesystem=pafs.LocalFileSystem(),
         partitions=exprs,
     )
-    return dataset.to_table(filter=filter)
+    return dataset.to_table(columns=columns, filter=filter)
 
 
 @dataclass(frozen=True)
@@ -1238,19 +1257,14 @@ class TimeseriesStore:
             RANGE_RESULT_SCHEMA,
         )
 
-    def _driver_files(
-        self,
-        partitions,
-        unflushed: bool = True,
-        cold: bool | list[str] = False,
-        since: int | None = None,
+    def _list_files(
+        self, partitions, unflushed: bool = True, cold: bool | list[str] = False
     ) -> DriverFiles | None:
         """List the files that hold ``partitions``' members (any
-        ``PartitionFilter.of`` form) for a driver-side read, or None
-        when the work needs a Spark plan: a sink-managed L1, a cold
-        tier the backend does not keep as plain files
-        (``TableCommit.driver_table_files``), or candidate files
-        totalling more than ``MAX_DRIVER_READ_BYTES``.
+        ``PartitionFilter.of`` form) for a driver-side reader, or None
+        when their listing is not the table's content: a sink-managed
+        L1, or a cold tier the backend does not keep as plain files
+        (``TableCommit.driver_table_files``).
 
         The listing runs in row-movement order: L0 and the uncommitted
         staging dirs first (see ``_unflushed_dirs``), unless
@@ -1261,14 +1275,9 @@ class TimeseriesStore:
         member moving during the listing is listed at least once.
         ``cold=True`` lists the snapshots here, after hot; a caller
         holding the maintenance lease, under which no snapshot moves,
-        may pass the list of them it already made instead.
-
-        ``since`` keeps only the files whose footer ``max(ingest_ts)``
-        (``footer_max``) is at or past it; the byte cap applies to the
-        files kept, and the footers are read only until those pass it.
-        Raises ``FileNotFoundError`` when a listed directory or file is
-        gone before the listing ends (a concurrent flush or drop moved
-        it)."""
+        may pass the list of them it already made instead. Raises
+        ``FileNotFoundError`` when a listed directory is gone before
+        the listing ends (a concurrent flush or drop moved it)."""
         selection = PartitionFilter.of(partitions)
         paths, keys = [], []
         if unflushed:
@@ -1291,8 +1300,29 @@ class TimeseriesStore:
             if (selection.tags is None or key[0] in selection.tags) and selection.keep(*key):
                 paths.append(path)
                 keys.append(key)
+        return DriverFiles(paths, keys)
+
+    def _driver_files(
+        self,
+        partitions,
+        unflushed: bool = True,
+        cold: bool | list[str] = False,
+        since: int | None = None,
+    ) -> DriverFiles | None:
+        """``_list_files``, or None also when the candidate files total
+        more than ``MAX_DRIVER_READ_BYTES``: the read needs Spark.
+        ``since`` keeps only the files whose footer ``max(ingest_ts)``
+        (``footer_max``) is at or past it; the byte cap applies to the
+        files kept, and the footers are read only until those pass it.
+        Raises ``FileNotFoundError`` when a listed directory or file is
+        gone before the listing ends (a concurrent flush or drop moved
+        it)."""
+        files = self._list_files(partitions, unflushed, cold)
+        if files is None:
+            return None
+        paths, keys = files.paths, files.partitions
         if since is None:
-            return None if driver_read_bytes(paths) is None else DriverFiles(paths, keys)
+            return None if driver_read_bytes(paths) is None else files
         kept, nbytes = [], 0
         for i, size in enumerate(_file_sizes(paths)):
             last = footer_max(paths[i])[1]

@@ -22,18 +22,20 @@ Re-expression — two idempotent maintenance steps + an append-only
   written after the mark survives — ``test/consumer-test.js:936-989``),
   drop the directory when it empties, append an ``acked`` log row.
 
-Where they run: each step decides once per call by ``read_range``'s
-rule (``TimeseriesStore._driver_files``: a directory L1 with no
-streaming-sink log, candidate files totalling at most
-``MAX_DRIVER_READ_BYTES``, and, for the purge log and the cold
-snapshots, a backend whose tables are plain directories —
-``TableCommit.driver_table_files``). Work that passes is computed on
-the driver with pyarrow and starts no Spark job; the rest is a Spark
-job. Both paths give the same rows. A driver-side rewrite of a hot
-partition publishes its new file first (hidden temp name, then
-rename), then removes the files it replaces, then replaces
-``hot/_SUCCESS``: a crash leaves old files beside the new one, which
-read the same under LWW (``compact``) and under hot∪cold (the ack).
+Where they run: the store's size only batches a step's work, and the
+commit backend only picks how the purge log and the cold snapshots are
+read and written (``_read_table``, ``_write_snapshots``: pyarrow over
+the plain files ``TableCommit.driver_table_files`` lists, else the
+seam). Metadata decisions (coldest-K, retention's lookups) read
+footers and directory names on the driver at any size; the snapshot
+and the eviction run on the driver a batch of whole partitions at a
+time (``DriverFiles.batches``); ``compact``'s kernel runs in-process
+for one batch, else in a Spark task per batch. A rewrite of a hot
+partition publishes its new file first (hidden temp name, then rename,
+both on the driver through ``store.fs``), then removes the files it
+replaces, then replaces ``hot/_SUCCESS``: a crash leaves old files
+beside the new one, which read the same under LWW (``compact``) and
+under hot∪cold (the ack).
 
 Semantics consciously fixed vs the reference (SURVEY.md §2.2.5): the
 idle threshold is in SECONDS, one unit everywhere (the reference
@@ -44,12 +46,12 @@ Atomicity: the reference gets it from Redis single-threading; here
 every transactional table operation routes through the store's
 ``TableCommit`` seam (``commit.py``): the namespace maintenance LEASE
 (enforced — concurrent maintenance raises
-``ConcurrentMaintenanceError``), the dynamic partition overwrite, the
-protocol-log append, and the crash-repairable snapshot swap. The
-driver path writes files itself only where the seam allows it: into
-the hot tier, a plain directory layout under every backend, and into
-the cold tier and purge log of a backend whose
-``driver_table_files`` lists plain files. The default ``ParquetLeaseCommit`` implements them on plain Parquet; a
+``ConcurrentMaintenanceError``), the protocol-log append, partition
+drops, and the crash-repairable snapshot swap. Tiering writes files
+itself only where the seam allows it: into the hot tier, a plain
+directory layout under every backend, and into the cold tier and purge
+log of a backend whose ``driver_table_files`` lists plain files. The
+default ``ParquetLeaseCommit`` implements them on plain Parquet; a
 lakehouse deployment drops in a Delta/Iceberg implementation (MERGE /
 DELETE / optimistic commit) without touching the logic here.
 """
@@ -57,6 +59,7 @@ DELETE / optimistic commit) without touching the logic here.
 from __future__ import annotations
 
 import functools
+import os
 import time
 import uuid
 from contextlib import contextmanager
@@ -68,9 +71,12 @@ from redis_lsm_timeseries_spark.commit import (
     _driver_arrow_schema,
     _driver_parquet_append,
     _driver_parquet_file,
+    _inprogress_path,
+    _published_path,
 )
 from redis_lsm_timeseries_spark.config import PARTITION_COLS
 from redis_lsm_timeseries_spark.errors import ValidationError
+from redis_lsm_timeseries_spark.operators.lww import lww_latest_arrow
 from redis_lsm_timeseries_spark.schema import (
     COLD_SNAPSHOT_SCHEMA,
     MEMBER_IDENTITY_COLS,
@@ -79,13 +85,17 @@ from redis_lsm_timeseries_spark.schema import (
 )
 from redis_lsm_timeseries_spark.store import (
     DATA_COLS,
+    RANGE_RESULT_SCHEMA,
     TimeseriesStore,
-    driver_read_bytes,
     footer_max,
     partition_dir,
     partition_key,
     read_members,
 )
+
+#: the cold tier's hive directory columns: a snapshot file stores none
+#: of them
+SNAPSHOT_DIRS = ("purge_id", *PARTITION_COLS)
 
 
 @dataclass(frozen=True)
@@ -113,7 +123,7 @@ def maintenance_lease(
     ``compact``, ``compact_purge_log``) acquires the namespace lock
     first, so two jobs racing the same namespace fail fast with
     ``ConcurrentMaintenanceError`` instead of corrupting a partition
-    overwrite. Delegates to the store's ``TableCommit`` seam (the
+    rewrite. Delegates to the store's ``TableCommit`` seam (the
     default ``ParquetLeaseCommit.maintenance_lock`` documents the
     lease-file protocol; a lakehouse implementation makes this a no-op
     and lets the table format's optimistic commit detect conflicts)."""
@@ -163,19 +173,104 @@ def _append_log(store: TimeseriesStore, rows: list[tuple]) -> None:
     )
 
 
-def _driver_table(store: TimeseriesStore, path: str, schema):
-    """The protocol table at ``path`` read on the driver with pyarrow,
-    or None when it needs Spark: the backend keeps no plain directory
-    for it (``driver_table_files``), or its files are over
-    ``MAX_DRIVER_READ_BYTES``."""
-    import pyarrow.dataset as ds
+def _where(field, where):
+    """The conjunction of the ``(column, op, value)`` terms ``where``
+    (op ``==``, ``<=`` or ``in``) over ``field`` — ``pyarrow.dataset.
+    field`` or ``pyspark.sql.functions.col`` — or None for no terms."""
+    pred = None
+    for name, op, value in where:
+        col = field(name)
+        if op == "in":
+            term = col.isin(list(value))
+        elif op == "==":
+            term = col == value
+        else:
+            term = col <= value
+        pred = term if pred is None else pred & term
+    return pred
 
-    paths = store.commit.driver_table_files(store, path)
-    if paths is None or driver_read_bytes(paths) is None:
-        return None
-    return ds.dataset(
-        paths, schema=_driver_arrow_schema(schema), format="parquet"
-    ).to_table()
+
+def _read_table(store: TimeseriesStore, path: str, schema, columns, where=()):
+    """``columns`` of the purge log's or the cold tier's rows that pass
+    ``where`` (``_where``), as an Arrow ``RecordBatchReader``: pyarrow
+    over the plain files ``driver_table_files`` lists, the filter
+    pushed down, else the seam's ``read_table`` in a Spark job. A cold
+    file takes ``SNAPSHOT_DIRS`` from its directory names: a
+    ``purge_id`` term lists only those directories, and a read of
+    directory columns alone opens no file and returns distinct rows."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    from pyarrow import fs as pafs
+
+    arrow = _driver_arrow_schema(schema)
+    out = pa.schema([arrow.field(c) for c in columns])
+    cold = path == store.config.cold_path
+    names_only = cold and set(columns) <= set(SNAPSHOT_DIRS)
+    dirs = [path]
+    for name, op, value in where:
+        if cold and name == "purge_id" and op != "<=":
+            dirs = [f"{path}/purge_id={pid}" for pid in ([value] if op == "==" else value)]
+    listed = [store.commit.driver_table_files(store, d) for d in dirs]
+    if None in listed:
+        df = store.commit.read_table(store, path, schema)
+        pred = _where(F.col, where)
+        df = (df if pred is None else df.where(pred)).select(*columns)
+        return (df.distinct() if names_only else df).toArrow().cast(out).to_reader()
+    files = [f for paths in listed for f in paths]
+    pred = _where(ds.field, where)
+    if names_only:
+        keys = pa.Table.from_pylist(
+            [dict(zip(SNAPSHOT_DIRS, k)) for k in {_snapshot_key(f) for f in files}],
+            schema=pa.schema([arrow.field(c) for c in SNAPSHOT_DIRS]),
+        )
+        keys = keys if pred is None else keys.filter(pred)
+        return keys.group_by(columns).aggregate([]).select(columns).to_reader()
+    parts = [ds.scalar(True)] * len(files)
+    if cold:
+        parts = [
+            (ds.field("purge_id") == pid) & (ds.field("tag") == tag)
+            & (ds.field("part_start") == part_start)
+            for pid, tag, part_start in map(_snapshot_key, files)
+        ]
+    dataset = ds.FileSystemDataset.from_paths(
+        files, schema=arrow, format=ds.ParquetFileFormat(),
+        filesystem=pafs.LocalFileSystem(), partitions=parts,
+    )
+    return dataset.scanner(columns=columns, filter=pred).to_reader()
+
+
+def _snapshot_key(path: str) -> tuple[str, str, int]:
+    """The ``SNAPSHOT_DIRS`` values that a cold snapshot file's
+    directory names give it."""
+    part_dir = path.rsplit("/", 1)[0]
+    return (part_dir.rsplit("/", 3)[1].partition("=")[2], *partition_key(part_dir))
+
+
+def _write_snapshots(store: TimeseriesStore, members, marks) -> None:
+    """The cold-tier writer: each mark's members — the rows of its
+    partition in the Arrow table ``members`` — into
+    ``cold/purge_id=/tag=/part_start=``. On a backend that keeps the
+    tier as plain files, one file per mark (``_driver_parquet_append``);
+    otherwise one ``append_partitioned`` through the seam."""
+    import pyarrow as pa
+
+    cold = store.config.cold_path
+    rows = [members.filter(_in_partitions([(m.tag, m.part_start)])) for m in marks]
+    dirs = [partition_dir(f"{cold}/purge_id={m.purge_id}", m.tag, m.part_start) for m in marks]
+    # a new mark's directory holds no file a plain backend lists
+    if store.commit.driver_table_files(store, dirs[0]) is not None:
+        for part, d in zip(rows, dirs):
+            _driver_parquet_append(store.fs, part.select(DATA_COLS), d)
+        return
+    # one chunk: createDataFrame drops the record batches after an
+    # empty one, which an expression filter can leave
+    snap = pa.concat_tables(
+        part.add_column(0, "purge_id", pa.array([m.purge_id] * part.num_rows, pa.string()))
+        for m, part in zip(marks, rows)
+    ).combine_chunks()
+    store.commit.append_partitioned(
+        store, store.spark.createDataFrame(snap).coalesce(1), cold, list(SNAPSHOT_DIRS)
+    )
 
 
 def _columns(table, *names) -> list[list]:
@@ -195,21 +290,26 @@ def _in_partitions(keys):
     return pred
 
 
+def _remove_files(store: TimeseriesStore, paths) -> None:
+    """Remove the data files ``paths`` and their checksum sidecars."""
+    for path in paths:
+        head, name = path.rsplit("/", 1)
+        store.fs.remove_file(path)
+        store.fs.remove_file(f"{head}/.{name}.crc")
+
+
 def _replace_partition(store: TimeseriesStore, key, rows, old_paths) -> None:
     """Make ``rows`` the whole content of the hot partition ``key``:
     publish them as one new file (``_driver_parquet_append``), then
-    remove the ``old_paths`` it replaces and their checksum sidecars;
-    no rows drops the directory. The caller replaces ``hot/_SUCCESS``
-    after its last partition."""
+    remove the ``old_paths`` it replaces (``_remove_files``); no rows
+    drops the directory. The caller replaces ``hot/_SUCCESS`` after
+    its last partition."""
     part_dir = partition_dir(store.config.hot_path, *key)
     if rows.num_rows == 0:
         store.commit.drop_partition_dir(store, part_dir)
         return
     _driver_parquet_append(store.fs, rows.select(DATA_COLS), part_dir)
-    for path in old_paths:
-        head, name = path.rsplit("/", 1)
-        store.fs.remove_file(path)
-        store.fs.remove_file(f"{head}/.{name}.crc")
+    _remove_files(store, old_paths)
 
 
 @_serialized_maintenance
@@ -231,16 +331,9 @@ def purge_scan(
     rows is eligible regardless of idle age, so hot-but-oversized
     partitions can be tiered out under pressure.
 
-    Scale shape: on the driver (see the module docstring) the scan
-    reads no L1 data: each partition's row count and ``max(ingest_ts)``
-    come from its L1 Parquet footers plus a read of the L0 segments,
-    the purge log is read with pyarrow, and each selected partition's
-    members land as one snapshot file written with pyarrow — no Spark
-    job. Otherwise: one partial-aggregated groupBy over the partition
-    columns + ingest_ts (metadata-narrow scan), a broadcast-joined
-    eligibility check against the tiny purge log, a global TakeOrdered
-    of K rows, and one partition-pruned snapshot write over the marked
-    partitions.
+    Scale shape (see the module docstring): the selection reads L1
+    footers, three L0 columns and the log's ``marked`` rows; the
+    marked partitions' members are read a batch at a time.
     """
     store._require_init()
     if max_partitions_to_mark < 1:
@@ -249,20 +342,20 @@ def purge_scan(
         raise ValidationError("partition_age_threshold_s must be >= 0")
     if size_trigger_rows is not None and size_trigger_rows < 1:
         raise ValidationError("size_trigger_rows must be >= 1")
+    # the selection lists L1 directories, not a streaming sink's log,
+    # and a mark there could never be acked
+    store._require_l1_batch_writable()
     if now_ms is None:
         now_ms = _now_ms()
-    eligibility = (
-        now_ms, int(partition_age_threshold_s * 1000), size_trigger_rows
+    files = store._list_files(None)
+    log = _read_table(
+        store, store.config.purge_log_path, PURGE_LOG_SCHEMA,
+        ["tag", "part_start", "event_ts"], [("status", "==", "marked")],
+    ).read_all()
+    selected = _coldest(
+        files, log, max_partitions_to_mark,
+        now_ms, int(partition_age_threshold_s * 1000), size_trigger_rows,
     )
-
-    files = store._driver_files(None)
-    log = None if files is None else _driver_table(
-        store, store.config.purge_log_path, PURGE_LOG_SCHEMA
-    )
-    if log is None:
-        selected = _coldest_on_spark(store, max_partitions_to_mark, *eligibility)
-    else:
-        selected = _coldest_on_driver(files, log, max_partitions_to_mark, *eligibility)
     if not selected:
         return []
     marks = [
@@ -274,10 +367,12 @@ def purge_scan(
     # Snapshot every selected partition's CURRENT members — the exact
     # sets the ack will remove (enqueue-purge.lua:17-18 serializes the
     # whole partition into the stream entry).
-    if log is None:
-        _snapshot_on_spark(store, marks)
-    else:
-        _snapshot_on_driver(store, files, marks)
+    for batch in files.batches({(m.tag, m.part_start) for m in marks}):
+        _write_snapshots(
+            store,
+            files.read(_in_partitions(batch)),
+            [m for m in marks if (m.tag, m.part_start) in batch],
+        )
     _append_log(
         store,
         [(m.purge_id, m.tag, m.part_start, "marked", now_ms, m.n_rows) for m in marks],
@@ -295,16 +390,14 @@ def _eligible(last_seen, n, last_marked, now_ms, threshold_ms, size_trigger_rows
     return (last_marked is None or last_seen > last_marked) and idle_or_oversized
 
 
-def _coldest_on_driver(files, log, k, now_ms, threshold_ms, size_trigger_rows):
+def _coldest(files, marked, k, now_ms, threshold_ms, size_trigger_rows):
     """``(tag, part_start, n_rows)`` of the K coldest eligible
-    partitions, by ``(last_seen, tag, part_start)``."""
+    partitions, by ``(last_seen, tag, part_start)``; ``marked`` holds
+    the purge log's ``marked`` rows."""
     last_marked: dict[tuple, int] = {}
-    for tag, part_start, status, event_ts in zip(
-        *_columns(log, "tag", "part_start", "status", "event_ts")
-    ):
-        if status == "marked":
-            key = (tag, part_start)
-            last_marked[key] = max(last_marked.get(key, event_ts), event_ts)
+    for tag, part_start, event_ts in zip(*_columns(marked, "tag", "part_start", "event_ts")):
+        key = (tag, part_start)
+        last_marked[key] = max(last_marked.get(key, event_ts), event_ts)
     eligible = sorted(
         (last_seen, tag, part_start, n)
         for (tag, part_start), (last_seen, n) in _partition_activity(files).items()
@@ -320,7 +413,8 @@ def _partition_activity(files) -> dict[tuple, tuple[int, int]]:
     """``{(tag, part_start): (max(ingest_ts), rows)}`` over the listed
     hot files: an L1 file's from its Parquet footer (row count and the
     column statistics, or a read of the one column when a row group
-    has none), the L0 segments' from a read."""
+    has none), the L0 segments' from a read of their ``tag``,
+    ``part_start`` and ``ingest_ts`` columns."""
     activity: dict[tuple, tuple[int, int]] = {}
 
     def add(key, last_seen, n):
@@ -336,82 +430,16 @@ def _partition_activity(files) -> dict[tuple, tuple[int, int]]:
                 add(key, last_seen, n)
     segments = [p for p, key in zip(files.paths, files.partitions) if key is None]
     if segments:
-        per_part = read_members(segments, [None] * len(segments)).group_by(
-            ["tag", "part_start"]
-        ).aggregate([("ingest_ts", "max"), ("ingest_ts", "count")])
+        per_part = read_members(
+            segments, [None] * len(segments), columns=["tag", "part_start", "ingest_ts"]
+        ).group_by(["tag", "part_start"]).aggregate(
+            [("ingest_ts", "max"), ("ingest_ts", "count")]
+        )
         for tag, part_start, last_seen, n in zip(
             *_columns(per_part, "tag", "part_start", "ingest_ts_max", "ingest_ts_count")
         ):
             add((tag, part_start), last_seen, n)
     return activity
-
-
-def _coldest_on_spark(store, k, now_ms, threshold_ms, size_trigger_rows):
-    """``_coldest_on_driver`` as one Spark query over ``hot()`` and the
-    purge log."""
-    activity = store.hot().groupBy("tag", "part_start").agg(
-        F.max("ingest_ts").alias("last_seen"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    last_marks = (
-        purge_log(store)
-        .where(F.col("status") == "marked")
-        .groupBy("tag", "part_start")
-        .agg(F.max("event_ts").alias("last_marked"))
-    )
-    idle_or_oversized = (
-        F.lit(now_ms) - F.col("last_seen")
-    ) >= F.lit(threshold_ms)
-    if size_trigger_rows is not None:
-        idle_or_oversized = idle_or_oversized | (
-            F.col("n") >= F.lit(size_trigger_rows)
-        )
-    eligible = (
-        activity.join(F.broadcast(last_marks), ["tag", "part_start"], "left")
-        .where(
-            (F.col("last_marked").isNull() | (F.col("last_seen") > F.col("last_marked")))
-            & idle_or_oversized
-        )
-        .orderBy(F.col("last_seen").asc(), F.col("tag").asc(), F.col("part_start").asc())
-        .limit(k)
-    )
-    return [(r.tag, r.part_start, r.n) for r in eligible.collect()]
-
-
-def _snapshot_on_driver(store, files, marks) -> None:
-    """Write each mark's members as one file into
-    ``cold/purge_id=/tag=/part_start=``."""
-    members = files.read(_in_partitions({(m.tag, m.part_start) for m in marks}))
-    for m in marks:
-        rows = members.filter(_in_partitions([(m.tag, m.part_start)]))
-        _driver_parquet_append(
-            store.fs,
-            rows.select(DATA_COLS),
-            partition_dir(
-                f"{store.config.cold_path}/purge_id={m.purge_id}", m.tag, m.part_start
-            ),
-        )
-
-
-def _snapshot_on_spark(store, marks) -> None:
-    """All marks' snapshots in ONE write job. The mark list is <= K
-    rows, so the id assignment is a broadcast join; the hot scan is
-    partition-pruned to the marked partitions."""
-    mark_df = store.spark.createDataFrame(
-        store.spark.sparkContext.parallelize(
-            [(m.purge_id, m.tag, m.part_start) for m in marks], 1
-        ),
-        "purge_id string, tag string, part_start long",
-    )
-    snap = store.hot().join(F.broadcast(mark_df), ["tag", "part_start"])
-    store.commit.append_partitioned(
-        store,
-        snap.select(
-            "purge_id", *[f.name for f in SAMPLE_SCHEMA.fields]
-        ).repartition("purge_id"),
-        store.config.cold_path,
-        ["purge_id", "tag", "part_start"],
-    )
 
 
 def purge_ack(
@@ -444,12 +472,11 @@ def purge_ack_many(
 
     The reference acks one stream entry per Lua call; batching N acks
     into one step is the engine-level equivalent of its consumer loop.
-    Scale shape: on the driver (see the module docstring) the log and
-    the snapshots are read with pyarrow, the EXCEPT is an Arrow
-    anti-join, and each partition that lost members is rewritten as
-    one file — no Spark job. Otherwise: one partition-pruned anti-join
-    + one dynamic-partition overwrite. On a lakehouse table this whole
-    function is one Delta ``MERGE ... WHEN MATCHED DELETE``."""
+    Scale shape (see the module docstring): the EXCEPT is an Arrow
+    anti-join over a batch of partitions at a time, and each partition
+    that lost members is rewritten as one file. On a lakehouse table
+    this whole function is one Delta ``MERGE ... WHEN MATCHED
+    DELETE``."""
     store._require_init()
     # the ack rewrites hot partitions — refuse under a file-sink-managed
     # L1 (see _require_l1_batch_writable)
@@ -484,9 +511,7 @@ def purge_ack_many(
     # sitting in L0 (including writes made after the mark, which must
     # survive) have to be in those directories to be rewritten or kept.
     store.flush_l0()
-    affected = {(marks[pid][0], marks[pid][1]) for pid in valid}
-    if not _evict_on_driver(store, valid, marks, affected):
-        _evict_on_spark(store, valid, affected)
+    _evict(store, valid, marks)
     store.invalidate_hot_cache()
     _append_log(
         store,
@@ -506,74 +531,46 @@ def _log_states(store, purge_ids):
     greatest, should the append-only log hold several)."""
     states: dict[str, set] = {}
     marks: dict[str, tuple] = {}
-    log = _driver_table(store, store.config.purge_log_path, PURGE_LOG_SCHEMA)
-    if log is not None:
-        wanted = set(purge_ids)
-        for pid, tag, part_start, status, n in zip(
-            *_columns(log, "purge_id", "tag", "part_start", "status", "n_rows")
-        ):
-            if pid in wanted:
-                states.setdefault(pid, set()).add(status)
-                if status == "marked":
-                    marks[pid] = max(marks.get(pid, (tag, part_start, n)), (tag, part_start, n))
-        return states, marks
-    # Aggregate the log BEFORE collecting: one row per requested id
-    # regardless of log size, so a bloated log (many files / repeated
-    # appends between compactions) cannot grow the collect past
-    # len(purge_ids) rows.
-    agg = (
-        purge_log(store)
-        .where(F.col("purge_id").isin(list(purge_ids)))
-        .groupBy("purge_id")
-        .agg(
-            F.collect_set("status").alias("statuses"),
-            F.max(
-                F.when(
-                    F.col("status") == "marked",
-                    F.struct("tag", "part_start", "n_rows"),
-                )
-            ).alias("mark"),
-        )
-    )
-    for r in agg.collect():
-        states[r.purge_id] = set(r.statuses)
-        if r.mark is not None:
-            marks[r.purge_id] = (r.mark.tag, r.mark.part_start, r.mark.n_rows)
+    log = _read_table(
+        store, store.config.purge_log_path, PURGE_LOG_SCHEMA,
+        ["purge_id", "tag", "part_start", "status", "n_rows"],
+        [("purge_id", "in", purge_ids)],
+    ).read_all()
+    for pid, tag, part_start, status, n in zip(
+        *_columns(log, "purge_id", "tag", "part_start", "status", "n_rows")
+    ):
+        states.setdefault(pid, set()).add(status)
+        if status == "marked":
+            marks[pid] = max(marks.get(pid, (tag, part_start, n)), (tag, part_start, n))
     return states, marks
 
 
-def _evict_on_driver(store, valid, marks, affected) -> bool:
-    """Rewrite each affected L1 partition as hot EXCEPT its snapshots,
-    on the driver. False, having changed nothing, when the snapshots
-    or the partitions need Spark."""
-    snap_paths, snap_keys = [], []
+def _evict(store, valid, marks) -> None:
+    """Rewrite each L1 partition that the acks ``valid`` touch as hot
+    EXCEPT its snapshots, one batch of partitions
+    (``DriverFiles.batches``) at a time."""
+    pids: dict[tuple, list[str]] = {}
     for pid in valid:
-        tag, part_start, _ = marks[pid]
-        paths = store.commit.driver_table_files(
-            store,
-            partition_dir(f"{store.config.cold_path}/purge_id={pid}", tag, part_start),
-        )
-        if paths is None:
-            return False
-        snap_paths += paths
-        snap_keys += [(tag, part_start)] * len(paths)
-    if driver_read_bytes(snap_paths) is None:
-        return False
-    got = store._driver_members(affected, unflushed=False)
-    if got is None:
-        return False
-    files, hot = got
-    remainder = _except_members(hot, read_members(snap_paths, snap_keys))
+        pids.setdefault(marks[pid][:2], []).append(pid)
+    files = store._list_files(set(pids), unflushed=False)
     l1 = files.l1()
-    for key in sorted(affected):
-        part = _in_partitions([key])
-        rows = remainder.filter(part)
-        # an emptied partition is dropped even when a crashed ack
-        # already removed its rows: its emptied tag= directory goes too
-        if rows.num_rows == 0 or rows.num_rows < hot.filter(part).num_rows:
-            _replace_partition(store, key, rows, l1.get(key, []))
+    for batch in files.batches(pids):
+        hot = files.read(_in_partitions(batch))
+        snapshot = _read_table(
+            store, store.config.cold_path, COLD_SNAPSHOT_SCHEMA, MEMBER_IDENTITY_COLS,
+            [("purge_id", "in", [pid for key in batch for pid in pids[key]])],
+        ).read_all()
+        remainder = _except_members(hot, snapshot)
+        for key in sorted(batch):
+            part = _in_partitions([key])
+            rows = remainder.filter(part)
+            # an emptied partition is dropped even when a crashed ack
+            # already removed its rows: its emptied tag= directory goes too
+            if rows.num_rows == 0 or rows.num_rows < hot.filter(part).num_rows:
+                _replace_partition(store, key, rows, l1.get(key, []))
+    # a drop inside a tag= directory that stays changes nothing the
+    # other instances' layout tokens watch but the marker
     store._mark_l1_changed()
-    return True
 
 
 def _except_members(hot, snapshot):
@@ -597,58 +594,6 @@ def _except_members(hot, snapshot):
     return hot.take(kept.combine_chunks().sort())
 
 
-def _evict_on_spark(store, valid, affected) -> None:
-    """``_evict_on_driver`` as one partition-pruned anti-join and one
-    dynamic-partition overwrite."""
-    from functools import reduce
-
-    snapshot = F.broadcast(
-        cold_snapshots(store)
-        .where(F.col("purge_id").isin(valid))
-        .select(*MEMBER_IDENTITY_COLS)
-    )
-    part_pred = F.lit(False)
-    for tag, part_start in affected:
-        part_pred = part_pred | (
-            (F.col("tag") == tag) & (F.col("part_start") == part_start)
-        )
-    hot = store.hot().where(part_pred)
-    same_member = reduce(
-        lambda a, b: a & b,
-        [hot[c].eqNullSafe(snapshot[c]) for c in MEMBER_IDENTITY_COLS],
-    )
-    remainder = hot.join(snapshot, on=same_member, how="left_anti")
-    # Materialize before overwriting the directories we just read
-    # (Spark refuses / corrupts a self-overwrite otherwise). LAZY
-    # checkpoint: the nonempty-partition collect right below is the
-    # materializing action (r18, guide §1.2 — the r17 components
-    # pattern), so the ack pays one job here instead of two; the
-    # overwrite still reads materialized rows.
-    remaining = remainder.select(
-        *[f.name for f in SAMPLE_SCHEMA.fields]
-    ).localCheckpoint(eager=False)
-    nonempty = {
-        (r.tag, r.part_start)
-        for r in remaining.select("tag", "part_start").distinct().collect()
-    }
-    for tag, part_start in affected - nonempty:
-        # Partition fully evicted: dynamic overwrite rewrites only
-        # partitions present in the output, so drop emptied ones here.
-        store.commit.drop_partition_dir(
-            store, partition_dir(store.config.hot_path, tag, part_start)
-        )
-    if nonempty:
-        # Only the acked partitions' directories are replaced — see
-        # ParquetLeaseCommit.overwrite_partitions for the per-write
-        # dynamic-overwrite requirement.
-        store.commit.overwrite_partitions(
-            store, remaining, store.config.hot_path, PARTITION_COLS,
-        )
-    # a drop inside a tag= directory that stays changes nothing the
-    # other instances' layout tokens watch but the marker
-    store._mark_l1_changed()
-
-
 @_serialized_maintenance
 def compact_purge_log(store: TimeseriesStore) -> int:
     """Snapshot the append-only purge log into a single file.
@@ -659,9 +604,9 @@ def compact_purge_log(store: TimeseriesStore) -> int:
     files and every protocol read pays N file opens. The log is
     protocol metadata — two rows per eviction — so the whole table
     rewrites into one file; run via ``compact()``, the same maintenance
-    job that does LWW segment hygiene. The file is written on the
-    driver with pyarrow when the log passes the driver rule (see the
-    module docstring), else by a Spark job.
+    job that does LWW segment hygiene. The log's record batches
+    (``_read_table``) stream through one Parquet writer on the driver,
+    so memory holds one batch at a time.
 
     Swap order keeps a full copy on disk at every instant (the
     single-writer caveat in the module docstring applies — this is the
@@ -670,6 +615,8 @@ def compact_purge_log(store: TimeseriesStore) -> int:
     delete old. ``purge_log`` falls back to ``.compact-old`` if a crash
     lands between the renames. Returns the number of data files
     replaced (0 = nothing to do)."""
+    import pyarrow.parquet as pq
+
     store._require_init()
     path = store.config.purge_log_path
     store.commit.repair_interrupted_rewrite(store, path)
@@ -678,24 +625,21 @@ def compact_purge_log(store: TimeseriesStore) -> int:
     n_files = store.commit.table_file_count(store, path)
     if n_files <= 1:
         return 0
-    log = _driver_table(store, path, PURGE_LOG_SCHEMA)
 
     def write_snapshot(tmp: str) -> None:
-        if log is not None:
-            # _SUCCESS last: repair_interrupted_rewrite rolls a swap
-            # forward only onto a complete snapshot
-            store.fs.makedirs(tmp)
-            _driver_parquet_file(log, f"{tmp}/part-{uuid.uuid4().hex}.snappy.parquet")
-            store.fs.write_text(f"{tmp}/_SUCCESS", "")
-            return
-        # Seam-routed read: the CURRENT committed snapshot regardless
-        # of backend (directory vs manifest file list).
-        (
-            purge_log(store)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
+        # read here, inside the rewrite: a version-logged backend
+        # captures the member's files before its source is read
+        log = _read_table(store, path, PURGE_LOG_SCHEMA, PURGE_LOG_SCHEMA.fieldNames())
+        store.fs.makedirs(tmp)
+        with pq.ParquetWriter(
+            f"{tmp}/part-{uuid.uuid4().hex}.snappy.parquet", log.schema,
+            compression="snappy", store_schema=False,
+        ) as writer:
+            for batch in log:
+                writer.write_batch(batch)
+        # _SUCCESS last: repair_interrupted_rewrite rolls a swap
+        # forward only onto a complete snapshot
+        store.fs.write_text(f"{tmp}/_SUCCESS", "")
 
     store.commit.snapshot_rewrite(store, path, write_snapshot)
     return n_files
@@ -742,15 +686,10 @@ def compact(
     they still shadow older members in the cold tier on
     hot-union-cold reads.
 
-    Scale shape: on the driver (see the module docstring) the L1
-    members are read with pyarrow, ``lww_latest_arrow`` picks the
-    winners, and each dirty partition is rewritten as one file — no
-    Spark job. Otherwise: one partial-aggregated duplicate-detection
-    pass over (tag, part_start, ts); the rewrite then touches ONLY
-    partitions that actually hold duplicates, selected via a broadcast
-    semi-join on a small (tag, part_start) keys DataFrame — never a
-    literal per-partition predicate, so neither the plan nor driver
-    memory grows with the number of dirty partitions.
+    Scale shape (see the module docstring): ``_compact_batch`` runs
+    over the listed L1 partitions in-process when they fit one batch,
+    else in Spark tasks (``_compact_on_tasks``); the driver publishes
+    (``_publish_compacted``).
     """
     store._require_init()
     store._require_l1_batch_writable()
@@ -766,134 +705,105 @@ def compact(
     # is the maintenance job that collects the orphans (no-op on the
     # directory backend, which deletes eagerly).
     _vacuum_locked(store)
-    got = store._driver_members(None, unflushed=False)
-    if got is None:
-        metrics = _compact_on_spark(store, max_partitions)
+    files = store._list_files(None, unflushed=False)
+    l1 = files.l1()
+    batches = [[(*key, l1[key]) for key in sorted(keys)] for keys in files.batches(l1)]
+    if len(batches) > 1:
+        dirty = _compact_on_tasks(store, batches)
     else:
-        metrics = _compact_on_driver(store, *got, max_partitions)
+        dirty = [r for items in batches for r in _compact_batch(items)]
+    metrics = _publish_compacted(store, dirty, l1, max_partitions)
     store.invalidate_hot_cache()
     return metrics
 
 
-def _compact_on_driver(store, files, members, max_partitions) -> CompactionMetrics:
-    """Keep each key's winner (``lww_latest_arrow``) in every dirty
-    partition — one holding more rows than keys — or in the
-    ``max_partitions`` dirtiest."""
-    import itertools
+def _compact_batch(items) -> list[tuple]:
+    """The compaction kernel over the L1 partitions ``items``, each
+    ``(tag, part_start, files)``: a partition holding more rows than
+    LWW winners (``lww_latest_arrow``) is dirty, and its winners are
+    written under a hidden temp name beside its files
+    (``_inprogress_path``). Returns ``(tag, part_start, temp path,
+    rows, winners)`` per dirty partition."""
+    out = []
+    for tag, part_start, paths in items:
+        members = read_members(paths, [(tag, part_start)] * len(paths))
+        winners = lww_latest_arrow(members)
+        if winners.num_rows < members.num_rows:
+            tmp = _inprogress_path(paths[0].rsplit("/", 1)[0])
+            _driver_parquet_file(winners.select(DATA_COLS), tmp)
+            out.append((tag, part_start, tmp, members.num_rows, winners.num_rows))
+    return out
 
-    from redis_lsm_timeseries_spark.operators.lww import lww_latest_arrow
 
-    rows = {
-        (tag, part_start): n
-        for tag, part_start, n in zip(
-            *_columns(
-                members.group_by(["tag", "part_start"]).aggregate([("ts", "count")]),
-                "tag", "part_start", "ts_count",
-            )
-        )
-    }
-    # sorted so that each partition's winners are one run
-    winners = lww_latest_arrow(members).sort_by(
-        [("tag", "ascending"), ("part_start", "ascending"), ("ts", "ascending")]
-    )
-    runs, offset = {}, 0
-    for key, run in itertools.groupby(zip(*_columns(winners, "tag", "part_start"))):
-        n = sum(1 for _ in run)
-        runs[key] = (offset, n)
-        offset += n
-    dirty = sorted(
-        (key for key in rows if rows[key] > runs[key][1]),
-        key=lambda k: (runs[k][1] - rows[k], k),
-    )
-    if max_partitions is not None:
-        dirty = dirty[:max_partitions]
-    if not dirty:
-        return CompactionMetrics(0, 0, 0)
-    l1 = files.l1()
-    for key in dirty:
-        _replace_partition(store, key, winners.slice(*runs[key]), l1[key])
-    store._mark_l1_changed()
+def _compact_on_tasks(store: TimeseriesStore, batches) -> list[tuple]:
+    """``_compact_batch`` over each of ``batches`` in one Spark job, a
+    task per batch. A task imports this package from the directory the
+    driver imports it from, and writes into the store's directories:
+    executors must see both, as a local cluster's do."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+    def run(ids):
+        import sys
+
+        import pyarrow as pa
+
+        if root not in sys.path:
+            sys.path.insert(0, root)
+        from redis_lsm_timeseries_spark.tiering import _compact_batch
+
+        schema = pa.schema([
+            ("tag", pa.string()), ("part_start", pa.int64()), ("path", pa.string()),
+            ("rows", pa.int64()), ("winners", pa.int64()),
+        ])
+        for ids_batch in ids:
+            for i in ids_batch.column(0).to_pylist():
+                dirty = _compact_batch(batches[i])
+                yield pa.RecordBatch.from_pylist(
+                    [dict(zip(schema.names, r)) for r in dirty], schema=schema
+                )
+
+    return [
+        tuple(r)
+        for r in store.spark.range(len(batches), numPartitions=len(batches))
+        .mapInArrow(run, "tag string, part_start long, path string, rows long, winners long")
+        .collect()
+    ]
+
+
+def _publish_compacted(store, dirty, l1, max_partitions) -> CompactionMetrics:
+    """Publish the ``max_partitions`` dirtiest of the kernel's ``dirty``
+    partitions (most superseded rows first; all without a bound): each
+    temp file takes its name, then the files it replaces go
+    (``_remove_files``), then ``hot/_SUCCESS`` is replaced. The temp
+    files of the rest are removed."""
+    dirty = sorted(dirty, key=lambda r: (r[4] - r[3], r[0], r[1]))
+    n = len(dirty) if max_partitions is None else max_partitions
+    published = dirty[:n]
+    for tag, part_start, tmp, _, _ in published:
+        store.fs.rename(tmp, _published_path(tmp))
+        _remove_files(store, l1[(tag, part_start)])
+    if published:
+        store._mark_l1_changed()
+    for r in dirty[n:]:
+        store.fs.remove_file(r[2])
     return CompactionMetrics(
-        partitions_compacted=len(dirty),
-        rows_before=sum(rows[k] for k in dirty),
-        rows_after=sum(runs[k][1] for k in dirty),
-    )
-
-
-def _compact_on_spark(store, max_partitions) -> CompactionMetrics:
-    """``_compact_on_driver`` as Spark jobs over ``hot()``."""
-    from redis_lsm_timeseries_spark.operators.lww import lww_latest
-
-    hot = store.hot()
-    # One pass detects dup-holding partitions AND their row/key counts
-    # (rows_before, dup excess) — a separate count() of the target
-    # partitions would re-scan them.
-    part_stats = (
-        hot.groupBy("tag", "part_start", "ts")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .groupBy("tag", "part_start")
-        .agg(
-            F.sum("n").alias("rows"),
-            F.count(F.lit(1)).alias("keys"),
-            F.max("n").alias("max_n"),
-        )
-        .where(F.col("max_n") > 1)
-    )
-    if max_partitions is not None:
-        part_stats = (
-            part_stats.orderBy(
-                (F.col("rows") - F.col("keys")).desc(), "tag", "part_start"
-            )
-            .limit(max_partitions)
-        )
-    # Materialize once: at most K (or #dirty-partition) tiny rows —
-    # reused for the semi-join keys AND the metrics aggregate. LAZY:
-    # the totals aggregate right below doubles as the materializing
-    # action (r18, guide §1.2 — one job, not two).
-    part_stats = part_stats.localCheckpoint(eager=False)
-    totals = part_stats.agg(
-        F.count(F.lit(1)).alias("parts"), F.sum("rows").alias("rows")
-    ).first()
-    if totals.parts == 0:
-        return CompactionMetrics(0, 0, 0)
-    target = hot.join(
-        F.broadcast(part_stats.select("tag", "part_start")),
-        ["tag", "part_start"],
-        "left_semi",
-    )
-    winners = (
-        lww_latest(target)
-        .select(*[f.name for f in SAMPLE_SCHEMA.fields])
-        .repartition("tag", "part_start")
-        # lazy: the rows_after count below materializes it (the
-        # checkpoint itself stays mandatory — the overwrite replaces
-        # the directories this plan reads)
-        .localCheckpoint(eager=False)
-    )
-    rows_after = winners.count()
-    store.commit.overwrite_partitions(
-        store, winners, store.config.hot_path, PARTITION_COLS,
-    )
-    return CompactionMetrics(
-        partitions_compacted=totals.parts,
-        rows_before=totals.rows,
-        rows_after=rows_after,
+        len(published), sum(r[3] for r in published), sum(r[4] for r in published)
     )
 
 
 def purge_payload(store: TimeseriesStore, purge_id: str) -> DataFrame:
     """Decode a purge snapshot back into samples (reference
     ``parsePurgePayload``, ``index.js:350-355``), LWW-merged the same
-    way a read would be (O6)."""
-    from redis_lsm_timeseries_spark.operators.lww import lww_latest
-
+    way a read would be (O6), as a local relation."""
     store._require_init()
-    snap = (
-        cold_snapshots(store)
-        .where(F.col("purge_id") == purge_id)
-        .select(*[f.name for f in SAMPLE_SCHEMA.fields])
+    snap = _read_table(
+        store, store.config.cold_path, COLD_SNAPSHOT_SCHEMA,
+        SAMPLE_SCHEMA.fieldNames(), [("purge_id", "==", purge_id)],
+    ).read_all()
+    return store.spark.createDataFrame(
+        lww_latest_arrow(snap).select(RANGE_RESULT_SCHEMA.fieldNames()).combine_chunks(),
+        RANGE_RESULT_SCHEMA,
     )
-    return lww_latest(snap).select("tag", "ts", "value")
 
 
 @dataclass(frozen=True)
@@ -917,11 +827,10 @@ def apply_retention(
     KEPT in full: retention is partition-granular (chunk-granular in
     Timescale terms), never a row rewrite, so the sweep costs the
     doomed-partition lookup plus directory removals regardless of data
-    volume. On the driver (see the module docstring) the lookup reads
-    the hot listing and its Parquet footers (``_partition_activity``)
-    and the cold snapshots' ``purge_id=/tag=/part_start=`` directory
-    names, and starts no Spark job; otherwise it is one metadata-narrow
-    aggregate per tier.
+    volume. The lookup reads metadata only, on the driver: the hot
+    listing and its Parquet footers (``_partition_activity``), and the
+    cold snapshots' ``purge_id=/tag=/part_start=`` directory names
+    (``_read_table``).
 
     ``drop_cold=True`` extends the sweep to cold-tier snapshots whose
     partition lies before the cutoff (the archive is otherwise
@@ -945,82 +854,30 @@ def apply_retention(
     if max_partitions < 1:
         raise ValidationError("max_partitions must be >= 1")
     store._require_l1_batch_writable()
-    w = store.config.partition_width
+    cutoff = older_than_ms - store.config.partition_width
     store.flush_l0()
-
-    def expired(part_start) -> bool:
-        return part_start + w <= older_than_ms
-
-    # one path for both tiers: the driver when the hot files pass the
-    # rule and the cold snapshots are plain files (only their names are
-    # read), else Spark
-    files = store._driver_files(None)
-    cold_paths = (
-        store.commit.driver_table_files(store, store.config.cold_path) if drop_cold else []
-    )
-    on_driver = files is not None and cold_paths is not None
-    if not on_driver:
-        doomed = _doomed_on_spark(store, older_than_ms, max_partitions)
-    else:
-        doomed = sorted(
-            (part_start, tag, n)
-            for (tag, part_start), (_, n) in _partition_activity(files).items()
-            if expired(part_start)
-        )[:max_partitions]
+    doomed = sorted(
+        (part_start, tag, n)
+        for (tag, part_start), (_, n) in _partition_activity(store._list_files(None)).items()
+        if part_start <= cutoff
+    )[:max_partitions]
     for part_start, tag, _ in doomed:
         store.commit.drop_partition_dir(
             store, partition_dir(store.config.hot_path, tag, part_start)
         )
     if doomed:
         # other instances' cached hot() handles see the drops by the
-        # marker (see _evict_on_spark)
+        # marker (see _evict)
         store._mark_l1_changed()
         store.invalidate_hot_cache()
     if drop_cold:
-        if not on_driver:
-            cold_doomed = _cold_doomed_on_spark(store, older_than_ms)
-        else:
-            # each snapshot file's directory names key it
-            part_dirs = {path.rsplit("/", 1)[0] for path in cold_paths}
-            cold_doomed = sorted(
-                (d.rsplit("/", 3)[1].partition("=")[2], *partition_key(d))
-                for d in part_dirs
-                if expired(partition_key(d)[1])
-            )
-        for purge_id, tag, part_start in cold_doomed:
+        cold = _read_table(
+            store, store.config.cold_path, COLD_SNAPSHOT_SCHEMA,
+            list(SNAPSHOT_DIRS), [("part_start", "<=", cutoff)],
+        ).read_all()
+        for purge_id, tag, part_start in sorted(zip(*_columns(cold, *SNAPSHOT_DIRS))):
             store.commit.drop_partition_dir(
                 store,
                 partition_dir(f"{store.config.cold_path}/purge_id={purge_id}", tag, part_start),
             )
     return RetentionMetrics(len(doomed), sum(n for _, _, n in doomed))
-
-
-def _doomed_on_spark(store, older_than_ms, max_partitions) -> list[tuple]:
-    """``(part_start, tag, rows)`` of the oldest ``max_partitions`` hot
-    partitions lying wholly before ``older_than_ms``, from one Spark
-    aggregate over ``hot()``."""
-    w = store.config.partition_width
-    return [
-        (r.part_start, r.tag, r.n)
-        for r in store.hot()
-        .where(F.col("part_start") + F.lit(w) <= F.lit(int(older_than_ms)))
-        .groupBy("tag", "part_start")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("part_start", "tag")
-        .limit(int(max_partitions))
-        .collect()
-    ]
-
-
-def _cold_doomed_on_spark(store, older_than_ms) -> list[tuple]:
-    """``(purge_id, tag, part_start)`` of the cold snapshot partitions
-    lying wholly before ``older_than_ms``, from one Spark query."""
-    w = store.config.partition_width
-    return [
-        (r.purge_id, r.tag, r.part_start)
-        for r in cold_snapshots(store)
-        .where(F.col("part_start") + F.lit(w) <= F.lit(int(older_than_ms)))
-        .select("purge_id", "tag", "part_start")
-        .distinct()
-        .collect()
-    ]

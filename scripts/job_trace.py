@@ -67,7 +67,16 @@ def _next_job_id(spark) -> int:
 
 
 def _install(spark) -> None:
+    """Wrap every listed chokepoint. A listed name the code no longer
+    defines raises ``AttributeError`` naming it, so a rename cannot
+    silently drop its attribution; the commit classes wrap only the
+    names each class defines itself."""
     njid = functools.partial(_next_job_id, spark)
+
+    def traced(obj, name, label):
+        if inspect.getattr_static(obj, name, None) is None:
+            raise AttributeError(f"job_trace: {obj.__name__}.{name} is gone")
+        wrap(obj, name, label, njid)
 
     from redis_lsm_timeseries_spark import commit as C
     from redis_lsm_timeseries_spark import rollup as R
@@ -78,18 +87,16 @@ def _install(spark) -> None:
     for name in (
         "write_df", "_collect_load", "_publish_l1_runs", "write", "flush_l0",
         "_fold_staged", "_fold_on_driver", "initialize", "_recover_staging",
-        "_driver_members", "read_all",
+        "_list_files", "_driver_members", "read_all",
     ):
-        wrap(S.TimeseriesStore, name, f"store.{name}", njid)
+        traced(S.TimeseriesStore, name, f"store.{name}")
     for name in (
         "purge_scan", "purge_ack_many", "compact", "compact_purge_log",
-        "_vacuum_locked", "_append_log", "apply_retention", "_driver_table",
-        "_coldest_on_driver", "_coldest_on_spark", "_snapshot_on_driver",
-        "_snapshot_on_spark", "_log_states", "_evict_on_driver",
-        "_evict_on_spark", "_compact_on_driver", "_compact_on_spark",
-        "_partition_activity", "_doomed_on_spark", "_cold_doomed_on_spark",
+        "_vacuum_locked", "_append_log", "apply_retention", "_read_table",
+        "_write_snapshots", "_coldest", "_partition_activity", "_log_states",
+        "_evict", "_compact_batch", "_compact_on_tasks", "_publish_compacted",
     ):
-        wrap(T, name, f"tiering.{name}", njid)
+        traced(T, name, f"tiering.{name}")
     for cls in (C.ParquetLeaseCommit, C.ManifestCommit):
         for name in (
             "append_rows", "append_partitioned", "overwrite_partitions",
@@ -105,19 +112,19 @@ def _install(spark) -> None:
         "merge_into", "delete_rows", "_resolve_source_counted",
         "_apply_dv_delete",
     ):
-        wrap(M, name, f"merge.{name}", njid)
+        traced(M, name, f"merge.{name}")
     for name in (
         "refresh_rollup", "_refresh_locked", "read_rollup", "_aggregate_arrow",
         "_spark_select",
     ):
-        wrap(R, name, f"rollup.{name}", njid)
+        traced(R, name, f"rollup.{name}")
     # the refresh's data steps, on each path
     for cls in (R._SparkSteps, R._DriverSteps):
         for name in (
             "watermark", "full", "boundary_rows", "probe", "bucket_stats",
             "upper_boundary", "select", "merge", "publish",
         ):
-            wrap(cls, name, f"rollup.{cls.__name__}.{name}", njid)
+            traced(cls, name, f"rollup.{cls.__name__}.{name}")
     # the query plans import these BY NAME, so the module-level wraps
     # above don't intercept their calls — wrap the plan modules' own
     # references too (labels marked @plan)

@@ -1,9 +1,11 @@
-"""The maintenance steps on the driver: ``purge_scan``,
-``purge_ack_many`` and ``compact`` computed with pyarrow when their
-files pass ``read_range``'s rule, against the same steps on Spark
-(forced by a read cap of 0); eviction of tombstones and of tags whose
-directory names Spark escapes; emptied ``tag=`` directories; and
-crash-point sweeps over the driver-side ack and compaction."""
+"""The maintenance steps' one data path at two read caps: the default
+``MAX_DRIVER_READ_BYTES`` and 0, which batches ``purge_scan``'s
+snapshot and the ack's eviction one partition at a time and runs
+``compact``'s kernel in Spark tasks, on the directory backend and (the
+purge and retention steps) on ``ManifestCommit``; eviction of
+tombstones and of tags whose directory names Spark escapes; emptied
+``tag=`` directories; and crash-point sweeps over the ack and
+compaction at both caps."""
 
 from __future__ import annotations
 
@@ -37,15 +39,15 @@ def _next_job_id(spark) -> int:
     return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
 
 
-def _open(spark, root) -> TimeseriesStore:
-    s = TimeseriesStore(spark, EngineConfig(root=str(root), partition_width=WIDTH))
+def _open(spark, root, commit=None) -> TimeseriesStore:
+    s = TimeseriesStore(spark, EngineConfig(root=str(root), partition_width=WIDTH), commit=commit)
     s.initialize()
     return s
 
 
-def _copy(spark, src: TimeseriesStore, root) -> TimeseriesStore:
+def _copy(spark, src: TimeseriesStore, root, commit=None) -> TimeseriesStore:
     shutil.copytree(src.config.root, root)
-    return _open(spark, root)
+    return _open(spark, root, commit)
 
 
 def _rows(df) -> list[tuple]:
@@ -77,20 +79,29 @@ def _tag_dirs(s) -> list[str]:
     return sorted(n for n in os.listdir(hot) if n.startswith("tag=")) if os.path.exists(hot) else []
 
 
-def _path(on_spark: bool):
-    """The Spark path is forced by a driver read cap of 0."""
-    return mock.patch.object(store_module, "MAX_DRIVER_READ_BYTES", 0) if on_spark else nullcontext()
+def _path(capped: bool):
+    """A driver read cap of 0: one-partition batches, and ``compact``'s
+    kernel in Spark tasks."""
+    return mock.patch.object(store_module, "MAX_DRIVER_READ_BYTES", 0) if capped else nullcontext()
 
 
-def _run(spark, s, on_spark, fn, *args, **kw):
-    """``fn`` on the driver path or on Spark (``_path``); the driver
-    path must start no Spark job, the Spark one some."""
-    with _path(on_spark):
+def _run(spark, s, capped, fn, *args, **kw):
+    """``fn`` at the default cap or at 0 (``_path``). On the directory
+    backend only a capped ``compact`` starts Spark jobs (its tasks);
+    ``ManifestCommit`` reads its purge log and cold tier through
+    Spark."""
+    with _path(capped):
         j0 = _next_job_id(spark)
         out = fn(s, *args, **kw)
         jobs = _next_job_id(spark) - j0
+    on_spark = isinstance(s.commit, ManifestCommit) or (capped and fn is compact)
     assert (jobs > 0) if on_spark else (jobs == 0), (fn.__name__, jobs)
     return out
+
+
+#: the ``(commit, capped)`` legs of the steps compared across backends:
+#: the directory store at the default cap comes first
+LEGS = [(None, False), (None, True), (ManifestCommit, False), (ManifestCommit, True)]
 
 
 @pytest.fixture(scope="module")
@@ -99,46 +110,52 @@ def layered(spark, tmp_path_factory):
 
 
 class TestBothPathsAgree:
-    """Each step on a copy of the ``layered`` store, once per path:
-    equal hot rows, cold snapshot rows (but for ``purge_id``), purge-log
-    rows and returned marks or metrics."""
+    """Each step on a copy of the ``layered`` store, once per cap (and,
+    for the purge and retention, per backend — ``LEGS``): equal hot
+    rows, cold snapshot rows (but for ``purge_id``), purge-log rows and
+    returned marks or metrics."""
 
-    def _purge(self, spark, layered, root, on_spark):
-        s = _copy(spark, layered, root)
-        marks = _run(spark, s, on_spark, purge_scan, 0.0, 1000, now_ms=1000)
+    def _purge(self, spark, layered, root, commit, capped):
+        s = _copy(spark, layered, root, commit and commit())
+        marks = _run(spark, s, capped, purge_scan, 0.0, 1000, now_ms=1000)
         # a write into the first marked partition after the mark survives
         s.writer_id = "late"
         s.write([(marks[0].tag, marks[0].part_start + 1, "late")], ingest_ts=2000)
-        acked = _run(spark, s, on_spark, purge_ack_many, [m.purge_id for m in marks], now_ms=3000)
-        with _path(on_spark):
+        acked = _run(spark, s, capped, purge_ack_many, [m.purge_id for m in marks], now_ms=3000)
+        with _path(capped):
             reack = purge_ack(s, marks[0].purge_id, now_ms=4000)
         return s, marks, acked, reack
 
     def test_purge_scan_ack_and_reack(self, spark, layered, tmp_path):
-        driver, d_marks, d_acked, d_reack = self._purge(spark, layered, tmp_path / "d", False)
-        sp, s_marks, s_acked, s_reack = self._purge(spark, layered, tmp_path / "s", True)
+        runs = [
+            self._purge(spark, layered, tmp_path / str(i), commit, capped)
+            for i, (commit, capped) in enumerate(LEGS)
+        ]
+        driver, d_marks, _, _ = runs[0]
         key = [(m.tag, m.part_start, m.n_rows) for m in d_marks]
-        assert key == [(m.tag, m.part_start, m.n_rows) for m in s_marks]
         # every partition, the ``tie`` ones and the tombstones included
         assert {t for t, _, _ in key} == {*TAGS, "tie"}
-        assert list(d_acked.values()) == list(s_acked.values()) == [True] * len(key)
-        assert d_reack is s_reack is False
-        assert _hot_members(driver) == _hot_members(sp)
         late = ("a:b", -19, "late")
         assert [m[:3] for m in _hot_members(driver)] == [late]
-        assert _cold_members(driver) == _cold_members(sp)
-        assert _log_rows(driver) == _log_rows(sp)
-        # fully evicted partitions leave no directory, escaped tags too
-        assert _tag_dirs(driver) == _tag_dirs(sp) == ["tag=a%3Ab"]
         everything = sorted(_rows(layered.read_all()) + [late], key=repr)
         assert _rows(driver.read_all(include_cold=True)) == everything
+        for (commit, capped), (s, marks, acked, reack) in zip(LEGS, runs):
+            leg = (commit, capped)
+            assert [(m.tag, m.part_start, m.n_rows) for m in marks] == key, leg
+            assert list(acked.values()) == [True] * len(key), leg
+            assert reack is False, leg
+            assert _hot_members(s) == _hot_members(driver), leg
+            assert _cold_members(s) == _cold_members(driver), leg
+            assert _log_rows(s) == _log_rows(driver), leg
+            # fully evicted partitions leave no directory, escaped tags too
+            assert _tag_dirs(s) == ["tag=a%3Ab"], leg
 
     @pytest.mark.parametrize("max_partitions", [None, 3])
     def test_compact(self, spark, layered, tmp_path, max_partitions):
         stores, metrics = [], []
-        for on_spark in (False, True):
-            s = _copy(spark, layered, tmp_path / str(on_spark))
-            metrics.append(_run(spark, s, on_spark, compact, max_partitions))
+        for capped in (False, True):
+            s = _copy(spark, layered, tmp_path / str(capped))
+            metrics.append(_run(spark, s, capped, compact, max_partitions))
             stores.append(s)
         assert metrics[0] == metrics[1]
         assert metrics[0].rows_after < metrics[0].rows_before
@@ -156,32 +173,33 @@ class TestBothPathsAgree:
         whose directory names Spark escapes among them; ``tie`` lives
         in one partition and leaves no ``tag=`` directory."""
         stores, metrics = [], []
-        for on_spark in (False, True):
-            s = _copy(spark, layered, tmp_path / str(on_spark))
+        for i, (commit, capped) in enumerate(LEGS):
+            s = _copy(spark, layered, tmp_path / str(i), commit and commit())
             assert len(purge_scan(s, 0.0, 30, now_ms=1000)) == 30
-            metrics.append(_run(spark, s, on_spark, apply_retention, older_than_ms=10, drop_cold=True))
+            metrics.append(_run(spark, s, capped, apply_retention, older_than_ms=10, drop_cold=True))
             stores.append(s)
-        assert metrics[0] == metrics[1]
         assert metrics[0].partitions_dropped == 5 * len(TAGS) + 1
-        driver, sp = stores
-        assert _hot_members(driver) == _hot_members(sp)
-        assert _cold_members(driver) == _cold_members(sp)
+        driver = stores[0]
         assert min(m[6] for m in _hot_members(driver)) == 10
         assert min(m[6] for m in _cold_members(driver)) == 10
-        assert _tag_dirs(driver) == _tag_dirs(sp) == sorted(
-            f"tag={ManifestCommit._escape_partition_value(t)}" for t in TAGS
-        )
         kept = [r for r in _rows(layered.read_all()) if r[1] >= 10]
         assert _rows(driver.read_all(include_cold=True)) == kept
+        for leg, s, m in zip(LEGS, stores, metrics):
+            assert m == metrics[0], leg
+            assert _hot_members(s) == _hot_members(driver), leg
+            assert _cold_members(s) == _cold_members(driver), leg
+            assert _tag_dirs(s) == sorted(
+                f"tag={ManifestCommit._escape_partition_value(t)}" for t in TAGS
+            ), leg
 
     def test_purge_log_compaction(self, spark, layered, tmp_path):
         logs = []
-        for on_spark in (False, True):
-            s = _copy(spark, layered, tmp_path / str(on_spark))
+        for capped in (False, True):
+            s = _copy(spark, layered, tmp_path / str(capped))
             marks = purge_scan(s, 0.0, 2, now_ms=1000)
             purge_ack_many(s, [m.purge_id for m in marks], now_ms=2000)
             before = _log_rows(s)
-            _run(spark, s, on_spark, compact)
+            _run(spark, s, capped, compact)
             log_dir = s.config.purge_log_path
             assert len([n for n in os.listdir(log_dir) if n.endswith(".parquet")]) == 1
             assert _log_rows(s) == before
@@ -189,24 +207,25 @@ class TestBothPathsAgree:
         assert logs[0] == logs[1]
 
 
-@pytest.mark.parametrize("on_spark", [False, True], ids=["driver", "spark"])
+# "spark" is the cap-0 leg, one-partition batches (``_path``)
+@pytest.mark.parametrize("capped", [False, True], ids=["driver", "spark"])
 class TestEviction:
-    def test_tombstone_partition_evicted_and_dropped(self, spark, tmp_path, on_spark):
+    def test_tombstone_partition_evicted_and_dropped(self, spark, tmp_path, capped):
         s = _open(spark, tmp_path / "engine")
         s.write([("a", 1, "x"), ("a", 2, None)], ingest_ts=100)
         s.flush_l0()
-        marks = _run(spark, s, on_spark, purge_scan, 0.0, 10, now_ms=1000)
-        assert _run(spark, s, on_spark, purge_ack_many, [m.purge_id for m in marks]) == {marks[0].purge_id: True}
+        marks = _run(spark, s, capped, purge_scan, 0.0, 10, now_ms=1000)
+        assert _run(spark, s, capped, purge_ack_many, [m.purge_id for m in marks]) == {marks[0].purge_id: True}
         assert _rows(s.hot()) == []
         assert _tag_dirs(s) == []
 
-    def test_escaped_tag_evicted_and_dropped(self, spark, tmp_path, on_spark):
+    def test_escaped_tag_evicted_and_dropped(self, spark, tmp_path, capped):
         s = _open(spark, tmp_path / "engine")
         s.write([("a:b", 1, "x"), ("a:b", 2, "y"), ("plain", 1, "z")], ingest_ts=100)
         s.flush_l0()
-        marks = _run(spark, s, on_spark, purge_scan, 0.0, 1, now_ms=1000)
+        marks = _run(spark, s, capped, purge_scan, 0.0, 1, now_ms=1000)
         assert [(m.tag, m.part_start) for m in marks] == [("a:b", 0)]
-        _run(spark, s, on_spark, purge_ack_many, [marks[0].purge_id])
+        _run(spark, s, capped, purge_ack_many, [marks[0].purge_id])
         assert [r[:3] for r in _rows(s.hot())] == [("plain", 1, "z")]
         assert _tag_dirs(s) == ["tag=plain"]
         assert _rows(s.read_all(include_cold=True)) == [("a:b", 1, "x"), ("a:b", 2, "y"), ("plain", 1, "z")]
@@ -240,11 +259,11 @@ def test_emptied_tag_directories_are_removed(spark, tmp_path):
     assert _tag_dirs(s) == ["tag=q"]
 
 
-@pytest.mark.parametrize("how", ["retention", "spark-ack"])
+@pytest.mark.parametrize("how", ["retention", "ack"])
 def test_other_instance_sees_a_partition_drop(spark, tmp_path, how):
     """A partition dropped from a ``tag=`` directory that stays, by
-    retention or by a full eviction on the Spark path, is seen by
-    another store instance that cached its ``hot()`` handle before."""
+    retention or by a full eviction, is seen by another store instance
+    that cached its ``hot()`` handle before."""
     a = _open(spark, tmp_path / "engine")
     a.write([("t", 1, "x"), ("t", 55, "y")], ingest_ts=100)
     a.flush_l0()
@@ -255,7 +274,7 @@ def test_other_instance_sees_a_partition_drop(spark, tmp_path, how):
     else:
         marks = purge_scan(b, 0.0, 1, now_ms=1000)
         assert [(m.tag, m.part_start) for m in marks] == [("t", 0)]
-        _run(spark, b, True, purge_ack_many, [marks[0].purge_id])
+        assert purge_ack_many(b, [marks[0].purge_id]) == {marks[0].purge_id: True}
     assert _tag_dirs(a) == ["tag=t"]
     assert _rows(a.read_all()) == [("t", 55, "y")]
 
@@ -287,10 +306,19 @@ def _lww(s, **kw) -> list[tuple]:
 
 
 def test_purge_ack_crashed_at_every_storage_call(spark, tmp_path):
-    """For every k the ack dies at its k-th mutating storage call. A
-    fresh store reads hot∪cold as before the ack (which is also the
-    state after it), its hot tier keeps every member the snapshots do
-    not hold, and a retried ack reaches the after state."""
+    _purge_ack_sweep(spark, tmp_path, capped=False)
+
+
+def test_purge_ack_crashed_at_every_storage_call_in_one_partition_batches(spark, tmp_path):
+    _purge_ack_sweep(spark, tmp_path, capped=True)
+
+
+def _purge_ack_sweep(spark, tmp_path, capped):
+    """For every k the ack (at the default cap, or at 0: one partition
+    per batch) dies at its k-th mutating storage call. A fresh store
+    reads hot∪cold as before the ack (which is also the state after
+    it), its hot tier keeps every member the snapshots do not hold, and
+    a retried ack reaches the after state."""
     s = _open(spark, tmp_path / "prepared")
     s.writer_id = "w"
     s.write([("a:b", 1, "x"), ("a:b", 2, None), ("a:b", 12, "y"), ("p", 3, "z")], ingest_ts=100)
@@ -318,14 +346,28 @@ def test_purge_ack_crashed_at_every_storage_call(spark, tmp_path):
             assert _tag_dirs(fresh) == ["tag=a%3Ab"]
             assert purge_ack_many(fresh, ids) == {pid: False for pid in ids}
 
-    _sweep(spark, tmp_path, s, lambda st: purge_ack_many(st, ids, now_ms=3000), check)
+    def step(st):
+        with _path(capped):
+            purge_ack_many(st, ids, now_ms=3000)
+
+    _sweep(spark, tmp_path, s, step, check)
 
 
 def test_compact_crashed_at_every_storage_call(spark, tmp_path):
+    _compact_sweep(spark, tmp_path, capped=False)
+
+
+def test_compact_crashed_at_every_storage_call_in_tasks(spark, tmp_path):
+    _compact_sweep(spark, tmp_path, capped=True)
+
+
+def _compact_sweep(spark, tmp_path, capped):
     """For every k compaction (its purge-log rewrite included) dies at
-    its k-th mutating storage call. A fresh store reads the same LWW
-    rows and purge log on both read paths, holds no member that was not
-    there before, and a retried compaction leaves one member per key."""
+    its k-th mutating storage call; at cap 0 Spark tasks write the
+    temp files and the driver renames them. A fresh store reads the
+    same LWW rows and purge log on both read paths, holds no member
+    that was not there before, and a retried compaction leaves one
+    member per key."""
     s = _open(spark, tmp_path / "prepared")
     s.writer_id = "w"
     s.write([("q", 30, "gone")], ingest_ts=50)
@@ -350,4 +392,8 @@ def test_compact_crashed_at_every_storage_call(spark, tmp_path):
         if k is None:
             assert max(Counter(m[:2] for m in _driver_hot_members(fresh)).values()) == 1
 
-    _sweep(spark, tmp_path, s, compact, check)
+    def step(st):
+        with _path(capped):
+            compact(st)
+
+    _sweep(spark, tmp_path, s, step, check)

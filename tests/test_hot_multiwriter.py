@@ -32,7 +32,7 @@ from redis_lsm_timeseries_spark.errors import (
     SinkManagedHotTierError,
 )
 from redis_lsm_timeseries_spark.store import TimeseriesStore
-from redis_lsm_timeseries_spark.tiering import compact, maintenance_lease
+from redis_lsm_timeseries_spark.tiering import compact, maintenance_lease, purge_scan
 
 T0 = 1_000_000
 
@@ -152,18 +152,18 @@ class TestRowBatchWritesVsMaintenance:
     @pytest.mark.parametrize("path", ["spark", "driver"])
     def test_write_after_compaction_scan_survives(self, spark, tmp_path, monkeypatch, path):
         """A row-batch write landing while compaction is mid-flight
-        (after its hot scan) is in L0, not L1 — the partition rewrite
-        cannot touch it. On the Spark path (forced by a driver read cap
-        of 0) the write lands before the partition overwrite; on the
-        driver path, before the rewritten partition's file is
-        published."""
+        (after its kernel read the partitions) is in L0, not L1 — the
+        partition rewrite cannot touch it. The write lands before the
+        publish, after the kernel ran in Spark tasks (forced by a
+        driver read cap of 0) or in-process."""
         from redis_lsm_timeseries_spark import store as store_module
         from redis_lsm_timeseries_spark import tiering
 
         a = _mk(spark, tmp_path)
         b = _second_writer(spark, a)
-        # seed duplicates so compaction has work
-        a.write([("t", 100, "old")], ingest_ts=T0)
+        # seed duplicates so compaction has work, in two partitions so
+        # a cap of 0 makes two batches
+        a.write([("t", 100, "old"), ("s", 1, "seed")], ingest_ts=T0)
         a.write([("t", 100, "new")], ingest_ts=T0 + 1)
         a.flush_l0()
 
@@ -177,19 +177,15 @@ class TestRowBatchWritesVsMaintenance:
 
         if path == "spark":
             monkeypatch.setattr(store_module, "MAX_DRIVER_READ_BYTES", 0)
-            monkeypatch.setattr(
-                a.commit, "overwrite_partitions", racing(a.commit.overwrite_partitions)
-            )
-        else:
-            monkeypatch.setattr(
-                tiering, "_driver_parquet_append", racing(tiering._driver_parquet_append)
-            )
+        monkeypatch.setattr(
+            tiering, "_publish_compacted", racing(tiering._publish_compacted)
+        )
         compact(a)
         monkeypatch.undo()
         got = {
             (r.tag, r.ts): r.value for r in b.read_all().collect()
         }
-        assert got == {("t", 100): "latest", ("u", 5): "x"}
+        assert got == {("t", 100): "latest", ("u", 5): "x", ("s", 1): "seed"}
 
 
 class TestBulkLoadLease:
@@ -388,6 +384,8 @@ class TestFileSinkExclusivity:
             compact(s)
         with pytest.raises(SinkManagedHotTierError):
             apply_retention(s, older_than_ms=10**15)
+        with pytest.raises(SinkManagedHotTierError):
+            purge_scan(s, 0.0, 10)
         # write() is still fine (L0 is the sink-independent tier and
         # hot() unions it) ...
         s.write([("w", 5, "l0row")], ingest_ts=T0)

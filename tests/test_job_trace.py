@@ -1,7 +1,8 @@
-"""``scripts/job_trace.py``'s ``wrap`` keeps a wrapped method's kind: a
+"""``scripts/job_trace.py``: ``wrap`` keeps a wrapped method's kind: a
 static method is still called without an instance, a class method with
 its class, and an instance method with its instance, whether called
-through the class or through an instance."""
+through the class or through an instance; and ``_install`` lists no
+name the package no longer defines."""
 
 from __future__ import annotations
 
@@ -63,3 +64,19 @@ def test_wrap_keeps_static_class_and_instance_methods(job_trace):
     assert isinstance(Toy.__dict__["double"], staticmethod)
     assert isinstance(Toy.__dict__["shifted"], classmethod)
     assert Toy.double.__name__ == "double"
+
+
+def test_install_names_only_live_chokepoints(job_trace, spark, monkeypatch):
+    """Every name ``_install`` lists exists (a deleted or renamed
+    function would otherwise drop out of the trace unnoticed), and a
+    missing one raises with its name."""
+    wrapped = []
+    monkeypatch.setattr(job_trace, "wrap", lambda obj, name, label, njid: wrapped.append(label))
+    job_trace._install(spark)
+    assert {"tiering.purge_scan", "tiering._compact_batch", "store._list_files"} <= set(wrapped)
+
+    from redis_lsm_timeseries_spark import tiering
+
+    monkeypatch.delattr(tiering, "_evict")
+    with pytest.raises(AttributeError, match=r"tiering\._evict is gone"):
+        job_trace._install(spark)

@@ -482,12 +482,12 @@ class TestCommitSeam:
 
     @pytest.mark.parametrize("on_spark", [True, False], ids=["spark", "driver"])
     def test_custom_commit_receives_every_operation(self, spark, tmp_path, on_spark):
-        """On the Spark path (forced by a driver read cap of 0) every
-        table operation routes through the seam. On the driver path a
-        partially evicted hot partition is rewritten as a new file
-        instead of through ``overwrite_partitions``, because the hot
-        tier is always a plain directory layout (as ``flush_l0``'s
-        fold); the rest still routes through the seam."""
+        """At the default cap and at 0 (one-partition batches) the
+        lease, the log append, partition drops and the log rewrite
+        route through the seam. A partially evicted hot partition is
+        rewritten as a new file, never through ``overwrite_partitions``,
+        because the hot tier is always a plain directory layout (as
+        ``flush_l0``'s fold)."""
         from unittest import mock
 
         from redis_lsm_timeseries_spark import store as store_module
@@ -532,7 +532,7 @@ class TestCommitSeam:
             s.write([("GapTag", 11, "Eleven")], ingest_ts=T0 + 2_000)
             acked = purge_ack_many(s, [m.purge_id for m in marks])
             assert all(acked.values())
-            assert "drop" in calls and ("overwrite" in calls) is on_spark
+            assert "drop" in calls and "overwrite" not in calls
             # force a multi-file protocol log, then compaction -> rewrite
             _append_log(s, [("x1", "GapTag", 0, "marked", T0, 1)])
             compact_purge_log(s)
