@@ -15,29 +15,27 @@ update to an old key (late write, LWW supersede) re-touches its bucket
 and the recompute re-derives that bucket from scratch, so updates and
 tombstones are handled by construction, not by patch arithmetic.
 
-100 TB shape: the new-member probe is one narrow (tag, ts, ingest_ts)
-scan with the watermark predicate pushed down; the recompute reads
-ONLY touched buckets via a broadcast semi-join on the (small) touched
-set; the rollup table is partitioned by tag and rewritten via the
-store's TableCommit seam (dynamic partition overwrite on touched tags
-— on Delta/Iceberg, a MERGE). Numeric sums accumulate in DECIMAL and
-surface as DOUBLE, so an incremental refresh is bit-identical to a
-full recompute regardless of aggregation order.
+One data path at every store size, on the driver. The probe streams
+``tag``, ``ts`` and ``ingest_ts`` from the hot and cold files whose
+footer ``max(ingest_ts)`` is at or past the watermark and keeps only
+per-(tag, bucket) stats (identity columns are read only at a boundary
+``ingest_ts``). The recompute runs the selected tags in batches whose
+touched member files and old rollup files total at most
+``MAX_DRIVER_READ_BYTES`` (a tag over the cap is a batch alone): one
+Arrow kernel takes the LWW winners, aggregates and merges the carried
+buckets, and stages each tag's content in a hidden directory; the
+refresh publishes after the last batch, then writes the meta. Value →
+number casts are Spark's own, over a local relation (no job); a
+``with_sketch`` rollup's HLL sketches are ``hll_sketch_agg`` over each
+batch's winners (one job). Sums accumulate in DECIMAL and surface as
+DOUBLE, so an incremental refresh is bit-identical to the Spark SQL
+full recompute (``rollup_full``) regardless of aggregation order.
 
-Small refreshes run on the driver, under ``read_range``'s rule: the
-probe reads only the hot and cold files whose footer
-``max(ingest_ts)`` is at or past the watermark, the recompute only the
-partitions that overlap a touched bucket, and each set must total at
-most ``MAX_DRIVER_READ_BYTES``; both are read with pyarrow
-(``TimeseriesStore._driver_members``) and nothing starts a Spark job.
-The value → number conversions are Spark's own casts, evaluated on the
-driver over a local relation, so both paths give the same rows. Each
-touched tag's new content is published atomically, by one rename over
-the tag directory's single file. A rollup on a version-logged backend
-(``driver_table_files`` is None), one with HLL sketches, or inputs
-over the cap take the Spark path; the choice is made before anything
-is written, and the protocol (watermark, boundary count, backlog
-cursor, meta) is written once for both.
+The backend only picks the I/O: pyarrow over a plain-directory
+backend's files, each tag published by one rename over its single
+file; on a version-logged one (``driver_table_files`` is None) the
+seam reads the cold members and carried rows, and publishes with one
+``overwrite_partitions`` over the staged files.
 
 All refreshes run under the namespace maintenance lease, like every
 other mutation job (``tiering.py``).
@@ -45,19 +43,29 @@ other mutation job (``tiering.py``).
 
 from __future__ import annotations
 
+import bisect
+import itertools
 import json
+import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from redis_lsm_timeseries_spark.commit import _driver_arrow_schema
+from redis_lsm_timeseries_spark.commit import _driver_arrow_schema, _driver_parquet_file
 from redis_lsm_timeseries_spark.errors import ValidationError
-from redis_lsm_timeseries_spark.operators.lww import lww_latest
-from redis_lsm_timeseries_spark.schema import MEMBER_IDENTITY_COLS
+from redis_lsm_timeseries_spark.operators.lww import lww_latest, lww_latest_arrow
+from redis_lsm_timeseries_spark.schema import MEMBER_IDENTITY_COLS, SAMPLE_SCHEMA
 from redis_lsm_timeseries_spark.store import (
+    DriverFiles,
     PartitionFilter,
     TimeseriesStore,
-    driver_read_bytes,
+    _file_sizes,
+    member_dataset,
+    size_batches,
     tag_dir,
 )
 from redis_lsm_timeseries_spark.tiering import maintenance_lease
@@ -84,8 +92,10 @@ ROLLUP_SCHEMA = T.StructType(
     ]
 )
 
-#: ``ROLLUP_SCHEMA`` as the driver-side refresh reads and writes it
+#: ``ROLLUP_SCHEMA`` as the refresh reads and writes it with pyarrow
 _ROLLUP_ARROW = _driver_arrow_schema(ROLLUP_SCHEMA)
+#: the raw members as the refresh reads them
+_MEMBER_ARROW = _driver_arrow_schema(SAMPLE_SCHEMA)
 
 
 def _rollup_schema(with_sketch: bool) -> T.StructType:
@@ -94,6 +104,13 @@ def _rollup_schema(with_sketch: bool) -> T.StructType:
     return T.StructType(
         [*ROLLUP_SCHEMA.fields, T.StructField("distinct_sketch", T.BinaryType())]
     )
+
+
+def _rollup_arrow(with_sketch: bool):
+    """``_rollup_schema`` as a pyarrow schema."""
+    if not with_sketch:
+        return _ROLLUP_ARROW
+    return _ROLLUP_ARROW.append(pa.field("distinct_sketch", pa.binary()))
 
 
 @dataclass(frozen=True)
@@ -112,48 +129,18 @@ def _paths(store: TimeseriesStore, name: str) -> tuple[str, str]:
     return f"{base}/data", f"{base}/{META_NAME}"
 
 
-def _raw_members(
-    store: TimeseriesStore, ingest_floor: int | None = None
-) -> DataFrame:
-    """hot ∪ cold WITHOUT the identity dedup: the at-least-once
-    duplicate window (same member snapshotted to cold but not yet
-    acked out of hot) is still present. Use for aggregates that are
-    INVARIANT under exact duplicates — max(ingest_ts), DISTINCT
-    (tag, bucket) — where paying the full-corpus dedup shuffle would
-    be pure waste.
-
-    ``ingest_floor`` (inclusive) enables manifest-stats file skipping
-    on the COLD member: the refresh's new-work probe only cares about
-    rows with ``ingest_ts`` at/past the watermark, and on a manifest
-    backend the cold tier's per-file ``ingest_ts`` stats prune every
-    snapshot file wholly below it at PLAN time — which at 100 TB is
-    nearly all of them, since eviction moves OLD data cold while new
-    work lands hot. Superset guard only: the caller's real
-    ``ingest_ts`` row filter stays mandatory."""
-    cold = store.cold(
-        predicates=(
-            {"ingest_ts": (int(ingest_floor), None)}
-            if ingest_floor is not None
-            else None
-        )
-    )
-    return store.hot().unionByName(cold)
-
-
 def _members(store: TimeseriesStore) -> DataFrame:
     """The logical member view: hot ∪ cold, exact duplicates dropped
     by identity — the same base relation
     ``read_range(include_cold=True)`` merges."""
-    return _raw_members(store).dropDuplicates(MEMBER_IDENTITY_COLS)
+    return store.hot().unionByName(store.cold()).dropDuplicates(MEMBER_IDENTITY_COLS)
 
 
 def _bucket(step: int):
     return (F.col("ts") - F.pmod(F.col("ts"), F.lit(int(step)))).cast("long")
 
 
-def _aggregate(
-    winners: DataFrame, step: int, with_sketch: bool = False
-) -> DataFrame:
+def _aggregate(winners: DataFrame, step: int) -> DataFrame:
     """Per-(tag, bucket) aggregate over LWW winners (tombstones —
     NULL-value winners — excluded, mirroring the read path). Values
     are opaque strings; numeric stats cover the castable subset.
@@ -162,27 +149,11 @@ def _aggregate(
     distinct-users continuous aggregate): every touched bucket is
     recomputed FROM THE BASE SLICE, so count-distinct needs no
     mergeable state — incremental == full by construction, the same
-    discipline as every other column. ``with_sketch`` adds a
-    ``distinct_sketch`` HLL blob (``hll_sketch_agg``) per bucket:
-    MERGEABLE across buckets, for rollup-over-rollup consumers
-    (``hll_union_agg`` over day buckets gives a month's distinct
-    estimate without touching base data)."""
+    discipline as every other column."""
     # try_cast, not cast: values are OPAQUE strings (reference
     # semantics) and ANSI mode makes a plain cast throw on the first
     # non-numeric one; the numeric stats cover the castable subset
     num = F.col("value").try_cast("double")
-    aggs = [
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.count("_num").cast("long").alias("n_numeric"),
-        F.sum(F.col("_num").cast(SUM_DECIMAL))
-        .cast("double")
-        .alias("sum_num"),
-        F.min("_num").alias("min_num"),
-        F.max("_num").alias("max_num"),
-        F.countDistinct("value").cast("long").alias("n_distinct"),
-    ]
-    if with_sketch:
-        aggs.append(F.hll_sketch_agg("value").alias("distinct_sketch"))
     return (
         winners.where(F.col("value").isNotNull())
         .select(
@@ -192,16 +163,23 @@ def _aggregate(
             num.alias("_num"),
         )
         .groupBy("tag", "bucket_start")
-        .agg(*aggs)
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.count("_num").cast("long").alias("n_numeric"),
+            F.sum(F.col("_num").cast(SUM_DECIMAL))
+            .cast("double")
+            .alias("sum_num"),
+            F.min("_num").alias("min_num"),
+            F.max("_num").alias("max_num"),
+            F.countDistinct("value").cast("long").alias("n_distinct"),
+        )
     )
 
 
-def rollup_full(
-    store: TimeseriesStore, step: int, with_sketch: bool = False
-) -> DataFrame:
-    """The full recompute — the semantic definition the incremental
-    path must equal (and the test oracle for it)."""
-    return _aggregate(lww_latest(_members(store)), step, with_sketch)
+def rollup_full(store: TimeseriesStore, step: int) -> DataFrame:
+    """The full recompute in Spark SQL — the semantic definition the
+    incremental refresh must equal (and the test oracle for it)."""
+    return _aggregate(lww_latest(_members(store)), step)
 
 
 #: default bound on one refresh's driver-side state (collected tag
@@ -241,39 +219,21 @@ def refresh_rollup(
     is wall-clock at write and does not travel backwards below a
     captured maximum.
 
-    Where the refresh runs (see the module docstring): on the driver
-    with pyarrow, starting no Spark job, when the rollup has no
-    sketches, its backend keeps plain files and the files the refresh
-    reads pass ``read_range``'s rule; otherwise as Spark jobs. Both give
-    the same rows, metrics and meta."""
+    How it runs (see the module docstring): on the driver, in batches
+    of tags, at every store size; no Spark job on a plain-directory
+    backend but a sketch rollup's one per batch. A store whose L1 a
+    streaming file sink owns is refused (``SinkManagedHotTierError``):
+    the sink's log, not the listed files, defines its hot tier."""
     if step <= 0:
         raise ValidationError("step must be positive")
     if max_tags < 1:
         raise ValidationError("max_tags must be >= 1")
     store._require_init()
+    store._require_l1_batch_writable()
     with maintenance_lease(store):
         return _refresh_locked(
             store, name, int(step), int(max_tags), bool(with_sketch)
         )
-
-
-def _boundary_rows(raw: DataFrame, w: int) -> int:
-    """Distinct member count exactly AT the watermark — the tie-break
-    guard: a write landing mid-refresh with ``ingest_ts`` EQUAL to the
-    captured max (caller-supplied or ms-resolution timestamps tie)
-    would be invisible to a strictly-greater probe forever. Recording
-    how many members sit at the boundary lets the next refresh detect
-    a changed boundary and re-probe ``>=`` — the re-touch recompute is
-    idempotent, so over-inclusion is harmless and under-inclusion
-    cannot happen. Identity-distinct so a member snapshotted to cold
-    but not yet acked out of hot (the at-least-once tier window)
-    counts once."""
-    return (
-        raw.where(F.col("ingest_ts") == int(w))
-        .select(*MEMBER_IDENTITY_COLS)
-        .distinct()
-        .count()
-    )
 
 
 #: on-disk rollup schema format. 2 = the r9 widening that added exact
@@ -308,11 +268,6 @@ def _load_meta(store, meta_path: str, name: str) -> dict:
     return meta
 
 
-class _NeedsSpark(Exception):
-    """A driver-side refresh step met work that needs Spark. Raised
-    only while the refresh reads, before it writes anything."""
-
-
 def _refresh_locked(
     store: TimeseriesStore,
     name: str,
@@ -320,27 +275,13 @@ def _refresh_locked(
     max_tags: int,
     with_sketch: bool,
 ) -> RollupMetrics:
+    """The refresh protocol (watermark, boundary count, backlog cursor,
+    meta) over the data steps below."""
     data_path, meta_path = _paths(store, name)
-    if not with_sketch:
-        try:
-            return _refresh(
-                _DriverSteps(store, data_path, step),
-                store, name, meta_path, step, max_tags, with_sketch,
-            )
-        except _NeedsSpark:
-            pass  # nothing was written: the whole refresh runs on Spark
-    return _refresh(
-        _SparkSteps(store, data_path, step, with_sketch),
-        store, name, meta_path, step, max_tags, with_sketch,
-    )
-
-
-def _refresh(
-    steps, store, name: str, meta_path: str, step: int, max_tags: int,
-    with_sketch: bool,
-) -> RollupMetrics:
-    """The refresh protocol, over the data steps of ``steps``
-    (``_SparkSteps`` or ``_DriverSteps``)."""
+    # Under the lease neither the cold tier nor the rollup table
+    # changes but by this refresh, so each is listed once. None: the
+    # backend reads its cold tier through the seam.
+    cold = store.commit.driver_table_files(store, store.config.cold_path)
     if not store.fs.exists(meta_path):
         # Watermark captured BEFORE the recompute scans, deliberately:
         # a write landing mid-refresh either misses this refresh
@@ -348,20 +289,24 @@ def _refresh(
         # ingest_ts (or the boundary-row count at the captured max)
         # ensures the next refresh re-touches its bucket —
         # at-least-once recompute, idempotent by construction.
-        new_watermark = steps.watermark()
-        full, n_buckets, n_tags = steps.full()
-        steps.publish(full, drop=[])
+        members, last = _new_members(store, cold, None)
+        new_watermark = -1 if last is None else int(last)
+        stats = _bucket_stats(members, None, step)
+        tags = sorted(set(stats["tag"].to_pylist()))
+        n_buckets, present = _rewrite(
+            store, data_path, cold, stats, tags, step, with_sketch, carry=False
+        )
         _write_meta(
             store, meta_path,
             step=step,
             watermark_ingest_ts=new_watermark,
             boundary_rows=(
-                steps.boundary_rows(new_watermark) if new_watermark >= 0 else 0
+                _distinct_at(members, new_watermark) if new_watermark >= 0 else 0
             ),
             partial=None,
             with_sketch=with_sketch,
         )
-        return RollupMetrics(n_buckets, n_tags, new_watermark)
+        return RollupMetrics(n_buckets, len(present), new_watermark)
 
     meta = _load_meta(store, meta_path, name)
     if meta["step"] != step:
@@ -379,14 +324,15 @@ def _refresh(
     w = int(meta["watermark_ingest_ts"])
     boundary = meta.get("boundary_rows")
     partial = meta.get("partial")
+    members, last = _new_members(store, cold, w)
 
     if partial is None:
-        # ONE narrow probe finds the new watermark and the distinct
-        # member count AT the recorded one (the tie-race check). It
-        # sees every row >= w, so an empty max means "nothing at/past
-        # the watermark" — hold at w, never regress.
-        w_new, cnt_at_w = steps.probe(w)
-        upper = w if w_new is None else w_new
+        # The members at/past the recorded watermark give the new one
+        # and the distinct member count AT the recorded one (the
+        # tie-race check). Nothing at/past it means "hold at w, never
+        # regress".
+        cnt_at_w = _distinct_at(members, w)
+        upper = w if last is None else int(last)
         # ADVICE r8: a boundary write that tied the recorded watermark
         # mid-refresh widens the probe to >= once; idempotent recompute
         # makes the re-touch harmless.
@@ -416,20 +362,21 @@ def _refresh(
 
     # The probe rows (ingest_ts past w, or at/past it with include_eq,
     # and at most ``bound`` in a continuation) at (tag, bucket)
-    # granularity: the oldest-new-work ordering key and, when still
-    # unknown, the distinct member count at ``upper``.
-    stats = steps.bucket_stats(
-        w, include_eq, bound, upper if known_upper_boundary is None else None
-    )
+    # granularity, with the oldest-new-work ordering key.
+    ingest = ds.field("ingest_ts")
+    cond = ingest >= w if include_eq else ingest > w
+    if bound is not None:
+        cond = cond & (ingest <= bound)
+    stats = _bucket_stats(members, cond, step)
     upper_boundary = (
-        steps.upper_boundary(stats)
+        _distinct_at(members, upper)
         if known_upper_boundary is None else known_upper_boundary
     )
 
     # Oldest-new-work-first tag selection, bounded to max_tags (+1 to
     # detect overflow), as ``(tag, min new ingest_ts, touched
     # buckets)``. Driver state = this list — the cap's point.
-    selected = steps.select(stats, cursor, max_tags + 1)
+    selected = _select(stats, cursor, max_tags + 1)
 
     if not selected:
         if partial is not None:
@@ -446,15 +393,11 @@ def _refresh(
 
     capped = len(selected) > max_tags
     selected = selected[:max_tags]
-    tags = [tag for tag, _, _ in selected]
     n_touched = sum(nb for _, _, nb in selected)
-    # Touched tags' new content: untouched old buckets + recomputed
-    # buckets (a touched bucket whose members became all-tombstone
-    # simply has no recomputed row — the deletion case); a touched tag
-    # whose every bucket emptied (fully tombstoned) has none at all,
-    # and its rollup partition is dropped.
-    merged, present = steps.merge(stats, tags)
-    steps.publish(merged, drop=[t for t in tags if t not in present])
+    _rewrite(
+        store, data_path, cold, stats, [tag for tag, _, _ in selected], step,
+        with_sketch, carry=True,
+    )
 
     if capped:
         last_tag, last_mi, _ = selected[-1]
@@ -483,409 +426,286 @@ def _refresh(
     return RollupMetrics(n_touched, len(selected), upper)
 
 
-class _Steps:
-    """What both kinds of data steps share: the members at/past the
-    refresh's one watermark, read once (``_read_since``) and reused by
-    every step after it."""
-
-    _since = None
-
-    def since(self, w: int):
-        if self._since is None:
-            self._since = (w, self._read_since(w))
-        assert self._since[0] == w, "a refresh reads past one watermark"
-        return self._since[1]
-
-
-class _SparkSteps(_Steps):
-    """The refresh's data steps as Spark jobs. Duplicate-invariant
-    probes run on the RAW hot ∪ cold union — no full-corpus
-    identity-dedup shuffle for a watermark max or a distinct touched
-    set; only the (touched-bucket-bounded) recompute slice pays the
-    dedup, after the semi-join has shrunk it."""
-
-    def __init__(self, store, data_path: str, step: int, with_sketch: bool):
-        self.store, self.data_path = store, data_path
-        self.step, self.with_sketch = step, with_sketch
-        self._raw = None
-
-    def raw(self) -> DataFrame:
-        if self._raw is None:
-            self._raw = _raw_members(self.store)
-        return self._raw
-
-    def _read_since(self, w: int) -> DataFrame:
-        """The raw union planned over the stats-pruned cold tier: every
-        scan after the watermark is known only needs rows with
-        ``ingest_ts`` at/past it, so wholly-older cold snapshot files
-        never enter the scan."""
-        return _raw_members(self.store, ingest_floor=w)
-
-    def watermark(self) -> int:
-        w = self.raw().agg(F.max("ingest_ts").alias("w")).first().w
-        return -1 if w is None else int(w)
-
-    def full(self):
-        full = (
-            rollup_full(self.store, self.step, self.with_sketch)
-            .repartition("tag")
-            # lazy: the counts aggregate below is the materializing
-            # action (r18, guide §1.2); the overwrite still writes
-            # from the checkpointed rows
-            .localCheckpoint(eager=False)
-        )
-        # one fused pass over the checkpointed rollup for both counts
-        head = full.agg(
-            F.count(F.lit(1)).alias("b"),
-            F.countDistinct("tag").alias("t"),
-        ).first()
-        return (full, head.b > 0), int(head.b), int(head.t)
-
-    def boundary_rows(self, w: int) -> int:
-        return _boundary_rows(self.since(w), w)
-
-    def probe(self, w: int):
-        # countDistinct over a when() counts only boundary rows
-        head = self.since(w).agg(
-            F.max("ingest_ts").alias("w_new"),
-            F.countDistinct(
-                F.when(
-                    F.col("ingest_ts") == int(w),
-                    F.struct(*MEMBER_IDENTITY_COLS),
-                )
-            ).alias("cnt_at_w"),
-        ).first()
-        return (
-            None if head.w_new is None else int(head.w_new)
-        ), int(head.cnt_at_w)
-
-    def bucket_stats(self, w, include_eq, bound, count_at):
-        cond = F.col("ingest_ts") >= w if include_eq else F.col("ingest_ts") > w
-        if bound is not None:
-            cond = cond & (F.col("ingest_ts") <= bound)
-        aggs = [F.min("ingest_ts").alias("_mi")]
-        if count_at is not None:
-            aggs.append(
-                F.countDistinct(
-                    F.when(
-                        F.col("ingest_ts") == int(count_at),
-                        F.struct(*MEMBER_IDENTITY_COLS),
-                    )
-                ).alias("_cb")
-            )
-        # The materialized frame is touched-set-sized, so the tag
-        # rollup, the boundary sum, and the selection are trivial
-        # re-reads of the checkpoint, not re-scans of the corpus.
-        return (
-            self.since(w).where(cond)
-            .groupBy("tag", _bucket(self.step).alias("bucket_start"))
-            .agg(*aggs)
-            # lazy: the first consumer (the boundary sum, else the
-            # tag selection) materializes it — one probe job total
-            .localCheckpoint(eager=False)
-        )
-
-    def upper_boundary(self, stats) -> int:
-        # members are tag-scoped, so the global distinct-at-upper is
-        # the sum of the per-bucket counts
-        return int(stats.agg(F.sum("_cb").alias("s")).first().s or 0)
-
-    def select(self, stats, cursor, limit: int) -> list[tuple]:
-        # `_nb` rides the same aggregate so the touched-bucket metric is
-        # summed driver-side from these collected rows instead of a
-        # separate count() job over the touched set (r17, guide §1.2:
-        # fewer actions on a tiny-job-dominated path).
-        tag_stats = stats.groupBy("tag").agg(
-            F.min("_mi").alias("_mi"),
-            F.count(F.lit(1)).alias("_nb"),
-        )
-        if cursor is not None:
-            c_mi, c_tag = int(cursor[0]), cursor[1]
-            tag_stats = tag_stats.where(
-                (F.col("_mi") > c_mi)
-                | ((F.col("_mi") == c_mi) & (F.col("tag") > c_tag))
-            )
-        rows = tag_stats.orderBy("_mi", "tag").limit(limit).collect()
-        return [(r.tag, int(r._mi), int(r._nb)) for r in rows]
-
-    def merge(self, stats, tags: list[str]):
-        store = self.store
-        sel_df = store.spark.createDataFrame([(t,) for t in tags], "tag string")
-        touched = stats.join(
-            F.broadcast(sel_df), ["tag"], "left_semi"
-        ).select("tag", "bucket_start")
-        # Recompute ONLY touched buckets: raw members semi-joined on the
-        # (small) touched set FIRST, identity-deduped on the shrunken
-        # slice, LWW per key, re-aggregated.
-        in_touched = (
-            self.raw().withColumn("bucket_start", _bucket(self.step))
-            .join(F.broadcast(touched), ["tag", "bucket_start"], "left_semi")
-            .dropDuplicates(MEMBER_IDENTITY_COLS)
-        )
-        recomputed = _aggregate(lww_latest(in_touched), self.step, self.with_sketch)
-        # Carried-bucket source: only the SELECTED tags' partitions
-        # matter, and the tag set is the bounded driver-side list the
-        # cap already collected — manifest stats prune every other
-        # tag's files at PLAN time. On a 100 TB rollup store with
-        # millions of tags, the refresh reads max_tags partitions, not
-        # the table; hive min==max tag stats make the membership prune
-        # exact (directory backends read the full table and the
-        # semi-join carries the semantics unchanged). Every selected
-        # tag owns >= 1 touched bucket by construction, so the touched
-        # tag set IS sel_df.
-        old = store.commit.read_table_pruned(
+# ---------------------------------------------------------- the probe
+def _new_members(store: TimeseriesStore, cold, w: int | None):
+    """``(members, last)``: the raw members (hot ∪ cold, duplicates
+    kept) with ``ingest_ts`` at or past ``w`` — every member when
+    None — as a pyarrow dataset, and their largest ``ingest_ts`` (None
+    when there is none). The hot files and the plain cold files
+    ``cold`` are kept by their footer max (``DriverFiles.since``);
+    when ``cold`` is None the seam reads the new cold rows
+    (``_seam_cold``), its ``ingest_ts`` stats skipping every older
+    snapshot file. Callers filter the rows themselves: a kept file
+    may also hold older ones."""
+    files, last = store._list_files(None, cold=cold or []).since(w)
+    members = member_dataset(files.paths, files.partitions)
+    if cold is None:
+        rows = _seam_cold(
             store,
-            self.data_path,
-            _rollup_schema(self.with_sketch),
-            predicates={"tag": set(tags)},
+            None if w is None else {"ingest_ts": (w, None)},
+            None if w is None else F.col("ingest_ts") >= w,
         )
-        carried = (
-            old.join(F.broadcast(sel_df), ["tag"], "left_semi")
-            .join(F.broadcast(touched), ["tag", "bucket_start"], "left_anti")
-        )
-        merged = (
-            carried.unionByName(recomputed)
-            .repartition("tag")
-            # materialize before overwriting its source — lazily: the
-            # present-tags collect below is the materializing action
-            .localCheckpoint(eager=False)
-        )
-        present = {r.tag for r in merged.select("tag").distinct().collect()}
-        return (merged, bool(present)), present
-
-    def publish(self, content, drop: list[str]) -> None:
-        """Drop the ``drop`` tags' rollup partitions, then rewrite the
-        tags in ``content`` by dynamic partition overwrite, which only
-        replaces the tag partitions present in it."""
-        df, nonempty = content
-        for tag in drop:
-            self.store.commit.drop_partition_dir(self.store, tag_dir(self.data_path, tag))
-        if nonempty:
-            self.store.commit.overwrite_partitions(self.store, df, self.data_path, ["tag"])
+        top = pc.max(rows["ingest_ts"]).as_py()
+        if top is not None:
+            last = top if last is None else max(last, top)
+        members = ds.dataset([members, ds.dataset(rows)])
+    return members, last
 
 
-class _DriverSteps(_Steps):
-    """The refresh's data steps computed on the driver with pyarrow,
-    starting no Spark job. Every read goes through the store's member
-    reader over hot ∪ cold (``TimeseriesStore._driver_members``) and
-    raises ``_NeedsSpark`` when it hands the work to Spark; so do a
-    backend without plain cold or rollup files and a rollup tag
-    directory holding more than one file, which one rename cannot
-    replace. The refresh holds the maintenance lease, under which
-    neither the cold tier nor the rollup table changes but by its own
-    hand, so each is listed once."""
+def _seam_cold(store: TimeseriesStore, predicates, where=None):
+    """The cold members that pass ``where``, read through the backend's
+    own reader (``store.cold``, ``predicates`` its file skipping) in
+    one Spark job, as an Arrow table of the member columns."""
+    df = store.cold(predicates=predicates)
+    if where is not None:
+        df = df.where(where)
+    return df.toArrow().cast(_MEMBER_ARROW)
 
-    def __init__(self, store, data_path: str, step: int):
-        self.store, self.data_path, self.step = store, data_path, step
-        self.members = self._cold = None
 
-    def _read(self, partitions=None, filter=None, since=None):
-        store = self.store
-        if self._cold is None:
-            self._cold = store.commit.driver_table_files(store, store.config.cold_path)
-            if self._cold is None:
-                raise _NeedsSpark
-        got = store._driver_members(partitions, filter, cold=self._cold, since=since)
-        if got is None:
-            raise _NeedsSpark
-        return got[1]
-
-    def _read_since(self, w: int):
-        """The raw members with ``ingest_ts`` at/past ``w``, read from
-        the files whose footer says they may hold one."""
-        import pyarrow.dataset as ds
-
-        return self._read(filter=ds.field("ingest_ts") >= w, since=w)
-
-    def watermark(self) -> int:
-        import pyarrow.compute as pc
-
-        # one snapshot serves the watermark, the full compute and the
-        # boundary count
-        self.members = self._read()
-        w = pc.max(self.members["ingest_ts"]).as_py()
-        return -1 if w is None else int(w)
-
-    def full(self):
-        from redis_lsm_timeseries_spark.operators.lww import lww_latest_arrow
-
-        rows = _aggregate_arrow(self.store.spark, lww_latest_arrow(self.members), self.step)
-        content = self._content(rows, self._tag_files(None))
-        return content, rows.num_rows, len(content)
-
-    def boundary_rows(self, w: int) -> int:
-        return _distinct_members(self.members, w)
-
-    def probe(self, w: int):
-        import pyarrow.compute as pc
-
-        new = self.since(w)
-        w_new = pc.max(new["ingest_ts"]).as_py()
-        return (None if w_new is None else int(w_new)), _distinct_members(new, w)
-
-    def bucket_stats(self, w, include_eq, bound, count_at):
-        """``(per-bucket stats, distinct members at count_at)``: the
-        stats table holds ``tag``, ``bucket_start`` and ``_mi``."""
-        import pyarrow.compute as pc
-
-        new = self.since(w)
-        ingest = new["ingest_ts"]
-        cond = pc.greater_equal(ingest, w) if include_eq else pc.greater(ingest, w)
-        if bound is not None:
-            cond = pc.and_(cond, pc.less_equal(ingest, bound))
-        probe = new.filter(cond)
-        stats = (
-            probe.append_column("bucket_start", _buckets(probe["ts"], self.step))
-            .group_by(["tag", "bucket_start"])
-            .aggregate([("ingest_ts", "min")])
-        )
-        stats = stats.select(["tag", "bucket_start", "ingest_ts_min"]).rename_columns(
-            ["tag", "bucket_start", "_mi"]
-        )
-        at_upper = None if count_at is None else _distinct_members(probe, count_at)
-        return stats, at_upper
-
-    def upper_boundary(self, stats) -> int:
-        return stats[1]
-
-    def select(self, stats, cursor, limit: int) -> list[tuple]:
-        per_tag = stats[0].group_by("tag").aggregate([("_mi", "min"), ("_mi", "count")])
-        rows = sorted(
-            zip(
-                per_tag["_mi_min"].to_pylist(),
-                per_tag["tag"].to_pylist(),
-                per_tag["_mi_count"].to_pylist(),
+def _bucket_stats(members, cond, step: int):
+    """``(tag, bucket_start, _mi)``: the least ``ingest_ts`` of each
+    (tag, bucket) over the rows of the dataset ``members`` that pass
+    ``cond`` (every row when None). Only ``tag``, ``ts`` and
+    ``ingest_ts`` are read, a record batch at a time, and only the
+    stats are kept, so the probe's memory is the touched set's."""
+    keys = ["tag", "bucket_start"]
+    stats = pa.schema([("tag", pa.string()), ("bucket_start", pa.int64()), ("_mi", pa.int64())])
+    stats = stats.empty_table()
+    for batch in members.to_batches(columns=["tag", "ts", "ingest_ts"], filter=cond):
+        if batch.num_rows:
+            part = pa.table(
+                {"tag": batch["tag"], "bucket_start": _buckets(batch["ts"], step),
+                 "_mi": batch["ingest_ts"]}
             )
-        )
-        if cursor is not None:
-            rows = [r for r in rows if r[:2] > (int(cursor[0]), cursor[1])]
-        return [(tag, mi, nb) for mi, tag, nb in rows[:limit]]
-
-    def merge(self, stats, tags: list[str]):
-        import bisect
-
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.dataset as ds
-        from pyarrow import fs as pafs
-
-        from redis_lsm_timeseries_spark.operators.lww import lww_latest_arrow
-
-        buckets = stats[0]
-        touched = buckets.filter(
-            pc.is_in(buckets["tag"], value_set=pa.array(tags, pa.string()))
-        ).select(["tag", "bucket_start"])
-        by_tag: dict[str, list[int]] = {}
-        for tag, b in zip(touched["tag"].to_pylist(), touched["bucket_start"].to_pylist()):
-            by_tag.setdefault(tag, []).append(b)
-        for bs in by_tag.values():
-            bs.sort()
-        step, width = self.step, self.store.config.partition_width
-
-        def overlaps(tag: str, part_start: int) -> bool:
-            # a touched bucket [b, b + step) meets [part_start, +width)
-            bs = by_tag[tag]
-            i = bisect.bisect_right(bs, part_start - step)
-            return i < len(bs) and bs[i] < part_start + width
-
-        members = self._read(
-            PartitionFilter(frozenset(tags), overlaps), ds.field("tag").isin(tags)
-        )
-        in_touched = members.append_column(
-            "bucket_start", _buckets(members["ts"], step)
-        ).join(touched, keys=["tag", "bucket_start"], join_type="left semi")
-        recomputed = _aggregate_arrow(
-            self.store.spark,
-            lww_latest_arrow(in_touched.select(members.column_names)),
-            step,
-        )
-        files = self._tag_files(tags)
-        paths = [p for ps in files.values() for p in ps]
-        if driver_read_bytes(paths) is None:
-            raise _NeedsSpark
-        old = ds.FileSystemDataset.from_paths(
-            paths, schema=_ROLLUP_ARROW, format=ds.ParquetFileFormat(),
-            filesystem=pafs.LocalFileSystem(),
-            partitions=[ds.field("tag") == t for t, ps in files.items() for _ in ps],
-        ).to_table()
-        carried = old.join(touched, keys=["tag", "bucket_start"], join_type="left anti")
-        content = self._content(
-            pa.concat_tables([carried.select(_ROLLUP_ARROW.names), recomputed]), files
-        )
-        return content, set(content)
-
-    def _tag_files(self, tags) -> dict[str, list[str]]:
-        """The data files of each rollup tag directory among ``tags``
-        (every one when None), keyed by tag, from one listing of the
-        rollup table."""
-        from redis_lsm_timeseries_spark.commit import ManifestCommit
-
-        paths = self.store.commit.driver_table_files(self.store, self.data_path)
-        if paths is None:
-            raise _NeedsSpark
-        wanted = None if tags is None else set(tags)
-        files: dict[str, list[str]] = {}
-        for path in paths:
-            tag_name = path.rsplit("/", 2)[1]
-            tag = ManifestCommit._unescape_partition(tag_name.partition("=")[2])
-            if wanted is None or tag in wanted:
-                files.setdefault(tag, []).append(path)
-        if any(len(paths) > 1 for paths in files.values()):
-            raise _NeedsSpark
-        return files
-
-    def _content(self, rows, files) -> dict:
-        """``{tag: (rows, the file they replace or None)}`` for the
-        Arrow rollup rows ``rows``, each tag's rows sorted by bucket."""
-        import itertools
-
-        rows = rows.sort_by([("tag", "ascending"), ("bucket_start", "ascending")])
-        content, offset = {}, 0
-        for tag, run in itertools.groupby(rows["tag"].to_pylist()):
-            n = sum(1 for _ in run)
-            old = files.get(tag)
-            content[tag] = (
-                rows.slice(offset, n).select(_ROLLUP_ARROW.names[1:]),
-                old[0] if old else None,
+            stats = (
+                pa.concat_tables([stats, part]).group_by(keys).aggregate([("_mi", "min")])
+                .select([*keys, "_mi_min"]).rename_columns([*keys, "_mi"])
             )
-            offset += n
-        return content
+    return stats
 
-    def publish(self, content, drop: list[str]) -> None:
-        """Drop the ``drop`` tags' rollup partitions, then publish each
-        tag's new content in one rename: over the tag directory's one
-        file, or as the first file of a new directory."""
-        from redis_lsm_timeseries_spark.commit import (
-            _driver_parquet_append,
-            _driver_parquet_replace,
+
+def _distinct_at(members, at: int) -> int:
+    """How many distinct members (``MEMBER_IDENTITY_COLS``, NULL values
+    equal) of the dataset ``members`` have ``ingest_ts == at``: the
+    watermark's tie-break guard. A write landing mid-refresh with
+    ``ingest_ts`` EQUAL to the captured max (caller-supplied or
+    ms-resolution timestamps tie) would be invisible to a
+    strictly-greater probe forever; recording how many members sit at
+    the boundary lets the next refresh detect a changed boundary and
+    re-probe ``>=``. Identity-distinct, so a member snapshotted to cold
+    but not yet acked out of hot counts once. Only the identity
+    columns of the rows at ``at`` are read."""
+    rows = members.to_table(columns=MEMBER_IDENTITY_COLS, filter=ds.field("ingest_ts") == at)
+    return rows.group_by(MEMBER_IDENTITY_COLS).aggregate([]).num_rows
+
+
+def _select(stats, cursor, limit: int) -> list[tuple]:
+    """``(tag, least new ingest_ts, touched buckets)`` of the first
+    ``limit`` tags of ``stats`` past the backlog ``cursor``, oldest new
+    work first."""
+    per_tag = stats.group_by("tag").aggregate([("_mi", "min"), ("_mi", "count")])
+    rows = sorted(
+        zip(
+            per_tag["_mi_min"].to_pylist(),
+            per_tag["tag"].to_pylist(),
+            per_tag["_mi_count"].to_pylist(),
         )
-
-        store = self.store
-        for tag in drop:
-            store.commit.drop_partition_dir(store, tag_dir(self.data_path, tag))
-        for tag, (rows, old) in content.items():
-            if old is None:
-                _driver_parquet_append(store.fs, rows, tag_dir(self.data_path, tag))
-            else:
-                _driver_parquet_replace(store.fs, rows, old)
+    )
+    if cursor is not None:
+        rows = [r for r in rows if r[:2] > (int(cursor[0]), cursor[1])]
+    return [(tag, mi, nb) for mi, tag, nb in rows[:limit]]
 
 
+# ------------------------------------------------------ the recompute
+def _rewrite(
+    store: TimeseriesStore, data_path: str, cold, stats, tags: list[str],
+    step: int, with_sketch: bool, carry: bool,
+) -> tuple[int, set]:
+    """Recompute the buckets of ``stats`` that belong to ``tags``, in
+    batches of tags (``_batches``), and publish the tags' new content;
+    ``(rows written, tags with rows)``. With ``carry`` each tag keeps
+    its untouched old buckets and a tag left with none is dropped;
+    without, the rows replace whatever the tags held (a creation).
+    Each batch stages its tags' rows in a hidden directory
+    (``_stage``); ``_publish`` runs after the last, and any error
+    before it removes the staged files and changes nothing."""
+    touched = stats.filter(
+        pc.is_in(stats["tag"], value_set=pa.array(tags, pa.string()))
+    ).select(["tag", "bucket_start"])
+    by_tag: dict[str, list[int]] = {}
+    for tag, b in zip(touched["tag"].to_pylist(), touched["bucket_start"].to_pylist()):
+        by_tag.setdefault(tag, []).append(b)
+    for bs in by_tag.values():
+        bs.sort()
+    width = store.config.partition_width
+
+    def overlaps(tag: str, part_start: int) -> bool:
+        # a touched bucket [b, b + step) meets [part_start, +width)
+        bs = by_tag[tag]
+        i = bisect.bisect_right(bs, part_start - step)
+        return i < len(bs) and bs[i] < part_start + width
+
+    sources = store._list_files(PartitionFilter(frozenset(tags), overlaps), cold=cold or [])
+    old = _rollup_files(store, data_path, tags)
+    staging = f"{data_path.rsplit('/', 1)[0]}/.refresh.inprogress"
+    store.fs.remove_tree(staging)  # a crashed refresh's staged files
+    staged, n_rows = {}, 0
+    try:
+        for batch in _batches(tags, sources, old):
+            rows = _recompute(store, sources, cold, batch, touched, step, with_sketch)
+            if carry:
+                carried = _old_rows(store, data_path, batch, old, with_sketch).join(
+                    touched, keys=["tag", "bucket_start"], join_type="left anti"
+                )
+                rows = pa.concat_tables([carried.select(rows.column_names), rows])
+            n_rows += rows.num_rows
+            staged.update(_stage(store, staging, rows))
+        drop = [tag for tag in tags if tag not in staged] if carry else []
+        _publish(store, data_path, staging, staged, drop, old, with_sketch)
+    finally:
+        store.fs.remove_tree(staging)
+    return n_rows, set(staged)
+
+
+def _batches(tags: list[str], sources, old) -> list[list[str]]:
+    """``tags``, in order, in batches whose listed partition files
+    (``sources``) and old rollup files (``old``) total at most
+    ``MAX_DRIVER_READ_BYTES`` (``size_batches``: a tag over the cap is
+    a batch of its own). The L0 segments, which every batch reads
+    filtered by tag, and the files a backend reads through its seam
+    count toward no batch."""
+    sizes = dict.fromkeys(tags, 0)
+    for key, size in zip(sources.partitions, _file_sizes(sources.paths)):
+        if key is not None:
+            sizes[key[0]] += size
+    for tag, paths in (old or {}).items():
+        sizes[tag] += sum(_file_sizes(paths))
+    return size_batches(sizes)
+
+
+def _recompute(store: TimeseriesStore, sources, cold, batch, touched, step: int, with_sketch: bool):
+    """The kernel: the rollup rows of the buckets ``touched`` (``tag``,
+    ``bucket_start``) of the tags ``batch``. Their raw members are read
+    with pyarrow from their files in ``sources`` and the L0 segments,
+    and, when ``cold`` is None, from the seam's read of their cold
+    rows; their LWW winners (``lww_latest_arrow``: an exact duplicate
+    from the at-least-once tier window picks the same winner) are
+    aggregated by ``_aggregate_arrow``."""
+    keep = [i for i, key in enumerate(sources.partitions) if key is None or key[0] in batch]
+    members = DriverFiles(
+        [sources.paths[i] for i in keep], [sources.partitions[i] for i in keep]
+    ).read(ds.field("tag").isin(batch))
+    if cold is None:
+        cold_rows = _seam_cold(store, {"tag": set(batch)}, F.col("tag").isin(batch))
+        members = pa.concat_tables([members, cold_rows])
+    in_touched = members.append_column(
+        "bucket_start", _buckets(members["ts"], step)
+    ).join(touched, keys=["tag", "bucket_start"], join_type="left semi")
+    return _aggregate_arrow(
+        store.spark, lww_latest_arrow(in_touched.select(members.column_names)), step, with_sketch
+    )
+
+
+def _rollup_files(store: TimeseriesStore, data_path: str, tags) -> dict | None:
+    """The data file of each rollup tag directory among ``tags`` that
+    has one, as ``{tag: [path]}`` from one listing of the rollup
+    table; None when the backend reads the table through its seam
+    (``driver_table_files``). A directory holding more than one data
+    file raises ``ValidationError``: no rename replaces two files."""
+    from redis_lsm_timeseries_spark.commit import ManifestCommit
+
+    paths = store.commit.driver_table_files(store, data_path)
+    if paths is None:
+        return None
+    wanted = set(tags)
+    files: dict[str, list[str]] = {}
+    for path in paths:
+        tag = ManifestCommit._unescape_partition(path.rsplit("/", 2)[1].partition("=")[2])
+        if tag in wanted:
+            files.setdefault(tag, []).append(path)
+    for tag, found in files.items():
+        if len(found) > 1:
+            raise ValidationError(
+                f"rollup directory {tag_dir(data_path, tag)!r} holds {len(found)} "
+                "data files; a refresh replaces a tag's one file by one rename. "
+                "Recompute the rollup: delete it and refresh from scratch."
+            )
+    return files
+
+
+def _old_rows(store: TimeseriesStore, data_path: str, tags, old, with_sketch: bool):
+    """The rollup rows of ``tags`` as they stand: pyarrow over their
+    files ``old``, or, when ``old`` is None, the seam's read, pruned
+    to the tags' files by their ``tag`` stats, in one Spark job."""
+    arrow = _rollup_arrow(with_sketch)
+    if old is None:
+        schema = _rollup_schema(with_sketch)
+        return (
+            store.commit.read_table_pruned(store, data_path, schema, predicates={"tag": set(tags)})
+            .where(F.col("tag").isin(tags)).select(*schema.names).toArrow().cast(arrow)
+        )
+    files = [(tag, path) for tag in tags for path in old.get(tag, [])]
+    return ds.FileSystemDataset.from_paths(
+        [path for _, path in files], schema=arrow, format=ds.ParquetFileFormat(),
+        filesystem=pafs.LocalFileSystem(),
+        partitions=[ds.field("tag") == tag for tag, _ in files],
+    ).to_table()
+
+
+def _stage(store: TimeseriesStore, staging: str, rows) -> dict[str, str]:
+    """Write each tag's rows of the Arrow rollup rows ``rows``, sorted
+    by bucket, as one Parquet file in its ``tag=`` directory under
+    ``staging``; ``{tag: path}``."""
+    rows = rows.sort_by([("tag", "ascending"), ("bucket_start", "ascending")])
+    out, offset = {}, 0
+    for tag, run in itertools.groupby(rows["tag"].to_pylist()):
+        n = sum(1 for _ in run)
+        part_dir = tag_dir(staging, tag)
+        store.fs.makedirs(part_dir)
+        out[tag] = f"{part_dir}/part-{uuid.uuid4().hex}.snappy.parquet"
+        _driver_parquet_file(rows.slice(offset, n).select(rows.column_names[1:]), out[tag])
+        offset += n
+    return out
+
+
+def _publish(
+    store: TimeseriesStore, data_path: str, staging: str, staged: dict,
+    drop: list[str], old, with_sketch: bool,
+) -> None:
+    """Drop the ``drop`` tags' rollup directories, then make each
+    staged file its tag's content: on a plain-directory backend
+    (``old``, the tags' current files, is not None) by one rename, over
+    the tag's one file or as the first file of a new directory;
+    otherwise by one ``overwrite_partitions`` over the staging
+    directory, which replaces only the tags it holds."""
+    for tag in drop:
+        store.commit.drop_partition_dir(store, tag_dir(data_path, tag))
+    if old is None:
+        if staged:
+            df = store.spark.read.schema(_rollup_schema(with_sketch)).parquet(staging)
+            store.commit.overwrite_partitions(store, df, data_path, ["tag"])
+        return
+    for tag, path in staged.items():
+        if tag in old:
+            dest = old[tag][0]
+            head, name = dest.rsplit("/", 1)
+            # a reader would check the new bytes against the old
+            # file's checksum sidecar; a file without one reads unchecked
+            store.fs.remove_file(f"{head}/.{name}.crc")
+        else:
+            head = tag_dir(data_path, tag)
+            store.fs.makedirs(head)
+            dest = f"{head}/{path.rsplit('/', 1)[1]}"
+        store.fs.rename(path, dest)
+
+
+# ---------------------------------------------------------- the kernel
 def _buckets(ts, step: int):
     """``_bucket`` over an Arrow column of ``ts``: floor to ``step``."""
     import numpy as np
-    import pyarrow as pa
 
     ts = ts.to_numpy()
     return pa.array(ts - np.mod(ts, step), pa.int64())
-
-
-def _distinct_members(members, at: int) -> int:
-    """How many distinct members (``MEMBER_IDENTITY_COLS``, NULL values
-    equal) of the Arrow table ``members`` have ``ingest_ts == at``."""
-    import pyarrow.compute as pc
-
-    rows = members.filter(pc.equal(members["ingest_ts"], at))
-    return rows.group_by(MEMBER_IDENTITY_COLS).aggregate([]).num_rows
 
 
 def _spark_select(spark, table, *columns) -> list:
@@ -896,23 +716,26 @@ def _spark_select(spark, table, *columns) -> list:
     return spark.createDataFrame(table).select(*columns).collect()
 
 
-def _aggregate_arrow(spark, winners, step: int):
-    """``_aggregate`` (without the sketch) over the Arrow table of LWW
-    winners ``winners``: ``ROLLUP_SCHEMA`` rows. The value → number
+def _aggregate_arrow(spark, winners, step: int, with_sketch: bool = False):
+    """``_aggregate`` over the Arrow table of LWW winners ``winners``:
+    ``ROLLUP_SCHEMA`` rows (``_rollup_arrow``). The value → number
     casts, once per distinct value, and the final decimal → double
     cast are Spark's own (``_spark_select``); the grouping, counts,
     exact decimal sums, min and max run in pyarrow. Spark orders NaN
     above every number, so a bucket holding a NaN has ``max_num`` NaN,
-    and ``min_num`` NaN only when it holds no other number."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
+    and ``min_num`` NaN only when it holds no other number.
+    ``with_sketch`` adds ``distinct_sketch``, an HLL blob per bucket:
+    Spark's ``hll_sketch_agg`` over the live winners as a local
+    relation, one job. Sketches are MERGEABLE across buckets, for
+    rollup-over-rollup consumers (``hll_union_agg`` over day buckets
+    gives a month's distinct estimate without touching base data)."""
     live = winners.filter(winners["value"].is_valid())
     values = live["value"].combine_chunks()
+    buckets = _buckets(live["ts"], step)
     distinct = pc.unique(values)
     as_double = F.col("value").try_cast("double")
     # an ANSI overflow of the decimal cast raises here, as it does in
-    # the Spark path's aggregate
+    # the Spark SQL aggregate
     cast = _spark_select(
         spark, pa.table({"value": distinct}),
         as_double.alias("num"), as_double.cast(SUM_DECIMAL).alias("dec"),
@@ -923,7 +746,7 @@ def _aggregate_arrow(spark, winners, step: int):
     nan = pc.fill_null(pc.is_nan(num), False)
     g = pa.table({
         "tag": live["tag"],
-        "bucket_start": _buckets(live["ts"], step),
+        "bucket_start": buckets,
         "value": values,
         "num": num,
         "finite": pc.if_else(nan, pa.scalar(None, pa.float64()), num),
@@ -942,7 +765,7 @@ def _aggregate_arrow(spark, winners, step: int):
         spark, g.select(["dec_sum"]), F.col("dec_sum").cast("double").alias("d")
     ) if g.num_rows else []
     nan_value = pa.scalar(float("nan"))
-    return pa.table(
+    out = pa.table(
         {
             "tag": g["tag"],
             "bucket_start": g["bucket_start"],
@@ -957,6 +780,17 @@ def _aggregate_arrow(spark, winners, step: int):
         },
         schema=_ROLLUP_ARROW,
     )
+    if not with_sketch:
+        return out
+    # one chunk: createDataFrame drops the record batches after an
+    # empty one, which an expression filter can leave
+    local = pa.table({"tag": live["tag"], "bucket_start": buckets, "value": values})
+    sketches = (
+        spark.createDataFrame(local.combine_chunks()).groupBy("tag", "bucket_start")
+        .agg(F.hll_sketch_agg("value").alias("distinct_sketch")).toArrow()
+    )
+    schema = _rollup_arrow(True)
+    return out.join(sketches, keys=["tag", "bucket_start"]).select(schema.names).cast(schema)
 
 
 def read_rollup(

@@ -212,22 +212,41 @@ class DriverFiles:
 
     def batches(self, keys) -> list[set[tuple[str, int]]]:
         """The partitions ``keys`` in batches whose listed L1 files
-        total at most ``MAX_DRIVER_READ_BYTES`` (a partition over the
-        cap is a batch of its own), in partition order. Raises
-        ``FileNotFoundError`` when a listed file is gone."""
-        sizes: dict[tuple, int] = {}
+        total at most ``MAX_DRIVER_READ_BYTES`` (``size_batches``), in
+        partition order. Raises ``FileNotFoundError`` when a listed
+        file is gone."""
+        sizes = dict.fromkeys(sorted(keys), 0)
         for key, size in zip(self.partitions, _file_sizes(self.paths)):
-            if key is not None:
-                sizes[key] = sizes.get(key, 0) + size
-        out, nbytes = [], 0
-        for key in sorted(keys):
-            size = sizes.get(key, 0)
-            if not out or nbytes + size > MAX_DRIVER_READ_BYTES:
-                out.append(set())
-                nbytes = 0
-            out[-1].add(key)
-            nbytes += size
-        return out
+            if key in sizes:
+                sizes[key] += size
+        return [set(batch) for batch in size_batches(sizes)]
+
+    def since(self, w: int | None) -> tuple[DriverFiles, int | None]:
+        """``(files, last)``: these files whose footer
+        ``max(ingest_ts)`` (``footer_max``) is at or past ``w`` (every
+        file holding rows when None), with no byte cap, and the largest
+        of those maxes (None when no file is kept)."""
+        kept, last = [], None
+        for i, path in enumerate(self.paths):
+            top = footer_max(path)[1]
+            if top is not None and (w is None or top >= w):
+                kept.append(i)
+                last = top if last is None else max(last, top)
+        return DriverFiles([self.paths[i] for i in kept], [self.partitions[i] for i in kept]), last
+
+
+def size_batches(sizes: dict) -> list[list]:
+    """The keys of ``sizes`` (``{key: bytes}``), in its order, in
+    batches whose sizes total at most ``MAX_DRIVER_READ_BYTES``; a key
+    over the cap is a batch of its own."""
+    out, nbytes = [], 0
+    for key, size in sizes.items():
+        if not out or nbytes + size > MAX_DRIVER_READ_BYTES:
+            out.append([])
+            nbytes = 0
+        out[-1].append(key)
+        nbytes += size
+    return out
 
 
 def driver_read_bytes(paths: list[str]) -> int | None:
@@ -252,7 +271,13 @@ def _file_sizes(paths: list[str]) -> list[int]:
 
 def read_members(paths: list[str], partitions: list, filter=None, columns=None):
     """Read ``SAMPLE_SCHEMA`` rows (``columns`` of them, or all) from
-    local Parquet files with pyarrow. ``partitions[i]`` is the
+    local Parquet files with pyarrow (``member_dataset``)."""
+    return member_dataset(paths, partitions).to_table(columns=columns, filter=filter)
+
+
+def member_dataset(paths: list[str], partitions: list):
+    """The local Parquet files ``paths`` as a pyarrow dataset of
+    ``SAMPLE_SCHEMA``'s columns. ``partitions[i]`` is the
     ``(tag, part_start)`` that file ``i`` holds but does not store (a
     hive partition file), or None when the file stores both columns."""
     import pyarrow.dataset as ds
@@ -266,12 +291,11 @@ def read_members(paths: list[str], partitions: list, filter=None, columns=None):
         else (ds.field("tag") == key[0]) & (ds.field("part_start") == key[1])
         for key in partitions
     ]
-    dataset = ds.FileSystemDataset.from_paths(
+    return ds.FileSystemDataset.from_paths(
         paths, schema=_driver_arrow_schema(SAMPLE_SCHEMA),
         format=ds.ParquetFileFormat(), filesystem=pafs.LocalFileSystem(),
         partitions=exprs,
     )
-    return dataset.to_table(columns=columns, filter=filter)
 
 
 @dataclass(frozen=True)
@@ -1307,36 +1331,20 @@ class TimeseriesStore:
         partitions,
         unflushed: bool = True,
         cold: bool | list[str] = False,
-        since: int | None = None,
     ) -> DriverFiles | None:
-        """``_list_files``, or None also when the candidate files total
+        """``_list_files``, or None also when the listed files total
         more than ``MAX_DRIVER_READ_BYTES``: the read needs Spark.
-        ``since`` keeps only the files whose footer ``max(ingest_ts)``
-        (``footer_max``) is at or past it; the byte cap applies to the
-        files kept, and the footers are read only until those pass it.
         Raises ``FileNotFoundError`` when a listed directory or file is
         gone before the listing ends (a concurrent flush or drop moved
         it)."""
         files = self._list_files(partitions, unflushed, cold)
-        if files is None:
+        if files is None or driver_read_bytes(files.paths) is None:
             return None
-        paths, keys = files.paths, files.partitions
-        if since is None:
-            return None if driver_read_bytes(paths) is None else files
-        kept, nbytes = [], 0
-        for i, size in enumerate(_file_sizes(paths)):
-            last = footer_max(paths[i])[1]
-            if last is None or last < since:
-                continue
-            nbytes += size
-            if nbytes > MAX_DRIVER_READ_BYTES:
-                return None
-            kept.append(i)
-        return DriverFiles([paths[i] for i in kept], [keys[i] for i in kept])
+        return files
 
     def _driver_members(
         self, partitions, filter=None, unflushed: bool = True,
-        cold: bool | list[str] = False, since: int | None = None,
+        cold: bool | list[str] = False,
     ) -> tuple[DriverFiles, object] | None:
         """The driver-side member reader: ``(files, members)`` for
         ``partitions`` (``_driver_files``' arguments), where
@@ -1352,7 +1360,7 @@ class TimeseriesStore:
         local = pafs.LocalFileSystem()
         for _ in range(_DRIVER_READ_ATTEMPTS):
             try:
-                files = self._driver_files(partitions, unflushed, cold, since)
+                files = self._driver_files(partitions, unflushed, cold)
             except FileNotFoundError:
                 continue  # a flush or drop moved a listed file: re-plan
             if files is None:

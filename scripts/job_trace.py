@@ -113,18 +113,14 @@ def _install(spark) -> None:
         "_apply_dv_delete",
     ):
         traced(M, name, f"merge.{name}")
+    # the refresh, its data steps and their I/O
     for name in (
-        "refresh_rollup", "_refresh_locked", "read_rollup", "_aggregate_arrow",
-        "_spark_select",
+        "refresh_rollup", "_refresh_locked", "read_rollup", "_new_members",
+        "_seam_cold", "_bucket_stats", "_distinct_at", "_select", "_rewrite",
+        "_batches", "_recompute", "_rollup_files", "_old_rows",
+        "_stage", "_publish", "_aggregate_arrow", "_spark_select",
     ):
         traced(R, name, f"rollup.{name}")
-    # the refresh's data steps, on each path
-    for cls in (R._SparkSteps, R._DriverSteps):
-        for name in (
-            "watermark", "full", "boundary_rows", "probe", "bucket_stats",
-            "upper_boundary", "select", "merge", "publish",
-        ):
-            traced(cls, name, f"rollup.{cls.__name__}.{name}")
     # the query plans import these BY NAME, so the module-level wraps
     # above don't intercept their calls — wrap the plan modules' own
     # references too (labels marked @plan)

@@ -1,11 +1,14 @@
-"""``refresh_rollup`` and the ``include_cold`` reads on the driver: each
-case runs on copies of one store, once computed with pyarrow and once
-on Spark (forced by a read cap of 0), and requires equal rollup rows,
-``RollupMetrics`` and ``_rollup_meta.json`` fields, no Spark job on the
-driver path and some on the Spark one. Also: tags whose directory
-names Spark escapes, a corpus of numeric strings whose parse and
-decimal sum Spark defines, the rollup schema read without listing the
-hot tier, and crash-point sweeps over the driver-side refresh."""
+"""``refresh_rollup`` and the ``include_cold`` reads on the driver.
+Each refresh case runs on four copies of one scenario — a directory
+store and a ``ManifestCommit`` store, each at the default read cap and
+at a cap of 0, which makes every tag a batch of its own — and requires
+equal rollup rows, ``RollupMetrics`` and ``_rollup_meta.json`` fields,
+no Spark job on a directory store and some on a ``ManifestCommit``
+one. Also: tags whose directory names Spark escapes, a corpus of
+numeric strings whose parse and decimal sum Spark defines, an error
+in the last batch changing nothing, a rollup directory holding two
+files refused, the rollup schema read without listing the hot tier,
+and crash-point sweeps over the refresh."""
 
 from __future__ import annotations
 
@@ -21,6 +24,7 @@ import pyarrow.dataset as ds
 import pytest
 
 from redis_lsm_timeseries_spark import store as store_module
+from redis_lsm_timeseries_spark.commit import ManifestCommit, ParquetLeaseCommit
 from redis_lsm_timeseries_spark.config import EngineConfig
 from redis_lsm_timeseries_spark.errors import ValidationError
 from redis_lsm_timeseries_spark.fs import StorageFilesystem
@@ -43,8 +47,11 @@ def _next_job_id(spark) -> int:
     return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
 
 
-def _open(spark, root, fs=None) -> TimeseriesStore:
-    s = TimeseriesStore(spark, EngineConfig(root=str(root), partition_width=WIDTH), fs=fs)
+def _open(spark, root, fs=None, commit=None) -> TimeseriesStore:
+    s = TimeseriesStore(
+        spark, EngineConfig(root=str(root), partition_width=WIDTH), fs=fs,
+        commit=commit or ParquetLeaseCommit(),
+    )
     s.initialize()
     s.writer_id = "w"
     return s
@@ -55,9 +62,10 @@ def _copy(spark, src: TimeseriesStore, root) -> TimeseriesStore:
     return _open(spark, root)
 
 
-def _path(on_spark: bool):
-    """The Spark path is forced by a driver read cap of 0."""
-    return mock.patch.object(store_module, "MAX_DRIVER_READ_BYTES", 0) if on_spark else nullcontext()
+def _path(capped: bool):
+    """A driver read cap of 0: every rollup tag is a batch of its own,
+    and the reads take their Spark plans."""
+    return mock.patch.object(store_module, "MAX_DRIVER_READ_BYTES", 0) if capped else nullcontext()
 
 
 def _key(v):
@@ -87,21 +95,30 @@ def _tag_dirs(s, name="agg") -> list[str]:
     return sorted(n for n in os.listdir(data) if n.startswith("tag=")) if os.path.exists(data) else []
 
 
-class _Leg:
-    """One path of a differential: refreshes the store ``s`` on the
-    driver or on Spark, checks the job counts and records every
-    refresh's metrics, rollup rows and meta."""
+def _rollup_tree(s) -> list[str]:
+    """Every directory and file under the store's rollups, relative."""
+    root = f"{s.config.base_path}/rollups"
+    return sorted(
+        os.path.relpath(os.path.join(d, n), root)
+        for d, dirs, files in os.walk(root) for n in dirs + files
+    )
 
-    def __init__(self, spark, s, on_spark):
-        self.spark, self.s, self.on_spark = spark, s, on_spark
+
+class _Leg:
+    """One leg of a differential: refreshes the store ``s`` at the
+    default cap or at 0, checks the job counts (none on a directory
+    store) and records every refresh's metrics, rollup rows and meta."""
+
+    def __init__(self, spark, s, capped):
+        self.spark, self.s, self.capped = spark, s, capped
         self.record = []
 
     def refresh(self, name="agg", **kw):
-        with _path(self.on_spark):
+        with _path(self.capped):
             j0 = _next_job_id(self.spark)
             m = refresh_rollup(self.s, name, STEP, **kw)
             jobs = _next_job_id(self.spark) - j0
-        if self.on_spark:
+        if isinstance(self.s.commit, ManifestCommit):
             assert jobs > 0, m
         else:
             assert jobs == 0, (m, jobs)
@@ -109,23 +126,26 @@ class _Leg:
         return m
 
 
-def _agree(spark, tmp_path, scenario, prepared=None):
-    """Run ``scenario(leg)`` on two copies of ``prepared`` (a new store
-    when None), once per path; both must record the same refreshes.
-    Returns the driver leg."""
+def _agree(spark, tmp_path, scenario):
+    """Run ``scenario(leg)`` on four new stores: a directory store and
+    a ``ManifestCommit`` one, each at the default cap and at 0. Every
+    leg must record the same refreshes. Returns the directory leg at
+    the default cap."""
     legs = []
-    for on_spark in (False, True):
-        root = tmp_path / ("spark" if on_spark else "driver")
-        s = _open(spark, root) if prepared is None else _copy(spark, prepared, root)
-        leg = _Leg(spark, s, on_spark)
-        scenario(leg)
-        legs.append(leg)
-    driver, sp = legs
-    assert len(driver.record) == len(sp.record) > 0
-    for k, (d, s) in enumerate(zip(driver.record, sp.record)):
-        assert d == s, k
-    assert _rollup(driver.s) == _full(driver.s)
-    return driver
+    for commit in (ParquetLeaseCommit, ManifestCommit):
+        for capped in (False, True):
+            root = tmp_path / f"{commit.__name__}-{'capped' if capped else 'default'}"
+            leg = _Leg(spark, _open(spark, root, commit=commit()), capped)
+            scenario(leg)
+            legs.append(leg)
+    first = legs[0]
+    assert len(first.record) > 0
+    for leg in legs[1:]:
+        assert len(leg.record) == len(first.record)
+        for k, (a, b) in enumerate(zip(first.record, leg.record)):
+            assert a == b, (type(leg.s.commit).__name__, leg.capped, k)
+    assert _rollup(first.s) == _full(first.s)
+    return first
 
 
 def test_create_and_incremental_refresh(spark, tmp_path):
@@ -257,28 +277,53 @@ def test_numeric_strings(spark, tmp_path):
     assert got[("each", 10 * NUMERIC_STRINGS.index("nan"))][3:7] == (1, None, "NaN", "NaN")
 
 
-@pytest.mark.parametrize("on_spark", [False, True], ids=["driver", "spark"])
-def test_decimal_overflow_raises_and_changes_nothing(spark, tmp_path, on_spark):
-    """A value past ``decimal(28,10)`` fails the refresh under ANSI on
-    both paths, as Spark's own cast does, and leaves the rollup as it
-    was."""
+@pytest.mark.parametrize(
+    "capped,tags", [(False, "t"), (True, "t"), (True, "abcd")], ids=["driver", "capped", "batches"]
+)
+def test_decimal_overflow_raises_and_changes_nothing(spark, tmp_path, capped, tags):
+    """A value past ``decimal(28,10)`` fails the refresh under ANSI, as
+    Spark's own cast does, and leaves the rollup as it was: its rows,
+    its meta, its tag directories, and no staged file. With several
+    tags at a cap of 0 every tag is a batch of its own and the overflow
+    sits in the last one, so a refresh that published each batch as
+    it went would have changed the others."""
     s = _open(spark, tmp_path / "engine")
-    s.write([("t", 1, "1")], ingest_ts=1000)
+    s.write([(t, 1, "1") for t in tags], ingest_ts=1000)
     refresh_rollup(s, "agg", STEP)
-    before = (_rollup(s), _meta(s))
-    s.write([("t", 2, "1e18")], ingest_ts=2000)
-    with _path(on_spark), pytest.raises(Exception, match="NUMERIC_VALUE_OUT_OF_RANGE"):
+    before = (_rollup(s), _meta(s), _tag_dirs(s), _rollup_tree(s))
+    if tags[:-1]:
+        s.write([(t, 2, "2") for t in tags[:-1]], ingest_ts=2000)
+    s.write([(tags[-1], 2, "1e18")], ingest_ts=2001)
+    with _path(capped), pytest.raises(Exception, match="NUMERIC_VALUE_OUT_OF_RANGE"):
         refresh_rollup(s, "agg", STEP)
-    assert (_rollup(s), _meta(s)) == before
+    assert (_rollup(s), _meta(s), _tag_dirs(s), _rollup_tree(s)) == before
+    assert not [p for p in _rollup_tree(s) if ".inprogress" in p]
 
 
-@pytest.mark.parametrize("on_spark", [False, True], ids=["driver", "spark"])
-def test_escaped_tag_dropped_when_emptied(spark, tmp_path, on_spark):
+def test_tag_directory_with_two_files_is_refused(spark, tmp_path):
+    """A rollup ``tag=`` directory holding a second data file cannot be
+    replaced by one rename: the refresh that would rewrite it raises,
+    naming the directory, and changes nothing."""
+    s = _open(spark, tmp_path / "engine")
+    s.write([("a:b", 1, "1"), ("t", 1, "2")], ingest_ts=1000)
+    refresh_rollup(s, "agg", STEP)
+    tag = f"{s.config.base_path}/rollups/agg/data/tag=a%3Ab"
+    (name,) = [n for n in os.listdir(tag) if not n.startswith((".", "_"))]
+    shutil.copy(f"{tag}/{name}", f"{tag}/part-copy.snappy.parquet")
+    before = (_data_rows(s), _meta(s), _rollup_tree(s))
+    s.write([("a:b", 2, "3"), ("t", 2, "4")], ingest_ts=2000)
+    with pytest.raises(ValidationError, match=r"tag=a%3Ab.* holds 2 data files.*Recompute"):
+        refresh_rollup(s, "agg", STEP)
+    assert (_data_rows(s), _meta(s), _rollup_tree(s)) == before
+
+
+@pytest.mark.parametrize("capped", [False, True], ids=["driver", "capped"])
+def test_escaped_tag_dropped_when_emptied(spark, tmp_path, capped):
     """A tag whose every key is tombstoned loses its rollup rows and
     its ``tag=`` directory, escaped name or not."""
     s = _open(spark, tmp_path / "engine")
     s.write([("a:b", 1, "1"), ("plain", 1, "2")], ingest_ts=1000)
-    with _path(on_spark):
+    with _path(capped):
         refresh_rollup(s, "agg", STEP)
         assert _tag_dirs(s) == ["tag=a%3Ab", "tag=plain"]
         s.write([("a:b", 1, None), ("plain", 1, None)], ingest_ts=2000)
@@ -374,12 +419,16 @@ def _by_tag(rows) -> dict:
     return out
 
 
-@pytest.mark.parametrize("create", [True, False], ids=["create", "incremental"])
-def test_refresh_crashed_at_every_storage_call(spark, tmp_path, create):
-    """For every k the driver-side refresh dies at its k-th mutating
-    storage call. A fresh store reads each tag's rollup rows as before
-    the refresh or as after it, no data file holds a bucket twice, and
-    a retried refresh equals ``rollup_full``."""
+@pytest.mark.parametrize(
+    "create,capped", [(True, False), (False, False), (False, True)],
+    ids=["create", "incremental", "incremental-capped"],
+)
+def test_refresh_crashed_at_every_storage_call(spark, tmp_path, create, capped):
+    """For every k the refresh dies at its k-th mutating storage call.
+    A fresh store reads each tag's rollup rows as before the refresh or
+    as after it, no data file holds a bucket twice, and a retried
+    refresh equals ``rollup_full``. At a cap of 0 every tag is a batch
+    of its own, so the publish spans several batches."""
     prepared = _open(spark, tmp_path / "prepared")
     prepared.write([("a:b", 1, "1"), ("a:b", 12, "2"), ("p", 3, "3"), ("q", 4, "4"), ("gone", 5, "5")],
                    ingest_ts=1000)
@@ -391,7 +440,8 @@ def test_refresh_crashed_at_every_storage_call(spark, tmp_path, create):
 
     dry = _copy(spark, prepared, tmp_path / "dry")
     dry.fs = CrashAtCall()
-    refresh_rollup(dry, "agg", STEP)
+    with _path(capped):
+        refresh_rollup(dry, "agg", STEP)
     n = len(dry.fs.ops)
     after, after_meta = _by_tag(_rollup(dry)), _meta(dry)
     assert n > 4
@@ -399,7 +449,7 @@ def test_refresh_crashed_at_every_storage_call(spark, tmp_path, create):
     for k in range(1, n + 1):
         s = _copy(spark, prepared, tmp_path / f"k{k}")
         s.fs = CrashAtCall(crash_at=k)
-        with pytest.raises(Crash):
+        with _path(capped), pytest.raises(Crash):
             refresh_rollup(s, "agg", STEP)
         fresh = _open(spark, s.config.root)
         assert max(Counter(_data_rows(fresh)).values(), default=1) == 1, k
@@ -411,6 +461,8 @@ def test_refresh_crashed_at_every_storage_call(spark, tmp_path, create):
             for tag in set(got) | set(after) | set(before or {}):
                 assert got.get(tag) in ((before or {}).get(tag), after.get(tag)), (k, tag)
         s.fs = StorageFilesystem()  # the same writer restarts: its lease re-acquires
-        refresh_rollup(s, "agg", STEP)
+        with _path(capped):
+            refresh_rollup(s, "agg", STEP)
         assert _rollup(s) == _full(s), k
         assert _by_tag(_rollup(s)) == after and _meta(s) == after_meta, k
+        assert not [p for p in _rollup_tree(s) if ".inprogress" in p], k

@@ -372,6 +372,7 @@ class TestFileSinkExclusivity:
         assert "ghost" not in vals and "sink" in vals
 
     def test_l1_mutators_refuse(self, spark, sink_store):
+        from redis_lsm_timeseries_spark.rollup import refresh_rollup
         from redis_lsm_timeseries_spark.tiering import apply_retention
 
         s = sink_store
@@ -386,6 +387,10 @@ class TestFileSinkExclusivity:
             apply_retention(s, older_than_ms=10**15)
         with pytest.raises(SinkManagedHotTierError):
             purge_scan(s, 0.0, 10)
+        # a rollup refresh reads the listed L1 files, which the sink's
+        # log would not define
+        with pytest.raises(SinkManagedHotTierError):
+            refresh_rollup(s, "agg", 10)
         # write() is still fine (L0 is the sink-independent tier and
         # hot() unions it) ...
         s.write([("w", 5, "l0row")], ingest_ts=T0)
