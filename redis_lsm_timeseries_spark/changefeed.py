@@ -30,6 +30,7 @@ from redis_lsm_timeseries_spark.errors import (
     ValidationError,
     VersionNotFoundError,
 )
+from redis_lsm_timeseries_spark.session import materialize
 
 
 @dataclass(frozen=True)
@@ -259,7 +260,7 @@ def _net_changes(changes, keys, tcol, vcol):
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )
-    net = net.localCheckpoint(eager=False)  # consumed by two branches
+    net = materialize(net, "changefeed.net_changes")  # consumed by two branches
     upserts = net.where(F.col(tcol) != "delete").drop(tcol, vcol)
     deletes = net.where(F.col(tcol) == "delete").select(*keys)
     return upserts, deletes
@@ -288,9 +289,9 @@ def _apply_keyed_changes(
         # transform(snapshot) exactly. Deletes carry keys only and
         # pass through untouched (the contract requires the transform
         # to preserve key columns).
-        shaped = _checked_transform(
-            transform, upserts, keys
-        ).localCheckpoint(eager=False)
+        shaped = materialize(
+            _checked_transform(transform, upserts, keys), "changefeed.shaped_upserts"
+        )
         left_subset = upserts.select(*keys).subtract(
             shaped.select(*keys)
         )

@@ -48,6 +48,7 @@ from redis_lsm_timeseries_spark.operators.similarity import (
     dot,
     probe_lists_join,
 )
+from redis_lsm_timeseries_spark.session import materialize
 
 CENTROIDS_MEMBER = "centroids"
 VECTORS_MEMBER = "vectors"
@@ -108,11 +109,14 @@ def build_ivf_index(
     # range-boundary SAMPLING pass over its child, so without the
     # materialization the whole corpus-wide assign shuffle executed
     # twice — once for the sample, once for the write (r17, guide §1).
-    vectors = assign_lists_join(unit, cent_df).select(
-        F.col("_id").alias(id_col),
-        F.col("list_id"),
-        F.col("_nv").alias("nv"),
-    ).localCheckpoint(eager=False).repartitionByRange(
+    vectors = materialize(
+        assign_lists_join(unit, cent_df).select(
+            F.col("_id").alias(id_col),
+            F.col("list_id"),
+            F.col("_nv").alias("nv"),
+        ),
+        "ann_index.assigned_vectors",
+    ).repartitionByRange(
         max(1, min(n_list, 8)), "list_id"
     )
     host = _host(spark, fs)

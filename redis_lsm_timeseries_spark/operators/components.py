@@ -21,7 +21,7 @@ node id, no driver-side graph. The edge list contracts toward a
 star per component; converged when every node's component label stops
 changing. Rounds needed: O(log^2 n) worst case, 2-4 in practice for
 near-dup graphs (components are tiny cliques/chains). Each round
-``localCheckpoint``s the contracted edges — the iteration product is
+materializes the contracted edges — the iteration product is
 small (one row per node), and checkpointing severs the
 exponentially-deepening lineage that would otherwise re-execute every
 prior round per action.
@@ -34,6 +34,8 @@ derived table, never the documents.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from redis_lsm_timeseries_spark.session import materialize
 
 
 def _sym(e: DataFrame) -> DataFrame:
@@ -124,24 +126,27 @@ def connected_components(
     # self-join, distinct — into every consumer, executing it three
     # times per call. The lazy checkpoint materializes inside the
     # first consumer's job; everything after reads the stored rows.
-    base = pairs.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).localCheckpoint(eager=False)
-    edges = (
+    # ``edges`` and ``nodes`` are lazy too: the first round's count
+    # stores the edges and the final labeling the nodes, so neither
+    # costs a job of its own.
+    base = materialize(
+        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")), "components.pairs"
+    )
+    edges = materialize(
         base.where(F.col("u").isNotNull() & F.col("v").isNotNull())
         .where(F.col("u") != F.col("v"))  # self-pairs carry no structure
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "components.edges",
     )
     # Node universe, fixed up front: contraction drops nodes whose
     # component has collapsed (and singleton-only nodes never enter the
     # edge iteration at all); the final labeling re-attaches them.
-    nodes = (
+    nodes = materialize(
         base.select(F.col("u").alias("node"))
         .unionByName(base.select(F.col("v").alias("node")))
         .where(F.col("node").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "components.nodes",
     )
 
     # Terminate on EDGE-SET stability (the paper's criterion: a round
@@ -157,7 +162,7 @@ def connected_components(
     rounds = 0
     for _ in range(max_iter):
         edges = _star(edges, large=True)
-        edges = _star(edges, large=False).localCheckpoint(eager=False)
+        edges = materialize(_star(edges, large=False), "components.round_edges")
         n = edges.count()
         rounds += 1
         edges_per_round.append(n)
@@ -219,8 +224,8 @@ def canonical_docs_by(
     # itself is consumed twice via ``best``) — materialize the small
     # labeling once instead of re-running its aggregate+join per
     # consumer.
-    comp = connected_components(pairs, src=src, dst=dst).localCheckpoint(
-        eager=False
+    comp = materialize(
+        connected_components(pairs, src=src, dst=dst), "components.labels"
     )
     scored = comp.join(
         docs.select(

@@ -29,6 +29,7 @@ from redis_lsm_timeseries_spark.functions.portable import (
     hashed_windows_expr,
     tokens,
 )
+from redis_lsm_timeseries_spark.session import materialize
 
 NUM_HASHES = 12
 ROWS_PER_BAND = 3
@@ -172,7 +173,7 @@ def with_minhash(
 
     NOTE: downstream consumers that reference ``mhs`` more than once
     (signature column extraction, band keys, self-joins) should
-    materialize first (``localCheckpoint``) — projection collapse
+    materialize first (``session.materialize``) — projection collapse
     otherwise inlines the signature computation into every consumer.
     At scale this materialization IS the persisted signature table of a
     real dedup pipeline."""
@@ -275,18 +276,19 @@ def ngram_overlap_contamination(
     zero-hit docs), both map-side combined; at scale the hits side of
     that join is contamination-bounded and AQE broadcasts it."""
     empty = "CAST(array() AS ARRAY<BIGINT>)"
-    base = corpus.select(
-        F.col(id_col),
-        F.coalesce(F.array_distinct(F.col(sh_col)), F.expr(empty)).alias(
-            "_dsh"
-        ),
     # base feeds TWO branches (the hit-count explode and the
     # n_shingles join-back); without materialization projection
     # collapse re-inlines the caller's shingle-hash expression into
     # both — the md5 pass over the corpus would run twice. At scale
     # this materialization is the persisted shingle table the MinHash
     # pipeline already maintains (see with_minhash's NOTE).
-    ).localCheckpoint(eager=False)
+    base = materialize(
+        corpus.select(
+            F.col(id_col),
+            F.coalesce(F.array_distinct(F.col(sh_col)), F.expr(empty)).alias("_dsh"),
+        ),
+        "dedup.contamination_shingles",
+    )
     grams = eval_grams.select(
         F.col(eval_grams.columns[0]).alias("g")
     ).distinct()
@@ -406,14 +408,15 @@ def incremental_exact_dedup(
     of rows, and a hot digest under ``Window.partitionBy(digest)``
     would be one straggler WindowExec task — the exact shape the
     content-rewrite passes already eliminated."""
-    # Materialized ONCE (lazy local checkpoint): consumed three times
+    # Materialized ONCE (lazily): consumed three times
     # below — the broadcast probe-set distinct, the winner aggregate,
     # and the join probe of ``mark_first_occurrence`` — and without
     # materialization each consumer re-scans the batch and re-runs the
     # md5 digest. (id, digest) rows only; the text never persists.
-    digests = batch.select(
-        F.col(id_col), content_digest(text_col).alias("digest")
-    ).localCheckpoint(eager=False)
+    digests = materialize(
+        batch.select(F.col(id_col), content_digest(text_col).alias("digest")),
+        "dedup.batch_digests",
+    )
     hits = (
         corpus_digests.select(
             F.col(corpus_digests.columns[0]).alias("digest")
@@ -476,10 +479,10 @@ def incremental_near_dup(
     # ``with_minhash`` docstring trap — measured ~15x on the bench
     # extras workload). The batch is small by definition, so the
     # checkpoint is cheap.
-    b = (
+    b = materialize(
         with_minhash(batch.select(id_col, text_col), text_col, num_hashes)
-        .select(F.col(id_col), F.col("mhs"))
-        .localCheckpoint(eager=False)
+        .select(F.col(id_col), F.col("mhs")),
+        "dedup.batch_signatures",
     )
     b_bands = (
         lsh_bands(b, id_col, num_hashes)
@@ -656,7 +659,7 @@ def paragraph_dedup(
     into one WindowExec task), and the groupBy that reassembles
     documents shuffles paragraph-sized payloads keyed by id, the same
     bytes a rewrite must move; nothing all-pairs, no driver state."""
-    paras = (
+    paras = materialize(
         df.select(
             F.col(id_col),
             F.posexplode(
@@ -669,8 +672,8 @@ def paragraph_dedup(
                 )
             ).alias("pos", "para"),
         )
-        .withColumn("pdigest", F.md5(F.col("para")))
-        # Materialized ONCE (lazy local checkpoint): the winner pick
+        .withColumn("pdigest", F.md5(F.col("para"))),
+        # Materialized ONCE (lazily): the winner pick
         # consumes this table twice (the groupBy-min aggregate and the
         # join probe), and without materialization projection collapse
         # re-inlines the split+trim+posexplode+md5 paragraph derivation
@@ -679,7 +682,7 @@ def paragraph_dedup(
         # window-digest explode for. At deployment scale this IS the
         # persisted paragraph-digest table the pipeline maintains
         # alongside the window-digest index.
-        .localCheckpoint(eager=False)
+        "dedup.paragraph_digests",
     )
     kept = mark_first_occurrence(paras, "pdigest", id_col, "pos")
     reassembled = (
@@ -759,7 +762,7 @@ def duplicate_substring_spans(
     merge shuffles only the DUPLICATED windows keyed by id. Nothing
     all-pairs; cost is linear in corpus tokens, the floor for any
     exact-substring method."""
-    # Materialized ONCE (lazy local checkpoint): the winner pick
+    # Materialized ONCE (lazily): the winner pick
     # consumes this table twice (the groupBy-min aggregate and the
     # join probe), and without materialization projection collapse
     # re-inlines the per-token md5 window hashing into both subtrees —
@@ -769,12 +772,13 @@ def duplicate_substring_spans(
     # the pipeline maintains alongside the MinHash shingle table —
     # (id, pos, digest) ints+digest, linear in corpus tokens, stored
     # once instead of recomputed per consumer.
-    wins = df.select(
-        F.col(id_col),
-        F.posexplode(
-            hashed_windows_expr(text_col, int(span_tokens))
-        ).alias("pos", "wdigest"),
-    ).localCheckpoint(eager=False)
+    wins = materialize(
+        df.select(
+            F.col(id_col),
+            F.posexplode(hashed_windows_expr(text_col, int(span_tokens))).alias("pos", "wdigest"),
+        ),
+        "dedup.window_digests",
+    )
     dups = (
         mark_first_occurrence(wins, "wdigest", id_col, "pos")
         .where(~F.col("_keep"))
@@ -1030,12 +1034,13 @@ def multi_eval_contamination(
     map-side. Running the single-set operator N times would pay N
     corpus passes for the same answer."""
     empty = "CAST(array() AS ARRAY<BIGINT>)"
-    base = corpus.select(
-        F.col(id_col),
-        F.coalesce(F.array_distinct(F.col(sh_col)), F.expr(empty)).alias(
-            "_dsh"
+    base = materialize(
+        corpus.select(
+            F.col(id_col),
+            F.coalesce(F.array_distinct(F.col(sh_col)), F.expr(empty)).alias("_dsh"),
         ),
-    ).localCheckpoint(eager=False)
+        "dedup.multi_contamination_shingles",
+    )
     grams = eval_grams.select(
         F.col(set_col).alias("_set"),
         F.col(

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from redis_lsm_timeseries_spark.functions.portable import nonempty_tokens
+from redis_lsm_timeseries_spark.session import materialize
 
 
 def _doc_tokens(df: DataFrame, text_col: str) -> DataFrame:
@@ -77,15 +78,13 @@ def _unigram_model_from_tokens(
     guide §2.3)."""
     if min_count < 1:
         raise ValueError("min_count must be >= 1")
-    counts = (
-        toks
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        # counts feeds TWO consumers (the total aggregate and the
-        # crossJoin side); without materialization projection collapse
-        # re-runs the full corpus tokenize+count pass per consumer —
-        # the same trap bigram_model guards against below.
-        .localCheckpoint(eager=False)
+    # counts feeds TWO consumers (the total aggregate and the
+    # crossJoin side); without materialization projection collapse
+    # re-runs the full corpus tokenize+count pass per consumer —
+    # the same trap bigram_model guards against below.
+    counts = materialize(
+        toks.groupBy("token").agg(F.count(F.lit(1)).cast("long").alias("n")),
+        "lm.unigram_counts",
     )
     total = counts.agg(F.sum("n").cast("long").alias("_total"))
     if min_count > 1:
@@ -132,7 +131,7 @@ def _score_unigram_tokens(
     # re-runs the full corpus tokenize/count of unigram_model — the
     # same projection-collapse trap incremental_near_dup checkpoints
     # against. The model is vocabulary-bounded, so this is cheap.
-    model = model.localCheckpoint(eager=False)
+    model = materialize(model, "lm.unigram_model")
     # _total is constant across the model; ride it in as a 1-row
     # broadcast so OOV rows (left-join misses) can compute the floor
     # without a global window over the exploded token table.
@@ -188,10 +187,10 @@ def lm_quality_scores(
     directly tokenizes the corpus once per pass. At deployment scale
     this materialization is the persisted token table a pipeline
     keeps alongside the model."""
-    toks = (
+    toks = materialize(
         _doc_tokens(df.select(F.col(id_col), F.col(text_col)), text_col)
-        .select(id_col, F.col("_tok").alias("token"))
-        .localCheckpoint(eager=False)
+        .select(id_col, F.col("_tok").alias("token")),
+        "lm.doc_tokens",
     )
     model = _unigram_model_from_tokens(toks.select("token"), min_count)
     return _score_unigram_tokens(df, toks, model, id_col)
@@ -248,11 +247,9 @@ def _bigram_model_from_grams(grams: DataFrame, min_count: int) -> DataFrame:
     bigram table (r17, guide §2.3)."""
     if min_count < 1:
         raise ValueError("min_count must be >= 1")
-    counts = (
-        grams
-        .groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .localCheckpoint(eager=False)  # feeds the context agg AND the join
+    counts = materialize(  # feeds the context agg AND the join
+        grams.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("long").alias("n")),
+        "lm.bigram_counts",
     )
     if min_count > 1:
         counts = counts.where(F.col("n") >= F.lit(int(min_count)))
@@ -304,9 +301,10 @@ def _score_bigram_grams(
     """``with_bigram_score`` over an already-exploded (id, w1, w2)
     relation (see ``_bigram_model_from_grams`` for why)."""
     bi = bi_model.select("w1", "w2", F.col("logprob").alias("_bi_lp"))
-    uni = uni_model.select(
-        F.col("token").alias("w2"), F.col("logprob").alias("_uni_lp")
-    ).localCheckpoint(eager=False)
+    uni = materialize(
+        uni_model.select(F.col("token").alias("w2"), F.col("logprob").alias("_uni_lp")),
+        "lm.unigram_logprobs",
+    )
     uni_total = uni_model.agg(
         F.max("_total").alias("_floor_total")
     )
@@ -368,20 +366,17 @@ def bigram_quality_scores(
     table (fit + score read the same materialized grams) derive from
     them. Same aggregations over identical rows — scores are
     unchanged."""
-    arr = (
-        df.select(
-            F.col(id_col), nonempty_tokens(text_col).alias("_bg_toks")
-        )
-        .localCheckpoint(eager=False)
+    arr = materialize(
+        df.select(F.col(id_col), nonempty_tokens(text_col).alias("_bg_toks")),
+        "lm.bigram_tokens",
     )
-    grams = (
-        arr.withColumn("_bg", F.explode(_bg_pairs()))
-        .select(
+    grams = materialize(
+        arr.withColumn("_bg", F.explode(_bg_pairs())).select(
             id_col,
             F.col("_bg.w1").alias("w1"),
             F.col("_bg.w2").alias("w2"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        "lm.bigram_grams",
     )
     bi = _bigram_model_from_grams(grams.select("w1", "w2"), min_count)
     uni = _unigram_model_from_tokens(

@@ -49,6 +49,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from redis_lsm_timeseries_spark.errors import ValidationError
+from redis_lsm_timeseries_spark.session import materialize
 
 #: distinct-key collection cap for membership predicates; past it the
 #: envelope degrades to per-column min/max ranges (still superset-safe,
@@ -265,86 +266,83 @@ def _apply_dv_delete(
     dropped. At 100 TB: a delete touching k rows of n large files
     costs O(k) positions written + one O(change) log entry — no data
     file is rewritten."""
-    matched = matched.persist()
-    try:
-        new_counts = {
-            r["__dv_file"]: r["n"]
-            for r in matched.groupBy("__dv_file")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        if not new_counts and staged_write is None:
-            return 0
-        touched = sorted(new_counts)
-        base = commit._member_root(root, member)
-        old_dv = {
-            f: (stats.get(f) or {}).get("dv")
-            for f in touched
-            if (stats.get(f) or {}).get("dv")
-        }
-        new_rows = matched.select(
-            F.col("__dv_file").alias("file"),
-            F.col("__dv_pos").alias("pos"),
+    matched = materialize(matched, "merge.dv_matched")
+    new_counts = {
+        r["__dv_file"]: r["n"]
+        for r in matched.groupBy("__dv_file")
+        .agg(F.count("*").alias("n"))
+        .collect()
+    }
+    if not new_counts and staged_write is None:
+        return 0
+    touched = sorted(new_counts)
+    base = commit._member_root(root, member)
+    old_dv = {
+        f: (stats.get(f) or {}).get("dv")
+        for f in touched
+        if (stats.get(f) or {}).get("dv")
+    }
+    new_rows = matched.select(
+        F.col("__dv_file").alias("file"),
+        F.col("__dv_pos").alias("pos"),
+    )
+    if old_dv:
+        new_rows = new_rows.unionByName(
+            commit.dv_positions(host, base, old_dv)
         )
-        if old_dv:
-            new_rows = new_rows.unionByName(
-                commit.dv_positions(host, base, old_dv)
-            )
-        totals = dict(new_counts)
-        for f, d in old_dv.items():
-            totals[f] += int(d.get("count", 0))
-        rows_of = {
-            f: (stats.get(f) or {}).get("rows") for f in touched
+    totals = dict(new_counts)
+    for f, d in old_dv.items():
+        totals[f] += int(d.get("count", 0))
+    rows_of = {
+        f: (stats.get(f) or {}).get("rows") for f in touched
+    }
+    dead = [
+        f for f in touched
+        if rows_of[f] is not None and totals[f] >= int(rows_of[f])
+    ]
+    live_dvd = [f for f in touched if f not in set(dead)]
+    overlay = {}
+    if live_dvd:
+        blob = commit.stage_dv(
+            host, path, new_rows.where(F.col("file").isin(live_dvd))
+        )
+        # overlay ONLY the dv field (r15, ADVICE): the rest of the
+        # stats block is taken from the entry the commit lands on,
+        # so a concurrent backfill_file_stats restat of a touched
+        # file (rows/cols landed between planning and commit) is
+        # never clobbered back to plan-time values
+        overlay = {
+            f: {"dv": {"path": blob, "count": int(totals[f])}}
+            for f in live_dvd
         }
-        dead = [
-            f for f in touched
-            if rows_of[f] is not None and totals[f] >= int(rows_of[f])
-        ]
-        live_dvd = [f for f in touched if f not in set(dead)]
-        overlay = {}
-        if live_dvd:
-            blob = commit.stage_dv(
-                host, path, new_rows.where(F.col("file").isin(live_dvd))
-            )
-            # overlay ONLY the dv field (r15, ADVICE): the rest of the
-            # stats block is taken from the entry the commit lands on,
-            # so a concurrent backfill_file_stats restat of a touched
-            # file (rows/cols landed between planning and commit) is
-            # never clobbered back to plan-time values
-            overlay = {
-                f: {"dv": {"path": blob, "count": int(totals[f])}}
-                for f in live_dvd
-            }
-        expected = {
-            f: (old_dv.get(f) or {}).get("path") for f in touched
-        }
-        # the commit's row-level change view: a plain delete announces
-        # the matched rows; a merge (cdf_override) announces its own
-        # clause accounting (upserts, clause deletes) instead — the
-        # DV'd positions of UPDATED rows are not deletes to a mirror
-        cdf = (
-            cdf_override
-            if cdf_override is not None
-            else matched.drop("__dv_file", "__dv_pos").withColumn(
-                commit.CDF_TYPE_COL, F.lit("delete")
-            )
+    expected = {
+        f: (old_dv.get(f) or {}).get("path") for f in touched
+    }
+    # the commit's row-level change view: a plain delete announces
+    # the matched rows; a merge (cdf_override) announces its own
+    # clause accounting (upserts, clause deletes) instead — the
+    # DV'd positions of UPDATED rows are not deletes to a mirror
+    cdf = (
+        cdf_override
+        if cdf_override is not None
+        else matched.drop("__dv_file", "__dv_pos").withColumn(
+            commit.CDF_TYPE_COL, F.lit("delete")
         )
-        cdf = _cdf_sized(
-            _physical_out(commit, host, root, member, cdf, smeta),
-            sum(new_counts.values()) or 1,
-        )
-        commit.rewrite_files(
-            host, path, dead, staged_write,
-            restat_overlay=overlay, cdf_df=cdf,
-            entry_guard=_compose_guards(
-                envelope_guard,
-                _dv_guard(commit, member, expected),
-                extra_guard,
-            ),
-        )
-        return len(touched)
-    finally:
-        matched.unpersist()
+    )
+    cdf = _cdf_sized(
+        _physical_out(commit, host, root, member, cdf, smeta),
+        sum(new_counts.values()) or 1,
+    )
+    commit.rewrite_files(
+        host, path, dead, staged_write,
+        restat_overlay=overlay, cdf_df=cdf,
+        entry_guard=_compose_guards(
+            envelope_guard,
+            _dv_guard(commit, member, expected),
+            extra_guard,
+        ),
+    )
+    return len(touched)
 
 
 def _mapping_ctx(commit, host, path: str):
@@ -452,7 +450,7 @@ def _clustered_write(
         # it AGAIN (r17 IVF-build pattern, guide §2.3). The checkpoint
         # is the replacement files' own content, already bounded.
         clustered = (
-            out.localCheckpoint(eager=False)
+            materialize(out, "merge.clustered_output")
             .repartitionByRange(n_files, *keys)
             .sortWithinPartitions(*keys)
         )

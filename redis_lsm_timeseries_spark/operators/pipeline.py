@@ -36,6 +36,7 @@ from redis_lsm_timeseries_spark.operators.text import (
     with_repetition_stats,
     with_token_stats,
 )
+from redis_lsm_timeseries_spark.session import materialize
 
 DEFAULT_MIN_QUALITY = 0.5
 DEFAULT_MIN_TOKENS = 5
@@ -193,14 +194,14 @@ def dedup_rewrite(
             "n_paragraphs",
             F.col("n_kept").alias("n_paragraphs_kept"),
             F.col("was_modified").alias("_mod_p"),
-        ).localCheckpoint(eager=False)
+        )
     else:
         out = (
             out.withColumn("n_paragraphs", n_paragraphs)
             .withColumn("n_paragraphs_kept", n_kept)
             .withColumn("_mod_p", modified)
-            .localCheckpoint(eager=False)
         )
+    out = materialize(out, "pipeline.paragraph_stage")
     if substring:
         s = substring_dedup(out, text_col, id_col, span_tokens)
         # _mod_s is BYTE-EXACT against the stage input (ADVICE r8):

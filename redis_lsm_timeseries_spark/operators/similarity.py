@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from redis_lsm_timeseries_spark.session import materialize
+
 NUM_PLANES = 8
 
 
@@ -501,7 +503,7 @@ def _train_ivf(
     # Materialize the normalized rows once: seeds + every Lloyd
     # iteration each trigger an action, and without the checkpoint each
     # one re-runs the scan+normalize from the corpus (iters+1 times).
-    unit = _unit_rows(corpus, id_col, vec_col).localCheckpoint(eager=False)
+    unit = materialize(_unit_rows(corpus, id_col, vec_col), "similarity.unit_rows")
     seeds = (
         unit.orderBy(F.xxhash64(F.col("_id").cast("string")))
         .limit(n_list)
@@ -800,9 +802,9 @@ def _semantic_pairs_assigned(
 
     spark = corpus.sparkSession
     unit = _unit_rows(corpus, id_col, vec_col)
-    assigned = assign_lists_join(
-        unit, centroids_df(spark, centroids)
-    ).localCheckpoint(eager=False)  # both join sides + the guard scan
+    assigned = materialize(  # both join sides + the guard scan
+        assign_lists_join(unit, centroids_df(spark, centroids)), "similarity.assigned_lists"
+    )
     top = (
         assigned.groupBy("list_id")
         .agg(F.count(F.lit(1)).alias("n"))

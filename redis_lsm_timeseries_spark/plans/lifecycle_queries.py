@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from redis_lsm_timeseries_spark.commit import ManifestCommit, ParquetLeaseCommit
 from redis_lsm_timeseries_spark.config import EngineConfig
 from redis_lsm_timeseries_spark.plans.catalog import register
-from redis_lsm_timeseries_spark.session import pinned_shuffle_partitions
+from redis_lsm_timeseries_spark.session import materialize, pinned_shuffle_partitions
 from redis_lsm_timeseries_spark.sources.testdata import load_events
 from redis_lsm_timeseries_spark.store import TimeseriesStore
 from redis_lsm_timeseries_spark.tiering import (
@@ -108,7 +108,7 @@ def tiering_purge_lifecycle_mhot(
 
 
 # Cache of materialized lifecycle reads, keyed by Spark application id
-# (a cached localCheckpoint belongs to its session and must not leak
+# (a cached checkpoint belongs to its session and must not leak
 # across restarts) AND by which read the caller wants. Each entry
 # materializes ONLY its own read (r17, guide §1.2 — don't compute what
 # you throw away): the bench clears this cache before every timed
@@ -121,11 +121,11 @@ def tiering_purge_lifecycle_mhot(
 _LIFECYCLE_CACHE: dict[tuple, DataFrame] = {}
 
 
-def _outliving(df: DataFrame) -> DataFrame:
+def _outliving(df: DataFrame, label: str) -> DataFrame:
     """``df`` in a form that outlives its temp store: a local relation
-    (a driver-side read's result) already holds its rows, and any other
-    plan is materialized by ``localCheckpoint``."""
-    return df if df.isLocal() else df.localCheckpoint(eager=True)
+    (a driver-side read's result) already holds its rows; any other
+    plan (a store over the driver cap) is materialized now."""
+    return df if df.isLocal() else materialize(df, label, eager=True)
 
 
 def _run_lifecycle(
@@ -193,9 +193,9 @@ def _run_lifecycle_inner(
         # hot read is the hot tier's LWW winners, tombstones included;
         # the unified read is hot UNION cold, member-identity dedup, LWW.
         if want == "union":
-            out = _outliving(store.read_all(include_cold=True))
+            out = _outliving(store.read_all(include_cold=True), "lifecycle.read_all_cold")
         else:
-            out = _outliving(store.read_all(with_tombstones=True))
+            out = _outliving(store.read_all(with_tombstones=True), "lifecycle.read_all")
         _LIFECYCLE_CACHE[key] = out
         return out
     finally:
@@ -291,7 +291,15 @@ def compaction_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             if metrics.rows_after >= metrics.rows_before:
                 raise RuntimeError(f"compaction removed nothing: {metrics}")
 
-            return _outliving(store.hot().select("tag", "ts", "value"))
+            # the raw members, read on the driver unless the store is
+            # over the cap: no LWW merge on the way out
+            got = store._driver_members(None)
+            if got is None:
+                return materialize(
+                    store.hot().select("tag", "ts", "value"), "lifecycle.compaction_rewrite",
+                    eager=True,
+                )
+            return spark.createDataFrame(got[1].select(["tag", "ts", "value"]).combine_chunks())
     finally:
         shutil.rmtree(base_dir, ignore_errors=True)
 
@@ -398,7 +406,7 @@ def rollup_incremental_lifecycle(
                     f"{m1.buckets_refreshed} buckets, phase2 "
                     f"{m2.buckets_refreshed}"
                 )
-            return _outliving(read_rollup(store, "daily"))
+            return _outliving(read_rollup(store, "daily"), "lifecycle.read_rollup")
         finally:
             shutil.rmtree(base_dir, ignore_errors=True)
 
@@ -561,7 +569,7 @@ def connector_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, path,
             schema="event_id long, event_type string, value double",
         ).where(F.col("event_id").between(1000, 5000))
-        return out.localCheckpoint(eager=True)  # outlives the rmtree
+        return materialize(out, "lifecycle.connector_roundtrip", eager=True)  # outlives the rmtree
     finally:
         _shutil.rmtree(base_dir, ignore_errors=True)
 
@@ -643,7 +651,7 @@ def dv_row_mutation(spark: SparkSession, sf_dir: str) -> DataFrame:
             host, path,
             schema="event_id long, event_type string, value double",
         ).select("event_id", "event_type", "value")
-        return out.localCheckpoint(eager=True)  # outlives the rmtree
+        return materialize(out, "lifecycle.dv_row_mutation", eager=True)  # outlives the rmtree
     finally:
         _shutil.rmtree(base_dir, ignore_errors=True)
 
@@ -709,7 +717,7 @@ def replace_range_restatement(spark: SparkSession, sf_dir: str) -> DataFrame:
             lo=2000, hi=6000, commit=commit,
         )
         out = commit.read_table(host, path).select("event_id", "value")
-        return out.localCheckpoint(eager=True)  # outlives the rmtree
+        return materialize(out, "lifecycle.replace_range_restatement", eager=True)  # outlives the rmtree
     finally:
         _shutil.rmtree(base_dir, ignore_errors=True)
 
@@ -795,7 +803,7 @@ def nested_evolution_roundtrip(
             F.col("props.dev_kind").alias("dev_kind"),
             F.col("props.score").alias("score"),
         )
-        return out.localCheckpoint(eager=True)  # outlives the rmtree
+        return materialize(out, "lifecycle.nested_evolution_roundtrip", eager=True)  # outlives the rmtree
     finally:
         _shutil.rmtree(base_dir, ignore_errors=True)
 
@@ -964,7 +972,7 @@ def sql_dml_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark,
             f"SELECT event_id, event_type, value FROM `{base_dir}/out`",
         )
-        return out.localCheckpoint(eager=True)  # outlives the rmtree
+        return materialize(out, "lifecycle.sql_dml_lifecycle", eager=True)  # outlives the rmtree
     finally:
         _shutil.rmtree(base_dir, ignore_errors=True)
 
@@ -1069,7 +1077,7 @@ def clone_copy_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).unionAll(
             sql(spark, f"SELECT 'clone' AS side, * FROM `{clone}`")
         )
-        return out.localCheckpoint(eager=True)  # outlives the rmtree
+        return materialize(out, "lifecycle.clone_copy_lifecycle", eager=True)  # outlives the rmtree
     finally:
         _shutil.rmtree(base_dir, ignore_errors=True)
 

@@ -28,6 +28,7 @@ from redis_lsm_timeseries_spark.operators import dedup as D
 from redis_lsm_timeseries_spark.operators import similarity as S
 from redis_lsm_timeseries_spark.operators import text as TX
 from redis_lsm_timeseries_spark.plans.catalog import register
+from redis_lsm_timeseries_spark.session import materialize
 from redis_lsm_timeseries_spark.sources.testdata import load_table
 
 EXACT_OFFSET = 1_000_000
@@ -67,8 +68,9 @@ def _docs_with_near_copies(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the LSH-pairs and Jaccard-verify entries: shingling + one-md5-per-
 # shingle is the expensive stage of both, and a real pipeline computes
 # the signature table once and serves every downstream consumer from
-# it. Keyed by application id — a localCheckpoint belongs to its
-# session.
+# it. Keyed by application id — a checkpoint belongs to its session.
+# Lazy: the first consumer's job stores the rows, so the signatures
+# cost no job of their own.
 _NEAR_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
@@ -76,11 +78,11 @@ def _near_corpus_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _NEAR_SIG_CACHE:
         corpus = _docs_with_near_copies(spark, sf_dir)
-        _NEAR_SIG_CACHE[key] = (
+        _NEAR_SIG_CACHE[key] = materialize(
             D.with_minhash(corpus)
             .where(F.size(F.col("sh")) >= 1)
-            .select("doc_id", "sh", "mhs")
-            .localCheckpoint(eager=True)
+            .select("doc_id", "sh", "mhs"),
+            "llm.near_corpus_signatures",
         )
     return _NEAR_SIG_CACHE[key]
 
@@ -480,9 +482,11 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the entry, and the iteration is the most expensive derivation in
     # the catalog.
     with pinned_shuffle_partitions(spark, 8):
-        _CLUSTER_CACHE[key] = connected_components(
-            pairs, src="a", dst="b"
-        ).localCheckpoint(eager=True)
+        _CLUSTER_CACHE[key] = materialize(
+            connected_components(pairs, src="a", dst="b"),
+            "llm.cluster_components",
+            eager=True,
+        )
     return _CLUSTER_CACHE[key]
 
 
@@ -540,17 +544,16 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan otherwise re-inlines the explode + distinct SHUFFLE four
     # times — once per join side (sa, sb) and once inside each copy of
     # `sizes` (za, zb) — guide §2.3/§5: compute a reused subtree once,
-    # then fan out from the materialized rows. Checkpoints are
-    # plan-only; results are unchanged.
-    doc_sh = (
-        sig.select("doc_id", F.explode("sh").alias("shingle"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    # then fan out from the materialized rows. Both are lazy: the first
+    # join's job stores them (an eager one only adds a job). Checkpoints
+    # are plan-only; results are unchanged.
+    doc_sh = materialize(
+        sig.select("doc_id", F.explode("sh").alias("shingle")).distinct(),
+        "llm.jaccard_doc_shingles",
     )
-    sizes = (
-        doc_sh.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_sh"))
-        .localCheckpoint(eager=True)
+    sizes = materialize(
+        doc_sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh")),
+        "llm.jaccard_sizes",
     )
     sa = doc_sh.select(F.col("doc_id").alias("a"), "shingle")
     sb = doc_sh.select(F.col("doc_id").alias("b"), "shingle")
@@ -624,11 +627,10 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _docs_with_near_copies(spark, sf_dir)
     # Materialize: the self-join below reads the fingerprint table
     # twice, and without the checkpoint each side re-runs the explode +
-    # 60-sum vote aggregation over the corpus.
-    sims = (
-        D.with_simhash(corpus)
-        .select("doc_id", "simhash")
-        .localCheckpoint(eager=True)
+    # 60-sum vote aggregation over the corpus. Lazy: the join's job
+    # stores it.
+    sims = materialize(
+        D.with_simhash(corpus).select("doc_id", "simhash"), "llm.simhash_fingerprints"
     )
     o = sims.select(F.col("doc_id").alias("a"), F.col("simhash").alias("sh_a"))
     m = sims.select(
@@ -834,14 +836,14 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — the same projection-collapse rule as the MinHash signature
     # cache (r17, guide §2.3: the self-join should shuffle the small
     # banded rows, not recompute them twice). `v` is dropped first;
-    # only (id, nv, band) survive the exchange.
-    banded = (
+    # only (id, nv, band) survive the exchange. Lazy: the self-join's
+    # job stores it.
+    banded = materialize(
         S.with_lsh_bands(
             normed.select("vec_id", "v", "nv"), vec_col="v",
             num_bands=NEAR_DUP_BANDS, planes_per_band=8,
-        )
-        .select("vec_id", "nv", "band_idx", "band_bucket")
-        .localCheckpoint(eager=True)
+        ).select("vec_id", "nv", "band_idx", "band_bucket"),
+        "llm.embedding_bands",
     )
     pairs = (
         S.banded_pair_scores(banded, id_col="vec_id", nv_col="nv")

@@ -17,7 +17,7 @@ from functools import partial
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from redis_lsm_timeseries_spark.plans.catalog import register
-from redis_lsm_timeseries_spark.session import pinned_shuffle_partitions
+from redis_lsm_timeseries_spark.session import materialize, pinned_shuffle_partitions
 from redis_lsm_timeseries_spark.sources.testdata import (
     load_events,
     read_events_stream,
@@ -158,7 +158,7 @@ def stream_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             # and read_all expresses that with no driver-side collect —
             # no assumption about tag cardinality survives in the plan.
             out = store.read_all()
-            return out.localCheckpoint(eager=True)
+            return materialize(out, "streaming.ingest_roundtrip", eager=True)
     finally:
         shutil.rmtree(base_dir, ignore_errors=True)
 

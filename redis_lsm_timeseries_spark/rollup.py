@@ -64,6 +64,7 @@ from redis_lsm_timeseries_spark.store import (
     PartitionFilter,
     TimeseriesStore,
     _file_sizes,
+    driver_read_bytes,
     member_dataset,
     size_batches,
     tag_dir,
@@ -606,23 +607,31 @@ def _recompute(store: TimeseriesStore, sources, cold, batch, touched, step: int,
     )
 
 
-def _rollup_files(store: TimeseriesStore, data_path: str, tags) -> dict | None:
-    """The data file of each rollup tag directory among ``tags`` that
-    has one, as ``{tag: [path]}`` from one listing of the rollup
-    table; None when the backend reads the table through its seam
-    (``driver_table_files``). A directory holding more than one data
-    file raises ``ValidationError``: no rename replaces two files."""
+def _tag_files(store: TimeseriesStore, data_path: str, tags) -> dict | None:
+    """The data files of each rollup tag directory among ``tags`` (every
+    tag when None) that has any, as ``{tag: [path]}`` from one listing
+    of the rollup table; None when the backend reads the table through
+    its seam (``driver_table_files``)."""
     from redis_lsm_timeseries_spark.commit import ManifestCommit
 
     paths = store.commit.driver_table_files(store, data_path)
     if paths is None:
         return None
-    wanted = set(tags)
     files: dict[str, list[str]] = {}
     for path in paths:
         tag = ManifestCommit._unescape_partition(path.rsplit("/", 2)[1].partition("=")[2])
-        if tag in wanted:
+        if tags is None or tag in tags:
             files.setdefault(tag, []).append(path)
+    return files
+
+
+def _rollup_files(store: TimeseriesStore, data_path: str, tags) -> dict | None:
+    """``_tag_files`` for a refresh, which replaces each tag's one data
+    file: a directory holding more than one raises
+    ``ValidationError``, since no rename replaces two files."""
+    files = _tag_files(store, data_path, set(tags))
+    if files is None:
+        return None
     for tag, found in files.items():
         if len(found) > 1:
             raise ValidationError(
@@ -637,19 +646,26 @@ def _old_rows(store: TimeseriesStore, data_path: str, tags, old, with_sketch: bo
     """The rollup rows of ``tags`` as they stand: pyarrow over their
     files ``old``, or, when ``old`` is None, the seam's read, pruned
     to the tags' files by their ``tag`` stats, in one Spark job."""
-    arrow = _rollup_arrow(with_sketch)
     if old is None:
         schema = _rollup_schema(with_sketch)
         return (
             store.commit.read_table_pruned(store, data_path, schema, predicates={"tag": set(tags)})
-            .where(F.col("tag").isin(tags)).select(*schema.names).toArrow().cast(arrow)
+            .where(F.col("tag").isin(tags)).select(*schema.names).toArrow()
+            .cast(_rollup_arrow(with_sketch))
         )
-    files = [(tag, path) for tag in tags for path in old.get(tag, [])]
+    return _rollup_dataset({tag: old.get(tag, []) for tag in tags}, with_sketch).to_table()
+
+
+def _rollup_dataset(files: dict, with_sketch: bool):
+    """The rollup files ``files`` (``{tag: [path]}``) as a pyarrow
+    dataset of ``_rollup_schema(with_sketch)``'s columns, each file's
+    ``tag`` taken from its key."""
+    pairs = [(tag, path) for tag, paths in files.items() for path in paths]
     return ds.FileSystemDataset.from_paths(
-        [path for _, path in files], schema=arrow, format=ds.ParquetFileFormat(),
-        filesystem=pafs.LocalFileSystem(),
-        partitions=[ds.field("tag") == tag for tag, _ in files],
-    ).to_table()
+        [path for _, path in pairs], schema=_rollup_arrow(with_sketch),
+        format=ds.ParquetFileFormat(), filesystem=pafs.LocalFileSystem(),
+        partitions=[ds.field("tag") == tag for tag, _ in pairs],
+    )
 
 
 def _stage(store: TimeseriesStore, staging: str, rows) -> dict[str, str]:
@@ -814,7 +830,15 @@ def read_rollup(
     ``VersionNotFoundError`` (no history). The meta (step, sketch
     flag) is always the CURRENT one — the schema-shaping fields are
     immutable after creation (step/sketch mismatches raise on
-    refresh), so a historical snapshot reads under the same schema."""
+    refresh), so a historical snapshot reads under the same schema.
+
+    A current read whose files the backend lists
+    (``driver_table_files``) and that total at most
+    ``MAX_DRIVER_READ_BYTES`` runs on the driver: pyarrow reads the
+    ``tags`` directories' files, filtered to ``bucket_range``, and the
+    rows come back as a local relation, with no Spark job. A
+    ``version=`` read, a version-logged backend and a read over the cap
+    return the Spark plan."""
     store._require_init()
     data_path, meta_path = _paths(store, name)
     if not store.fs.exists(meta_path):
@@ -829,7 +853,22 @@ def read_rollup(
             None if lo is None else int(lo),
             None if hi is None else int(hi),
         )
-    schema = _rollup_schema(bool(meta.get("with_sketch", False)))
+    with_sketch = bool(meta.get("with_sketch", False))
+    schema = _rollup_schema(with_sketch)
+    if version is None:
+        files = _tag_files(store, data_path, predicates.get("tag"))
+        if files is not None and driver_read_bytes(
+            [path for paths in files.values() for path in paths]
+        ) is not None:
+            lo, hi = predicates.get("bucket_start", (None, None))
+            keep = ds.scalar(True)
+            if lo is not None:
+                keep &= ds.field("bucket_start") >= lo
+            if hi is not None:
+                keep &= ds.field("bucket_start") <= hi
+            rows = _rollup_dataset(files, with_sketch).to_table(filter=keep)
+            # one chunk: Spark drops the batches after an empty one
+            return store.spark.createDataFrame(rows.combine_chunks(), schema)
     df = store.commit.read_table_pruned(
         store,
         data_path,

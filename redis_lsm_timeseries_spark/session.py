@@ -11,9 +11,50 @@ than the 200 default.
 from __future__ import annotations
 
 import os
+import re
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+#: a single-JVM master: every block lives in the one process that
+#: would lose it, so a local checkpoint is as reliable as the session
+_LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
+
+
+def _deployment(spark: SparkSession) -> tuple[str, str | None]:
+    """``(master, checkpoint directory or None)`` of ``spark``'s context."""
+    sc = spark.sparkContext
+    return sc.master, sc.getCheckpointDir()
+
+
+def materialize(df: DataFrame, label: str, eager: bool = False) -> DataFrame:
+    """``df`` with its plan cut at stored rows: the package's one
+    materialization seam.
+
+    On a local master it is ``localCheckpoint``. On a cluster it is a
+    reliable ``checkpoint`` under ``spark.checkpoint.dir``, because a
+    local checkpoint's blocks live on the executors and die with them;
+    with no directory set it raises ``RuntimeError`` naming ``label``
+    rather than fall back to the unreliable form. Lazy by default: the
+    rows are stored by the first action that reads them. ``eager``
+    stores them now, in a job described as ``materialize <label>``."""
+    master, checkpoint_dir = _deployment(df.sparkSession)
+    local = _LOCAL_MASTER.fullmatch(master) is not None
+    if not local and checkpoint_dir is None:
+        raise RuntimeError(
+            f"materialize {label!r}: master {master!r} is not local and no "
+            "spark.checkpoint.dir is set; a local checkpoint would not "
+            "survive the loss of an executor"
+        )
+    if not eager:
+        return df.localCheckpoint(eager=False) if local else df.checkpoint(eager=False)
+    sc = df.sparkSession.sparkContext
+    before = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"materialize {label}")
+    try:
+        return df.localCheckpoint(eager=True) if local else df.checkpoint(eager=True)
+    finally:
+        sc.setJobDescription(before)
 
 
 @contextmanager

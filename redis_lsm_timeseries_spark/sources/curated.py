@@ -28,6 +28,8 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from redis_lsm_timeseries_spark.session import materialize
+
 MANIFEST_NAME = "_curation_manifest.json"
 
 
@@ -64,7 +66,7 @@ def write_curated(
     # DAG: both the stats aggregate and the partitioned write read the
     # materialized plan — and cannot disagree if the input is
     # non-deterministic.
-    curated = curated.localCheckpoint(eager=False)
+    curated = materialize(curated, "curated.rows")
     stats = (
         curated.groupBy(
             F.col(keep_col).alias("keep"),

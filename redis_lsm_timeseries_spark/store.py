@@ -572,8 +572,9 @@ class TimeseriesStore:
         A bounded load lands on the driver: when the projected plan's
         Catalyst size estimate (no job) is at most
         ``MAX_DRIVER_READ_BYTES`` and its column types are
-        ``SAMPLE_SCHEMA``'s, the projection is collected once with
-        ``toArrow()`` and published through the L1 run writer that
+        ``SAMPLE_SCHEMA``'s, the projection is collected once (a local
+        relation by ``collect()``, with no job; any other plan by
+        ``toArrow()``) and published through the L1 run writer that
         ``flush_l0`` uses (``_publish_l1_runs``): one file per
         ``(tag, part_start)`` run, so ``cluster_by_partition`` has
         nothing to do. An input over the estimate, or of unknown size
@@ -681,11 +682,21 @@ class TimeseriesStore:
         and typed as the driver writer writes it. Raises
         ``ValidationError``, with nothing written, on a null or empty
         ``tag`` or a null ``ts``."""
+        import pyarrow as pa
         import pyarrow.compute as pc
 
         from redis_lsm_timeseries_spark.commit import _driver_arrow_schema
 
-        table = out.toArrow()
+        schema = _driver_arrow_schema(SAMPLE_SCHEMA)
+        if out._jdf.queryExecution().optimizedPlan().getClass().getSimpleName() == "LocalRelation":
+            # the rows are on the driver already: collect() takes them
+            # with no job, where toArrow() starts one
+            rows = out.collect()
+            table = pa.table({
+                f.name: pa.array([r[i] for r in rows], f.type) for i, f in enumerate(schema)
+            })
+        else:
+            table = out.toArrow()
         tags = table["tag"]
         if tags.null_count or table["ts"].null_count or pc.any(
             pc.equal(pc.utf8_length(tags), 0)
@@ -693,7 +704,7 @@ class TimeseriesStore:
             raise ValidationError(
                 "write_df: every row needs a non-empty tag and a non-null ts"
             )
-        return table.cast(_driver_arrow_schema(SAMPLE_SCHEMA))
+        return table.cast(schema)
 
     def flush_l0(self) -> bool:
         """Fold the L0 staging segments into the partitioned L1 layout

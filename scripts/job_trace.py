@@ -9,7 +9,9 @@ the entry's jobs, on any host, at any load.
 
 With ``--all`` it runs every registered entry once instead, in name
 order, each after ``clear_query_caches()`` and into the noop sink, and
-prints each entry's job count and the catalog total.
+prints each entry's job count, the eager materializations it paid
+(``session.materialize`` calls with ``eager=True``, by label) and the
+catalog total.
 
 Spark runs on ``local[N]``, N the host's usable cores.
 
@@ -37,8 +39,9 @@ _events: list[tuple[int, str, int, float]] = []
 
 def wrap(obj, name, label, njid):
     """Replace ``obj.name`` with a wrapper that records the call's depth,
-    Spark job delta (``njid()`` before and after) and wall time. A
-    static or class method is re-wrapped as one, so it is still called
+    Spark job delta (``njid()`` before and after) and wall time under
+    ``label``, or under ``label(*args, **kwargs)`` when it is callable.
+    A static or class method is re-wrapped as one, so it is still called
     without (or with its class as) the first argument."""
     attr = inspect.getattr_static(obj, name, None)
     if attr is None:
@@ -55,7 +58,8 @@ def wrap(obj, name, label, njid):
             return fn(*a, **kw)
         finally:
             _depth = d
-            _events.append((d, label, njid() - j0, time.perf_counter() - t0))
+            tag = label(*a, **kw) if callable(label) else label
+            _events.append((d, tag, njid() - j0, time.perf_counter() - t0))
 
     if isinstance(attr, (staticmethod, classmethod)):
         inner = type(attr)(inner)
@@ -66,12 +70,36 @@ def _next_job_id(spark) -> int:
     return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
 
 
+def _seam_label(df, label, eager=False) -> str:
+    return f"materialize[{label}{', eager' if eager else ''}]"
+
+
+def _wrap_seam(njid) -> None:
+    """Wrap ``session.materialize`` in every package module that holds
+    it, each call recorded under its own label (``_seam_label``). The
+    call sites import the seam by name, so every module is imported
+    first and its reference replaced."""
+    import importlib
+    import pkgutil
+
+    import redis_lsm_timeseries_spark as pkg
+    from redis_lsm_timeseries_spark import session
+
+    for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+        importlib.import_module(info.name)
+    seam = session.materialize
+    for module in [m for n, m in sys.modules.items() if n.startswith(pkg.__name__ + ".")]:
+        if getattr(module, "materialize", None) is seam:
+            wrap(module, "materialize", _seam_label, njid)
+
+
 def _install(spark) -> None:
     """Wrap every listed chokepoint. A listed name the code no longer
     defines raises ``AttributeError`` naming it, so a rename cannot
     silently drop its attribution; the commit classes wrap only the
     names each class defines itself."""
     njid = functools.partial(_next_job_id, spark)
+    _wrap_seam(njid)
 
     def traced(obj, name, label):
         if inspect.getattr_static(obj, name, None) is None:
@@ -141,13 +169,20 @@ def _run(spark, spec, sf_dir) -> tuple[int, float]:
 def _trace_all(spark, sf_dir) -> None:
     from redis_lsm_timeseries_spark.plans import REGISTRY, clear_query_caches
 
-    total = 0
+    _wrap_seam(functools.partial(_next_job_id, spark))
+    total = eager = 0
     for name in sorted(REGISTRY):
         clear_query_caches()
+        _events.clear()
         jobs, wall = _run(spark, REGISTRY[name], sf_dir)
         total += jobs
         print(f"{name:<44} jobs={jobs:<3} wall={wall:.2f}s", flush=True)
-    print(f"== {len(REGISTRY)} entries @ {sf_dir}: {total} jobs ==")
+        for _, label, n, _ in _events:
+            if label.endswith(", eager]"):
+                eager += n
+                print(f"    {label:<40} jobs={n}")
+    print(f"== {len(REGISTRY)} entries @ {sf_dir}: {total} jobs, "
+          f"{eager} in eager materializations ==")
 
 
 def _trace_one(spark, entry, sf_dir) -> None:

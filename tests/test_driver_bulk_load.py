@@ -92,9 +92,10 @@ def test_driver_load_matches_the_spark_load(spark, tmp_path, monkeypatch, suppli
         on_spark.write_df(load, ingest_ts=700, cluster_by_partition=cluster)
         spark_jobs = _next_job_id(spark) - j0
 
-    # a local-relation input: the collect is the load's one job, with
-    # no repartition stage and no write job
-    assert driver_jobs == 1
+    # a local-relation input: its rows are on the driver already, so the
+    # load starts no job at all (no collect job, no repartition stage,
+    # no write job)
+    assert driver_jobs == 0
     assert spark_jobs >= 1
     assert not _crc_files(driver.config.hot_path)
     assert _crc_files(on_spark.config.hot_path)  # Hadoop's writer made these
@@ -166,7 +167,7 @@ def test_bad_key_refused_with_nothing_written(spark, tmp_path, monkeypatch, path
         j0 = _next_job_id(spark)
         with pytest.raises(ValidationError, match="non-empty tag and a non-null ts"):
             s.write_df(load)
-        assert _next_job_id(spark) - j0 == 1  # the collect
+        assert _next_job_id(spark) - j0 == 0  # a local relation collects with no job
     else:
         schema = "tag string, ts long, value string"
         j0 = _next_job_id(spark)

@@ -466,3 +466,65 @@ def test_refresh_crashed_at_every_storage_call(spark, tmp_path, create, capped):
         assert _rollup(s) == _full(s), k
         assert _by_tag(_rollup(s)) == after and _meta(s) == after_meta, k
         assert not [p for p in _rollup_tree(s) if ".inprogress" in p], k
+
+
+# ------------------------------------------- read_rollup on the driver
+@pytest.fixture(scope="module")
+def rollup_store(spark, tmp_path_factory):
+    """A directory store holding a rollup and a ``with_sketch`` rollup
+    over every escaped tag, and a ``ManifestCommit`` store holding the
+    same rollup."""
+    root = tmp_path_factory.mktemp("read_rollup")
+    stores = {}
+    for commit in (ParquetLeaseCommit, ManifestCommit):
+        s = _open(spark, root / commit.__name__, commit=commit())
+        s.write([(t, ts, f"{ts}.5") for t in TAGS for ts in (-15, 1, 12, 27, 33)], ingest_ts=1000)
+        refresh_rollup(s, "agg", STEP)
+        stores[commit] = s
+    refresh_rollup(stores[ParquetLeaseCommit], "sk", STEP, with_sketch=True)
+    return stores
+
+
+#: ``read_rollup`` arguments: tags (escaped, plain, absent), either side
+#: of ``bucket_range`` open, both filters, and a range no bucket meets
+READS = {
+    "all": {},
+    "tags": {"tags": ["a:b", "plain", "absent"]},
+    "from": {"bucket_range": (10, None)},
+    "until": {"bucket_range": (None, 10)},
+    "tags-and-range": {"tags": ["sp ace", "x=y"], "bucket_range": (0, 20)},
+    "empty": {"bucket_range": (100, 200)},
+}
+
+
+@pytest.mark.parametrize("read", sorted(READS))
+@pytest.mark.parametrize("name", ["agg", "sk"])
+def test_read_rollup_on_the_driver_matches_spark(spark, rollup_store, name, read):
+    """Within the cap a directory store's rollup read is a local
+    relation that starts no job, with the Spark plan's schema and rows
+    (the sketch rollup's binary column included)."""
+    s = rollup_store[ParquetLeaseCommit]
+    j0 = _next_job_id(spark)
+    driver = read_rollup(s, name, **READS[read])
+    got = _rows(driver)
+    assert _next_job_id(spark) - j0 == 0
+    assert driver.isLocal()
+    with _path(True):
+        on_spark = read_rollup(s, name, **READS[read])
+    assert not on_spark.isLocal()
+    assert driver.schema == on_spark.schema
+    assert got == _rows(on_spark)
+    assert (got == []) == (read == "empty")
+    if name == "sk" and got:
+        assert isinstance(got[0][-1], (bytes, bytearray))
+
+
+def test_read_rollup_on_manifest_commit_takes_spark(spark, rollup_store):
+    """A version-logged rollup and a ``version=`` read keep the Spark
+    plan, and read the rows the driver path reads."""
+    m = rollup_store[ManifestCommit]
+    df = read_rollup(m, "agg", tags=["a:b"], bucket_range=(0, None))
+    assert not df.isLocal()
+    assert not read_rollup(m, "agg", version=0).isLocal()
+    driver = read_rollup(rollup_store[ParquetLeaseCommit], "agg", tags=["a:b"], bucket_range=(0, None))
+    assert _rows(df) == _rows(driver) != []

@@ -80,3 +80,43 @@ def test_install_names_only_live_chokepoints(job_trace, spark, monkeypatch):
     monkeypatch.delattr(tiering, "_evict")
     with pytest.raises(AttributeError, match=r"tiering\._evict is gone"):
         job_trace._install(spark)
+
+
+def test_seam_is_traced_under_its_label(job_trace, spark, monkeypatch):
+    """``_wrap_seam`` replaces ``session.materialize`` in every package
+    module that imports it by name, and records each call under its
+    own label, an eager one marked."""
+    import importlib
+    import pkgutil
+    import sys
+
+    import redis_lsm_timeseries_spark as pkg
+    from redis_lsm_timeseries_spark import session
+
+    for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+        importlib.import_module(info.name)
+    seam = session.materialize
+    holders = {
+        name: module for name, module in sys.modules.items()
+        if name.startswith(pkg.__name__ + ".") and getattr(module, "materialize", None) is seam
+    }
+    for module in holders.values():
+        monkeypatch.setattr(module, "materialize", seam)  # restored after the test
+    assert {
+        "redis_lsm_timeseries_spark.session",
+        "redis_lsm_timeseries_spark.operators.components",
+        "redis_lsm_timeseries_spark.plans.llm_queries",
+        "redis_lsm_timeseries_spark.plans.lifecycle_queries",
+    } <= set(holders)
+
+    jobs = iter(range(100))
+    job_trace._wrap_seam(lambda: next(jobs))
+    assert all(module.materialize is not seam for module in holders.values())
+    components = holders["redis_lsm_timeseries_spark.operators.components"]
+    out = components.materialize(spark.range(3), "test.traced", eager=True)
+    holders["redis_lsm_timeseries_spark.plans.llm_queries"].materialize(out, "test.lazy")
+    assert [(d, label, n) for d, label, n, _ in job_trace._events] == [
+        (0, "materialize[test.traced, eager]", 1),
+        (0, "materialize[test.lazy]", 1),
+    ]
+    assert sorted(r.id for r in out.collect()) == [0, 1, 2]
