@@ -30,9 +30,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from redis_lsm_timeseries_spark.commit import ManifestCommit, ParquetLeaseCommit
 from redis_lsm_timeseries_spark.config import EngineConfig
 from redis_lsm_timeseries_spark.plans.catalog import register
-from redis_lsm_timeseries_spark.session import materialize, pinned_shuffle_partitions
+from redis_lsm_timeseries_spark.session import (
+    local_frame,
+    materialize,
+    pinned_shuffle_partitions,
+)
 from redis_lsm_timeseries_spark.sources.testdata import load_events
-from redis_lsm_timeseries_spark.store import TimeseriesStore
+from redis_lsm_timeseries_spark.store import RANGE_RESULT_SCHEMA, TimeseriesStore
 from redis_lsm_timeseries_spark.tiering import (
     compact,
     purge_ack,
@@ -122,8 +126,8 @@ _LIFECYCLE_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _outliving(df: DataFrame, label: str) -> DataFrame:
-    """``df`` in a form that outlives its temp store: a local relation
-    (a driver-side read's result) already holds its rows; any other
+    """``df`` in a form that outlives its temp store: a driver-side
+    read's result (a ``local_frame``) already holds its rows; any other
     plan (a store over the driver cap) is materialized now."""
     return df if df.isLocal() else materialize(df, label, eager=True)
 
@@ -299,7 +303,7 @@ def compaction_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
                     store.hot().select("tag", "ts", "value"), "lifecycle.compaction_rewrite",
                     eager=True,
                 )
-            return spark.createDataFrame(got[1].select(["tag", "ts", "value"]).combine_chunks())
+            return local_frame(spark, got[1], RANGE_RESULT_SCHEMA)
     finally:
         shutil.rmtree(base_dir, ignore_errors=True)
 

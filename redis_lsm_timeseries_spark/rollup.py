@@ -59,6 +59,7 @@ from redis_lsm_timeseries_spark.commit import _driver_arrow_schema, _driver_parq
 from redis_lsm_timeseries_spark.errors import ValidationError
 from redis_lsm_timeseries_spark.operators.lww import lww_latest, lww_latest_arrow
 from redis_lsm_timeseries_spark.schema import MEMBER_IDENTITY_COLS, SAMPLE_SCHEMA
+from redis_lsm_timeseries_spark.session import local_frame
 from redis_lsm_timeseries_spark.store import (
     DriverFiles,
     PartitionFilter,
@@ -836,9 +837,9 @@ def read_rollup(
     (``driver_table_files``) and that total at most
     ``MAX_DRIVER_READ_BYTES`` runs on the driver: pyarrow reads the
     ``tags`` directories' files, filtered to ``bucket_range``, and the
-    rows come back as a local relation, with no Spark job. A
-    ``version=`` read, a version-logged backend and a read over the cap
-    return the Spark plan."""
+    rows come back as a ``session.local_frame``: collecting it starts
+    no Spark job. A ``version=`` read, a version-logged backend and a
+    read over the cap return the Spark plan."""
     store._require_init()
     data_path, meta_path = _paths(store, name)
     if not store.fs.exists(meta_path):
@@ -867,8 +868,7 @@ def read_rollup(
             if hi is not None:
                 keep &= ds.field("bucket_start") <= hi
             rows = _rollup_dataset(files, with_sketch).to_table(filter=keep)
-            # one chunk: Spark drops the batches after an empty one
-            return store.spark.createDataFrame(rows.combine_chunks(), schema)
+            return local_frame(store.spark, rows, schema)
     df = store.commit.read_table_pruned(
         store,
         data_path,

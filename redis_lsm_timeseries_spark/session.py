@@ -15,6 +15,8 @@ import re
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 #: a single-JVM master: every block lives in the one process that
 #: would lose it, so a local checkpoint is as reliable as the session
@@ -55,6 +57,83 @@ def materialize(df: DataFrame, label: str, eager: bool = False) -> DataFrame:
         return df.localCheckpoint(eager=True) if local else df.checkpoint(eager=True)
     finally:
         sc.setJobDescription(before)
+
+
+class _LocalFrame(ClassicDataFrame):
+    """``local_frame``'s result; ``_jdf`` is built on first touch."""
+
+    def __new__(cls, *args, **kwargs):
+        # the classic DataFrame's __new__ calls __init__ with a jdf
+        return object.__new__(cls)
+
+    def __init__(self, spark: SparkSession, table, schema: T.StructType):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        self._session = spark
+        self._sc = spark._sc
+        self.is_cached = False
+        self._support_repr_html = False
+        self._built = None
+        self.__dict__["schema"] = schema  # the cached_property, seeded
+        arrow = to_arrow_schema(
+            schema, prefers_large_types=spark._jconf.arrowUseLargeVarTypes()
+        )
+        # one chunk: Spark drops the record batches after an empty one
+        self._table = table.select(schema.names).cast(arrow).combine_chunks()
+
+    @property
+    def _jdf(self):
+        if self._built is None:
+            self._built = self._session.createDataFrame(self._table, self.schema)._jdf
+        return self._built
+
+    @_jdf.setter
+    def _jdf(self, jdf) -> None:
+        self._built = jdf
+
+    def isLocal(self) -> bool:
+        return True
+
+    def collect(self):
+        from pyspark.sql.conversion import ArrowTableToRowsConversion
+
+        binary = any(isinstance(f.dataType, T.BinaryType) for f in self.schema.fields)
+        as_bytes = not binary or (
+            self._session.conf.get("spark.sql.execution.pyspark.binaryAsBytes", "true")
+            .lower() == "true"
+        )
+        return ArrowTableToRowsConversion.convert(
+            self._table, self.schema, binary_as_bytes=as_bytes
+        )
+
+    def _collect_as_arrow(self, split_batches=False, empty_list_if_zero_records=True):
+        import pyarrow as pa
+
+        # a self-destructing toPandas releases its own table's
+        # references to these buffers; the held table keeps its own
+        batches = [b for b in self._table.to_batches() if b.num_rows]
+        if batches or empty_list_if_zero_records:
+            return batches
+        return [pa.RecordBatch.from_pylist([], schema=self._table.schema)]
+
+
+def local_frame(spark: SparkSession, table, schema: T.StructType) -> DataFrame:
+    """The Arrow table ``table`` (a pyarrow ``Table`` holding at least
+    ``schema``'s columns) as a ``DataFrame`` of ``schema``: the
+    package's one form of a driver-side result.
+
+    ``collect()`` answers from the table through PySpark's own
+    Arrow-to-rows conversion (with no JVM call unless ``schema`` has a
+    binary column, whose Python type a session setting picks), and
+    ``toPandas()``/``toArrow()`` through PySpark's own conversions of
+    the table's batches; none of them starts a Spark job or builds a
+    JVM relation, and ``isLocal()`` is True. Any other use (a
+    transformation, a join, a write, ``count()``, ``explain``) builds
+    the same local relation as ``spark.createDataFrame(table,
+    schema)``, once. The rows match that
+    relation's, value types included, for string, integer, floating
+    and binary columns (``tests/test_local_frame.py``)."""
+    return _LocalFrame(spark, table, schema)
 
 
 @contextmanager

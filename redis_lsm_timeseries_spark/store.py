@@ -87,6 +87,7 @@ from redis_lsm_timeseries_spark.schema import (
     MEMBER_IDENTITY_COLS,
     SAMPLE_SCHEMA,
 )
+from redis_lsm_timeseries_spark.session import local_frame
 
 #: ``read_range``'s result schema, the same on both of its paths (a
 #: Parquet scan reads every column as nullable)
@@ -1228,8 +1229,11 @@ class TimeseriesStore:
         ``include_cold``, a cold tier the backend keeps as plain files
         (``TableCommit.driver_table_files``) — is computed on the
         driver instead (``_read_range_on_driver``) and returned as a
-        local relation, whose ``collect()`` starts no Spark job. Both
-        paths return the same rows under the same schema
+        ``session.local_frame`` holding the result's Arrow table:
+        its ``collect()`` answers on the driver with no JVM call,
+        ``toPandas()`` and ``toArrow()`` with no Spark job, and any
+        other use builds the JVM local relation once. Both paths
+        return the same rows under the same schema
         (``RANGE_RESULT_SCHEMA``). A driver-path result is a snapshot
         taken at call time; the Spark path freezes its file list at
         plan time, also inside this call.
@@ -1277,9 +1281,9 @@ class TimeseriesStore:
         return None if got is None else self._driver_result(got[1], with_tombstones)
 
     def _driver_result(self, members, with_tombstones: bool) -> DataFrame:
-        """The LWW winners of the Arrow table ``members`` as a local
-        relation of ``RANGE_RESULT_SCHEMA``, tombstones dropped unless
-        ``with_tombstones``. Exact duplicates (a member snapshotted to
+        """The LWW winners of the Arrow table ``members`` as a
+        ``local_frame`` of ``RANGE_RESULT_SCHEMA``, tombstones dropped
+        unless ``with_tombstones``. Exact duplicates (a member snapshotted to
         cold and not yet acked out of hot) are equal in every column,
         so ``lww_latest_arrow`` picks the same winner with or without
         them, as the Spark path's identity dedup before ``lww_latest``
@@ -1287,10 +1291,7 @@ class TimeseriesStore:
         out = lww_latest_arrow(members)
         if not with_tombstones:
             out = out.filter(out["value"].is_valid())
-        return self.spark.createDataFrame(
-            out.select([f.name for f in RANGE_RESULT_SCHEMA.fields]),
-            RANGE_RESULT_SCHEMA,
-        )
+        return local_frame(self.spark, out, RANGE_RESULT_SCHEMA)
 
     def _list_files(
         self, partitions, unflushed: bool = True, cold: bool | list[str] = False
@@ -1399,8 +1400,9 @@ class TimeseriesStore:
         build a disjunctive predicate that matches everything anyway.
 
         Computed on the driver under ``read_range``'s rule, with or
-        without ``include_cold``, and returned as a local relation;
-        over the rule, a Spark plan over the cached ``hot()`` handle."""
+        without ``include_cold``, and returned as a
+        ``session.local_frame`` (collected with no JVM call); over the
+        rule, a Spark plan over the cached ``hot()`` handle."""
         self._require_init()
         got = self._driver_members(None, cold=include_cold)
         if got is not None:

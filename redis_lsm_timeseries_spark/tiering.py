@@ -83,6 +83,7 @@ from redis_lsm_timeseries_spark.schema import (
     PURGE_LOG_SCHEMA,
     SAMPLE_SCHEMA,
 )
+from redis_lsm_timeseries_spark.session import local_frame
 from redis_lsm_timeseries_spark.store import (
     DATA_COLS,
     RANGE_RESULT_SCHEMA,
@@ -794,16 +795,13 @@ def _publish_compacted(store, dirty, l1, max_partitions) -> CompactionMetrics:
 def purge_payload(store: TimeseriesStore, purge_id: str) -> DataFrame:
     """Decode a purge snapshot back into samples (reference
     ``parsePurgePayload``, ``index.js:350-355``), LWW-merged the same
-    way a read would be (O6), as a local relation."""
+    way a read would be (O6), as a ``session.local_frame``."""
     store._require_init()
     snap = _read_table(
         store, store.config.cold_path, COLD_SNAPSHOT_SCHEMA,
         SAMPLE_SCHEMA.fieldNames(), [("purge_id", "==", purge_id)],
     ).read_all()
-    return store.spark.createDataFrame(
-        lww_latest_arrow(snap).select(RANGE_RESULT_SCHEMA.fieldNames()).combine_chunks(),
-        RANGE_RESULT_SCHEMA,
-    )
+    return local_frame(store.spark, lww_latest_arrow(snap), RANGE_RESULT_SCHEMA)
 
 
 @dataclass(frozen=True)

@@ -13,7 +13,9 @@ prints each entry's job count, the eager materializations it paid
 (``session.materialize`` calls with ``eager=True``, by label) and the
 catalog total.
 
-Spark runs on ``local[N]``, N the host's usable cores.
+Spark runs on ``local[N]``, N the host's usable cores, with the console
+progress bar off, so a report whose stdout and stderr share one file
+keeps one entry per line.
 
 Usage:
     python scripts/job_trace.py <entry_name> [sf_dir]
@@ -215,6 +217,11 @@ def main(argv=None) -> int:
 
     from redis_lsm_timeseries_spark.session import get_spark
 
+    # read only when the context starts: no carriage-returned
+    # "[Stage N: ...]" bar between the report's lines
+    os.environ["PYSPARK_SUBMIT_ARGS"] = "--conf spark.ui.showConsoleProgress=false " + (
+        os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+    )
     spark = get_spark("rlts-job-trace", cpus=len(os.sched_getaffinity(0)))
     spark.sparkContext.setLogLevel("ERROR")
     if args.all:

@@ -120,3 +120,27 @@ def test_seam_is_traced_under_its_label(job_trace, spark, monkeypatch):
         (0, "materialize[test.lazy]", 1),
     ]
     assert sorted(r.id for r in out.collect()) == [0, 1, 2]
+
+
+def test_trace_session_hides_the_console_progress_bar(job_trace, monkeypatch):
+    """The trace session starts with ``spark.ui.showConsoleProgress``
+    off (a setting read only when the context starts), ahead of any
+    submit arguments already set, so a report whose stdout and stderr
+    share one file keeps one entry per line."""
+    import os
+
+    from redis_lsm_timeseries_spark import session
+
+    class Started(Exception):
+        pass
+
+    def fake_get_spark(*args, **kwargs):
+        raise Started(os.environ["PYSPARK_SUBMIT_ARGS"])
+
+    monkeypatch.setenv("PYSPARK_SUBMIT_ARGS", "--driver-memory 1g pyspark-shell")
+    monkeypatch.setattr(session, "get_spark", fake_get_spark)
+    with pytest.raises(Started) as started:
+        job_trace.main(["--all"])
+    assert str(started.value) == (
+        "--conf spark.ui.showConsoleProgress=false --driver-memory 1g pyspark-shell"
+    )
